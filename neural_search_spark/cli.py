@@ -294,8 +294,16 @@ def cmd_search(args) -> None:
             raise SystemExit("search: --rescore-json not supported with --batch")
         if aggs is not None:
             raise SystemExit("search: --aggs-json not supported with --batch")
+        if hl is not None:
+            raise SystemExit(
+                "search: --highlight-json not supported with --batch"
+            )
         out = eng.msearch(parsed, k=args.k)
     elif aggs is not None:
+        if hl is not None:
+            raise SystemExit(
+                "search: --highlight-json not supported with --aggs-json"
+            )
         out, agg_frames = eng.search_with_aggs(
             parsed, aggs, k=args.k, rescore=rescore
         )

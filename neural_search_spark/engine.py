@@ -633,10 +633,14 @@ class _Plan:
     explanation cannot drift from what runs.
 
     ``run(k, allowed)`` → (key, score) hits, bounded to k (k None: the
-    full matched set) and gated by the ``allowed`` doc_id set when given;
-    a ``ranked`` plan's kernel returns the final (doc_id, score, rank)
-    page itself. ``batch`` is (group key, item) for a spec msearch can
-    score in one job shared with its group."""
+    full matched set) and gated by the ``allowed`` doc_id set when given.
+    A ``ranked`` plan's ``run`` returns the final (doc_id, score, rank)
+    page instead — ≤ k rows, score descending, doc_id ascending, rank
+    1..n — which search returns as is: index-route kernels build it (on
+    the driver route as a local relation, so serving it runs no Spark
+    job) and hybrid ranks its combined result. Wrapping consumers read
+    its doc_id and score columns by name. ``batch`` is (group key, item)
+    for a spec msearch can score in one job shared with its group."""
 
     route: str
     reason: str
@@ -997,8 +1001,9 @@ class Engine:
                 "bound, driver fast path when Σdf is small)",
                 lambda k, allowed: span_topk(
                     self.bm25_index, spec.clause, k=k
-                ).drop("rank"),
+                ),
                 batch=(("span",), spec.clause),
+                ranked=True,
             )
 
         def fail(k, allowed):
@@ -1094,8 +1099,8 @@ class Engine:
 
         def index(reason: str, kernel, batch=None) -> _Plan:
             return _Plan(
-                "index", reason,
-                lambda k, allowed: kernel(k).drop("rank"), batch=batch,
+                "index", reason, lambda k, allowed: kernel(k), batch=batch,
+                ranked=True,
             )
 
         if qt in _CORPUS_PLANS:
@@ -1350,7 +1355,7 @@ class Engine:
         """(doc_id, score) bounded to top-k, as planned for a top-k
         context — under ``allowed`` (post_filter semantics) when given."""
         ctx = _FILTERED if allowed is not None else _TOPK
-        return self._plan(spec, ctx).run(k, allowed)
+        return self._plan(spec, ctx).run(k, allowed).drop("rank")
 
     # efficient-filtering knobs (reference analog: the k-NN plugin's
     # filtered search, which the neural query's `filter` delegates to):
@@ -1719,7 +1724,8 @@ class Engine:
 
     def _hits(self, plan: _Plan, k: int) -> DataFrame:
         """A top-level plan's final page: (key, score, rank), score desc
-        with the hit key ascending as the tie-break."""
+        with the hit key ascending as the tie-break. A ranked plan's page
+        is returned as is; any other plan is bounded and ranked here."""
         out = plan.run(k, None)
         if plan.ranked:
             return out
@@ -1780,7 +1786,7 @@ class Engine:
 
         depth = spec.pagination_depth or k
         allowed = self._allowed(spec.post_filter)
-        tops = [b.run(depth, allowed) for b in branches]
+        tops = [b.run(depth, allowed).drop("rank") for b in branches]
         if rescore is not None:
             # reference placement: rescore EACH branch's top-W before
             # normalization (HybridCollectorManager.java:241-268)
@@ -2159,6 +2165,11 @@ class Engine:
         field = "text"
         opts = dict(opts or {})
         fields_opt = opts.pop("fields", None)
+        if fields_opt and len(fields_opt) > 1:
+            raise ValueError(
+                "highlight serves one field per request, got "
+                f"{sorted(fields_opt)}"
+            )
         if fields_opt:
             field, fopts = next(iter(fields_opt.items()))
             opts.update(fopts or {})
@@ -2249,11 +2260,12 @@ class Engine:
         corpus = self._need_corpus("reindex")
         rows = corpus
         if spec is not None:
-            matched = self._matched_scored(spec).select("doc_id").distinct()
-            rows = corpus.join(
-                matched.withColumnRenamed("doc_id", self.id_col),
-                self.id_col, "left_semi",
+            matched = (
+                self._matched_scored(spec)
+                .select(F.col("doc_id").alias(self.id_col))
+                .distinct()
             )
+            rows = corpus.join(matched, self.id_col, "left_semi")
             if set_exprs:
                 rows = apply_update(rows, matched, set_exprs, self.id_col)
         elif set_exprs:
@@ -2311,6 +2323,8 @@ class Engine:
         out = {"total": total, "updated": 0 if dry_run else total}
         if dry_run:
             return out
+        # the update and reindex key on the corpus id column
+        matched = matched.withColumnRenamed("doc_id", self.id_col)
         corpus = self._need_corpus("update_by_query")
         new_corpus = apply_update(corpus, matched, set_exprs, self.id_col)
         if total == 0:

@@ -162,8 +162,31 @@ def merge_indexes(
     Returns the same info dict shape as ``IndexBuilder.build``."""
     import shutil
 
+    # every input check runs before out_dir is deleted
     if len(src_dirs) < 2:
         raise ValueError("merge needs at least two source indexes")
+    out_real = os.path.realpath(out_dir)
+    if any(os.path.realpath(p) == out_real for p in src_dirs):
+        raise ValueError(
+            f"out_dir {out_dir!r} is one of the source indexes — merging "
+            "into a source would delete it before it is read"
+        )
+    if deletes_sources is not None and deletes is None:
+        raise ValueError(
+            "deletes_sources without deletes has no meaning — pass the "
+            "doc ids to expunge"
+        )
+    scoped = deletes is not None and deletes_sources is not None
+    del_src_idx: list[int] = []
+    if scoped:
+        srcset = set(deletes_sources)
+        unknown = srcset - set(src_dirs)
+        if unknown:
+            raise ValueError(
+                f"deletes_sources not among src_dirs: {sorted(unknown)}"
+            )
+        del_src_idx = [i for i, p in enumerate(src_dirs) if p in srcset]
+    positions_merged = _sources_have_positions(src_dirs)
     t0 = time.time()
     run_id = uuid.uuid4().hex[:12]
     layouts = [_read_layout(spark, p) for p in src_dirs]
@@ -197,22 +220,6 @@ def merge_indexes(
             "b": [b],
         }
     ).to_parquet(os.path.join(out_dir, "build_config.parquet"))
-
-    if deletes_sources is not None and deletes is None:
-        raise ValueError(
-            "deletes_sources without deletes has no meaning — pass the "
-            "doc ids to expunge"
-        )
-    scoped = deletes is not None and deletes_sources is not None
-    del_src_idx: list[int] = []
-    if scoped:
-        srcset = set(deletes_sources)
-        unknown = srcset - set(src_dirs)
-        if unknown:
-            raise ValueError(
-                f"deletes_sources not among src_dirs: {sorted(unknown)}"
-            )
-        del_src_idx = [i for i, p in enumerate(src_dirs) if p in srcset]
 
     # terms: union by (term, tid) — tid is content-hashed so sources agree;
     # disjoint doc sets ⇒ df/cf add
@@ -358,10 +365,11 @@ def merge_indexes(
         )
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
 
-    positions_merged = _merge_positions(
-        spark, src_dirs, out_dir, deletes,
-        del_src_idx if scoped else None,
-    )
+    if positions_merged:
+        _merge_positions(
+            spark, src_dirs, out_dir, deletes,
+            del_src_idx if scoped else None,
+        )
 
     elapsed = time.time() - t0
     mdf = pd.DataFrame(
@@ -391,22 +399,11 @@ def merge_indexes(
     }
 
 
-def _merge_positions(
-    spark: SparkSession,
-    src_dirs: list[str],
-    out_dir: str,
-    deletes: DataFrame | None,
-    del_src_idx: list[int] | None = None,
-) -> bool:
-    """Union the sources' positions sidecars into ``out_dir/positions``.
-
-    Positions rows are self-contained per (tid, doc_id) — no avgdl/df
-    coupling, unlike posting blocks — so with disjoint doc sets the merge
-    is one unionByName → (optional delete anti-join) → term_bucket
-    repartition + (tid, doc_id) sort, the exact layout ``build_positions``
-    writes. Returns False when no source has positions; raises on a mix."""
+def _sources_have_positions(src_dirs: list[str]) -> bool:
+    """Whether every source carries a positions sidecar of the format
+    merge reads: False when none does; raises on a mix or an old
+    format."""
     import json
-    import shutil
 
     from .positions import POSITIONS_FORMAT_VERSION, has_positions
 
@@ -427,6 +424,28 @@ def _merge_positions(
                 f"positions sidecar at {p} is format v{ver}; merge reads "
                 f"v{POSITIONS_FORMAT_VERSION}"
             )
+    return True
+
+
+def _merge_positions(
+    spark: SparkSession,
+    src_dirs: list[str],
+    out_dir: str,
+    deletes: DataFrame | None,
+    del_src_idx: list[int] | None = None,
+) -> None:
+    """Union the sources' positions sidecars into ``out_dir/positions``.
+
+    Positions rows are self-contained per (tid, doc_id) — no avgdl/df
+    coupling, unlike posting blocks — so with disjoint doc sets the merge
+    is one unionByName → (optional delete anti-join) → term_bucket
+    repartition + (tid, doc_id) sort, the exact layout ``build_positions``
+    writes."""
+    import json
+    import shutil
+
+    from .positions import POSITIONS_FORMAT_VERSION
+
     cols = ["tid", "doc_id", "dl", "positions"]
     scoped = deletes is not None and del_src_idx is not None
     dfs = []
@@ -479,4 +498,3 @@ def _merge_positions(
             },
             f,
         )
-    return True

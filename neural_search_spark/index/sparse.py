@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..query.bm25 import driver_route
-from ..ranking import topk_rank_window
+from ..ranking import local_page, topk_rank_window
 
 from .. import BLOCK_SIZE
 from .build import (
@@ -480,11 +480,7 @@ def _topk_pdf(ids: np.ndarray, sc: np.ndarray, k: int) -> pd.DataFrame:
     f32 = sc.astype(np.float32)
     sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
     return pd.DataFrame(
-        {
-            "doc_id": ids[sel],
-            "score": f32[sel].astype(np.float64),
-            "rank": np.arange(1, len(sel) + 1, dtype=np.int32),
-        }
+        {"doc_id": ids[sel], "score": f32[sel].astype(np.float64)}
     )
 
 
@@ -517,14 +513,6 @@ def _distributed_scores(
     )
 
 
-def _empty_topk(spark: SparkSession) -> DataFrame:
-    return spark.range(0).select(
-        F.col("id").alias("doc_id"),
-        F.lit(0.0).alias("score"),
-        F.lit(0).cast("int").alias("rank"),
-    )
-
-
 def sparse_index_topk(
     index: SparseIndex,
     query_tokens: dict[str, float],
@@ -538,13 +526,12 @@ def sparse_index_topk(
     stats = index.token_stats(sorted(query_tokens))
     live = {t: w for t, w in query_tokens.items() if t in stats}
     if not live:
-        return _empty_topk(spark)
+        return local_page(spark, [], [])
     q_weights = {tid_py(t): float(w) for t, w in live.items()}
     if driver_route(mode, sum(stats.values())):
         ids, sc = _driver_scores(index, q_weights)
-        return spark.createDataFrame(
-            _topk_pdf(ids, sc, k), schema="doc_id long, score double, rank int"
-        )
+        pdf = _topk_pdf(ids, sc, k)
+        return local_page(spark, pdf["doc_id"], pdf["score"])
     shard_topk = _distributed_scores(index, q_weights, sorted(live), k)
     w = topk_rank_window(F.desc("score"), F.asc("doc_id"))
     return (
@@ -587,13 +574,13 @@ def sparse_index_topk_two_phase(
     high = {t: w for t, w in high.items() if t in stats}
     low = {t: w for t, w in low.items() if t in stats}
     if not high:
-        return _empty_topk(spark)
+        return local_page(spark, [], [])
     hi_w = {tid_py(t): float(w) for t, w in high.items()}
     hi_df = sum(stats[t] for t in high)
     # ---- phase 1: candidate window on high tokens only
     if driver_route(mode, hi_df):
         ids, sc = _driver_scores(index, hi_w)
-        cand = _topk_pdf(ids, sc, window).drop(columns=["rank"])
+        cand = _topk_pdf(ids, sc, window)
     else:
         shard = _distributed_scores(index, hi_w, sorted(high), window)
         cand = (
@@ -608,10 +595,7 @@ def sparse_index_topk_two_phase(
         out = out.sort_values(
             ["score", "doc_id"], ascending=[False, True], kind="mergesort"
         ).head(k)
-        out["rank"] = np.arange(1, len(out) + 1, dtype=np.int32)
-        return spark.createDataFrame(
-            out, schema="doc_id long, score double, rank int"
-        )
+        return local_page(spark, out["doc_id"], out["score"])
     # ---- phase 2: low-token contributions for candidates only
     lo_w = {tid_py(t): float(w) for t, w in low.items()}
     cand_ids = np.sort(cand["doc_id"].to_numpy(dtype=np.int64))
@@ -681,7 +665,4 @@ def sparse_index_topk_two_phase(
     out = out.sort_values(
         ["score", "doc_id"], ascending=[False, True], kind="mergesort"
     ).head(k)
-    out["rank"] = np.arange(1, len(out) + 1, dtype=np.int32)
-    return spark.createDataFrame(
-        out, schema="doc_id long, score double, rank int"
-    )
+    return local_page(spark, out["doc_id"], out["score"])

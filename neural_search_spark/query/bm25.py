@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..ranking import topk_rank_window
+from ..ranking import local_page, topk_rank_window
 
 from .. import BM25_B, BM25_K1
 from ..index.build import N_TERM_BUCKETS, doc_id_col, tid_py, tokenize_corpus
@@ -711,8 +711,8 @@ def _bm25_topk_driver(
     tids: list[int],
     k: int,
     min_match: int = 1,
-) -> pd.DataFrame:
-    """Driver top-k over ``_driver_scored_all``'s full matched set —
+) -> DataFrame:
+    """Driver top-k page over ``_driver_scored_all``'s full matched set —
     rank-identical to the distributed path (same float32 cast, same
     doc_id tiebreak)."""
     acc_ids, acc_sc, n_matched = _driver_scored_all(index, idfs, tids)
@@ -721,13 +721,7 @@ def _bm25_topk_driver(
         acc_ids, acc_sc = acc_ids[ok], acc_sc[ok]
     f32 = acc_sc.astype(np.float32)
     sel = np.lexsort((acc_ids, -f32.astype(np.float64)))[:k]
-    return pd.DataFrame(
-        {
-            "doc_id": acc_ids[sel],
-            "score": f32[sel],
-            "rank": np.arange(1, len(sel) + 1, dtype=np.int32),
-        }
-    )
+    return local_page(index.spark, acc_ids[sel], f32[sel])
 
 
 def bm25_topk(
@@ -759,20 +753,12 @@ def bm25_topk(
     )
     stats = index.term_stats(all_clauses)
     terms = [t for t in all_clauses if t in stats]
-    spark = index.spark
     # OOV clauses can never match, so a coverage bar above the number of
     # in-vocabulary terms is unsatisfiable
     if min_match > len(terms):
         terms = []
     if not terms:
-        # empty result via range(0): both the bare-list and the empty-pandas
-        # createDataFrame forms skip the Arrow fast path and cost ~300 ms —
-        # this form collects in ~40 ms (it dominated absent-term p99)
-        return spark.range(0).select(
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("float").alias("score"),
-            F.lit(0).cast("int").alias("rank"),
-        )
+        return local_page(index.spark, [], np.float32([]))
     idfs = {tid_py(t): lucene_idf(index.n_docs, stats[t]) for t in terms}
     return _term_topk(
         index, terms, idfs, sum(stats[t] for t in terms), k,
@@ -798,12 +784,9 @@ def _term_topk(
     if merge == "treeAggregate" and mode == "auto":
         mode = "distributed"  # the caller asked for the cluster merge path
     if driver_route(mode, sum_df):
-        pdf = _bm25_topk_driver(
+        return _bm25_topk_driver(
             index, weights, sorted(tid_py(t) for t in terms), k,
             min_match=min_match,
-        )
-        return spark.createDataFrame(
-            pdf, schema="doc_id long, score float, rank int"
         )
     # column-prune before the shuffle: the scorer needs 8 of the 12 block
     # columns (block_seq/n_docs/sum_tf/term_bucket never leave the scan),
@@ -844,15 +827,10 @@ def _term_topk(
 
         heap = shard_topk.rdd.treeAggregate([], seq, comb, depth=2)
         rows = sorted(heap, key=lambda x: (-x[0], -x[1]))
-        pdf = pd.DataFrame(
-            {
-                "doc_id": [-d for _, d in rows],
-                "score": np.array([s for s, _ in rows], dtype=np.float32),
-                "rank": np.arange(1, len(rows) + 1, dtype=np.int32),
-            }
-        )
-        return spark.createDataFrame(
-            pdf, schema="doc_id long, score float, rank int"
+        return local_page(
+            spark,
+            [-d for _, d in rows],
+            np.array([s for s, _ in rows], dtype=np.float32),
         )
 
     # TakeOrderedAndProject: per-partition top-k then a single merge on the
@@ -882,11 +860,7 @@ def weighted_term_topk(
     stats = index.term_stats(terms)
     terms = [t for t in terms if t in stats]
     if not terms:
-        return index.spark.range(0).select(
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("float").alias("score"),
-            F.lit(0).cast("int").alias("rank"),
-        )
+        return local_page(index.spark, [], np.float32([]))
     weights = {tid_py(t): float(term_weights[t]) for t in terms}
     return _term_topk(
         index, terms, weights, sum(stats[t] for t in terms), k, mode=mode

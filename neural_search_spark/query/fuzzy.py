@@ -52,6 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ranking import local_page
 from ..tokenizer import tokenize_expr, tokenize_py
 from .bm25 import BM25Index, lucene_idf, weighted_term_topk
 
@@ -225,11 +226,7 @@ def fuzzy_match_topk(
         else tokenize_py(query_text)
     )
     if not tokens:
-        return spark.range(0).select(
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("float").alias("score"),
-            F.lit(0).cast("int").alias("rank"),
-        )
+        return local_page(spark, [], np.float32([]))
     if prefix_length <= 0:
         _guard_unpruned_walk(index, "fuzzy match", allow_unpruned_dictionary)
     if prefix_length > 0:
@@ -265,9 +262,7 @@ def fuzzy_match_scored_scan(
     collects — the filtered-sub-query stats convention), scoring is one
     tokenize→explode pass joined to the broadcast weights table."""
     spark = docs.sparkSession
-    empty = spark.range(0).select(
-        F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
-    )
+    empty = local_page(spark, [], []).drop("rank")
     tokens = (
         [t for t in raw_tokens if t]
         if raw_tokens is not None

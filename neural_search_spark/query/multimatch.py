@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
+from ..ranking import local_page
 from ..tokenizer import tokenize_py
 from .bm25 import (
     BATCH_TOPK_SCHEMA,
@@ -191,11 +192,7 @@ def multi_match_index_topk(
             plan.append((index, boost, terms, idfs, sdf, stats))
 
     def _empty() -> DataFrame:
-        return spark.range(0).select(
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("float").alias("score"),
-            F.lit(0).cast("int").alias("rank"),
-        )
+        return local_page(spark, [], np.float32([]))
 
     if not plan:
         return _empty()
@@ -250,40 +247,20 @@ def multi_match_index_topk(
                 weights=np.concatenate([p[1] for p in per_term]),
                 minlength=len(uniq),
             )
-            f32 = combined.astype(np.float32)
-            sel = np.lexsort((uniq, -f32.astype(np.float64)))[:k]
-            return spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "doc_id": uniq[sel],
-                        "score": f32[sel],
-                        "rank": np.arange(1, len(sel) + 1, dtype=np.int32),
-                    }
-                ),
-                schema="doc_id long, score float, rank int",
-            )
-        parts = []
-        for index, boost, terms, idfs, _s, _st in plan:
-            ids, sc, _n = _driver_scored_all(
-                index, idfs, [tid_py(t) for t in terms]
-            )
-            if len(ids):
-                parts.append((ids, sc * boost))
-        if not parts:
-            return _empty()
-        uniq, combined = _combine_np(parts, match_type, tie_breaker)
+        else:
+            parts = []
+            for index, boost, terms, idfs, _s, _st in plan:
+                ids, sc, _n = _driver_scored_all(
+                    index, idfs, [tid_py(t) for t in terms]
+                )
+                if len(ids):
+                    parts.append((ids, sc * boost))
+            if not parts:
+                return _empty()
+            uniq, combined = _combine_np(parts, match_type, tie_breaker)
         f32 = combined.astype(np.float32)
         sel = np.lexsort((uniq, -f32.astype(np.float64)))[:k]
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": uniq[sel],
-                    "score": f32[sel],
-                    "rank": np.arange(1, len(sel) + 1, dtype=np.int32),
-                }
-            ),
-            schema="doc_id long, score float, rank int",
-        )
+        return local_page(spark, uniq[sel], f32[sel])
 
     if match_type == "cross_fields":
         # distributed cross_fields = the co-partitioned batch kernel with
@@ -471,10 +448,7 @@ def cross_fields_scored(
     terms = sorted(set(tokenize_py(query_text)))
     base = docs.withColumnRenamed(id_col, "doc_id")
     if not terms:
-        return spark.range(0).select(
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("double").alias("score"),
-        )
+        return local_page(spark, [], []).drop("rank")
     qdf = spark.createDataFrame(pd.DataFrame({"term": terms}))
     n_docs = base.count()
     tall = None

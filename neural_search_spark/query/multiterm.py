@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
+from ..ranking import local_page
 from ..tokenizer import tokenize_expr
 from .bm25 import BM25Index, _live_mask, driver_route
 
@@ -122,14 +123,6 @@ def expand_pattern(
     return [(t, df) for t, df in vocab if rx.match(t)]
 
 
-def _empty(spark) -> DataFrame:
-    return spark.range(0).select(
-        F.col("id").alias("doc_id"),
-        F.lit(0.0).cast("double").alias("score"),
-        F.lit(0).cast("int").alias("rank"),
-    )
-
-
 def multiterm_topk(
     index: BM25Index,
     value: str,
@@ -145,7 +138,7 @@ def multiterm_topk(
     spark = index.spark
     exps = expand_pattern(index, value, kind)
     if not exps:
-        return _empty(spark)
+        return local_page(spark, [], [])
     terms = [t for t, _ in exps]
     sum_df = sum(df for _, df in exps)
     if driver_route(mode, sum_df):
@@ -155,16 +148,7 @@ def multiterm_topk(
         if live is not None:
             ids = ids[live]
         ids = ids[:k]
-        pdf = pd.DataFrame(
-            {
-                "doc_id": ids,
-                "score": np.full(ids.size, float(boost)),
-                "rank": np.arange(1, ids.size + 1, dtype=np.int32),
-            }
-        )
-        return spark.createDataFrame(
-            pdf, schema="doc_id long, score double, rank int"
-        )
+        return local_page(spark, ids, np.full(ids.size, float(boost)))
     deletes = index.deletes
 
     def decode_docs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -254,7 +238,7 @@ def match_bool_prefix_topk(
         # search_as_you_type shingle subfields)
         tokens = tokenize_py(query_text)
     if not tokens:
-        return _empty(spark)
+        return local_page(spark, [], [])
     terms, last = tokens[:-1], tokens[-1]
     stats = index.term_stats(sorted(set(terms)))
     w_by_tid: dict[int, float] = {}
@@ -271,7 +255,7 @@ def match_bool_prefix_topk(
     prefix_tids = {tid_py(t) for t, _ in exps}
     sum_df += sum(df for _, df in exps)
     if not w_by_tid and not prefix_tids:
-        return _empty(spark)
+        return local_page(spark, [], [])
     k1, b, avgdl = index.k1, index.b, index.avgdl
     deletes = index.deletes
     fboost = float(boost)
@@ -352,10 +336,7 @@ def match_bool_prefix_topk(
             tbl["dls"].to_pylist(),
             k,
         )
-        pdf["rank"] = np.arange(1, len(pdf) + 1, dtype=np.int32)
-        return spark.createDataFrame(
-            pdf, schema="doc_id long, score float, rank int"
-        )
+        return local_page(spark, pdf["doc_id"], pdf["score"])
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
@@ -658,11 +639,7 @@ def term_topk(
 
     stats = index.term_stats([value]) if value else {}
     if value not in stats:
-        return index.spark.range(0).select(
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("float").alias("score"),
-            F.lit(0).cast("int").alias("rank"),
-        )
+        return local_page(index.spark, [], np.float32([]))
     w = {value: lucene_idf(index.n_docs, stats[value])}
     return weighted_term_topk(index, w, k=k, mode=mode)
 
@@ -678,9 +655,7 @@ def term_scored_scan(
     from .. import BM25_B, BM25_K1
 
     spark = docs.sparkSession
-    empty = spark.range(0).select(
-        F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
-    )
+    empty = local_page(spark, [], []).drop("rank")
     if not value:
         return empty
     toks = docs.select(
@@ -739,9 +714,7 @@ def terms_set_scored_scan(
     from .bm25 import lucene_idf
 
     spark = docs.sparkSession
-    empty_scan = spark.range(0).select(
-        F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
-    )
+    empty_scan = local_page(spark, [], []).drop("rank")
     vals = sorted({str(v) for v in (values or [])})
     if not vals:
         return empty_scan

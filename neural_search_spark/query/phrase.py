@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 
 from ..index.build import N_TERM_BUCKETS, tid_py
 from ..index.positions import has_positions
-from ..ranking import topk_rank_window
+from ..ranking import local_page, topk_rank_window
 from ..tokenizer import tokenize_expr, tokenize_py
 from .bm25 import BM25Index, _live_mask, driver_route, lucene_idf
 
@@ -239,14 +239,6 @@ def repeat_groups_of(tokens: list[str]) -> list[list[int]]:
     return [offs for offs in by_term.values() if len(offs) > 1]
 
 
-def _empty_topk(spark) -> DataFrame:
-    return spark.range(0).select(
-        F.col("id").alias("doc_id"),
-        F.lit(0.0).cast("float").alias("score"),
-        F.lit(0).cast("int").alias("rank"),
-    )
-
-
 def _score_docs(
     doc_ids: np.ndarray,
     freqs: np.ndarray,
@@ -288,9 +280,7 @@ def _scan_scored(
     the SAME scoped frame, matching ``bm25_scored``'s convention for
     filtered sub-queries."""
     spark = docs.sparkSession
-    empty = spark.range(0).select(
-        F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
-    )
+    empty = local_page(spark, [], []).drop("rank")
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         tokenize_expr(text_col).alias("toks"),
@@ -375,9 +365,7 @@ def _scan_scored_sloppy(
     ``sloppy_phrase_freq`` the index paths use. Stats follow
     ``_scan_scored``'s scoped-frame convention."""
     spark = docs.sparkSession
-    empty = spark.range(0).select(
-        F.col("id").alias("doc_id"), F.lit(0.0).alias("score")
-    )
+    empty = local_page(spark, [], []).drop("rank")
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         tokenize_expr(text_col).alias("toks"),
@@ -505,11 +493,12 @@ def phrase_topk(
     _require_positions(index)
     tokens = tokenize_py(phrase_text)
     if not tokens:
-        return _empty_topk(spark)
+        return local_page(spark, [], np.float32([]))
     _check_slop(tokens, slop)
     stats = index.term_stats(sorted(set(tokens)))
     if any(t not in stats for t in tokens):
-        return _empty_topk(spark)  # OOV token ⇒ phrase cannot match
+        # OOV token ⇒ phrase cannot match
+        return local_page(spark, [], np.float32([]))
     idf_total = sum(lucene_idf(index.n_docs, stats[t]) for t in tokens)
     offset_tids = [[tid_py(t)] for t in tokens]
     seed_term = min(set(tokens), key=lambda t: stats[t])
@@ -544,14 +533,15 @@ def phrase_prefix_topk(
     _require_positions(index)
     tokens = tokenize_py(phrase_text)
     if not tokens:
-        return _empty_topk(spark)
+        return local_page(spark, [], np.float32([]))
     fixed, prefix = tokens[:-1], tokens[-1]
     stats = index.term_stats(sorted(set(fixed)))
     if any(t not in stats for t in fixed):
-        return _empty_topk(spark)
+        return local_page(spark, [], np.float32([]))
     expansions = index.prefix_stats(prefix, max_expansions)
     if not expansions:
-        return _empty_topk(spark)  # MatchNoDocsQuery rewrite
+        # MatchNoDocsQuery rewrite
+        return local_page(spark, [], np.float32([]))
     idf_total = sum(lucene_idf(index.n_docs, stats[t]) for t in fixed) + sum(
         lucene_idf(index.n_docs, df) for _, df in expansions
     )
@@ -593,10 +583,7 @@ def _dispatch(
     seed_df: int | None = None,
 ) -> DataFrame:
     if driver_route(mode, sum_df):
-        pdf = _mphrase_topk_driver(index, offset_tids, idf_total, k, slop)
-        return index.spark.createDataFrame(
-            pdf, schema="doc_id long, score float, rank int"
-        )
+        return _mphrase_topk_driver(index, offset_tids, idf_total, k, slop)
     return _mphrase_topk_distributed(
         index, offset_tids, seed, idf_total, k, slop, seed_df=seed_df
     )
@@ -622,7 +609,7 @@ def _mphrase_topk_driver(
     idf_total: float,
     k: int,
     slop: int = 0,
-) -> pd.DataFrame:
+) -> DataFrame:
     import pyarrow.dataset as ds
 
     tids = sorted({t for g in offset_tids for t in g})
@@ -649,13 +636,7 @@ def _mphrase_topk_driver(
         rows = np.flatnonzero(tid_arr == t)
         order = np.argsort(doc_arr[rows], kind="mergesort")
         per_tid[t] = (doc_arr[rows[order]], rows[order])
-    empty = pd.DataFrame(
-        {
-            "doc_id": pd.Series(dtype="int64"),
-            "score": pd.Series(dtype="float32"),
-            "rank": pd.Series(dtype="int32"),
-        }
-    )
+    empty = local_page(index.spark, [], np.float32([]))
     groups = [sorted(set(g)) for g in offset_tids]
     req = sorted({g[0] for g in groups if len(g) == 1})
     unions = [g for g in groups if len(g) > 1]
@@ -748,8 +729,7 @@ def _mphrase_topk_driver(
         scored = scored.sort_values(
             ["score", "doc_id"], ascending=[False, True], kind="mergesort"
         ).head(k)
-        scored["rank"] = np.arange(1, len(scored) + 1, dtype=np.int32)
-        return scored.reset_index(drop=True)
+        return local_page(index.spark, scored["doc_id"], scored["score"])
     # vectorized phrase freq across ALL candidates at once: tag every
     # position with candidate_index·STRIDE, run ONE sorted-intersection
     # chain over the per-offset tagged streams (per-doc position lists are
@@ -816,8 +796,7 @@ def _mphrase_topk_driver(
     scored = scored.sort_values(
         ["score", "doc_id"], ascending=[False, True], kind="mergesort"
     ).head(k)
-    scored["rank"] = np.arange(1, len(scored) + 1, dtype=np.int32)
-    return scored.reset_index(drop=True)
+    return local_page(index.spark, scored["doc_id"], scored["score"])
 
 
 # broadcast the leading-term doc set when its df is under this bound

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ranking import local_page
 from ..tokenizer import tokenize_expr, tokenize_py
 
 __all__ = [
@@ -129,8 +130,11 @@ def build_sayt_indexes(
     sizes = tuple(grams) if grams is not None else tuple(
         range(1, max_shingle + 1)
     )
-    if any(n < 1 for n in sizes):
-        raise ValueError("shingle sizes must be >= 1")
+    if any(not 1 <= n <= 4 for n in sizes):
+        raise ValueError(
+            f"shingle sizes must be 1..4 (the root field plus the host's "
+            f"2..4 subfields), got {sizes}"
+        )
     # materialize the base token array in its own column FIRST: passing
     # the tokenize expression tree into the transform lambda would
     # re-evaluate tokenization per shingle position (O(dl²) — measured
@@ -198,10 +202,7 @@ def search_as_you_type_topk(
             )
         )
     if not parts:
-        spark = indexes[min(indexes)].spark
-        from .multiterm import _empty
-
-        return _empty(spark)
+        return local_page(indexes[min(indexes)].spark, [], [])
     return _dismax_union_topk(parts, k)
 
 

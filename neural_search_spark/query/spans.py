@@ -82,10 +82,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.build import N_TERM_BUCKETS, tid_py
+from ..ranking import local_page
 from ..tokenizer import tokenize_py
 from .bm25 import BM25Index, driver_route, lucene_idf
 from .phrase import (
-    _empty_topk,
     _live_mask,
     _member,
     _positions_path,
@@ -565,7 +565,7 @@ def span_topk(
     _require_positions(index)
     clause = expand_span_multi(clause, index)
     if clause is None:  # a multi-term clause matched no dictionary term
-        return _empty_topk(spark)
+        return local_page(spark, [], np.float32([]))
     sterms = sorted(scoring_terms(clause))
     aterms = sorted(all_terms(clause))
     stats = index.term_stats(aterms)
@@ -573,22 +573,20 @@ def span_topk(
         lucene_idf(index.n_docs, stats[t]) for t in sterms if t in stats
     )
     if idf_total == 0.0:
-        return _empty_topk(spark)
+        return local_page(spark, [], np.float32([]))
     groups: list[list[int]] = []
     for g in required_groups(clause):
         live = sorted(tid_py(t) for t in g if t in stats)
         if not live:
-            return _empty_topk(spark)  # a required group is fully OOV
+            # a required group is fully OOV
+            return local_page(spark, [], np.float32([]))
         groups.append(live)
     tid_of = {t: tid_py(t) for t in aterms if t in stats}
     read_tids = sorted(tid_of.values())
     sum_df = sum(stats[t] for t in aterms if t in stats)
     if driver_route(mode, sum_df):
-        pdf = _span_topk_driver(
+        return _span_topk_driver(
             index, clause, tid_of, groups, read_tids, idf_total, k
-        )
-        return spark.createDataFrame(
-            pdf, schema="doc_id long, score float, rank int"
         )
     return _span_topk_distributed(
         index, clause, tid_of, groups, read_tids, idf_total, k
@@ -646,7 +644,7 @@ def _span_topk_driver(
     read_tids: list[int],
     idf_total: float,
     k: int,
-) -> pd.DataFrame:
+) -> DataFrame:
     import pyarrow.dataset as ds
 
     buckets = sorted({t % N_TERM_BUCKETS for t in read_tids})
@@ -657,13 +655,7 @@ def _span_topk_driver(
         filter=ds.field("term_bucket").isin(buckets)
         & ds.field("tid").isin(read_tids),
     )
-    empty = pd.DataFrame(
-        {
-            "doc_id": pd.Series(dtype="int64"),
-            "score": pd.Series(dtype="float32"),
-            "rank": pd.Series(dtype="int32"),
-        }
-    )
+    empty = local_page(index.spark, [], np.float32([]))
     if tbl.num_rows == 0:
         return empty
     doc_arr = tbl["doc_id"].to_numpy()
@@ -694,8 +686,7 @@ def _span_topk_driver(
     scored = scored.sort_values(
         ["score", "doc_id"], ascending=[False, True], kind="mergesort"
     ).head(k)
-    scored["rank"] = np.arange(1, len(scored) + 1, dtype=np.int32)
-    return scored.reset_index(drop=True)
+    return local_page(index.spark, scored["doc_id"], scored["score"])
 
 
 def _span_topk_distributed(

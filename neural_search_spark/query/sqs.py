@@ -53,6 +53,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ranking import local_page
 from ..tokenizer import tokenize_py
 
 # ---------------------------------------------------------------------------
@@ -255,10 +256,7 @@ def sqs_scored(
     the corpus MINUS the negated docs (the SimpleQueryParser MatchAllDocs
     negation wrapper — see the module docstring)."""
     spark = docs.sparkSession
-    empty = spark.range(0).select(
-        F.col("id").alias("doc_id"),
-        F.lit(0.0).cast("double").alias("score"),
-    )
+    empty = local_page(spark, [], []).drop("rank")
     if default_operator not in ("or", "and"):
         raise ValueError("default_operator must be 'or' or 'and'")
     ast = parse_sqs(query or "")

@@ -1,23 +1,47 @@
-"""Rank-window helper for post-limit top-k results.
+"""Final-page helpers: the (doc_id, score, rank) page every top-k path
+returns, ordered by score descending with doc_id ascending as the
+tie-break and ranked 1..n (the reference's TopDocs rank field).
 
-Every query path ends with ``orderBy(...).limit(k)`` (a
-TakeOrderedAndProject — per-partition heap + driver merge, no full sort)
-followed by a 1..k ``row_number`` — the reference's TopDocs rank field.
-The window's input is ≤ k rows BY CONSTRUCTION, so moving it to one
-partition is intended; but an empty partition spec makes WindowExec log
-"No Partition Defined ... serious performance degradation" on every
-query, burying real regressions in bench-log greps.
+Two ways build that page:
 
-``topk_rank_window`` uses a constant-zero, NON-FOLDABLE partition key:
-all rows share partition 0 (identical semantics/ranks), WindowExec sees a
-non-empty spec and stays quiet. A plain ``lit(0)`` would not work —
-Catalyst folds foldable partition keys away and the warning returns.
+* ``local_page`` — a driver-ranked page (index kernels on the driver
+  route, and their empty pages). The numpy arrays go through a
+  ``pyarrow.Table`` into an Arrow-backed local relation, which
+  ``collect()`` serves without launching a Spark job. The search engine
+  returns such a page as is.
+* ``topk_rank_window`` — a distributed result bounded by
+  ``orderBy(...).limit(k)`` (a TakeOrderedAndProject: per-partition heap
+  plus driver merge, no full sort) and then ranked by ``row_number``.
+  The window's input is ≤ k rows BY CONSTRUCTION, so moving it to one
+  partition is intended; but an empty partition spec makes WindowExec
+  log "No Partition Defined ... serious performance degradation" on
+  every query, burying real regressions in bench-log greps. The window
+  uses a constant-zero, NON-FOLDABLE partition key instead: all rows
+  share partition 0 (identical semantics/ranks) and WindowExec stays
+  quiet. A plain ``lit(0)`` would not work — Catalyst folds foldable
+  partition keys away and the warning returns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, Window, WindowSpec
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
+
+
+def local_page(spark: SparkSession, ids, scores) -> DataFrame:
+    """(doc_id long, score, rank int) page from already-ordered arrays.
+    The score type follows ``scores`` (float32 → float, otherwise
+    double), so pass a typed empty array for an empty page."""
+    ids = np.asarray(ids, dtype=np.int64)
+    scores = np.asarray(scores)
+    if scores.dtype != np.float32:
+        scores = scores.astype(np.float64)
+    rank = np.arange(1, ids.size + 1, dtype=np.int32)
+    return spark.createDataFrame(
+        pa.table({"doc_id": ids, "score": scores, "rank": rank})
+    )
 
 
 def _const_zero() -> Column:

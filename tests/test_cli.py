@@ -116,3 +116,21 @@ def test_cli_update_by_query(cli_env, capsys, tmp_path):
     spark = SparkSession.getActiveSession()
     hits = bm25_topk(BM25Index(spark, out_dir), "zzcliupd", k=5).collect()
     assert len(hits) > 0
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [["--batch"], ["--aggs-json", '{"tools": {"terms": {"field": "tool"}}}']],
+)
+def test_cli_highlight_refuses_batch_and_aggs(cli_env, extra):
+    """--highlight-json is never dropped silently: with --batch or
+    --aggs-json the search refuses to run."""
+    spec = '{"match": {"query_text": "tool"}}'
+    if extra == ["--batch"]:
+        spec = '{"q1": ' + spec + "}"
+    with pytest.raises(SystemExit, match="--highlight-json not supported"):
+        main([
+            "search", "--spec-json", spec,
+            "--corpus", cli_env["corpus"], "--index", cli_env["idx"],
+            "--highlight-json", '{"fields": {"text": {}}}', *extra,
+        ])

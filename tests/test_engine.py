@@ -741,3 +741,13 @@ def test_search_highlight_block(spark, eng):
     for r in res2:
         assert "<em>run</em>" not in r["highlighted"]
         assert "<em>tool</em>" in r["highlighted"]
+
+
+def test_search_highlight_rejects_several_fields(eng):
+    """Only one highlight field is served; a second is refused, not
+    silently dropped."""
+    with pytest.raises(ValueError, match="one field"):
+        eng.search(
+            {"match": {"query_text": "tool"}}, k=3,
+            highlight={"fields": {"text": {}, "tool": {}}},
+        )

@@ -40,6 +40,13 @@ def test_build_rejects_non_str_out_dir(spark, transcripts_df, tmp_path):
     assert not any(tmp_path.iterdir())
 
 
+@pytest.mark.parametrize("grams", [(0, 2), (2, 5)])
+def test_build_rejects_out_of_range_grams(spark, transcripts_df, tmp_path, grams):
+    with pytest.raises(ValueError, match="shingle sizes must be 1..4"):
+        build_sayt_indexes(spark, str(tmp_path), transcripts_df, grams=grams)
+    assert not any(tmp_path.iterdir())
+
+
 def test_shingle_col_matches_python(spark):
     rows = [
         ("the quick brown fox",),

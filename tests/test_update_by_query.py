@@ -215,3 +215,46 @@ def test_update_guards(spark, upd_env, tmp_path):
     import os
 
     assert not os.path.exists(str(tmp_path / "never_built"))
+
+
+def test_merge_into_a_source_raises_before_deleting(spark, upd_env):
+    """An out_dir that resolves to one of the sources is refused before
+    anything is deleted: the source index still answers queries."""
+    from neural_search_spark.index.merge import merge_indexes
+
+    main = upd_env["main"].path
+    before = bm25_topk(BM25Index(spark, main), "w0005", k=5).collect()
+    assert before
+    with pytest.raises(ValueError, match="one of the source indexes"):
+        merge_indexes(spark, [main, main], main.rstrip("/") + "/")
+    after = bm25_topk(BM25Index(spark, main), "w0005", k=5).collect()
+    assert after == before
+
+
+def test_update_and_reindex_with_custom_id_col(spark, upd_env, transcripts_df):
+    """update_by_query and reindex key their matched set on the engine's
+    id column, not on doc_id."""
+    corpus = transcripts_df.withColumn("uid", doc_id_col())
+    eng = Engine(
+        spark, corpus=corpus, bm25_index=upd_env["main"], id_col="uid"
+    )
+    spec = {"match": {"query_text": "w0005"}}
+    out_dir = str(upd_env["root"] / "uid_merged")
+    rep = eng.update_by_query(
+        spec, {"text": "concat(text, ' zzzuid')"}, out_dir=out_dir
+    )
+    assert rep["updated"] == rep["total"] > 0
+    hits = eng.search({"match": {"query_text": "zzzuid"}}, k=10_000)
+    assert hits.count() == rep["updated"]
+    assert eng.corpus.filter(
+        F.col("text").contains("zzzuid")
+    ).count() == rep["updated"]
+
+    info = eng.reindex(
+        str(upd_env["root"] / "uid_reindexed"),
+        spec={"match": {"query_text": "zzzuid"}},
+        set_exprs={"text": "concat(text, ' zzzcopy')"},
+    )
+    assert info["n_docs"] == rep["updated"]
+    copy = BM25Index(spark, str(upd_env["root"] / "uid_reindexed"))
+    assert bm25_topk(copy, "zzzcopy", k=10_000).count() == rep["updated"]
