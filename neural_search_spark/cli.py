@@ -405,9 +405,11 @@ def cmd_mget(args) -> None:
 
 
 def cmd_update_by_query(args) -> None:
-    from .engine import Engine
+    from .engine import STALE_INDEX_UPDATE, Engine
     from .query.bm25 import BM25Index
 
+    if args.index and not args.out and not args.dry_run:
+        raise SystemExit(STALE_INDEX_UPDATE)
     spark = _get_session(args)
     eng = Engine(
         spark,

@@ -624,6 +624,14 @@ _ROUTED = frozenset({
 # and multi_match singletons keep their own plan's driver fast path)
 _BATCH_MIN = {"span": 2, "multi_match": 2}
 
+# an update without a reindex would leave index routes answering from the
+# old postings — Engine.update_by_query and the CLI refuse it up front
+STALE_INDEX_UPDATE = (
+    "update_by_query on an engine with an attached bm25_index needs "
+    "out_dir (the incremental reindex) or dry_run: updating only the "
+    "corpus would leave the index stale"
+)
+
 
 @dataclass
 class _Plan:
@@ -1205,7 +1213,11 @@ class Engine:
         if qt in ("match_phrase", "match_phrase_prefix"):
             if not self._positions(idx):
                 return scan("index lacks the positions sidecar")
-            from .query.phrase import phrase_prefix_topk, phrase_topk
+            from .query.phrase import (
+                PhraseQuery,
+                phrase_prefix_topk,
+                phrase_topk,
+            )
 
             if qt == "match_phrase_prefix":
                 return index(
@@ -1214,13 +1226,15 @@ class Engine:
                     lambda k: phrase_prefix_topk(
                         idx, text, k=k, max_expansions=spec.max_expansions
                     ),
+                    batch=(
+                        ("phrase",),
+                        PhraseQuery(text, max_expansions=spec.max_expansions),
+                    ),
                 )
             return index(
                 "positions-sidecar kernels",
                 lambda k: phrase_topk(idx, text, k=k, slop=spec.slop),
-                # the sloppy sweep is sequential per doc — batching buys
-                # nothing
-                batch=(("phrase",), text) if spec.slop == 0 else None,
+                batch=(("phrase",), PhraseQuery(text, spec.slop)),
             )
         if qt in ("prefix", "wildcard", "regexp", "terms"):
             from .query.multiterm import multiterm_topk
@@ -2302,8 +2316,13 @@ class Engine:
         reindexed: a segment build over the matched rows + ONE
         source-scoped merge expunging the stale copies — cost scales
         with the update size, never the corpus. Returns {'total',
-        'updated'} (+ merge info under 'reindex' when out_dir given)."""
+        'updated'} (+ merge info under 'reindex' when out_dir given).
+        With an attached bm25_index, a real (non-dry-run) update needs
+        ``out_dir``: it raises ValueError before touching the corpus."""
         from .index.update import apply_update, update_and_reindex
+
+        if self.bm25_index is not None and out_dir is None and not dry_run:
+            raise ValueError(STALE_INDEX_UPDATE)
 
         matched = self._matched_scored(spec).select("doc_id").distinct()
         # host semantics: deleted docs are invisible to update_by_query —
@@ -2541,11 +2560,13 @@ class Engine:
         score, rank) DataFrame. Specs whose plans share a batch key run
         as ONE shared job: plain match specs through bm25_topk_batch
         (shared pruned scan + per-shard decode cache — the
-        cluster-throughput shape), exact match_phrase specs through
-        phrase_topk_batch, ≥2 span/intervals specs through
-        span_topk_batch (a LONE span query keeps search()'s
+        cluster-throughput shape), match_phrase and match_phrase_prefix
+        specs (any slop) through phrase_topk_batch, ≥2 span/intervals
+        specs through span_topk_batch (a LONE span query keeps search()'s
         auto-selected driver fast path) and ≥2 multi_match specs per
-        (fields, type, tie_breaker) through multi_match_topk_batch. Other
+        (fields, type, tie_breaker) through multi_match_topk_batch. The
+        phrase and span batch kernels are the positional shard function a
+        single distributed query runs, with every spec at once. Other
         specs run their own plans, unioned in."""
         if not specs:
             raise ValueError("msearch needs at least one spec")
@@ -2594,7 +2615,7 @@ class Engine:
 
     def _batch_topk(self, key: tuple, items: list, k: int) -> DataFrame:
         """One shared job for a batch group: items are (query_id, query
-        text — or span clause) pairs."""
+        text — or PhraseQuery, or span clause) pairs."""
         kind = key[0]
         if kind == "bm25":
             from .query.bm25 import bm25_topk_batch

@@ -444,13 +444,13 @@ def _merge_positions(
     import json
     import shutil
 
-    from .positions import POSITIONS_FORMAT_VERSION
+    from .positions import POSITIONS_FORMAT_VERSION, positions_path
 
     cols = ["tid", "doc_id", "dl", "positions"]
     scoped = deletes is not None and del_src_idx is not None
     dfs = []
     for i, p in enumerate(src_dirs):
-        d = spark.read.parquet(os.path.join(p, "positions")).select(*cols)
+        d = spark.read.parquet(positions_path(p)).select(*cols)
         if scoped:
             d = d.withColumn("__src", F.lit(i))
         dfs.append(d)
@@ -476,7 +476,7 @@ def _merge_positions(
             )
         else:
             pos = pos.join(dels, "doc_id", "left_anti")
-    out = os.path.join(out_dir, "positions")
+    out = positions_path(out_dir)
     if os.path.exists(out):
         shutil.rmtree(out)
     (

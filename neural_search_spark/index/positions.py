@@ -30,6 +30,17 @@ Scale notes (10^12 turns): the shuffle key is (doc_id, tid) — doc-keyed, so
 hot TERMS do not concentrate (a stopword's positions spread across its docs'
 partitions); the term_bucket repartition for the write reuses the main
 build's 64-bucket layout so phrase queries prune to their terms' buckets.
+
+Read side (every positional query — phrase, phrase_prefix, span,
+intervals — reads through these):
+
+* ``positions_frame`` — the Spark rows of a tid set with their
+  ``doc_shard`` grouping key: the ``cache_positions`` frame when pinned,
+  else the term_bucket-pruned parquet scan;
+* ``read_positions`` — the same rows read on the driver with pyarrow, as
+  a doc-sorted ``PositionsBlock``;
+* ``PositionsBlock.from_pandas`` — one shard's rows as the same block, so
+  the driver and the shard kernels see one data shape.
 """
 
 from __future__ import annotations
@@ -38,7 +49,8 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -169,7 +181,7 @@ def build_positions(
     this pass stores only what phrase matching needs. Overwrites any prior
     positions sidecar (deterministic content — same corpus → same rows)."""
     t0 = time.time()
-    out = os.path.join(index_dir, "positions")
+    out = positions_path(index_dir)
     pos = positions_table(transcripts).withColumn(
         "term_bucket", F.pmod("tid", F.lit(N_TERM_BUCKETS))
     )
@@ -194,9 +206,131 @@ def has_positions(index_dir: str) -> bool:
     return os.path.exists(os.path.join(index_dir, "positions_config.json"))
 
 
+def positions_path(index_dir: str) -> str:
+    return os.path.join(index_dir, "positions")
+
+
+def doc_shard(n_shards: int) -> Column:
+    """The positional kernels' grouping key: a pure function of doc_id,
+    so every row of a doc lands in one shard task."""
+    return F.pmod(F.xxhash64("doc_id", F.lit(13)), F.lit(n_shards)).cast(
+        "int"
+    )
+
+
+def positions_frame(index, tids: list[int]) -> DataFrame:
+    """(tid, doc_id, dl, positions, doc_shard) rows of ``tids`` for the
+    ``BM25Index`` ``index``: its ``cache_positions`` frame when pinned
+    (already clustered by doc_shard, so grouping needs no exchange), else
+    the term_bucket-pruned parquet scan with a tid row-group filter."""
+    if index._positions_cache is not None:
+        return index._positions_cache.filter(F.col("tid").isin(tids))
+    buckets = sorted({t % N_TERM_BUCKETS for t in tids})
+    return (
+        index.spark.read.parquet(positions_path(index.path))
+        .filter(F.col("term_bucket").isin(buckets) & F.col("tid").isin(tids))
+        .withColumn("doc_shard", doc_shard(index.n_shards))
+    )
+
+
+class PositionsBlock:
+    """Sidecar rows sorted by (doc_id, tid): ``doc``/``tid``/``dl`` per
+    row, and row r's ascending positions at ``pos[start[r]:end[r]]`` in
+    one flat int64 buffer. ``cand`` are the distinct docs, ``first`` each
+    doc's first row and ``inv`` each row's index into ``cand``."""
+
+    def __init__(self, doc, tid, dl, pos, start, end):
+        self.doc, self.tid, self.dl = doc, tid, dl
+        self.pos, self.start, self.end = pos, start, end
+        new_doc = np.ones(doc.size, dtype=bool)
+        new_doc[1:] = doc[1:] != doc[:-1]
+        self.first = np.flatnonzero(new_doc)
+        self.cand = doc[self.first]
+        self.inv = np.cumsum(new_doc) - 1
+
+    @classmethod
+    def from_pandas(cls, pdf) -> "PositionsBlock":
+        """One shard's (tid, doc_id, dl, positions) pandas rows."""
+        pdf = pdf.sort_values(["doc_id", "tid"], kind="mergesort")
+        pos_col = pdf["positions"].to_numpy()
+        lens = np.fromiter(
+            (len(p) for p in pos_col), dtype=np.int64, count=len(pos_col)
+        )
+        end = np.cumsum(lens)
+        return cls(
+            pdf["doc_id"].to_numpy(),
+            pdf["tid"].to_numpy(),
+            pdf["dl"].to_numpy(),
+            np.concatenate(pos_col).astype(np.int64)
+            if len(pos_col)
+            else np.empty(0, dtype=np.int64),
+            end - lens,
+            end,
+        )
+
+    def rows(self, keep: np.ndarray) -> "PositionsBlock":
+        """The block restricted to the rows where ``keep`` holds (the
+        positions buffer is shared, not copied)."""
+        return PositionsBlock(
+            self.doc[keep], self.tid[keep], self.dl[keep], self.pos,
+            self.start[keep], self.end[keep],
+        )
+
+    def positions(self, r: int) -> np.ndarray:
+        return self.pos[self.start[r] : self.end[r]]
+
+    def gather(self, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(concatenated positions of ``rows``, per-row lengths)."""
+        starts = self.start[rows]
+        lens = self.end[rows] - starts
+        prev = np.cumsum(lens) - lens
+        idx = np.arange(int(lens.sum()), dtype=np.int64) + np.repeat(
+            starts - prev, lens
+        )
+        return self.pos[idx], lens
+
+
+def read_positions(index_dir: str, tids: list[int]) -> PositionsBlock:
+    """Driver read of the rows of ``tids``: one pyarrow scan pruned to
+    their term_buckets with a tid filter pushed into the row groups. The
+    positions stay in the Arrow list's flat value buffer; only the row
+    arrays are reordered."""
+    import pyarrow.dataset as ds
+
+    buckets = sorted({t % N_TERM_BUCKETS for t in tids})
+    tbl = ds.dataset(
+        positions_path(index_dir), format="parquet", partitioning="hive"
+    ).to_table(
+        columns=["tid", "doc_id", "dl", "positions"],
+        filter=ds.field("term_bucket").isin(buckets)
+        & ds.field("tid").isin(tids),
+    )
+    doc = tbl["doc_id"].to_numpy()
+    tid = tbl["tid"].to_numpy()
+    if doc.size == 0:
+        z = np.empty(0, dtype=np.int64)
+        return PositionsBlock(z, z, z, z, z, z)
+    pos = tbl.column("positions").combine_chunks()
+    offs = np.asarray(pos.offsets).astype(np.int64)
+    order = np.lexsort((tid, doc))
+    return PositionsBlock(
+        doc[order],
+        tid[order],
+        tbl["dl"].to_numpy()[order],
+        pos.values.to_numpy(zero_copy_only=False).astype(np.int64),
+        offs[:-1][order],
+        offs[1:][order],
+    )
+
+
 __all__ = [
+    "PositionsBlock",
     "build_positions",
+    "doc_shard",
     "has_positions",
+    "positions_frame",
+    "positions_path",
     "positions_table",
+    "read_positions",
     "doc_id_col",
 ]

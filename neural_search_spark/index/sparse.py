@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..query.bm25 import driver_route
-from ..ranking import local_page, topk_rank_window
+from ..ranking import local_page, topk_page
 
 from .. import BLOCK_SIZE
 from .build import (
@@ -533,12 +533,8 @@ def sparse_index_topk(
         pdf = _topk_pdf(ids, sc, k)
         return local_page(spark, pdf["doc_id"], pdf["score"])
     shard_topk = _distributed_scores(index, q_weights, sorted(live), k)
-    w = topk_rank_window(F.desc("score"), F.asc("doc_id"))
-    return (
-        shard_topk.withColumn("score", F.col("score").cast("double"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
+    return topk_page(
+        shard_topk.withColumn("score", F.col("score").cast("double")), k
     )
 
 

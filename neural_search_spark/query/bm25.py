@@ -29,11 +29,11 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..ranking import local_page, topk_rank_window
+from ..ranking import batch_page, empty_batch_page, local_page, topk_page
 
 from .. import BM25_B, BM25_K1
 from ..index.build import N_TERM_BUCKETS, doc_id_col, tid_py, tokenize_corpus
@@ -307,11 +307,10 @@ class BM25Index:
         return self
 
     def cache_positions(self) -> "BM25Index":
-        """Phrase-serving mode: pin the positions sidecar in executor
-        memory PRE-PARTITIONED by doc_shard — the verify kernel's grouping
-        key. With rows already clustered, a phrase query's plan is
-        exchange-free: in-memory scan → tid filter → broadcast
-        leading-term semi-join (partitioning-preserving) →
+        """Positional-serving mode: pin the positions sidecar in executor
+        memory PRE-PARTITIONED by doc_shard — the positional shard
+        kernel's grouping key. With rows already clustered, a phrase or
+        span query's plan is exchange-free: in-memory scan → tid filter →
         groupBy(doc_shard) applyInPandas with the Exchange elided, the
         same trick ``cache()`` plays for BM25 serving. The Lucene analog
         is the .pos file staying hot in the page cache instead of being
@@ -319,7 +318,7 @@ class BM25Index:
         this."""
         from pyspark import StorageLevel
 
-        from ..index.positions import has_positions
+        from ..index.positions import doc_shard, has_positions, positions_path
 
         if not has_positions(self.path):
             raise ValueError(
@@ -328,13 +327,8 @@ class BM25Index:
             )
         if self._positions_cache is None:
             pos = self.spark.read.parquet(
-                os.path.join(self.path, "positions")
-            ).withColumn(
-                "doc_shard",
-                F.pmod(
-                    F.xxhash64("doc_id", F.lit(13)), F.lit(self.n_shards)
-                ).cast("int"),
-            )
+                positions_path(self.path)
+            ).withColumn("doc_shard", doc_shard(self.n_shards))
             # sortWithinPartitions(tid): the in-memory columnar cache keeps
             # per-batch min/max stats, so a query's `tid IN (...)` filter
             # skips every batch outside its terms' ranges — the cached
@@ -359,6 +353,76 @@ class BM25Index:
         return self._postings_df.filter(
             F.col("term_bucket").isin(buckets) & F.col("tid").isin(tids)
         )
+
+
+def _decode_tfn(
+    rows: pd.DataFrame,
+    k1: float,
+    b: float,
+    avgdl: float,
+    deletes: np.ndarray | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode posting-block rows → (live doc ids, float64 BM25 tf-norm).
+    Tombstones are masked here, at decode time — before any doc can
+    enter a candidate set or raise a threshold."""
+    ids = np.concatenate([decode_doc_ids(x) for x in rows["docs"]])
+    tfs = np.concatenate([decode_varint(x) for x in rows["tfs"]]).astype(
+        np.float64
+    )
+    dls = np.concatenate([decode_varint(x) for x in rows["dls"]]).astype(
+        np.float64
+    )
+    live = _live_mask(ids, deletes)
+    if live is not None:
+        ids, tfs, dls = ids[live], tfs[live], dls[live]
+    return ids, tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+
+
+def _single_term_topk(
+    rows: pd.DataFrame,
+    idf: float,
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+    deletes: np.ndarray | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Block-max pruned top-k of a one-term query over its block rows →
+    (doc ids, float32 scores), score desc / doc_id asc. Per-doc scores
+    are independent, so the per-block max-score bound prunes EXACTLY (the
+    true block-max shortcut — Lucene's advanceShallow /
+    setMinCompetitiveScore pair, reference
+    HybridScoreBlockBoundaryPropagator.java:53-98): process blocks by
+    descending bound and, once k candidates exist, skip every block whose
+    bound can't beat (or f32-tie) the running k-th score."""
+    rows = rows.sort_values("max_tfnorm", ascending=False, kind="mergesort")
+    bounds_ = idf * rows["max_tfnorm"].to_numpy()
+    ids_parts, sc_parts, n_seen = [], [], 0
+    theta = -np.inf
+    for bi in range(len(rows)):
+        if n_seen >= k:
+            # one-f32-ulp slack: never skip a block that could produce a
+            # doc tying theta after the float32 cast
+            thr = float(np.nextafter(np.float32(theta), np.float32(-np.inf)))
+            if bounds_[bi] < thr:
+                break
+        ids_b, tfn_b = _decode_tfn(
+            rows.iloc[bi : bi + 1], k1, b, avgdl, deletes
+        )
+        ids_parts.append(ids_b)
+        sc_parts.append(idf * tfn_b)
+        n_seen += len(ids_b)
+        if n_seen >= k:
+            all_sc = np.concatenate(sc_parts)
+            theta = float(
+                np.partition(all_sc, len(all_sc) - k)[len(all_sc) - k]
+            )
+    if not ids_parts:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
+    ids = np.concatenate(ids_parts)
+    f32 = np.concatenate(sc_parts).astype(np.float32)
+    sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
+    return ids[sel], f32[sel]
 
 
 def _maxscore_shard_scorer(
@@ -396,60 +460,15 @@ def _maxscore_shard_scorer(
         theta = -np.inf  # k-th best accumulated score so far
 
         def decode_contrib(rows: pd.DataFrame, idf: float):
-            ids = np.concatenate([decode_doc_ids(x) for x in rows["docs"]])
-            tfs = np.concatenate(
-                [decode_varint(x) for x in rows["tfs"]]
-            ).astype(np.float64)
-            dls = np.concatenate(
-                [decode_varint(x) for x in rows["dls"]]
-            ).astype(np.float64)
-            live = _live_mask(ids, deletes)
-            if live is not None:
-                ids, tfs, dls = ids[live], tfs[live], dls[live]
-            tfn = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+            ids, tfn = _decode_tfn(rows, k1, b, avgdl, deletes)
             return ids, idf * tfn
 
         if len(order) == 1:
-            # single-term fast path: per-doc scores are independent, so the
-            # per-block max-score bound prunes EXACTLY (the true block-max
-            # shortcut — Lucene's advanceShallow/setMinCompetitiveScore pair,
-            # reference HybridScoreBlockBoundaryPropagator.java:53-98).
-            # Process blocks by descending bound; once k candidates exist,
-            # skip every block whose bound can't beat (or f32-tie) theta.
             t = order[0]
-            idf = idfs[t]
-            rows = pdf[terms == t].sort_values(
-                "max_tfnorm", ascending=False, kind="mergesort"
+            ids, f32 = _single_term_topk(
+                pdf[terms == t], idfs[t], k, k1, b, avgdl, deletes
             )
-            bounds_ = idf * rows["max_tfnorm"].to_numpy()
-            ids_parts, sc_parts, n_seen = [], [], 0
-            for bi in range(len(rows)):
-                if n_seen >= k:
-                    # one-f32-ulp slack: never skip a block that could
-                    # produce a doc tying theta after the float32 cast
-                    thr = float(np.nextafter(np.float32(theta), np.float32(-np.inf)))
-                    if bounds_[bi] < thr:
-                        break
-                ids_b, contrib_b = decode_contrib(rows.iloc[bi : bi + 1], idf)
-                ids_parts.append(ids_b)
-                sc_parts.append(contrib_b)
-                n_seen += len(ids_b)
-                if n_seen >= k:
-                    all_sc = np.concatenate(sc_parts)
-                    theta = float(
-                        np.partition(all_sc, len(all_sc) - k)[len(all_sc) - k]
-                    )
-            if not ids_parts:
-                return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                    {"doc_id": np.int64, "score": np.float32}
-                )
-            cand_ids = np.concatenate(ids_parts)
-            cand_scores = np.concatenate(sc_parts)
-            final32 = cand_scores.astype(np.float32)
-            sel = np.lexsort((cand_ids, -final32.astype(np.float64)))[:k]
-            return pd.DataFrame(
-                {"doc_id": cand_ids[sel], "score": final32[sel]}
-            )
+            return pd.DataFrame({"doc_id": ids, "score": f32})
 
         for ti, t in enumerate(order):
             rows = pdf[terms == t]
@@ -584,20 +603,9 @@ def _msm_shard_scorer(
             return empty
         ids_parts, sc_parts = [], []
         for t, g in pdf.groupby("tid", sort=False):
-            ids = np.concatenate([decode_doc_ids(x) for x in g["docs"]])
-            tfs = np.concatenate(
-                [decode_varint(x) for x in g["tfs"]]
-            ).astype(np.float64)
-            dls = np.concatenate(
-                [decode_varint(x) for x in g["dls"]]
-            ).astype(np.float64)
-            live = _live_mask(ids, deletes)
-            if live is not None:
-                ids, tfs, dls = ids[live], tfs[live], dls[live]
+            ids, tfn = _decode_tfn(g, k1, b, avgdl, deletes)
             ids_parts.append(ids)
-            sc_parts.append(
-                idfs[t] * tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-            )
+            sc_parts.append(idfs[t] * tfn)
         if not ids_parts:
             return empty
         all_ids = np.concatenate(ids_parts)
@@ -835,12 +843,7 @@ def _term_topk(
 
     # TakeOrderedAndProject: per-partition top-k then a single merge on the
     # driver — the Catalyst-native equivalent of the treeAggregate heap merge
-    w = topk_rank_window(F.desc("score"), F.asc("doc_id"))
-    return (
-        shard_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-    )
+    return topk_page(shard_topk, k)
 
 
 def weighted_term_topk(
@@ -902,12 +905,7 @@ def bm25_topk_batch(
     }
     live = {qid: ts for qid, ts in q_tids.items() if ts}
     if not live:
-        return spark.range(0).select(
-            F.lit("").alias("query_id"),
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("float").alias("score"),
-            F.lit(0).cast("int").alias("rank"),
-        )
+        return empty_batch_page(spark)
     k1, b, avgdl = index.k1, index.b, index.avgdl
     deletes = index.deletes
 
@@ -922,76 +920,25 @@ def bm25_topk_batch(
         terms_arr = pdf["tid"].to_numpy(dtype=np.int64)
         cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
-        def decode_rows(rows: pd.DataFrame, idf: float):
-            ids = np.concatenate([decode_doc_ids(x) for x in rows["docs"]])
-            tfs = np.concatenate(
-                [decode_varint(x) for x in rows["tfs"]]
-            ).astype(np.float64)
-            dls = np.concatenate(
-                [decode_varint(x) for x in rows["dls"]]
-            ).astype(np.float64)
-            live = _live_mask(ids, deletes)
-            if live is not None:
-                ids, tfs, dls = ids[live], tfs[live], dls[live]
-            tfn = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-            return ids, idf * tfn
-
         def single_term_topk(tid: int):
-            """Block-max pruned scoring for a one-term query: process
-            blocks by descending bound, stop when no block can reach (or
-            f32-tie) the running k-th score. Skips the bulk of a hot
-            term's blocks without decoding them."""
+            """A one-term query: block-max pruned (skips the bulk of a hot
+            term's blocks without decoding them) unless another query of
+            the batch already decoded the term."""
             if tid in cache:
                 ids, tfn = cache[tid]
                 f32 = (idfs[tid] * tfn).astype(np.float32)
                 sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
                 return ids[sel], f32[sel]
-            idf = idfs[tid]
-            rows = pdf[terms_arr == tid].sort_values(
-                "max_tfnorm", ascending=False, kind="mergesort"
+            return _single_term_topk(
+                pdf[terms_arr == tid], idfs[tid], k, k1, b, avgdl, deletes
             )
-            bounds_ = idf * rows["max_tfnorm"].to_numpy()
-            ids_parts, sc_parts, n_seen = [], [], 0
-            theta = -np.inf
-            for bi in range(len(rows)):
-                if n_seen >= k:
-                    thr = float(
-                        np.nextafter(np.float32(theta), np.float32(-np.inf))
-                    )
-                    if bounds_[bi] < thr:
-                        break
-                ids_b, sc_b = decode_rows(rows.iloc[bi : bi + 1], idf)
-                ids_parts.append(ids_b)
-                sc_parts.append(sc_b)
-                n_seen += len(ids_b)
-                if n_seen >= k:
-                    all_sc = np.concatenate(sc_parts)
-                    theta = float(
-                        np.partition(all_sc, len(all_sc) - k)[len(all_sc) - k]
-                    )
-            if not ids_parts:
-                return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
-            ids = np.concatenate(ids_parts)
-            f32 = np.concatenate(sc_parts).astype(np.float32)
-            sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
-            return ids[sel], f32[sel]
 
         def contrib(term: int) -> tuple[np.ndarray, np.ndarray]:
             got = cache.get(term)
             if got is None:
-                rows = pdf[terms_arr == term]
-                ids = np.concatenate([decode_doc_ids(x) for x in rows["docs"]])
-                tfs = np.concatenate(
-                    [decode_varint(x) for x in rows["tfs"]]
-                ).astype(np.float64)
-                dls = np.concatenate(
-                    [decode_varint(x) for x in rows["dls"]]
-                ).astype(np.float64)
-                live = _live_mask(ids, deletes)
-                if live is not None:
-                    ids, tfs, dls = ids[live], tfs[live], dls[live]
-                tfn = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                got = (ids, tfn)
+                got = _decode_tfn(
+                    pdf[terms_arr == term], k1, b, avgdl, deletes
+                )
                 cache[term] = got
             return got
 
@@ -1046,11 +993,7 @@ def bm25_topk_batch(
     shard_topk = blocks.groupBy("shard_id").applyInPandas(
         score_shard, BATCH_TOPK_SCHEMA
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        shard_topk.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return batch_page(shard_topk, k)
 
 
 def bm25_score_all_join(

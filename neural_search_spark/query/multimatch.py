@@ -51,18 +51,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
-from ..ranking import local_page
+from ..ranking import batch_page, empty_batch_page, local_page, topk_page
 from ..tokenizer import tokenize_py
 from .bm25 import (
     BATCH_TOPK_SCHEMA,
     BM25Index,
+    _decode_tfn,
     _driver_scored_all,
-    _live_mask,
     bm25_topk,
     driver_route,
     lucene_idf,
 )
-from ..index.codec import decode_doc_ids, decode_varint
 
 
 def parse_field_boosts(fields: list[str]) -> list[tuple[str, float]]:
@@ -101,20 +100,9 @@ def _scored_partial_index(
                 continue
             ids_parts, sc_parts = [], []
             for t, g in pdf.groupby("tid", sort=False):
-                ids = np.concatenate([decode_doc_ids(x) for x in g["docs"]])
-                tfs = np.concatenate(
-                    [decode_varint(x) for x in g["tfs"]]
-                ).astype(np.float64)
-                dls = np.concatenate(
-                    [decode_varint(x) for x in g["dls"]]
-                ).astype(np.float64)
-                live = _live_mask(ids, deletes)
-                if live is not None:
-                    ids, tfs, dls = ids[live], tfs[live], dls[live]
+                ids, tfn = _decode_tfn(g, k1, b, avgdl, deletes)
                 ids_parts.append(ids)
-                sc_parts.append(
-                    idfs[t] * tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                )
+                sc_parts.append(idfs[t] * tfn)
             if not ids_parts:
                 continue
             all_ids = np.concatenate(ids_parts)
@@ -316,22 +304,11 @@ def multi_match_index_topk(
             score = mx + F.lit(tie_breaker) * (sm - mx)
         combined = wide.select("doc_id", score.alias("score"))
 
-    bounded = (
+    return topk_page(
         combined.select(
             "doc_id", F.col("score").cast("float").alias("score")
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-    from ..ranking import topk_rank_window
-
-    return bounded.withColumn(
-        "rank",
-        F.row_number()
-        .over(
-            topk_rank_window(F.col("score").desc(), F.col("doc_id").asc())
-        )
-        .cast("int"),
+        ),
+        k,
     )
 
 
@@ -345,22 +322,11 @@ def _dismax_union_topk(
     tall = parts[0]
     for p in parts[1:]:
         tall = tall.unionAll(p)
-    bounded = (
+    return topk_page(
         tall.groupBy("doc_id")
         .agg(F.max("score").alias("score"))
-        .select("doc_id", F.col("score").cast("float").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-    from ..ranking import topk_rank_window
-
-    return bounded.withColumn(
-        "rank",
-        F.row_number()
-        .over(
-            topk_rank_window(F.col("score").desc(), F.col("doc_id").asc())
-        )
-        .cast("int"),
+        .select("doc_id", F.col("score").cast("float").alias("score")),
+        k,
     )
 
 
@@ -604,12 +570,7 @@ def multi_match_topk_batch(
         if any(p[4][qid] for p in field_plan)
     ]
     if not live_qids:
-        return spark.range(0).select(
-            F.lit("").alias("query_id"),
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("float").alias("score"),
-            F.lit(0).cast("int").alias("rank"),
-        )
+        return empty_batch_page(spark)
 
     # closure payload (small: per-field dicts over the batch vocabulary)
     plan_payload = [
@@ -632,22 +593,10 @@ def multi_match_topk_batch(
         def contrib(fid, tid, params, deletes):
             got = cache.get((fid, tid))
             if got is None:
-                k1, b, avgdl = params
-                rows = pdf[(fid_arr == fid) & (tid_arr == tid)]
-                ids = np.concatenate(
-                    [decode_doc_ids(x) for x in rows["docs"]]
+                got = _decode_tfn(
+                    pdf[(fid_arr == fid) & (tid_arr == tid)], *params,
+                    deletes,
                 )
-                tfs = np.concatenate(
-                    [decode_varint(x) for x in rows["tfs"]]
-                ).astype(np.float64)
-                dls = np.concatenate(
-                    [decode_varint(x) for x in rows["dls"]]
-                ).astype(np.float64)
-                live = _live_mask(ids, deletes)
-                if live is not None:
-                    ids, tfs, dls = ids[live], tfs[live], dls[live]
-                tfn = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                got = (ids, tfn)
                 cache[(fid, tid)] = got
             return got
 
@@ -748,11 +697,4 @@ def multi_match_topk_batch(
     shard_topk = blocks.groupBy("shard_id").applyInPandas(
         score_shard, BATCH_TOPK_SCHEMA
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return shard_topk.withColumn(
-        "rank", F.row_number().over(w).cast("int")
-    ).filter(F.col("rank") <= k)
+    return batch_page(shard_topk, k)

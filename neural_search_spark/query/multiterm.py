@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
-from ..ranking import local_page
+from ..ranking import batch_page, local_page, topk_page
 from ..tokenizer import tokenize_expr
 from .bm25 import BM25Index, _live_mask, driver_route
 
@@ -227,7 +227,6 @@ def match_bool_prefix_topk(
     the work is the same Σdf a coverage-gated query decodes). Returns
     (doc_id, score, rank)."""
     from ..index.codec import decode_doc_ids, decode_varint
-    from ..ranking import topk_rank_window
     from ..tokenizer import tokenize_py
     from .bm25 import lucene_idf
 
@@ -354,12 +353,7 @@ def match_bool_prefix_topk(
     shard_topk = blocks.groupBy("shard_id").applyInPandas(
         score_shard, "doc_id long, score float"
     )
-    w = topk_rank_window(F.desc("score"), F.asc("doc_id"))
-    return (
-        shard_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-    )
+    return topk_page(shard_topk, k)
 
 
 def match_bool_prefix_topk_batch(
@@ -611,20 +605,13 @@ def match_bool_prefix_topk_batch(
 
         return accumulate_queries(contrib, present)
 
-    from pyspark.sql import Window
-
     blocks = index.postings_for(all_terms).select(
         "shard_id", "tid", "docs", "tfs", "dls"
     )
     shard_topk = blocks.groupBy("shard_id").applyInPandas(
         score_shard, BATCH_TOPK_SCHEMA
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return shard_topk.withColumn(
-        "rank", F.row_number().over(w).cast("int")
-    ).filter(F.col("rank") <= k)
+    return batch_page(shard_topk, k)
 
 
 def term_topk(

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ranking import local_page
+from ..ranking import batch_page, local_page
 from ..tokenizer import tokenize_expr, tokenize_py
 
 __all__ = [
@@ -221,8 +221,6 @@ def search_as_you_type_batch(
     score-identical per query to ``search_as_you_type_topk`` by the same
     per-field top-k containment argument (final score = max over fields,
     so every final top-k doc is in some field's per-query top-k)."""
-    from pyspark.sql import Window
-
     from .multiterm import match_bool_prefix_topk_batch
 
     spark = indexes[min(indexes)].spark
@@ -262,9 +260,4 @@ def search_as_you_type_batch(
     dismax = allp.groupBy("query_id", "doc_id").agg(
         F.max("score").alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return dismax.withColumn(
-        "rank", F.row_number().over(w).cast("int")
-    ).filter(F.col("rank") <= k)
+    return batch_page(dismax, k)

@@ -51,19 +51,20 @@ occurrence). span_not's exclude side contributes no idf (its terms only
 veto; they are not scored).
 
 Serving shape (the 100-TB story): spans are served from the positions
-sidecar exactly like phrases — the scan prunes to the tree's terms'
+sidecar by the same positional kernel as phrases
+(``phrase.positional_topk`` / ``positional_topk_batch``) — span code
+only builds the ``freqs_fn``. The scan prunes to the tree's terms'
 ``term_bucket``s, candidate docs are bounded by a conjunction over the
 tree's REQUIRED term groups (every near/first/not-include clause must
 be present; an or-group needs any member) before any per-doc work, and
-the per-doc enumeration runs sharded next to the data
-(``applyInPandas`` over ``doc_shard``) with a local top-k bounding the
-final exchange to n·k rows. The enumeration itself is sequential per
-doc (the clause tree makes the tagged-stream vectorization of exact
-phrases inapplicable — same story as the sloppy-phrase sweep); the
-conjunction bound is what keeps it cheap: a span query's candidates
-are the docs containing ALL its required terms, the same set a phrase
-verify touches. Driver mode mirrors the phrase driver fast path
-(one pyarrow pruned read, auto-selected when Σdf is coordinator-cheap).
+the per-doc enumeration runs on the driver when Σdf is
+coordinator-cheap, else sharded next to the data (``applyInPandas``
+over ``doc_shard``) with a local top-k bounding the final exchange to
+n·k rows. The enumeration itself is sequential per doc (the clause tree
+makes the tagged-stream vectorization of exact phrases inapplicable —
+same story as the sloppy-phrase sweep); the conjunction bound is what
+keeps it cheap: a span query's candidates are the docs containing ALL
+its required terms, the same set a phrase verify touches.
 
 Reference trail: Lucene ``spans`` package (NearSpansOrdered's
 stretchToOrder + shrinkToAfterShortestMatch, NearSpansUnordered's
@@ -75,22 +76,22 @@ the semantics source, not ported code.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..index.build import N_TERM_BUCKETS, tid_py
+from ..index.build import tid_py
+from ..index.positions import PositionsBlock
 from ..ranking import local_page
 from ..tokenizer import tokenize_py
-from .bm25 import BM25Index, driver_route, lucene_idf
+from .bm25 import BM25Index, lucene_idf
 from .phrase import (
-    _live_mask,
-    _member,
-    _positions_path,
+    _covered,
+    _NO_HITS,
     _require_positions,
-    _score_docs,
+    positional_topk,
+    positional_topk_batch,
 )
 
 # ---------------------------------------------------------------------------
@@ -550,6 +551,33 @@ def span_freq(clause, pos_by_term: dict[str, np.ndarray]) -> float:
 # ---------------------------------------------------------------------------
 
 
+def _span_spec(clause, stats: dict, n_docs: int):
+    """(freqs_fn, idf_total, read tids, Σdf) of an expanded clause tree,
+    or None when it rewrites to no-match (zero idf, or a required group
+    fully out of vocabulary). ``stats`` must cover ``all_terms``."""
+    idf_total = sum(
+        lucene_idf(n_docs, stats[t])
+        for t in sorted(scoring_terms(clause))
+        if t in stats
+    )
+    if idf_total == 0.0:
+        return None
+    groups: list[list[int]] = []
+    for g in required_groups(clause):
+        live = sorted(tid_py(t) for t in g if t in stats)
+        if not live:
+            return None
+        groups.append(live)
+    terms = [t for t in sorted(all_terms(clause)) if t in stats]
+    tid_of = {t: tid_py(t) for t in terms}
+    return (
+        partial(_freqs_for_block, clause, tid_of, groups),
+        idf_total,
+        sorted(tid_of.values()),
+        sum(stats[t] for t in terms),
+    )
+
+
 def span_topk(
     index: BM25Index,
     clause,
@@ -557,210 +585,49 @@ def span_topk(
     mode: str = "auto",
 ) -> DataFrame:
     """Top-k docs for a span clause tree → (doc_id, score, rank), served
-    from the positions sidecar. mode: 'auto' (driver when the required
+    from the positions sidecar. mode: 'auto' (driver when the tree's
     terms' Σdf is under DRIVER_MAX_POSTINGS), 'driver', 'distributed'."""
     if isinstance(clause, dict):
         clause = span_from_json(clause)
-    spark = index.spark
     _require_positions(index)
     clause = expand_span_multi(clause, index)
-    if clause is None:  # a multi-term clause matched no dictionary term
-        return local_page(spark, [], np.float32([]))
-    sterms = sorted(scoring_terms(clause))
-    aterms = sorted(all_terms(clause))
-    stats = index.term_stats(aterms)
-    idf_total = sum(
-        lucene_idf(index.n_docs, stats[t]) for t in sterms if t in stats
-    )
-    if idf_total == 0.0:
-        return local_page(spark, [], np.float32([]))
-    groups: list[list[int]] = []
-    for g in required_groups(clause):
-        live = sorted(tid_py(t) for t in g if t in stats)
-        if not live:
-            # a required group is fully OOV
-            return local_page(spark, [], np.float32([]))
-        groups.append(live)
-    tid_of = {t: tid_py(t) for t in aterms if t in stats}
-    read_tids = sorted(tid_of.values())
-    sum_df = sum(stats[t] for t in aterms if t in stats)
-    if driver_route(mode, sum_df):
-        return _span_topk_driver(
-            index, clause, tid_of, groups, read_tids, idf_total, k
-        )
-    return _span_topk_distributed(
-        index, clause, tid_of, groups, read_tids, idf_total, k
-    )
+    spec = None
+    if clause is not None:  # None: a multi-term clause matched nothing
+        stats = index.term_stats(sorted(all_terms(clause)))
+        spec = _span_spec(clause, stats, index.n_docs)
+    if spec is None:
+        return local_page(index.spark, [], np.float32([]))
+    freqs_fn, idf_total, tids, sum_df = spec
+    return positional_topk(index, tids, freqs_fn, idf_total, k, mode, sum_df)
 
 
 def _freqs_for_block(
     clause,
     tid_of: dict[str, int],
     groups: list[list[int]],
-    doc_arr: np.ndarray,
-    tid_arr: np.ndarray,
-    dl_arr: np.ndarray,
-    positions,  # sequence of per-row position arrays (sliceable)
-    deletes,
+    block: PositionsBlock,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Shared kernel: (cand_docs, freqs, dls) for the covered docs of one
-    positions block (rows MUST be doc-sorted). Coverage = every required
-    group hit ≥ once, vectorized before any per-doc work."""
-    cand, first_rows = np.unique(doc_arr, return_index=True)
-    inv = np.searchsorted(cand, doc_arr)
-    covered = np.ones(cand.size, dtype=bool)
-    for g in groups:
-        m = tid_arr == g[0] if len(g) == 1 else np.isin(tid_arr, g)
-        covered &= np.bincount(inv[m], minlength=cand.size).astype(bool)
-    live = _live_mask(cand, deletes)
-    if live is not None:
-        covered &= live
+    """A span tree's freqs_fn (bound with ``partial``): (cand_docs,
+    freqs, dls) for the covered docs of one doc-sorted block. Coverage =
+    every required group hit ≥ once, vectorized before any per-doc
+    work; then one clause enumeration per covered doc."""
+    covered, _ = _covered(block, groups)
     if not covered.any():
-        z = np.empty(0, dtype=np.int64)
-        return z, z.astype(np.float64), z
+        return _NO_HITS
     sel = np.flatnonzero(covered)
-    dl_cand = dl_arr[first_rows][sel]
-    # row ranges per doc (rows are doc-sorted)
-    starts = first_rows
-    ends = np.append(first_rows[1:], doc_arr.size)
+    ends = np.append(block.first[1:], block.doc.size)
     term_of_tid = {v: t for t, v in tid_of.items()}
     freqs = np.zeros(sel.size, dtype=np.float64)
     for out_i, ci in enumerate(sel):
         pos_by_term: dict[str, np.ndarray] = {}
-        for r in range(starts[ci], ends[ci]):
-            t = term_of_tid.get(int(tid_arr[r]))
+        for r in range(block.first[ci], ends[ci]):
+            t = term_of_tid.get(int(block.tid[r]))
             if t is not None:
-                pos_by_term[t] = np.asarray(positions[r], dtype=np.int64)
+                pos_by_term[t] = block.positions(r)
         freqs[out_i] = span_freq(clause, pos_by_term)
     hit = freqs > 0
-    return cand[sel][hit], freqs[hit], dl_cand[hit]
-
-
-def _span_topk_driver(
-    index: BM25Index,
-    clause,
-    tid_of: dict[str, int],
-    groups: list[list[int]],
-    read_tids: list[int],
-    idf_total: float,
-    k: int,
-) -> DataFrame:
-    import pyarrow.dataset as ds
-
-    buckets = sorted({t % N_TERM_BUCKETS for t in read_tids})
-    tbl = ds.dataset(
-        _positions_path(index), format="parquet", partitioning="hive"
-    ).to_table(
-        columns=["tid", "doc_id", "dl", "positions"],
-        filter=ds.field("term_bucket").isin(buckets)
-        & ds.field("tid").isin(read_tids),
-    )
-    empty = local_page(index.spark, [], np.float32([]))
-    if tbl.num_rows == 0:
-        return empty
-    doc_arr = tbl["doc_id"].to_numpy()
-    order = np.argsort(doc_arr, kind="mergesort")
-    doc_arr = doc_arr[order]
-    tid_arr = tbl["tid"].to_numpy()[order]
-    dl_arr = tbl["dl"].to_numpy()[order]
-    pos_list = tbl.column("positions").combine_chunks()
-    pos_flat = pos_list.values.to_numpy(zero_copy_only=False).astype(
-        np.int64
-    )
-    pos_offs = np.asarray(pos_list.offsets).astype(np.int64)
-
-    class _Rows:  # lazy per-row slices over the arrow buffers
-        def __getitem__(self, r):
-            orig = order[r]
-            return pos_flat[pos_offs[orig] : pos_offs[orig + 1]]
-
-    docs, freqs, dls = _freqs_for_block(
-        clause, tid_of, groups, doc_arr, tid_arr, dl_arr, _Rows(),
-        index.deletes,
-    )
-    if docs.size == 0:
-        return empty
-    scored = _score_docs(
-        docs, freqs, dls, idf_total, index.k1, index.b, index.avgdl
-    )
-    scored = scored.sort_values(
-        ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-    ).head(k)
-    return local_page(index.spark, scored["doc_id"], scored["score"])
-
-
-def _span_topk_distributed(
-    index: BM25Index,
-    clause,
-    tid_of: dict[str, int],
-    groups: list[list[int]],
-    read_tids: list[int],
-    idf_total: float,
-    k: int,
-) -> DataFrame:
-    from pyspark.sql import Window
-
-    spark = index.spark
-    cached = index._positions_cache
-    if cached is not None:
-        cand = cached.filter(F.col("tid").isin(read_tids))
-    else:
-        buckets = sorted({t % N_TERM_BUCKETS for t in read_tids})
-        cand = (
-            spark.read.parquet(_positions_path(index))
-            .filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("tid").isin(read_tids)
-            )
-            .withColumn(
-                "doc_shard",
-                F.pmod(
-                    F.xxhash64("doc_id", F.lit(13)), F.lit(index.n_shards)
-                ).cast("int"),
-            )
-        )
-    k1, b, avgdl = index.k1, index.b, index.avgdl
-    deletes = index.deletes
-
-    def verify_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float32"),
-            }
-        )
-        if not len(pdf):
-            return empty
-        pdf = pdf.sort_values(["doc_id", "tid"], kind="mergesort")
-        docs, freqs, dls = _freqs_for_block(
-            clause,
-            tid_of,
-            groups,
-            pdf["doc_id"].to_numpy(),
-            pdf["tid"].to_numpy(),
-            pdf["dl"].to_numpy(),
-            pdf["positions"].to_numpy(),
-            deletes,
-        )
-        if docs.size == 0:
-            return empty
-        sc = _score_docs(docs, freqs, dls, idf_total, k1, b, avgdl)
-        if len(sc) > k:  # local top-k bounds the exchange to shards·k
-            sc = sc.sort_values(
-                ["score", "doc_id"], ascending=[False, True],
-                kind="mergesort",
-            ).head(k)
-        return sc
-
-    scored = cand.groupBy("doc_shard").applyInPandas(
-        verify_shard, "doc_id long, score float"
-    )
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-    )
+    sel = sel[hit]
+    return block.cand[sel], freqs[hit], block.dl[block.first[sel]]
 
 
 def span_topk_batch(
@@ -779,24 +646,18 @@ def span_topk_batch(
     required group, zero idf, an empty span_multi expansion) contribute
     no rows — the MatchNoDocsQuery rewrite.
 
-    Why batch: a single distributed span query pays a fixed positions
-    scan + Arrow transfer + task-scheduling cost that dwarfs its
-    per-shard kernel time (bench fields ``span_distributed_sec`` vs
-    ``span_qps_driver``). Here that cost is paid once for the whole
-    batch: term stats resolve in ONE driver point-read over the union of
-    every query's terms, the scan prunes to the union of their
-    ``term_bucket``s, each shard sorts/indexes its rows once, then
-    answers every query with the shared coverage-mask + enumeration
-    kernel (``_freqs_for_block``) and a local top-k; one
-    query_id-partitioned window ranks globally.
+    This is the shard function of a single distributed ``span_topk``
+    with every query's spec: term stats resolve in ONE driver point-read
+    over the union of every query's terms, the scan prunes to the union
+    of their ``term_bucket``s, each shard sorts/indexes its rows once,
+    then answers every query with its coverage-mask + enumeration
+    ``freqs_fn`` and a local top-k; one query_id-partitioned window
+    ranks globally.
 
     Reference: _msearch over span bodies — Lucene executes each with
     shared IndexReader state; the shared state here is the one pruned
     (or ``cache_positions``-pinned) positions scan.
     """
-    from pyspark.sql import Window
-
-    spark = index.spark
     _require_positions(index)
     expanded: list[tuple[str, object]] = []
     for qid, clause in queries:
@@ -807,101 +668,11 @@ def span_topk_batch(
             expanded.append((qid, c))
     union_terms = sorted({t for _q, c in expanded for t in all_terms(c)})
     stats = index.term_stats(union_terms) if union_terms else {}
-    specs: list[tuple[str, object, dict, list[list[int]], float]] = []
+    specs: list[tuple] = []
+    tids: set[int] = set()
     for qid, c in expanded:
-        idf_total = sum(
-            lucene_idf(index.n_docs, stats[t])
-            for t in sorted(scoring_terms(c))
-            if t in stats
-        )
-        if idf_total == 0.0:
-            continue
-        groups: list[list[int]] | None = []
-        for g in required_groups(c):
-            live = sorted(tid_py(t) for t in g if t in stats)
-            if not live:
-                groups = None  # a required group is fully OOV → no match
-                break
-            groups.append(live)
-        if groups is None:
-            continue
-        tid_of = {
-            t: tid_py(t) for t in sorted(all_terms(c)) if t in stats
-        }
-        specs.append((qid, c, tid_of, groups, idf_total))
-    if not specs:
-        return spark.range(0).select(
-            F.lit("").alias("query_id"),
-            F.col("id").alias("doc_id"),
-            F.lit(0.0).cast("float").alias("score"),
-            F.lit(0).cast("int").alias("rank"),
-        )
-    read_tids = sorted(
-        {tid for _q, _c, tid_of, _g, _i in specs for tid in tid_of.values()}
-    )
-    cached = index._positions_cache
-    if cached is not None:
-        cand = cached.filter(F.col("tid").isin(read_tids))
-    else:
-        buckets = sorted({t % N_TERM_BUCKETS for t in read_tids})
-        cand = (
-            spark.read.parquet(_positions_path(index))
-            .filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("tid").isin(read_tids)
-            )
-            .withColumn(
-                "doc_shard",
-                F.pmod(
-                    F.xxhash64("doc_id", F.lit(13)), F.lit(index.n_shards)
-                ).cast("int"),
-            )
-        )
-    k1, b, avgdl = index.k1, index.b, index.avgdl
-    deletes = index.deletes
-
-    def verify_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="str"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float32"),
-            }
-        )
-        if not len(pdf):
-            return empty
-        # shared per-shard prep, paid ONCE for the whole batch (rows are
-        # the union of every query's terms; each query's coverage mask
-        # prunes to its own candidates before any per-doc work)
-        pdf = pdf.sort_values(["doc_id", "tid"], kind="mergesort")
-        doc_arr = pdf["doc_id"].to_numpy()
-        tid_arr = pdf["tid"].to_numpy()
-        dl_arr = pdf["dl"].to_numpy()
-        pos_col = pdf["positions"].to_numpy()
-        out: list[pd.DataFrame] = []
-        for qid, clause, tid_of, groups, idf_total in specs:
-            docs, freqs, dls = _freqs_for_block(
-                clause, tid_of, groups, doc_arr, tid_arr, dl_arr,
-                pos_col, deletes,
-            )
-            if docs.size == 0:
-                continue
-            sc = _score_docs(docs, freqs, dls, idf_total, k1, b, avgdl)
-            if len(sc) > k:  # local top-k bounds the exchange to n·k
-                sc = sc.sort_values(
-                    ["score", "doc_id"], ascending=[False, True],
-                    kind="mergesort",
-                ).head(k)
-            sc.insert(0, "query_id", qid)
-            out.append(sc)
-        return pd.concat(out, ignore_index=True) if out else empty
-
-    scored = cand.groupBy("doc_shard").applyInPandas(
-        verify_shard, "query_id string, doc_id long, score float"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("int")
-    ).filter(F.col("rank") <= k)
+        spec = _span_spec(c, stats, index.n_docs)
+        if spec is not None:
+            specs.append((qid, spec[0], spec[1]))
+            tids.update(spec[2])
+    return positional_topk_batch(index, sorted(tids), specs, k)

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..ranking import topk_rank_window
+from ..ranking import topk_page
 
 DEFAULT_TWO_PHASE_PRUNE_RATIO = 0.4  # NeuralSparseTwoPhaseProcessor.java:50
 DEFAULT_EXPANSION_RATE = 5.0
@@ -73,12 +73,7 @@ def sparse_topk(
     docs: DataFrame, query_tokens: dict[str, float], k: int = 10, **kw
 ) -> DataFrame:
     scored = sparse_score(docs, query_tokens, **kw)
-    w = topk_rank_window(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-    )
+    return topk_page(scored, k)
 
 
 def sparse_topk_two_phase(
@@ -133,12 +128,7 @@ def sparse_topk_two_phase(
         )
     else:
         rescored = candidates
-    w = topk_rank_window(F.desc("score"), F.asc("doc_id"))
-    return (
-        rescored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-    )
+    return topk_page(rescored, k)
 
 
 # --------------------------------------------------------------------------

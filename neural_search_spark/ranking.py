@@ -9,9 +9,10 @@ Two ways build that page:
   ``pyarrow.Table`` into an Arrow-backed local relation, which
   ``collect()`` serves without launching a Spark job. The search engine
   returns such a page as is.
-* ``topk_rank_window`` — a distributed result bounded by
+* ``topk_page`` — a distributed result bounded by
   ``orderBy(...).limit(k)`` (a TakeOrderedAndProject: per-partition heap
-  plus driver merge, no full sort) and then ranked by ``row_number``.
+  plus driver merge, no full sort) and then ranked by ``row_number`` over
+  ``topk_rank_window``.
   The window's input is ≤ k rows BY CONSTRUCTION, so moving it to one
   partition is intended; but an empty partition spec makes WindowExec
   log "No Partition Defined ... serious performance degradation" on
@@ -20,6 +21,10 @@ Two ways build that page:
   share partition 0 (identical semantics/ranks) and WindowExec stays
   quiet. A plain ``lit(0)`` would not work — Catalyst folds foldable
   partition keys away and the warning returns.
+
+Batch kernels (msearch) return (query_id, doc_id, score, rank) pages:
+``batch_page`` ranks per query_id and keeps rank ≤ k, and
+``empty_batch_page`` is the typed page of a batch nothing matched.
 """
 
 from __future__ import annotations
@@ -59,3 +64,43 @@ def topk_rank_window(
     if partition_cols:
         return Window.partitionBy(*partition_cols).orderBy(*order)
     return Window.partitionBy(_const_zero()).orderBy(*order)
+
+
+def topk_page(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k (…, rank) page of a distributed (doc_id, score, …) frame:
+    score desc, doc_id asc, ranked 1..n."""
+    order = (F.desc("score"), F.asc("doc_id"))
+    return (
+        scored.orderBy(*order)
+        .limit(k)
+        .withColumn(
+            "rank", F.row_number().over(topk_rank_window(*order)).cast("int")
+        )
+    )
+
+
+def batch_page(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, doc_id, score, rank) per-query top-k of a batch
+    kernel's (query_id, doc_id, score) rows."""
+    w = topk_rank_window(
+        F.desc("score"), F.asc("doc_id"), partition_cols=["query_id"]
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "doc_id", "score", "rank")
+    )
+
+
+def empty_batch_page(spark: SparkSession) -> DataFrame:
+    """The (query_id, doc_id, score float, rank) page of an empty batch."""
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "query_id": pa.array([], pa.string()),
+                "doc_id": pa.array([], pa.int64()),
+                "score": pa.array([], pa.float32()),
+                "rank": pa.array([], pa.int32()),
+            }
+        )
+    )

@@ -118,6 +118,39 @@ def test_cli_update_by_query(cli_env, capsys, tmp_path):
     assert len(hits) > 0
 
 
+def test_cli_update_by_query_without_out_refused(cli_env, capsys):
+    """update-by-query --index without --out or --dry-run exits with the
+    engine's stale-index message before it touches the corpus or the
+    index: both still answer as before."""
+    from pyspark.sql import SparkSession
+
+    from neural_search_spark.engine import STALE_INDEX_UPDATE
+    from neural_search_spark.query.bm25 import BM25Index, bm25_topk
+
+    spark = SparkSession.getActiveSession()
+    before = bm25_topk(BM25Index(spark, cli_env["idx"]), "tool", k=5).collect()
+    rows_before = spark.read.parquet(cli_env["corpus"]).collect()
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "update-by-query",
+            "--spec-json", '{"match": {"query_text": "tool"}}',
+            "--corpus", cli_env["corpus"],
+            "--index", cli_env["idx"],
+            "--set", "text=concat(text, ' zzstale')",
+        ])
+    assert str(exc.value) == STALE_INDEX_UPDATE
+    after = bm25_topk(BM25Index(spark, cli_env["idx"]), "tool", k=5).collect()
+    assert after == before
+    assert spark.read.parquet(cli_env["corpus"]).collect() == rows_before
+    dry = run_cli(
+        capsys, "update-by-query",
+        "--spec-json", '{"match": {"query_text": "tool"}}',
+        "--corpus", cli_env["corpus"], "--index", cli_env["idx"],
+        "--dry-run",
+    )
+    assert json.loads(dry[-1])["total"] > 0
+
+
 @pytest.mark.parametrize(
     "extra",
     [["--batch"], ["--aggs-json", '{"tools": {"terms": {"field": "tool"}}}']],

@@ -610,10 +610,11 @@ def test_cache_positions_serving(ph_setup, spark):
 # batched phrase serving (msearch analog)
 # ---------------------------------------------------------------------------
 def test_phrase_topk_batch_matches_single(ph_setup):
-    """phrase_topk_batch answers every phrase from ONE positions pass and
-    must be rank- and score-identical to the per-query distributed kernel;
+    """phrase_topk_batch answers every phrase — exact, sloppy and
+    match_phrase_prefix — from ONE positions pass and must be rank- and
+    score-identical to the per-query driver and distributed kernels;
     OOV / empty phrases contribute no rows (MatchNoDocsQuery rewrite)."""
-    from neural_search_spark.query.phrase import phrase_topk_batch
+    from neural_search_spark.query.phrase import PhraseQuery, phrase_topk_batch
 
     idx, tt = ph_setup
     queries = {
@@ -621,17 +622,32 @@ def test_phrase_topk_batch_matches_single(ph_setup):
         "q2": "w0000 w0001",
         "q3": "zzznope the",  # OOV token ⇒ no rows
         "q4": "",             # empty ⇒ no rows
+        "s1": PhraseQuery("tool the", slop=2),
+        "s2": PhraseQuery("w0000 w0000", slop=1),  # repeated term
+        "p1": PhraseQuery("the to", max_expansions=50),
+        "p2": PhraseQuery("w0", max_expansions=5),  # the prefix alone
     }
+
+    def single(q, mode):
+        if isinstance(q, str):
+            return phrase_topk(idx, q, k=10, mode=mode)
+        if q.max_expansions is not None:
+            return phrase_prefix_topk(
+                idx, q.text, k=10, max_expansions=q.max_expansions,
+                mode=mode,
+            )
+        return phrase_topk(idx, q.text, k=10, mode=mode, slop=q.slop)
+
     got = phrase_topk_batch(idx, list(queries.items()), k=10).toPandas()
-    assert set(got.query_id) <= {"q1", "q2"}
-    for qid in ("q1", "q2"):
-        exp = phrase_topk(
-            idx, queries[qid], k=10, mode="distributed"
-        ).toPandas()
+    assert set(got.query_id) <= set(queries) - {"q3", "q4"}
+    for qid in ("q1", "q2", "s1", "s2", "p1", "p2"):
         g = got[got.query_id == qid].sort_values("rank")
-        assert g.doc_id.tolist() == exp.doc_id.tolist(), qid
-        assert np.allclose(g.score, exp.score, atol=1e-6)
+        assert len(g) > 0, qid
         assert g["rank"].tolist() == list(range(1, len(g) + 1))
+        for mode in ("driver", "distributed"):
+            exp = single(queries[qid], mode).toPandas()
+            assert g.doc_id.tolist() == exp.doc_id.tolist(), (qid, mode)
+            assert np.allclose(g.score, exp.score, atol=1e-6)
 
 
 def test_phrase_topk_batch_all_oov(ph_setup, spark):
@@ -647,8 +663,8 @@ def test_phrase_topk_batch_all_oov(ph_setup, spark):
 
 def test_phrase_topk_batch_cached_and_msearch(ph_setup, transcripts_df, spark):
     """The batch kernel rides the pinned positions cache unchanged, and
-    Engine.msearch routes exact match_phrase specs through it (sloppy
-    specs keep the per-query path) — all answers identical to search()."""
+    Engine.msearch routes match_phrase specs, sloppy ones included,
+    through it — all answers identical to search()."""
     from neural_search_spark.engine import Engine
     from neural_search_spark.index.build import doc_id_col
     from neural_search_spark.query.phrase import phrase_topk_batch
@@ -684,6 +700,53 @@ def test_phrase_topk_batch_cached_and_msearch(ph_setup, transcripts_df, spark):
     finally:
         idx._positions_cache.unpersist()
         idx._positions_cache = None
+
+
+def test_msearch_batches_sloppy_and_prefix_phrases(
+    ph_setup, transcripts_df, spark
+):
+    """Sloppy match_phrase and match_phrase_prefix specs plan a phrase
+    batch key, run through ONE phrase_topk_batch call in msearch, and
+    answer exactly what search() does."""
+    from neural_search_spark.engine import _TOPK, Engine, spec_from_json
+    from neural_search_spark.index.build import doc_id_col
+    from neural_search_spark.query import phrase as phrase_mod
+
+    idx, tt = ph_setup
+    docs = transcripts_df.withColumn("doc_id", doc_id_col())
+    eng = Engine(spark, corpus=docs, bm25_index=idx)
+    specs = {
+        "s1": {"match_phrase": {"query_text": "tool the", "slop": 2}},
+        "s2": {"match_phrase": {"query_text": "the tool", "slop": 1}},
+        "p1": {"match_phrase_prefix": {"query_text": "the to"}},
+        "p2": {
+            "match_phrase_prefix": {
+                "query_text": "w0", "max_expansions": 5,
+            }
+        },
+    }
+    for qid, body in specs.items():
+        plan = eng._plan(spec_from_json(body), _TOPK)
+        assert plan.batch is not None and plan.batch[0] == ("phrase",), qid
+    calls = []
+    real = phrase_mod.phrase_topk_batch
+
+    def counting(index, phrases, k=10):
+        calls.append([qid for qid, _ in phrases])
+        return real(index, phrases, k=k)
+
+    phrase_mod.phrase_topk_batch = counting
+    try:
+        res = eng.msearch(specs, k=5).toPandas()
+    finally:
+        phrase_mod.phrase_topk_batch = real
+    assert [sorted(c) for c in calls] == [sorted(specs)]
+    for qid, body in specs.items():
+        exp = eng.search(spec_from_json(body), k=5).toPandas()
+        g = res[res.query_id == qid].sort_values("rank")
+        assert len(exp) > 0, qid
+        assert g.doc_id.tolist() == exp.doc_id.tolist(), qid
+        assert np.allclose(g.score, exp.score, atol=1e-6)
 
 
 def test_positions_arrow_kernel_matches_catalyst(spark, transcripts_df):

@@ -340,6 +340,22 @@ class TestServing:
                 assert a["score"] == pytest.approx(b["score"], rel=1e-6)
         assert len(by_q.get("sp", [])) > 0
 
+    def test_distributed_rank_window_is_partitioned(self, pos_index):
+        """The distributed page ranks its ≤k rows with a partitioned
+        window: an unpartitioned Window makes WindowExec log "No
+        Partition Defined" on every query."""
+        df = span_topk(pos_index, self.Q, k=5, mode="distributed")
+        stack = [df._jdf.queryExecution().optimizedPlan()]
+        windows = []
+        while stack:
+            node = stack.pop()
+            if node.getClass().getSimpleName() == "Window":
+                windows.append(node)
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+        assert windows
+        assert all(not w.partitionSpec().isEmpty() for w in windows)
+
     def test_msearch_batches_span_specs(self, spark, pos_index):
         eng = Engine(spark, corpus=None, bm25_index=pos_index)
         near = {

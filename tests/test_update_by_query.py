@@ -258,3 +258,19 @@ def test_update_and_reindex_with_custom_id_col(spark, upd_env, transcripts_df):
     assert info["n_docs"] == rep["updated"]
     copy = BM25Index(spark, str(upd_env["root"] / "uid_reindexed"))
     assert bm25_topk(copy, "zzzcopy", k=10_000).count() == rep["updated"]
+
+
+def test_update_without_out_dir_refused_with_index(spark, upd_env):
+    """With an attached bm25_index, a real update needs out_dir: without
+    it the index would keep answering from stale postings, so the call
+    raises before the corpus or the index handle changes. A dry run
+    still counts."""
+    eng = Engine(spark, corpus=upd_env["corpus"], bm25_index=upd_env["main"])
+    corpus, index = eng.corpus, eng.bm25_index
+    spec = {"match": {"query_text": "w0005"}}
+    with pytest.raises(ValueError, match="needs out_dir"):
+        eng.update_by_query(spec, {"text": "concat(text, ' zzstale')"})
+    assert eng.corpus is corpus
+    assert eng.bm25_index is index
+    assert eng.corpus.filter(F.col("text").contains("zzstale")).count() == 0
+    assert eng.update_by_query(spec, {"text": "text"}, dry_run=True)["total"]
