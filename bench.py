@@ -333,7 +333,7 @@ def run_workload(cpus: int, mode: str = "full") -> dict:
         # index-backed multi_match (round-5 field, outside the headline):
         # a second per-field index over the tool column, then most_fields
         # queries mixing text terms with tool values — driver combine vs
-        # the forced-distributed one-exchange conditional-sum route
+        # the forced-distributed shard-keyed multi_match kernel
         from neural_search_spark.query.multimatch import (
             multi_match_index_topk,
         )
@@ -363,7 +363,7 @@ def run_workload(cpus: int, mode: str = "full") -> dict:
                     match_type="most_fields", k=10, mode=mm_mode,
                 ).collect()
             out[field] = round(len(mm_qs) / (time.time() - t0), 2)
-        # batched form: the whole set in ONE co-partitioned combine job
+        # batched form: the whole set through the same kernel in ONE job
         from neural_search_spark.query.multimatch import (
             multi_match_topk_batch,
         )

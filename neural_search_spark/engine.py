@@ -22,8 +22,8 @@ Routing table (spec → plan):
   term           → term_topk (un-analyzed BM25 TermQuery) | verbatim scan
   simple_query_string → parsed fold over the leaf scorers (corpus plans:
                    AND/NOT need full matched sets)
-  multi_match    → per-field BM25 scans → dis-max / sum combine
-                   (per-field stats, so always a corpus plan)
+  multi_match    → multi_match kernel over attached per-field indexes |
+                   per-field BM25 scans → dis-max / sum combine
   neural_sparse  → sparse_index_topk            | sparse_topk corpus scan
   neural / knn   → attached ANN asset (LshAnnIndex / IvfAnnIndex) |
                    brute-force cosine over the corpus embedding column
@@ -1314,20 +1314,12 @@ class Engine:
         if not fi or not all(n in fi for n in names):
             return scan("per-field stats need per-field indexes")
         text = spec.query_text or ""
-        one_layout = len({fi[n].n_shards for n in names}) == 1
         if spec.match_type in ("best_fields", "most_fields", "cross_fields"):
-            if spec.match_type == "cross_fields" and not one_layout:
-                # the distributed combine rides the co-partitioned kernel
-                return scan(
-                    "cross_fields needs co-partitioned per-field indexes "
-                    "(n_shards differ)"
-                )
             from .query.multimatch import multi_match_index_topk
 
             return index(
-                "per-field indexes attached: pruned dis-max union, "
-                "one-exchange conditional-sum or co-partitioned "
-                "blended-df combine",
+                "per-field indexes attached: driver combine or the "
+                "shard-keyed multi_match kernel (any mix of n_shards)",
                 lambda k: multi_match_index_topk(
                     fi, text, flds,
                     match_type=spec.match_type,
@@ -1335,9 +1327,9 @@ class Engine:
                     k=k,
                 ),
                 batch=(
-                    (("multi_match", tuple(flds), spec.match_type,
-                      spec.tie_breaker), text)
-                    if one_layout else None
+                    ("multi_match", tuple(flds), spec.match_type,
+                     spec.tie_breaker),
+                    text,
                 ),
             )
         # field-centric phrase/bool_prefix types (tie_breaker=0, the host
@@ -2563,11 +2555,12 @@ class Engine:
         cluster-throughput shape), match_phrase and match_phrase_prefix
         specs (any slop) through phrase_topk_batch, ≥2 span/intervals
         specs through span_topk_batch (a LONE span query keeps search()'s
-        auto-selected driver fast path) and ≥2 multi_match specs per
-        (fields, type, tie_breaker) through multi_match_topk_batch. The
-        phrase and span batch kernels are the positional shard function a
-        single distributed query runs, with every spec at once. Other
-        specs run their own plans, unioned in."""
+        auto-selected driver fast path) and ≥2 best/most/cross_fields
+        multi_match specs per (fields, type, tie_breaker) through
+        multi_match_topk_batch, whatever the per-field indexes' n_shards.
+        The phrase, span and multi_match batch kernels are the shard
+        function a single distributed query runs, with every spec at
+        once. Other specs run their own plans, unioned in."""
         if not specs:
             raise ValueError("msearch needs at least one spec")
         plans = {

@@ -3505,10 +3505,12 @@ def q_multi_match(spark: SparkSession, sf: str) -> DataFrame:
     Variants 'ibest0'/'imost' (round-5) serve the SAME per-field scores
     from attached per-field block indexes (text index = the shared gate
     index, tool index = ``_gate_tool_index``; tool ≡ source, so the
-    documents-based oracle is unchanged): 'ibest0' = the MaxScore-pruned
-    per-field-top-k union route (best_fields, tie_breaker 0), 'imost' =
-    the one-exchange conditional-sum route (most_fields), both forced
-    distributed. Index variants over-fetch k'=50 on the engine's float32
+    documents-based oracle is unchanged): 'ibest0' (best_fields,
+    tie_breaker 0), 'imost' (most_fields) and 'ixf' (cross_fields,
+    tie_breaker 0.3) all run the same forced-distributed multi_match
+    kernel, the shard-keyed batch kernel with one spec; they stay
+    separate variants with their own hashes because each gates a
+    different combine. Index variants over-fetch k'=50 on the engine's float32
     ordering, then re-rank on the 4-dp rounded double with the doc_id
     tiebreak so the oracle's double-precision ordering selects identical
     rows (the ``bm25_index_topk`` pattern). All four variants' top-20
@@ -3543,7 +3545,7 @@ def q_multi_match(spark: SparkSession, sf: str) -> DataFrame:
     for name, mt, tb in (
         ("ibest0", "best_fields", 0.0),
         ("imost", "most_fields", 0.0),
-        # 'ixf': cross_fields through the co-partitioned batch kernel
+        # 'ixf': the term-centric cross_fields combine, same kernel
         ("ixf", "cross_fields", 0.3),
     ):
         # 'ibest0' over-fetches the FULL match set (k'=n_docs): with

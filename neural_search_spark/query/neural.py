@@ -664,10 +664,10 @@ def multi_match_scored(
             return sqs_scored(scoped, q)
         return bm25_scored(scoped, ["doc_id"], query_text, ndp=None)
 
+    from .multimatch import parse_field_boosts
+
     tall = None
-    for f in fields:
-        name, _, boost = f.partition("^")
-        b = float(boost) if boost else 1.0
+    for name, b in parse_field_boosts(fields):
         sc = field_scored(name).select(
             "doc_id", (F.col("score") * b).alias("score")
         )

@@ -28,9 +28,10 @@ Spark-first shape:
   subfield's index (one dictionary range read + one postings pass).
   Fields with fewer query tokens than their shingle size contribute
   nothing (the host omits those clauses the same way). The per-field
-  top-k frames combine with a doc-keyed dis-max (multi_match
-  tie_breaker=0, the host default) — exact by the containment argument
-  in query/multimatch.py.
+  top-k pages combine on the driver with a doc-keyed dis-max
+  (multi_match tie_breaker=0, the host default; ``_dismax_union_topk``
+  in query/multimatch.py) — exact by containment, and zero Spark jobs
+  when every subfield page is a driver page.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ranking import batch_page, local_page
+from ..ranking import batch_page
 from ..tokenizer import tokenize_expr, tokenize_py
 
 __all__ = [
@@ -188,22 +189,16 @@ def search_as_you_type_topk(
     from .multiterm import match_bool_prefix_topk
 
     tokens = tokenize_py(query_text)
-    parts = []
+    pages = []
     for n in sorted(indexes):
         sh = shingles_py(tokens, n)
         if not sh:
             continue  # query shorter than the shingle size
-        part = match_bool_prefix_topk(
+        page = match_bool_prefix_topk(
             indexes[n], query_text, k=k, mode=mode, tokens=sh
         )
-        parts.append(
-            part.select(
-                "doc_id", F.col("score").cast("double").alias("score")
-            )
-        )
-    if not parts:
-        return local_page(indexes[min(indexes)].spark, [], [])
-    return _dismax_union_topk(parts, k)
+        pages.append((page, 1.0))
+    return _dismax_union_topk(indexes[min(indexes)].spark, pages, k)
 
 
 def search_as_you_type_batch(

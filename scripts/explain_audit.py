@@ -243,51 +243,42 @@ def main():
     assert "CartesianProduct" not in mm_text
     print("bool/multi_match plans: single-aggregation combine, join gates — ok")
 
-    # index-backed multi_match: the general (most_fields / tie_breaker>0)
-    # route must carry EVERY field through ONE doc_id exchange — the
-    # conditional-sum combine — no matter how many fields the query names;
-    # below the TakeOrdered bound the only exchange is that combine
+    # index-backed multi_match: every type runs ONE kernel — the
+    # shard-keyed batch kernel with one spec. Its plan is one grouped
+    # Arrow stage over the unioned per-field postings: no join, and below
+    # the per-query window the only exchanges are the window's own
+    # query_id input and the shard regroup under the kernel
     from neural_search_spark.query.multimatch import multi_match_index_topk
 
     fidx = {
         "text": idx,
         "tool": BM25Index(spark, gate._gate_tool_index(spark, sf)),
     }
-    mmx_general = multi_match_index_topk(
-        fidx, "merge src1 src2", ["text", "tool^2.0"],
-        match_type="most_fields", k=10, mode="distributed",
-    )
-    plans[
-        "multi_match index-served, general route (one conditional-sum exchange)"
-    ] = mmx_general
-    tree = cap(mmx_general).split("\n\n")[0]
-    below = tree.split("TakeOrderedAndProject", 1)[-1]
-    assert below.count("Exchange") == 1, (
-        "multi_match general combine should be ONE doc_id exchange for "
-        f"all fields; plan below the k-bound has {below.count('Exchange')}"
-    )
-    plans[
-        "multi_match index-served, pruned dis-max union (per-field MaxScore top-k)"
-    ] = multi_match_index_topk(
-        fidx, "merge src1 src2", ["text", "tool^2.0"], k=10,
-        mode="distributed",
-    )
-    # cross_fields rides the co-partitioned batch kernel: one shard-keyed
-    # applyInPandas over the unioned per-field postings — the only
-    # exchange below the per-query window is that shard regroup
-    mmx_cf = multi_match_index_topk(
-        fidx, "merge src1 src2", ["text", "tool^2.0"],
-        match_type="cross_fields", k=10, mode="distributed",
-    )
-    plans[
-        "multi_match cross_fields (co-partitioned blended-df kernel)"
-    ] = mmx_cf
-    cf_text = cap(mmx_cf)
-    assert "CartesianProduct" not in cf_text
-    assert "FlatMapGroupsInPandas" in cf_text, (
-        "cross_fields should run the shard-keyed batch kernel"
-    )
-    print("multi_match index routes: one-exchange combine — ok")
+    for mt, tb in (
+        ("best_fields", 0.0), ("most_fields", 0.0), ("cross_fields", 0.3)
+    ):
+        mmx = multi_match_index_topk(
+            fidx, "merge src1 src2", ["text", "tool^2.0"],
+            match_type=mt, tie_breaker=tb, k=10, mode="distributed",
+        )
+        plans[f"multi_match index-served {mt} (shard-keyed kernel)"] = mmx
+        mm_tree = cap(mmx).split("\n\n")[0]
+        assert "FlatMapGroupsInPandas" in mm_tree, (
+            f"multi_match {mt} should run the shard-keyed kernel"
+        )
+        assert "Join" not in mm_tree and "CartesianProduct" not in mm_tree, (
+            f"multi_match {mt} must not join"
+        )
+        window_in, kernel_in = mm_tree.split("Window", 1)[-1].split(
+            "FlatMapGroupsInPandas", 1
+        )
+        assert (window_in.count("Exchange"), kernel_in.count("Exchange")) == (
+            1, 1
+        ), (
+            f"multi_match {mt}: below the per-query window one Exchange "
+            "should feed the window (query_id) and one regroup the shards"
+        )
+    print("multi_match index routes: one shard-keyed kernel — ok")
 
     # round-4 text-query family: fuzzy rides the SAME pruned postings scan
     # as plain BM25 (weights replace idf — no new plan shape), multiterm's

@@ -2,7 +2,9 @@
 index-route kernel's (doc_id, score, rank) page as is, with no re-sort.
 
 Two guards follow from that. Interactive match queries on the driver
-route run no Spark job at all, and every index-route family must hand
+route run no Spark job at all (nor do the per-field page unions of
+multi_match phrase / bool_prefix and search_as_you_type), and every
+index-route family must hand
 back a page that is already final: score descending, doc_id ascending
 on ties, rank 1..n, n ≤ k — on the driver route and on the distributed
 one."""
@@ -35,11 +37,11 @@ def page_eng(spark, transcripts_df, tmp_path_factory):
         transcripts_df
     )
     build_positions(spark, text_dir, transcripts_df)
-    IndexBuilder(spark, tag_dir, n_shards=4, block_size=64).build(
-        transcripts_df.select(
-            "conv_id", "turn_idx", F.col("conv_id").alias("text")
-        )
+    tag_src = transcripts_df.select(
+        "conv_id", "turn_idx", F.col("conv_id").alias("text")
     )
+    IndexBuilder(spark, tag_dir, n_shards=4, block_size=64).build(tag_src)
+    build_positions(spark, tag_dir, tag_src)
     corpus = transcripts_df.withColumn("doc_id", doc_id_col())
     tall = (
         corpus.select("doc_id", F.explode(tokenize_expr("text")).alias("token"))
@@ -126,6 +128,18 @@ FAMILIES = {
             "match_type": "cross_fields",
         }
     },
+    "multi_match_phrase": {
+        "multi_match": {
+            "query_text": "the call", "fields": ["text", "tag^2"],
+            "match_type": "phrase",
+        }
+    },
+    "multi_match_bool_prefix": {
+        "multi_match": {
+            "query_text": "tool ca", "fields": ["text", "tag^2"],
+            "match_type": "bool_prefix",
+        }
+    },
     "span": {
         "span_near": {
             "clauses": [
@@ -153,3 +167,35 @@ def test_index_page_is_final(page_eng, monkeypatch, family, route):
     assert 0 < len(rows) <= K
     assert rows == sorted(rows, key=lambda r: (-r[1], r[0]))
     assert [r[2] for r in rows] == list(range(1, len(rows) + 1))
+
+
+@pytest.mark.parametrize("family", ["multi_match_phrase", "multi_match_bool_prefix"])
+def test_driver_multi_match_union_runs_no_spark_job(spark, page_eng, family):
+    """The field-centric multi_match types combine their per-field driver
+    pages on the driver: no union/groupBy job."""
+    body = FAMILIES[family]
+    n, rows = _jobs(spark, lambda: page_eng.search(body, k=K).collect())
+    assert n == 0
+    assert rows
+
+
+def test_driver_search_as_you_type_runs_no_spark_job(
+    spark, page_eng, transcripts_df, tmp_path_factory
+):
+    from neural_search_spark.query.sayt import (
+        build_sayt_indexes,
+        search_as_you_type_topk,
+    )
+
+    sayt = build_sayt_indexes(
+        spark, str(tmp_path_factory.mktemp("sayt_pages")), transcripts_df,
+        grams=(2,), n_shards=4, block_size=64,
+    )
+    sayt[1] = page_eng.field_indexes["text"]
+    n, rows = _jobs(
+        spark,
+        lambda: search_as_you_type_topk(sayt, "tool ca", k=K).collect(),
+    )
+    assert n == 0
+    assert rows
+    assert rows == sorted(rows, key=lambda r: (-r["score"], r["doc_id"]))

@@ -1,8 +1,8 @@
 """Index-backed multi_match: attached per-field block indexes must
 reproduce the corpus-scan multi_match (per-field statistics, ^boosts,
-dis-max / sum combine) on every route — driver numpy combine, pruned
-per-field-top-k union (best_fields, tie_breaker=0), and the one-exchange
-conditional-sum combine (most_fields / tie_breaker>0)."""
+dis-max / sum / blended-df combine) on both routes of the one kernel —
+the driver combine and the shard-keyed batch kernel with one spec — for
+any mix of per-field n_shards."""
 
 import numpy as np
 import pytest
@@ -51,10 +51,21 @@ def corpus_topk(docs, match_type, tb, k=10):
 
 
 def test_parse_field_boosts():
-    assert parse_field_boosts(["text", "tag^2.5"]) == [
+    assert parse_field_boosts(["text", "tag^2.5", "role^0"]) == [
         ("text", 1.0),
         ("tag", 2.5),
+        ("role", 0.0),
     ]
+    # Lucene's BoostQuery rejects negative and non-finite boosts
+    for bad in ("tag^-1", "tag^-0.0", "tag^inf", "tag^nan", "tag^x"):
+        with pytest.raises(ValueError):
+            parse_field_boosts(["text", bad])
+
+
+def test_corpus_multi_match_rejects_negative_boost(mmx):
+    docs, _ = mmx
+    with pytest.raises(ValueError, match="non-negative"):
+        multi_match_scored(docs, Q, ["text", "tag^-1"])
 
 
 def test_cross_fields_corpus_matches_pandas(mmx):
@@ -189,19 +200,101 @@ def test_batch_matches_per_query(mmx, match_type, tb):
         assert np.allclose(g.score, one.score, rtol=1e-5)
 
 
-def test_batch_requires_co_partitioned_indexes(mmx, spark, tmp_path):
-    from neural_search_spark.index.build import IndexBuilder
+@pytest.fixture(scope="module")
+def mixed_tags(spark, transcripts_df, tmp_path_factory):
+    """The tag field rebuilt with n_shards=2 and with n_shards=3, to pair
+    with the 4-shard text index of ``mmx``."""
+    base = tmp_path_factory.mktemp("mmx_mixed")
+    out = {}
+    for n in (2, 3):
+        d = str(base / f"tag{n}")
+        IndexBuilder(spark, d, n_shards=n, block_size=64).build(
+            transcripts_df.select(
+                "conv_id", "turn_idx", F.col("conv_id").alias("text")
+            )
+        )
+        out[n] = BM25Index(spark, d)
+    return out
+
+
+MIXED_TYPES = [
+    ("best_fields", 0.0),
+    ("best_fields", 0.4),
+    ("most_fields", 0.0),
+    ("cross_fields", 0.0),
+]
+
+
+@pytest.mark.parametrize("tag_shards", [2, 3])
+def test_mixed_layouts_match_corpus(mmx, mixed_tags, tag_shards):
+    """Per-field indexes with different n_shards (4/2 and 4/3) serve every
+    type on both routes, rank-identical to the corpus twin: the kernel
+    groups by pmod(shard_id, gcd), which co-locates a doc's postings."""
+    docs, idxs = mmx
+    mixed = dict(idxs, tag=mixed_tags[tag_shards])
+    for match_type, tb in MIXED_TYPES:
+        exp = corpus_topk(docs, match_type, tb)
+        for mode in ("driver", "distributed"):
+            got = (
+                multi_match_index_topk(
+                    mixed, Q, FIELDS, match_type=match_type,
+                    tie_breaker=tb, k=10, mode=mode,
+                )
+                .toPandas()
+                .sort_values("rank")
+            )
+            case = (match_type, tb, mode)
+            assert got.doc_id.tolist() == exp.doc_id.tolist(), case
+            assert np.allclose(got.score, exp.score, rtol=1e-5), case
+
+
+def test_mixed_layouts_route_and_batch(mmx, mixed_tags, spark):
+    """Mixed layouts plan the index route for cross_fields too, and
+    msearch batches the specs into one multi_match_topk_batch call that
+    answers what search() does."""
+    from neural_search_spark.engine import _TOPK
+    from neural_search_spark.query import multimatch as mm_mod
 
     docs, idxs = mmx
-    d = str(tmp_path / "odd")
-    IndexBuilder(spark, d, n_shards=2, block_size=64).build(
-        spark.createDataFrame(
-            [("c1", 0, "merge tool")], "conv_id string, turn_idx int, text string"
-        )
+    eng = Engine(
+        spark, corpus=docs, field_indexes=dict(idxs, tag=mixed_tags[3])
     )
-    mixed = dict(idxs, tag=BM25Index(spark, d))
-    with pytest.raises(ValueError, match="co-partitioned"):
-        multi_match_topk_batch(mixed, [("q", Q)], FIELDS)
+    specs = {
+        f"{mt}_{tb}_{i}": {
+            "multi_match": {
+                "query_text": text, "fields": FIELDS,
+                "match_type": mt, "tie_breaker": tb,
+            }
+        }
+        for mt, tb in MIXED_TYPES
+        for i, text in enumerate((Q, "call conv00000003"))
+    }
+    for qid, body in specs.items():
+        assert eng.explain_route(body)["route"] == "index", qid
+        plan = eng._plan(spec_from_json(body), _TOPK)
+        assert plan.batch is not None and plan.batch[0][0] == "multi_match"
+    calls = []
+    real = mm_mod.multi_match_topk_batch
+
+    def counting(field_indexes, queries, fields, **kw):
+        calls.append(sorted(qid for qid, _ in queries))
+        return real(field_indexes, queries, fields, **kw)
+
+    mm_mod.multi_match_topk_batch = counting
+    try:
+        out = eng.msearch(specs, k=5).toPandas()
+    finally:
+        mm_mod.multi_match_topk_batch = real
+    assert sorted(calls) == sorted(
+        sorted(q for q in specs if q.startswith(f"{mt}_{tb}_"))
+        for mt, tb in MIXED_TYPES
+    )
+    for qid, body in specs.items():
+        one = eng.search(spec_from_json(body), k=5).toPandas()
+        g = out[out.query_id == qid].sort_values("rank")
+        assert len(one) > 0, qid
+        assert g.doc_id.tolist() == one.doc_id.tolist(), qid
+        assert np.allclose(g.score, one.score, rtol=1e-5), qid
 
 
 def test_engine_msearch_batches_multi_match(mmx, spark):
