@@ -620,9 +620,10 @@ _ROUTED = frozenset({
     "neural_sparse", "neural", "neural_knn",
 })
 
-# msearch: the fewest specs a batch group needs to run as one job (span
-# and multi_match singletons keep their own plan's driver fast path)
-_BATCH_MIN = {"span": 2, "multi_match": 2}
+# msearch: the fewest specs a batch group needs to run as one batch (a
+# multi_match singleton keeps its own plan's driver fast path; the other
+# batch kernels take the driver route themselves below the Σdf gate)
+_BATCH_MIN = {"multi_match": 2}
 
 # an update without a reindex would leave index routes answering from the
 # old postings — Engine.update_by_query and the CLI refuse it up front
@@ -2550,17 +2551,21 @@ class Engine:
     ) -> DataFrame:
         """Batched search: {query_id: spec} → one (query_id, doc_id,
         score, rank) DataFrame. Specs whose plans share a batch key run
-        as ONE shared job: plain match specs through bm25_topk_batch
-        (shared pruned scan + per-shard decode cache — the
-        cluster-throughput shape), match_phrase and match_phrase_prefix
-        specs (any slop) through phrase_topk_batch, ≥2 span/intervals
-        specs through span_topk_batch (a LONE span query keeps search()'s
-        auto-selected driver fast path) and ≥2 best/most/cross_fields
-        multi_match specs per (fields, type, tie_breaker) through
-        multi_match_topk_batch, whatever the per-field indexes' n_shards.
-        The phrase, span and multi_match batch kernels are the shard
-        function a single distributed query runs, with every spec at
-        once. Other specs run their own plans, unioned in."""
+        as ONE batch: plain match specs through bm25_topk_batch,
+        match_phrase and match_phrase_prefix specs (any slop) through
+        phrase_topk_batch, span/intervals specs through span_topk_batch,
+        and ≥2 best/most/cross_fields multi_match specs per (fields,
+        type, tie_breaker) through multi_match_topk_batch, whatever the
+        per-field indexes' n_shards. The BM25, phrase and span batch
+        kernels take the same Σdf gate a single query does, over the
+        union of the batch's terms: below it the whole batch is scored
+        on the driver into one local page (no Spark job — a batch of
+        plain match specs runs none at all), above it in one shared job
+        (shared pruned scan + per-shard decode cache, the
+        cluster-throughput shape). The phrase, span and multi_match
+        distributed kernels are the shard function a single distributed
+        query runs, with every spec at once. Other specs run their own
+        plans, unioned in."""
         if not specs:
             raise ValueError("msearch needs at least one spec")
         plans = {
@@ -2607,8 +2612,8 @@ class Engine:
         return out
 
     def _batch_topk(self, key: tuple, items: list, k: int) -> DataFrame:
-        """One shared job for a batch group: items are (query_id, query
-        text — or PhraseQuery, or span clause) pairs."""
+        """One batch kernel call for a batch group: items are (query_id,
+        query text — or PhraseQuery, or span clause) pairs."""
         kind = key[0]
         if kind == "bm25":
             from .query.bm25 import bm25_topk_batch

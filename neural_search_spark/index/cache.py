@@ -19,7 +19,25 @@ def entry_nbytes(value) -> int:
     return sum(a.nbytes for a in value)
 
 
-def evict_fifo(cache: dict, max_terms: int, max_bytes: int) -> None:
-    total = sum(entry_nbytes(v) for v in cache.values())
-    while cache and (len(cache) > max_terms or total > max_bytes):
-        total -= entry_nbytes(cache.pop(next(iter(cache))))
+class DriverCache(dict):
+    """The decoded-postings dict with a running byte total, so a bound
+    check costs O(1) instead of a walk over every entry. Entries are set
+    by item assignment and dropped by ``pop``; both keep ``nbytes``."""
+
+    def __init__(self):
+        super().__init__()
+        self.nbytes = 0
+
+    def __setitem__(self, key, value) -> None:
+        self.nbytes += entry_nbytes(value) - entry_nbytes(self.get(key))
+        super().__setitem__(key, value)
+
+    def pop(self, key):
+        value = super().pop(key)
+        self.nbytes -= entry_nbytes(value)
+        return value
+
+
+def evict_fifo(cache: DriverCache, max_terms: int, max_bytes: int) -> None:
+    while cache and (len(cache) > max_terms or cache.nbytes > max_bytes):
+        cache.pop(next(iter(cache)))

@@ -312,9 +312,9 @@ class SparseIndex:
         self._postings_ds = None
         # driver-path hot-token cache: tid → (ids, weights f32) decoded
         # arrays (bounded FIFO by count AND bytes — see index/cache.py)
-        from .cache import DEFAULT_MAX_BYTES, DEFAULT_MAX_TERMS
+        from .cache import DEFAULT_MAX_BYTES, DEFAULT_MAX_TERMS, DriverCache
 
-        self._driver_cache: dict[int, tuple | None] = {}
+        self._driver_cache = DriverCache()
         self.driver_cache_terms = DEFAULT_MAX_TERMS
         self.driver_cache_bytes = DEFAULT_MAX_BYTES
 

@@ -14,6 +14,12 @@ Two execution strategies, both rank-identical to the numpy oracle:
    globally either by Catalyst TakeOrderedAndProject (``orderBy.limit``) or by
    an RDD ``treeAggregate`` heap merge (north-rule form).
 
+   When the query's Σdf is at most ``DRIVER_MAX_POSTINGS``, the same
+   top-k runs on the driver instead (``_driver_topk``: one pyarrow read
+   into a decoded-postings cache, numpy accumulate, a local page — no
+   Spark job). ``bm25_topk_batch`` serves an msearch batch the same way:
+   on the driver below the gate, else one Spark job for the whole batch.
+
 2. ``bm25_topk_join`` — pure-Catalyst scorer straight off the corpus
    (tokenize → explode → broadcast-join query terms → groupBy(doc).sum →
    top-k). Used for oracle parity and as the no-index fallback.
@@ -33,7 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..ranking import batch_page, empty_batch_page, local_page, topk_page
+from ..ranking import (
+    batch_page,
+    empty_batch_page,
+    local_batch_page,
+    local_page,
+    topk_page,
+)
 
 from .. import BM25_B, BM25_K1
 from ..index.build import N_TERM_BUCKETS, doc_id_col, tid_py, tokenize_corpus
@@ -99,9 +111,13 @@ class BM25Index:
         # arrays (tf/dl are small ints — exact in float32; upcast at use).
         # Bounded FIFO by count AND bytes — the coordinator analog of
         # Lucene's hot posting pages living in the OS page cache.
-        from ..index.cache import DEFAULT_MAX_BYTES, DEFAULT_MAX_TERMS
+        from ..index.cache import (
+            DEFAULT_MAX_BYTES,
+            DEFAULT_MAX_TERMS,
+            DriverCache,
+        )
 
-        self._driver_cache: dict[int, tuple] = {}
+        self._driver_cache = DriverCache()
         # driver-resident dictionary cache (term, df) — filled on the
         # first full dictionary() read; prefix reads bisect into it
         self._dictionary: list[tuple[str, int]] | None = None
@@ -626,59 +642,71 @@ def _msm_shard_scorer(
     return score_shard
 
 
-def _driver_scored_all(
-    index: BM25Index, idfs: dict[int, float], tids: list[int]
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Coordinator-side FULL matched set: pyarrow reads ONLY the query
-    terms' bucket partitions (hive pruning) with a tid row-group filter,
-    then one numpy merge in-process — zero Spark jobs, so latency is
-    filesystem latency, not task scheduling. Returns (doc_ids, float64
-    score sums, per-doc matched-term counts) over every matching doc —
-    callers apply their own coverage gate / truncation (``_bm25_topk_driver``
-    top-k, multi_match field combine).
+def _fill_driver_cache(index: BM25Index, tids) -> None:
+    """Decode every tid of ``tids`` the handle's driver cache lacks,
+    from ONE pyarrow read of ONLY their bucket partitions (hive pruning)
+    with a tid row-group filter — zero Spark jobs, so latency is
+    filesystem latency, not task scheduling. An absent tid caches None.
 
-    Decoded (ids, tfs, dls) arrays are kept in a bounded per-index LRU —
-    repeated queries over a zipfian vocabulary re-read only cold terms."""
+    Never evicts: a caller scoring from the cache evicts once, after its
+    last use of it, so no entry it filled (or found) can be dropped
+    before it is read — repeated queries over a zipfian vocabulary
+    re-read only cold terms."""
     import pyarrow.dataset as ds
 
     cache = index._driver_cache
-    missing = [t for t in tids if t not in cache]
-    if missing:
-        buckets = sorted({t % N_TERM_BUCKETS for t in missing})
-        if index._postings_ds is None:
-            index._postings_ds = ds.dataset(
-                index._postings_path, format="parquet", partitioning="hive"
-            )
-        tbl = index._postings_ds.to_table(
-            columns=["tid", "docs", "tfs", "dls"],
-            filter=ds.field("term_bucket").isin(buckets)
-            & ds.field("tid").isin(missing),
+    missing = sorted({t for t in tids if t not in cache})
+    if not missing:
+        return
+    buckets = sorted({t % N_TERM_BUCKETS for t in missing})
+    if index._postings_ds is None:
+        index._postings_ds = ds.dataset(
+            index._postings_path, format="parquet", partitioning="hive"
         )
-        tid_arr = tbl["tid"].to_numpy()
-        docs_col = tbl["docs"].to_pylist()
-        tfs_col = tbl["tfs"].to_pylist()
-        dls_col = tbl["dls"].to_pylist()
-        for tid in missing:
-            rows = np.flatnonzero(tid_arr == tid)
-            if len(rows) == 0:
-                cache[tid] = None
-                continue
-            # tf/dl values are small ints (≤ turn length) — float32 holds
-            # them exactly, halving cache bytes; upcast to f64 at use
-            cache[tid] = (
-                np.concatenate([decode_doc_ids(docs_col[i]) for i in rows]),
-                np.concatenate(
-                    [decode_varint(tfs_col[i]) for i in rows]
-                ).astype(np.float32),
-                np.concatenate(
-                    [decode_varint(dls_col[i]) for i in rows]
-                ).astype(np.float32),
-            )
+    tbl = index._postings_ds.to_table(
+        columns=["tid", "docs", "tfs", "dls"],
+        filter=ds.field("term_bucket").isin(buckets)
+        & ds.field("tid").isin(missing),
+    )
+    tid_arr = tbl["tid"].to_numpy()
+    docs_col = tbl["docs"].to_pylist()
+    tfs_col = tbl["tfs"].to_pylist()
+    dls_col = tbl["dls"].to_pylist()
+    order = np.argsort(tid_arr, kind="stable")
+    sorted_tids = tid_arr[order]
+    for tid in missing:
+        lo, hi = np.searchsorted(sorted_tids, [tid, tid + 1])
+        rows = order[lo:hi]
+        if len(rows) == 0:
+            cache[tid] = None
+            continue
+        # tf/dl values are small ints (≤ turn length) — float32 holds
+        # them exactly, halving cache bytes; upcast to f64 at use
+        cache[tid] = (
+            np.concatenate([decode_doc_ids(docs_col[i]) for i in rows]),
+            np.concatenate(
+                [decode_varint(tfs_col[i]) for i in rows]
+            ).astype(np.float32),
+            np.concatenate(
+                [decode_varint(dls_col[i]) for i in rows]
+            ).astype(np.float32),
+        )
+
+
+def _driver_accumulate(
+    index: BM25Index, weights: dict[int, float]
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_ids, float64 Σ weights[tid]·tfnorm, per-doc matched-term
+    counts) over EVERY doc matching a tid of ``weights``, summed in the
+    dict's order from the driver cache — which ``_fill_driver_cache``
+    must already cover. Callers apply their own coverage gate and
+    truncation (``_driver_topk`` top-k, multi_match field combine)."""
+    cache = index._driver_cache
     k1, b, avgdl = index.k1, index.b, index.avgdl
     ids_parts: list[np.ndarray] = []
     sc_parts: list[np.ndarray] = []
-    for tid in tids:
-        got = cache.get(tid)
+    for tid, w in weights.items():
+        got = cache[tid]
         if got is None:
             continue
         ids, tfs32, dls32 = got
@@ -690,46 +718,52 @@ def _driver_scored_all(
         tfs = tfs32.astype(np.float64)
         dls = dls32.astype(np.float64)
         ids_parts.append(ids)
-        sc_parts.append(
-            idfs[tid] * tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+        sc_parts.append(w * tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl)))
+    if not ids_parts:
+        return (
+            np.empty(0, dtype=np.int64),
+            np.empty(0, dtype=np.float64),
+            np.empty(0, dtype=np.int64),
         )
-    # evict AFTER scoring so the current query's (possibly old) entries
-    # can't be dropped mid-use; FIFO ≈ LRU at this cache size
+    acc_ids, inv = np.unique(np.concatenate(ids_parts), return_inverse=True)
+    acc_sc = np.bincount(
+        inv, weights=np.concatenate(sc_parts), minlength=len(acc_ids)
+    )
+    # each term appends one slice per doc it matches, so the plain
+    # bincount of inv IS the per-doc matched-term count
+    return acc_ids, acc_sc, np.bincount(inv, minlength=len(acc_ids))
+
+
+def _driver_topk(
+    index: BM25Index, specs: list[tuple[str, dict[int, float], int]], k: int
+) -> tuple[list[str], np.ndarray, np.ndarray]:
+    """The driver route of every BM25 top-k, single query or batch:
+    ``specs`` = [(query_id, {tid: weight}, min_match)] → per-row
+    (query_ids, doc_ids, float32 scores), each query's rows contiguous
+    in score desc / doc_id asc order — rank-identical to the distributed
+    kernels (same float32 cast, same doc_id tiebreak). One cache fill
+    over the union of the specs' tids, one accumulate per spec, and one
+    eviction after the last spec."""
     from ..index.cache import evict_fifo
 
-    evict_fifo(cache, index.driver_cache_terms, index.driver_cache_bytes)
-    if ids_parts:
-        all_ids = np.concatenate(ids_parts)
-        all_sc = np.concatenate(sc_parts)
-        acc_ids, inv = np.unique(all_ids, return_inverse=True)
-        acc_sc = np.bincount(inv, weights=all_sc, minlength=len(acc_ids))
-        # each term appends one slice per doc it matches, so the plain
-        # bincount of inv IS the per-doc matched-term count
-        n_matched = np.bincount(inv, minlength=len(acc_ids))
-    else:
-        acc_ids = np.empty(0, dtype=np.int64)
-        acc_sc = np.empty(0, dtype=np.float64)
-        n_matched = np.empty(0, dtype=np.int64)
-    return acc_ids, acc_sc, n_matched
-
-
-def _bm25_topk_driver(
-    index: BM25Index,
-    idfs: dict[int, float],
-    tids: list[int],
-    k: int,
-    min_match: int = 1,
-) -> DataFrame:
-    """Driver top-k page over ``_driver_scored_all``'s full matched set —
-    rank-identical to the distributed path (same float32 cast, same
-    doc_id tiebreak)."""
-    acc_ids, acc_sc, n_matched = _driver_scored_all(index, idfs, tids)
-    if min_match > 1:
-        ok = n_matched >= min_match
-        acc_ids, acc_sc = acc_ids[ok], acc_sc[ok]
-    f32 = acc_sc.astype(np.float32)
-    sel = np.lexsort((acc_ids, -f32.astype(np.float64)))[:k]
-    return local_page(index.spark, acc_ids[sel], f32[sel])
+    _fill_driver_cache(index, {t for _q, w, _m in specs for t in w})
+    qids: list[str] = []
+    ids_parts: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+    sc_parts: list[np.ndarray] = [np.empty(0, dtype=np.float32)]
+    for qid, weights, min_match in specs:
+        acc_ids, acc_sc, n_matched = _driver_accumulate(index, weights)
+        if min_match > 1:
+            ok = n_matched >= min_match
+            acc_ids, acc_sc = acc_ids[ok], acc_sc[ok]
+        f32 = acc_sc.astype(np.float32)
+        sel = np.lexsort((acc_ids, -f32.astype(np.float64)))[:k]
+        qids.extend([qid] * len(sel))
+        ids_parts.append(acc_ids[sel])
+        sc_parts.append(f32[sel])
+    evict_fifo(
+        index._driver_cache, index.driver_cache_terms, index.driver_cache_bytes
+    )
+    return qids, np.concatenate(ids_parts), np.concatenate(sc_parts)
 
 
 def bm25_topk(
@@ -792,10 +826,9 @@ def _term_topk(
     if merge == "treeAggregate" and mode == "auto":
         mode = "distributed"  # the caller asked for the cluster merge path
     if driver_route(mode, sum_df):
-        return _bm25_topk_driver(
-            index, weights, sorted(tid_py(t) for t in terms), k,
-            min_match=min_match,
-        )
+        spec = ("", {t: weights[t] for t in sorted(weights)}, min_match)
+        _qids, ids, scores = _driver_topk(index, [spec], k)
+        return local_page(spark, ids, scores)
     # column-prune before the shuffle: the scorer needs 8 of the 12 block
     # columns (block_seq/n_docs/sum_tf/term_bucket never leave the scan),
     # and every one of them is fixed-width → zero-copy Arrow→numpy
@@ -880,18 +913,31 @@ BATCH_TOPK_SCHEMA = T.StructType(
 
 
 def bm25_topk_batch(
-    index: BM25Index, queries: list[tuple[str, str]], k: int = 10
+    index: BM25Index,
+    queries: list[tuple[str, str]],
+    k: int = 10,
+    mode: str = "auto",
 ) -> DataFrame:
-    """Top-k BM25 for a BATCH of queries in ONE Spark job.
+    """Top-k BM25 for a BATCH of queries: on the driver below the gate,
+    else in one Spark job.
 
     queries: [(query_id, query_text)]. Returns (query_id, doc_id, score,
-    rank). The per-shard task runs the MaxScore kernel once per query over
-    the shard's posting blocks, with decoded term contributions CACHED
-    across queries (hot terms decode once per shard, not once per query).
-    This is the throughput shape for a real cluster: one scan of the
-    union-of-terms' posting partitions amortizes scheduling, scan and
-    Python-worker startup over the whole query set; the final merge is a
-    tiny per-query window top-k."""
+    rank).
+
+    mode: 'auto' (the driver route when the Σdf of the union of the
+    batch's in-vocabulary terms is at most DRIVER_MAX_POSTINGS),
+    'driver' or 'distributed' — the same contract as ``bm25_topk``. The
+    driver route is ``bm25_topk``'s driver function with every query's
+    spec: one cache fill for the union's uncached terms, one accumulate
+    per query and one local page — no Spark job.
+
+    The distributed route's per-shard task runs the MaxScore kernel once
+    per query over the shard's posting blocks, with decoded term
+    contributions CACHED across queries (hot terms decode once per
+    shard, not once per query). This is the throughput shape for a real
+    cluster: one scan of the union-of-terms' posting partitions
+    amortizes scheduling, scan and Python-worker startup over the whole
+    query set; the final merge is a tiny per-query window top-k."""
     spark = index.spark
     q_terms: dict[str, list[str]] = {
         qid: sorted(set(tokenize_py(text))) for qid, text in queries
@@ -906,6 +952,11 @@ def bm25_topk_batch(
     live = {qid: ts for qid, ts in q_tids.items() if ts}
     if not live:
         return empty_batch_page(spark)
+    if driver_route(mode, sum(stats.values())):
+        specs = [
+            (qid, {t: idfs[t] for t in ts}, 1) for qid, ts in live.items()
+        ]
+        return local_batch_page(spark, *_driver_topk(index, specs, k))
     k1, b, avgdl = index.k1, index.b, index.avgdl
     deletes = index.deletes
 

@@ -56,13 +56,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
+from ..index.cache import evict_fifo
 from ..ranking import batch_page, empty_batch_page, local_page
 from ..tokenizer import tokenize_py
 from .bm25 import (
     BATCH_TOPK_SCHEMA,
     BM25Index,
     _decode_tfn,
-    _driver_scored_all,
+    _driver_accumulate,
+    _fill_driver_cache,
     driver_route,
     lucene_idf,
 )
@@ -311,19 +313,23 @@ def multi_match_index_topk(
             _shard_topk(indexes, stats, specs, match_type, tie_breaker, k), k
         ).select("doc_id", "score", "rank")
     spec = specs[0]
+    # ONE batched pyarrow read fills each field's driver cache for every
+    # query term; the per-term accumulates below read the cache
     for index, tids in zip(indexes, spec.tids):
-        if len(tids) > 1:
-            # ONE batched pyarrow read fills this field's driver cache for
-            # every query term; the per-term reads below hit the cache
-            _driver_scored_all(index, dict.fromkeys(tids, 0.0), tids)
+        _fill_driver_cache(index, tids)
 
     def contrib(fid, tid):
-        ids, tfn, _n = _driver_scored_all(indexes[fid], {tid: 1.0}, [tid])
+        ids, tfn, _n = _driver_accumulate(indexes[fid], {tid: 1.0})
         return ids, tfn
 
-    return local_page(
-        spark, *_top(*_combine(spec, contrib, match_type, tie_breaker), k)
-    )
+    ids, scores = _top(*_combine(spec, contrib, match_type, tie_breaker), k)
+    for index in indexes:
+        evict_fifo(
+            index._driver_cache,
+            index.driver_cache_terms,
+            index.driver_cache_bytes,
+        )
+    return local_page(spark, ids, scores)
 
 
 def multi_match_topk_batch(

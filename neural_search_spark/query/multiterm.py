@@ -32,7 +32,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
-from ..ranking import batch_page, local_page, topk_page
+from ..ranking import (
+    batch_page,
+    empty_batch_page,
+    local_batch_page,
+    local_page,
+    topk_page,
+)
 from ..tokenizer import tokenize_expr
 from .bm25 import BM25Index, _live_mask, driver_route
 
@@ -364,9 +370,9 @@ def match_bool_prefix_topk_batch(
     mode: str = "auto",
     tokens_by_qid: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """match_bool_prefix for a BATCH of queries in ONE Spark job — the
-    msearch / autocomplete-cluster shape, the bool_prefix sibling of
-    ``bm25.bm25_topk_batch``.
+    """match_bool_prefix for a BATCH of queries, on the driver below the
+    gate, else in ONE Spark job — the msearch / autocomplete-cluster
+    shape, the bool_prefix sibling of ``bm25.bm25_topk_batch``.
 
     queries: [(query_id, query_text)] → (query_id, doc_id, score, rank),
     score-identical per query to ``match_bool_prefix_topk``.
@@ -401,9 +407,7 @@ def match_bool_prefix_topk_batch(
         if toks:
             toks_by_qid[qid] = list(toks)
     if not toks_by_qid:
-        return spark.createDataFrame([], schema=BATCH_TOPK_SCHEMA).withColumn(
-            "rank", F.lit(0).cast("int")
-        )
+        return empty_batch_page(spark)
     all_clause_terms = sorted(
         {t for toks in toks_by_qid.values() for t in toks[:-1]}
     )
@@ -433,22 +437,23 @@ def match_bool_prefix_topk_batch(
             w_by_qid[qid] = w
             pfx_by_qid[qid] = got
     if not w_by_qid:
-        return spark.createDataFrame([], schema=BATCH_TOPK_SCHEMA).withColumn(
-            "rank", F.lit(0).cast("int")
-        )
+        return empty_batch_page(spark)
     all_terms = sorted(set(stats) | exp_terms)
     k1, b, avgdl = index.k1, index.b, index.avgdl
     deletes = index.deletes
     fboost = float(boost)
 
-    def accumulate_queries(contrib, present) -> pd.DataFrame:
+    def accumulate_queries(
+        contrib, present
+    ) -> tuple[list[str], np.ndarray, np.ndarray]:
         """Per-query Σ w·tfnorm + boost·[prefix hit] from a shared
-        tid → (ids, tfnorm) source; emits ≤k rows per query (exact at
-        the shard level because a doc's postings are shard-local, and
-        exact driver-side because the read covers every shard)."""
+        tid → (ids, tfnorm) source; emits ≤k ordered rows per query as
+        per-row (query_ids, doc_ids, float32 scores) — exact at the shard
+        level because a doc's postings are shard-local, and exact
+        driver-side because the read covers every shard."""
         out_qid: list[str] = []
-        out_ids: list[np.ndarray] = []
-        out_sc: list[np.ndarray] = []
+        out_ids: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+        out_sc: list[np.ndarray] = [np.empty(0, dtype=np.float32)]
         for qid, w_by_tid in w_by_qid.items():
             ids_parts: list[np.ndarray] = []
             sc_parts: list[np.ndarray] = []
@@ -489,19 +494,7 @@ def match_bool_prefix_topk_batch(
             out_qid.extend([qid] * len(sel))
             out_ids.append(all_ids[sel])
             out_sc.append(f32[sel])
-        if not out_qid:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype(
-                {"query_id": str, "doc_id": np.int64, "score": np.float32}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": out_qid,
-                "doc_id": np.concatenate(out_ids),
-                "score": np.concatenate(out_sc),
-            }
-        )
+        return out_qid, np.concatenate(out_ids), np.concatenate(out_sc)
 
     need_tids = set()
     for qid in w_by_qid:
@@ -557,27 +550,11 @@ def match_bool_prefix_topk_batch(
                 cache[tid] = got
             return got
 
-        pdf = accumulate_queries(contrib_driver, set(np.unique(tid_a)))
-        pdf = pdf.sort_values(
-            ["query_id", "score", "doc_id"],
-            ascending=[True, False, True],
-            kind="mergesort",
-        )
-        pdf["rank"] = (
-            pdf.groupby("query_id").cumcount().to_numpy() + 1
-        ).astype(np.int32)
-        return spark.createDataFrame(
-            pdf,
-            schema="query_id string, doc_id long, score float, rank int",
+        return local_batch_page(
+            spark, *accumulate_queries(contrib_driver, set(np.unique(tid_a)))
         )
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype(
-                {"query_id": str, "doc_id": np.int64, "score": np.float32}
-            )
         tid_arr = pdf["tid"].to_numpy(dtype=np.int64)
         present = set(np.unique(tid_arr))
         cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
@@ -603,7 +580,10 @@ def match_bool_prefix_topk_batch(
                 cache[tid] = got
             return got
 
-        return accumulate_queries(contrib, present)
+        qids, ids, scores = accumulate_queries(contrib, present)
+        return pd.DataFrame(
+            {"query_id": qids, "doc_id": ids, "score": scores}
+        )
 
     blocks = index.postings_for(all_terms).select(
         "shard_id", "tid", "docs", "tfs", "dls"

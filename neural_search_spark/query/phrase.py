@@ -67,7 +67,13 @@ from ..index.positions import (
     positions_frame,
     read_positions,
 )
-from ..ranking import batch_page, empty_batch_page, local_page, topk_page
+from ..ranking import (
+    batch_page,
+    empty_batch_page,
+    local_batch_page,
+    local_page,
+    topk_page,
+)
 from ..tokenizer import tokenize_expr, tokenize_py
 from .bm25 import BM25Index, _live_mask, driver_route, lucene_idf
 
@@ -596,12 +602,24 @@ def positional_topk(
 
 
 def positional_topk_batch(
-    index: BM25Index, tids: list[int], specs: list[tuple], k: int
+    index: BM25Index,
+    tids: list[int],
+    specs: list[tuple],
+    k: int,
+    mode: str,
+    sum_df: int,
 ) -> DataFrame:
-    """Every spec from ONE positions pass over the union of their tids →
-    (query_id, doc_id, score, rank), per-query top-k."""
+    """Every spec from ONE positions read of the union of their tids →
+    (query_id, doc_id, score, rank), per-query top-k: the driver
+    function and a local page when the union's Σdf (``sum_df``) passes
+    ``driver_route``, else the shard function and a per-query window."""
     if not specs:
         return empty_batch_page(index.spark)
+    if driver_route(mode, sum_df):
+        sc = _driver_scored(index, tids, specs, k)
+        return local_batch_page(
+            index.spark, sc["query_id"], sc["doc_id"], sc["score"]
+        )
     frame = positions_frame(index, tids)
     return batch_page(_shard_scored(index, frame, specs, k), k)
 
@@ -719,10 +737,11 @@ def _fixed_tokens(q: PhraseQuery) -> list[str]:
 
 
 def _resolve(index: BM25Index, q: PhraseQuery, stats: dict | None = None):
-    """(offset groups, idf_total, seed tids, seed df, Σdf) of a phrase,
-    or None when it cannot match (no tokens, an OOV fixed token, a
-    prefix without expansions — the MatchNoDocsQuery rewrite). ``stats``
-    must cover the fixed tokens (read here when omitted)."""
+    """(offset groups, idf_total, seed tids, seed df, {tid: df} of every
+    tid it reads) of a phrase, or None when it cannot match (no tokens,
+    an OOV fixed token, a prefix without expansions — the
+    MatchNoDocsQuery rewrite). ``stats`` must cover the fixed tokens
+    (read here when omitted)."""
     tokens = tokenize_py(q.text or "")
     if not tokens:
         return None
@@ -748,10 +767,9 @@ def _resolve(index: BM25Index, q: PhraseQuery, stats: dict | None = None):
         seed, seed_df = [tid_py(seed_term)], stats[seed_term]
     else:
         seed, seed_df = groups[-1], sum(df for _, df in expansions)
-    sum_df = sum(stats[t] for t in set(fixed)) + sum(
-        df for _, df in expansions
-    )
-    return groups, idf_total, seed, seed_df, sum_df
+    dfs = {tid_py(t): df for t, df in expansions}
+    dfs.update((tid_py(t), stats[t]) for t in fixed)
+    return groups, idf_total, seed, seed_df, dfs
 
 
 def _phrase_topk(
@@ -761,11 +779,10 @@ def _phrase_topk(
     r = _resolve(index, q)
     if r is None:
         return local_page(index.spark, [], np.float32([]))
-    groups, idf_total, seed, seed_df, sum_df = r
+    groups, idf_total, seed, seed_df, dfs = r
     return positional_topk(
-        index, sorted({t for g in groups for t in g}),
-        partial(_phrase_freqs, groups, q.slop), idf_total, k, mode, sum_df,
-        seed=(seed, seed_df),
+        index, sorted(dfs), partial(_phrase_freqs, groups, q.slop),
+        idf_total, k, mode, sum(dfs.values()), seed=(seed, seed_df),
     )
 
 
@@ -828,6 +845,7 @@ def phrase_topk_batch(
     index: BM25Index,
     phrases: list[tuple[str, str | PhraseQuery]],
     k: int = 10,
+    mode: str = "auto",
 ) -> DataFrame:
     """Batched phrase serving: ONE positions pass answers every phrase
     (the msearch analog of ``bm25_topk_batch``).
@@ -839,13 +857,18 @@ def phrase_topk_batch(
     fixed token, a prefix without expansions) contribute no rows — the
     MatchNoDocsQuery rewrite.
 
-    This is the shard function of a single distributed ``phrase_topk``
-    with every query's spec: term stats resolve in ONE point-read over
-    the union of the fixed tokens, the scan prunes to the union of every
-    query's tids, each shard sorts/indexes its rows once and answers
-    every query with a local top-k, and one query_id-partitioned window
-    ranks globally. So the fixed scan + Arrow transfer + scheduling cost
-    a single distributed query pays is paid once per batch.
+    mode: 'auto' (the driver function when the Σdf of the union of
+    every phrase's tids is at most DRIVER_MAX_POSTINGS), 'driver' or
+    'distributed' — the same contract as ``phrase_topk``.
+
+    The distributed route is the shard function of a single distributed
+    ``phrase_topk`` with every query's spec: term stats resolve in ONE
+    point-read over the union of the fixed tokens, the scan prunes to the
+    union of every query's tids, each shard sorts/indexes its rows once
+    and answers every query with a local top-k, and one
+    query_id-partitioned window ranks globally. So the fixed scan +
+    Arrow transfer + scheduling cost a single distributed query pays is
+    paid once per batch.
 
     Reference: _msearch over match_phrase bodies; Lucene executes each
     per-shard with shared IndexReader state — the shared state here is
@@ -859,12 +882,14 @@ def phrase_topk_batch(
     fixed = sorted({t for _, q in queries for t in _fixed_tokens(q)})
     stats = index.term_stats(fixed) if fixed else {}
     specs: list[tuple] = []
-    tids: set[int] = set()
+    dfs: dict[int, int] = {}
     for qid, q in queries:
         r = _resolve(index, q, stats)
         if r is None:
             continue
         groups, idf_total = r[0], r[1]
         specs.append((qid, partial(_phrase_freqs, groups, q.slop), idf_total))
-        tids.update(t for g in groups for t in g)
-    return positional_topk_batch(index, sorted(tids), specs, k)
+        dfs.update(r[4])
+    return positional_topk_batch(
+        index, sorted(dfs), specs, k, mode, sum(dfs.values())
+    )

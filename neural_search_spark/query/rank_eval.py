@@ -21,10 +21,12 @@ Metrics implemented, matching the published OpenSearch semantics:
   ERR = Σ_r (1/r)·R_r·Π_{i<r}(1 − R_i), unlabeled g = 0.
 
 Execution shape (the 100-TB story): the request batch routes through
-``Engine.msearch`` — consecutive plain match requests share ONE pruned
-index scan + decode cache (`bm25_topk_batch`), phrase/span requests
-share one positions pass — so evaluating a 10 000-query judgment set is
-a handful of Spark jobs, not 10 000. The metric math itself is pure
+``Engine.msearch`` — plain match requests share ONE read of their
+union's postings + decode cache (`bm25_topk_batch`), phrase/span
+requests share one positions read; each batch is scored on the driver
+when its union's Σdf is under the gate, else in one Spark job — so
+evaluating a 10 000-query judgment set is a handful of Spark jobs at
+most, not 10 000. The metric math itself is pure
 Catalyst over the (query_id, doc_id, rank) hit frame joined to the
 ratings frame: window functions + exp/ln cumulative products, zero
 Python UDFs, so it runs where the hits already are and never collects

@@ -634,6 +634,7 @@ def span_topk_batch(
     index: BM25Index,
     queries: list[tuple[str, object]],
     k: int = 10,
+    mode: str = "auto",
 ) -> DataFrame:
     """Batched span/intervals serving: ONE positions pass answers every
     clause tree (the msearch analog of ``phrase_topk_batch``).
@@ -646,13 +647,17 @@ def span_topk_batch(
     required group, zero idf, an empty span_multi expansion) contribute
     no rows — the MatchNoDocsQuery rewrite.
 
-    This is the shard function of a single distributed ``span_topk``
-    with every query's spec: term stats resolve in ONE driver point-read
-    over the union of every query's terms, the scan prunes to the union
-    of their ``term_bucket``s, each shard sorts/indexes its rows once,
-    then answers every query with its coverage-mask + enumeration
-    ``freqs_fn`` and a local top-k; one query_id-partitioned window
-    ranks globally.
+    mode: 'auto' (the driver function when the Σdf of the union of every
+    clause tree's terms is at most DRIVER_MAX_POSTINGS), 'driver' or
+    'distributed' — the same contract as ``span_topk``.
+
+    The distributed route is the shard function of a single distributed
+    ``span_topk`` with every query's spec: term stats resolve in ONE
+    driver point-read over the union of every query's terms, the scan
+    prunes to the union of their ``term_bucket``s, each shard
+    sorts/indexes its rows once, then answers every query with its
+    coverage-mask + enumeration ``freqs_fn`` and a local top-k; one
+    query_id-partitioned window ranks globally.
 
     Reference: _msearch over span bodies — Lucene executes each with
     shared IndexReader state; the shared state here is the one pruned
@@ -675,4 +680,5 @@ def span_topk_batch(
         if spec is not None:
             specs.append((qid, spec[0], spec[1]))
             tids.update(spec[2])
-    return positional_topk_batch(index, sorted(tids), specs, k)
+    sum_df = sum(df for t, df in stats.items() if tid_py(t) in tids)
+    return positional_topk_batch(index, sorted(tids), specs, k, mode, sum_df)

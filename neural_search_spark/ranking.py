@@ -23,8 +23,10 @@ Two ways build that page:
   partition keys away and the warning returns.
 
 Batch kernels (msearch) return (query_id, doc_id, score, rank) pages:
-``batch_page`` ranks per query_id and keeps rank ≤ k, and
-``empty_batch_page`` is the typed page of a batch nothing matched.
+``local_batch_page`` is the driver route's local relation (like
+``local_page``, no Spark job), ``batch_page`` ranks a distributed
+result per query_id and keeps rank ≤ k, and ``empty_batch_page`` is the
+typed page of a batch nothing matched.
 """
 
 from __future__ import annotations
@@ -92,15 +94,28 @@ def batch_page(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def empty_batch_page(spark: SparkSession) -> DataFrame:
-    """The (query_id, doc_id, score float, rank) page of an empty batch."""
+def local_batch_page(spark: SparkSession, qids, ids, scores) -> DataFrame:
+    """(query_id, doc_id long, score float, rank int) page from per-row
+    arrays in which each query's rows are contiguous and already
+    ordered; rank restarts at 1 on every query."""
+    qids = np.asarray(qids, dtype=object)
+    n = qids.size
+    row = np.arange(n)
+    first = np.ones(n, dtype=bool)
+    first[1:] = qids[1:] != qids[:-1]
+    rank = row - np.maximum.accumulate(np.where(first, row, 0)) + 1
     return spark.createDataFrame(
         pa.table(
             {
-                "query_id": pa.array([], pa.string()),
-                "doc_id": pa.array([], pa.int64()),
-                "score": pa.array([], pa.float32()),
-                "rank": pa.array([], pa.int32()),
+                "query_id": pa.array(qids, pa.string()),
+                "doc_id": np.asarray(ids, dtype=np.int64),
+                "score": np.asarray(scores, dtype=np.float32),
+                "rank": rank.astype(np.int32),
             }
         )
     )
+
+
+def empty_batch_page(spark: SparkSession) -> DataFrame:
+    """The (query_id, doc_id, score float, rank) page of an empty batch."""
+    return local_batch_page(spark, [], [], [])

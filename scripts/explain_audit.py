@@ -200,10 +200,11 @@ def main():
     iv_text = cap(iv_plan)
     assert "PartitionFilters" in iv_text, "intervals scan not pruned"
     assert "CartesianProduct" not in iv_text
-    # batched route: the whole batch answers from ONE pruned scan —
-    # exactly one Arrow kernel (FlatMapGroupsInPandas) and no join of
-    # any kind; the only exchanges are the doc_shard group and the
-    # query_id rank window
+    # batched distributed route: the whole batch answers from ONE pruned
+    # scan — exactly one Arrow kernel (FlatMapGroupsInPandas) and no join
+    # of any kind; the only exchanges are the doc_shard group and the
+    # query_id rank window. Forced: a batch this small takes the driver
+    # route (a local page, no plan to audit) under mode="auto"
     from neural_search_spark.query.spans import span_topk_batch
 
     batch_plan = span_topk_batch(
@@ -213,6 +214,7 @@ def main():
             ("b", SpanNear((SpanTerm("tool"), SpanTerm("call")), slop=1)),
         ],
         k=10,
+        mode="distributed",
     )
     plans["span batch (one positions pass per msearch batch)"] = batch_plan
     bt_text = cap(batch_plan)
@@ -401,7 +403,14 @@ def main():
     from neural_search_spark.query.bm25 import bm25_topk_batch
 
     idx_cached = BM25Index(spark, idx_dir).cache()
-    bplan = cap(bm25_topk_batch(idx_cached, [("q0", "spark join")], k=5))
+    bplan = cap(
+        bm25_topk_batch(
+            idx_cached, [("q0", "spark join")], k=5, mode="distributed"
+        )
+    )
+    # without the kernel in the plan the split below would find no scan
+    # path, and the Exchange check would pass on nothing
+    assert "FlatMapGroupsInPandas" in bplan, "batch plan has no Arrow kernel"
     # the segment between the kernel and the cached relation is the scan
     # path; the only Exchange allowed in the whole plan is the final
     # per-query-id window merge ABOVE the kernel

@@ -95,14 +95,16 @@ def test_hot_term_query_hits_many_docs(spark, index, oracle):
     assert got["doc_id"].tolist() == expected["doc_id"].tolist()
 
 
-def test_batch_matches_single(spark, index):
-    """bm25_topk_batch is rank-identical to per-query bm25_topk."""
+@pytest.mark.parametrize("mode", ["driver", "distributed"])
+def test_batch_matches_single(spark, index, mode):
+    """bm25_topk_batch is rank-identical to per-query bm25_topk on the
+    driver route and on the Spark kernel."""
     from neural_search_spark.query.bm25 import bm25_topk_batch
 
     idx = index
     qs = generate_queries(10).to_dict("records")
     pairs = [(r["query_id"], r["query_text"]) for r in qs]
-    batch = bm25_topk_batch(idx, pairs, k=10).toPandas()
+    batch = bm25_topk_batch(idx, pairs, k=10, mode=mode).toPandas()
     for rec in qs:
         single = bm25_topk(idx, rec["query_text"], k=10).toPandas()
         got = (
@@ -112,6 +114,35 @@ def test_batch_matches_single(spark, index):
         )
         assert list(got.doc_id) == list(single.doc_id), rec["query_text"]
         assert list(got.score) == list(single.score)
+
+
+def test_driver_batch_union_larger_than_cache(spark, index):
+    """A batch whose union of terms exceeds the driver cache's term
+    bound, scored over a pre-filled cache: every query still equals its
+    own bm25_topk. Evicting before the last query is scored would drop
+    terms the later queries need; the cache ends within its bound."""
+    from neural_search_spark.query.bm25 import bm25_topk_batch
+
+    idx = BM25Index(spark, index.path)
+    idx.driver_cache_terms = 4
+    bm25_topk(idx, "the tool call w0001", k=10, mode="driver").collect()
+    assert len(idx._driver_cache) == 4
+    texts = {
+        "a": "the tool w0001",
+        "b": "w0250 w0100 model",
+        "c": "call w0005 the user",
+        "d": "w0010 w0020 w0030 w0040",
+    }
+    got = bm25_topk_batch(
+        idx, list(texts.items()), k=10, mode="driver"
+    ).toPandas()
+    assert len(idx._driver_cache) <= 4
+    for qid, text in texts.items():
+        want = bm25_topk(index, text, k=10, mode="driver").toPandas()
+        g = got[got.query_id == qid].sort_values("rank")
+        assert list(g.doc_id) == list(want.doc_id), text
+        assert list(g.score) == list(want.score), text
+        assert list(g["rank"]) == list(range(1, len(g) + 1))
 
 
 def test_salted_hot_term_build_rank_identity(

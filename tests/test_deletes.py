@@ -78,12 +78,13 @@ def test_tombstones_every_query_path(spark, del_setup, kw):
         assert list(got["rank"]) == list(range(1, len(got) + 1))
 
 
-def test_tombstones_batch_path(spark, del_setup):
+@pytest.mark.parametrize("mode", ["driver", "distributed"])
+def test_tombstones_batch_path(spark, del_setup, mode):
     _, full_dir, dels = del_setup
     clean = BM25Index(spark, full_dir)
     tomb = BM25Index(spark, full_dir).with_deletes(dels)
     got = (
-        bm25_topk_batch(tomb, [(q, q) for q in QUERIES], k=10)
+        bm25_topk_batch(tomb, [(q, q) for q in QUERIES], k=10, mode=mode)
         .toPandas()
         .sort_values(["query_id", "rank"])
     )

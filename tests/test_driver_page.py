@@ -169,6 +169,28 @@ def test_index_page_is_final(page_eng, monkeypatch, family, route):
     assert [r[2] for r in rows] == list(range(1, len(rows) + 1))
 
 
+def test_driver_msearch_of_match_specs_runs_no_spark_job(spark, page_eng):
+    """A batch of plain match specs whose union of terms fits the driver
+    gate is scored on the driver into one local page, and msearch's
+    cast-select folds into that relation: no Spark job."""
+    texts = {"a": "tool call", "b": "w0005 the", "c": "zzznotaterm"}
+    specs = {q: {"match": {"query_text": t}} for q, t in texts.items()}
+    n, rows = _jobs(spark, lambda: page_eng.msearch(specs, k=K).collect())
+    assert n == 0
+    for qid in ("a", "b"):
+        got = [
+            (r["doc_id"], r["score"], r["rank"])
+            for r in rows
+            if r["query_id"] == qid
+        ]
+        want = [
+            (r["doc_id"], r["score"], r["rank"])
+            for r in page_eng.search(specs[qid], k=K).collect()
+        ]
+        assert got == want
+    assert not [r for r in rows if r["query_id"] == "c"]
+
+
 @pytest.mark.parametrize("family", ["multi_match_phrase", "multi_match_bool_prefix"])
 def test_driver_multi_match_union_runs_no_spark_job(spark, page_eng, family):
     """The field-centric multi_match types combine their per-field driver

@@ -1,5 +1,6 @@
 """Stats API, highlighter stub, hybrid explain mode."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -188,6 +189,26 @@ def test_driver_postings_cache_eviction_correct(spark, small_index):
         c = bm25_topk(tiny, q, k=8, mode="driver").toPandas()  # re-run, warm/evicted mix
         assert a.doc_id.tolist() == b.doc_id.tolist() == c.doc_id.tolist(), q
         assert a.score.tolist() == b.score.tolist() == c.score.tolist(), q
+
+
+def test_driver_cache_byte_bound_evicts_oldest():
+    """The running byte total follows every set, overwrite and eviction,
+    and the byte bound (like the term bound) evicts oldest-first."""
+    from neural_search_spark.index.cache import DriverCache, evict_fifo
+
+    cache = DriverCache()
+    for tid in range(4):  # 1,200 bytes each
+        cache[tid] = (np.zeros(100, np.int64), np.zeros(100, np.float32))
+    cache[9] = None  # an absent term holds no bytes
+    assert cache.nbytes == 4800
+    cache[0] = (np.zeros(50, np.int64),)  # overwrite keeps FIFO position
+    assert cache.nbytes == 4000
+    evict_fifo(cache, max_terms=100, max_bytes=2500)
+    assert list(cache) == [2, 3, 9] and cache.nbytes == 2400
+    evict_fifo(cache, max_terms=100, max_bytes=2500)  # nothing to evict
+    assert list(cache) == [2, 3, 9]
+    evict_fifo(cache, max_terms=2, max_bytes=2500)
+    assert list(cache) == [3, 9] and cache.nbytes == 1200
 
 
 def test_match_all_and_ids_queries(spark, transcripts_df):

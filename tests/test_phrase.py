@@ -650,6 +650,43 @@ def test_phrase_topk_batch_matches_single(ph_setup):
             assert np.allclose(g.score, exp.score, atol=1e-6)
 
 
+def test_positional_batch_driver_matches_distributed(ph_setup):
+    """The phrase and span batch kernels give the same page on the driver
+    route (one positions read, one local page) as on the shard function:
+    equal doc ids, float32 scores and ranks for every query."""
+    from neural_search_spark.query.phrase import PhraseQuery, phrase_topk_batch
+    from neural_search_spark.query.spans import (
+        SpanFirst,
+        SpanNear,
+        SpanTerm,
+        span_topk_batch,
+    )
+
+    idx, _tt = ph_setup
+    phrases = [
+        ("q1", "the tool"),
+        ("s1", PhraseQuery("tool the", slop=2)),
+        ("p1", PhraseQuery("the to", max_expansions=50)),
+        ("oov", "zzznope the"),
+    ]
+    spans = [
+        ("near", SpanNear((SpanTerm("tool"), SpanTerm("call")), slop=2)),
+        ("first", SpanFirst(SpanTerm("tool"), end=8)),
+    ]
+    for batch, items in (
+        (phrase_topk_batch, phrases), (span_topk_batch, spans)
+    ):
+        pages = [
+            sorted(
+                tuple(r)
+                for r in batch(idx, items, k=10, mode=mode).collect()
+            )
+            for mode in ("driver", "distributed")
+        ]
+        assert pages[0] == pages[1]
+        assert {r[0] for r in pages[0]} == {q for q, _ in items} - {"oov"}
+
+
 def test_phrase_topk_batch_all_oov(ph_setup, spark):
     from neural_search_spark.query.phrase import phrase_topk_batch
 
