@@ -48,7 +48,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ranking import topk_rank_window
+from .ranking import local_batch_page, topk_rank_window
 
 from .query.function_score import FunctionScoreSpec
 from .query.neural import QuerySpec, execute, rewrite
@@ -621,8 +621,9 @@ _ROUTED = frozenset({
 })
 
 # msearch: the fewest specs a batch group needs to run as one batch (a
-# multi_match singleton keeps its own plan's driver fast path; the other
-# batch kernels take the driver route themselves below the Σdf gate)
+# multi_match singleton keeps its own plan's driver fast path; the BM25,
+# bool_prefix, phrase and span batch kernels take the driver route
+# themselves below the Σdf gate, so a batch of one is its own query)
 _BATCH_MIN = {"multi_match": 2}
 
 # an update without a reindex would leave index routes answering from the
@@ -1198,9 +1199,6 @@ class Engine:
         if qt == "match":
             from .query.bm25 import bm25_topk
 
-            plain = (
-                spec.operator == "or" and spec.minimum_should_match is None
-            )
             return index(
                 "block-max BM25 kernels",
                 lambda k: bm25_topk(
@@ -1208,8 +1206,9 @@ class Engine:
                     operator=spec.operator,
                     minimum_should_match=spec.minimum_should_match,
                 ),
-                # the batch kernel scores plain disjunctions only
-                batch=(("bm25",), text) if plain else None,
+                batch=(
+                    ("bm25", spec.operator, spec.minimum_should_match), text
+                ),
             )
         if qt in ("match_phrase", "match_phrase_prefix"):
             if not self._positions(idx):
@@ -1303,6 +1302,7 @@ class Engine:
             "weighted term postings + dictionary-walk prefix, one "
             "doc-keyed combine",
             lambda k: match_bool_prefix_topk(idx, text, k=k),
+            batch=(("bool_prefix",), text),
         )
 
     def _multi_match(self, spec: QuerySpec, scan, index) -> _Plan:
@@ -2551,21 +2551,23 @@ class Engine:
     ) -> DataFrame:
         """Batched search: {query_id: spec} → one (query_id, doc_id,
         score, rank) DataFrame. Specs whose plans share a batch key run
-        as ONE batch: plain match specs through bm25_topk_batch,
-        match_phrase and match_phrase_prefix specs (any slop) through
-        phrase_topk_batch, span/intervals specs through span_topk_batch,
-        and ≥2 best/most/cross_fields multi_match specs per (fields,
-        type, tie_breaker) through multi_match_topk_batch, whatever the
-        per-field indexes' n_shards. The BM25, phrase and span batch
-        kernels take the same Σdf gate a single query does, over the
-        union of the batch's terms: below it the whole batch is scored
-        on the driver into one local page (no Spark job — a batch of
-        plain match specs runs none at all), above it in one shared job
-        (shared pruned scan + per-shard decode cache, the
-        cluster-throughput shape). The phrase, span and multi_match
-        distributed kernels are the shard function a single distributed
-        query runs, with every spec at once. Other specs run their own
-        plans, unioned in."""
+        as ONE batch: match specs per (operator, minimum_should_match)
+        through bm25_topk_batch, match_bool_prefix specs through
+        match_bool_prefix_topk_batch, match_phrase and
+        match_phrase_prefix specs (any slop) through phrase_topk_batch,
+        span/intervals specs through span_topk_batch, and ≥2
+        best/most/cross_fields multi_match specs per (fields, type,
+        tie_breaker) through multi_match_topk_batch, whatever the
+        per-field indexes' n_shards. The BM25, bool_prefix, phrase and
+        span batch kernels take the same Σdf gate a single query does,
+        over the union of the batch's terms: below it the whole batch is
+        scored on the driver into one local page (no Spark job — a batch
+        of match and match_bool_prefix specs runs none at all), above it
+        in one shared job (shared pruned scan + per-shard decode cache,
+        the cluster-throughput shape). The BM25, phrase, span and
+        multi_match distributed kernels are the shard function a single
+        distributed query runs, with every spec at once. Other specs run
+        their own plans, unioned in."""
         if not specs:
             raise ValueError("msearch needs at least one spec")
         plans = {
@@ -2590,15 +2592,22 @@ class Engine:
             "query_id", "doc_id",
             F.col("score").cast("double").alias("score"), "rank",
         )
-        parts: list[DataFrame] = []
+        pages: list[DataFrame] = []
         batched: set[str] = set()
         for key, group in groups.items():
             if len(group) < _BATCH_MIN.get(key[0], 1):
                 continue
-            parts.append(
-                self._batch_topk(key, list(group.items()), k).select(*cols)
-            )
+            pages.append(self._batch_topk(key, list(group.items()), k))
             batched |= set(group)
+        local = [p for p in pages if p.isLocal()]
+        if len(local) > 1:
+            # a Spark union of driver-route pages (local relations) runs
+            # a job, so their rows are joined into one page on the driver
+            rows = [r for p in local for r in p.collect()]
+            qids, ids, scores = ([r[i] for r in rows] for i in range(3))
+            pages = [p for p in pages if not p.isLocal()]
+            pages.append(local_batch_page(self.spark, qids, ids, scores))
+        parts = [p.select(*cols) for p in pages]
         for qid, p in plans.items():
             if qid not in batched:
                 parts.append(
@@ -2618,7 +2627,15 @@ class Engine:
         if kind == "bm25":
             from .query.bm25 import bm25_topk_batch
 
-            return bm25_topk_batch(self.bm25_index, items, k=k)
+            _, operator, msm = key
+            return bm25_topk_batch(
+                self.bm25_index, items, k=k,
+                operator=operator, minimum_should_match=msm,
+            )
+        if kind == "bool_prefix":
+            from .query.multiterm import match_bool_prefix_topk_batch
+
+            return match_bool_prefix_topk_batch(self.bm25_index, items, k=k)
         if kind == "phrase":
             from .query.phrase import phrase_topk_batch
 

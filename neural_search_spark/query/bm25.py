@@ -1,28 +1,33 @@
 """BM25 top-k query engine over the block index.
 
-Two execution strategies, both rank-identical to the numpy oracle:
+Two scorers, both rank-identical to the numpy oracle:
 
-1. ``bm25_topk`` — block-max pruned scorer: per shard, an ``applyInPandas``
-   task runs the MaxScore algorithm over that shard's posting blocks of the
-   query's terms, maintaining a top-k threshold and skipping whole blocks of
-   low-impact (hot) terms that cannot affect the top-k. This is the Spark
-   analog of the reference's block-max machinery
-   (query/HybridScoreBlockBoundaryPropagator.java:53-98 advanceShallow +
-   setMinCompetitiveScore, search/collector/HybridTopScoreDocCollector.java:160-168
-   heap-eviction threshold raising), except exact: MaxScore only prunes
-   documents provably below the final threshold. Shard top-k's are merged
-   globally either by Catalyst TakeOrderedAndProject (``orderBy.limit``) or by
-   an RDD ``treeAggregate`` heap merge (north-rule form).
+1. ``bm25_topk`` / ``bm25_topk_batch`` — the index kernels. Each BM25
+   query is a spec ``(query_id, {tid: weight}, min_match)``, and a single
+   query is a batch of one spec. Two routes serve a batch:
 
-   When the query's Σdf is at most ``DRIVER_MAX_POSTINGS``, the same
-   top-k runs on the driver instead (``_driver_topk``: one pyarrow read
-   into a decoded-postings cache, numpy accumulate, a local page — no
-   Spark job). ``bm25_topk_batch`` serves an msearch batch the same way:
-   on the driver below the gate, else one Spark job for the whole batch.
+   * the driver route, when the Σdf of the batch's terms is at most
+     ``DRIVER_MAX_POSTINGS`` (``_driver_topk``: one pyarrow read into a
+     decoded-postings cache, a numpy accumulate per spec, a local page —
+     no Spark job);
+   * the distributed route: one ``applyInPandas`` task per shard runs the
+     shard function ``_bm25_shard`` over that shard's posting blocks of
+     the batch's terms. Per spec it runs MaxScore with the coverage gate
+     of ``operator``/``minimum_should_match`` folded in, keeping a top-k
+     threshold and skipping blocks of low-impact (hot) terms that cannot
+     affect the top-k. This is the Spark analog of the reference's
+     block-max machinery (query/HybridScoreBlockBoundaryPropagator.java:53-98
+     advanceShallow + setMinCompetitiveScore,
+     search/collector/HybridTopScoreDocCollector.java:160-168 heap-eviction
+     threshold raising), except exact: MaxScore only prunes documents
+     provably below the final threshold. A single query's shard top-k's
+     are merged by Catalyst TakeOrderedAndProject (``orderBy.limit``) or by
+     an RDD ``treeAggregate`` heap merge (north-rule form); a batch's by a
+     per-query window.
 
-2. ``bm25_topk_join`` — pure-Catalyst scorer straight off the corpus
-   (tokenize → explode → broadcast-join query terms → groupBy(doc).sum →
-   top-k). Used for oracle parity and as the no-index fallback.
+2. ``bm25_score_all_join`` — pure-Catalyst scorer straight off the corpus
+   (tokenize → explode → broadcast-join query terms → groupBy(doc).sum).
+   Used for oracle parity and as the no-index fallback.
 
 Scoring is float32 (Lucene-style) in both paths so ranks match the oracle.
 Tie-break: score desc, doc_id asc (reference ScoreCombiner.java:43-56).
@@ -32,6 +37,7 @@ from __future__ import annotations
 
 import heapq
 import os
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -52,8 +58,9 @@ from ..index.build import N_TERM_BUCKETS, doc_id_col, tid_py, tokenize_corpus
 from ..index.codec import decode_doc_ids, decode_varint
 from ..tokenizer import tokenize_py
 
-TOPK_SCHEMA = T.StructType(
+BATCH_TOPK_SCHEMA = T.StructType(
     [
+        T.StructField("query_id", T.StringType()),
         T.StructField("doc_id", T.LongType()),
         T.StructField("score", T.FloatType()),
     ]
@@ -441,102 +448,132 @@ def _single_term_topk(
     return ids[sel], f32[sel]
 
 
-def _maxscore_shard_scorer(
-    idfs: dict[str, float],
+def _bm25_shard(
+    pdf: pd.DataFrame,
+    specs: list[tuple[str, dict[int, float], int]],
     k: int,
     k1: float,
     b: float,
     avgdl: float,
-    deletes: np.ndarray | None = None,
-):
-    """Build the per-shard MaxScore kernel (vectorized numpy inside).
-    ``deletes``: sorted tombstones masked at decode time — before any doc
-    can enter the candidate set or raise theta, so pruning stays exact."""
+    deletes: np.ndarray | None,
+) -> pd.DataFrame:
+    """The BM25 shard function: every spec ``(query_id, {tid: weight},
+    min_match)`` over one shard's posting blocks → (query_id, doc_id,
+    score) rows, each spec's shard top-k in score desc / doc_id asc order.
+    A doc's postings all live in its shard, so every shard top-k is exact.
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": np.int64, "score": np.float32}
-            )
-        terms = pdf["tid"].to_numpy(dtype=np.int64)
-        # per-term global upper bound in this shard: idf * max block tfnorm
-        term_ub: dict[int, float] = {}
-        for t, g in pdf.groupby("tid", sort=False):
-            term_ub[t] = idfs[t] * float(g["max_tfnorm"].max())
-        # order terms by upper bound DESC: high-impact (usually rare) terms
-        # first become "essential"; low-impact hot terms are intersected only
-        order = sorted(term_ub, key=lambda t: (-term_ub[t], t))
-        ub = np.array([term_ub[t] for t in order])
-        tail_ub = np.concatenate([np.cumsum(ub[::-1])[::-1][1:], [0.0]])
+    Per spec it runs MaxScore with the coverage gate folded in. Terms go
+    in descending upper bound (weight × the shard's largest block
+    tf-norm). A term is essential, and admits new candidates, while a doc
+    first seen at it could still reach theta (its bound plus every later
+    term's, with one float32 ulp of slack) and could still match
+    ``min_match`` terms, which a doc first seen past position
+    n − min_match cannot. A non-essential term adds to existing
+    candidates only, decoding just the blocks whose doc_id range holds
+    one. theta is the k-th score among candidates that already match
+    ``min_match`` terms: scores and counts only grow, so it bounds the
+    final k-th from below, and a doc that may still fail coverage never
+    raises it. Matched-term counts ride beside the scores and gate at
+    emit. A one-term spec takes ``_single_term_topk``'s block-max skip.
 
-        cand_ids = np.empty(0, dtype=np.int64)
-        cand_scores = np.empty(0, dtype=np.float64)  # float64 accumulation,
-        # float32 cast at emit — same dtype contract as the oracle, so scores
-        # are independent of term processing order
-        theta = -np.inf  # k-th best accumulated score so far
+    A term that two or more specs use is decoded in full once and
+    shared; a term one spec uses keeps the pruned decode. Scores sum in
+    float64 and cast to float32 at emit (the oracle's dtype contract), and
+    tombstones are masked at decode, before any doc can become a
+    candidate or raise theta."""
+    out_q: list[str] = []
+    out_ids: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+    out_sc: list[np.ndarray] = [np.empty(0, dtype=np.float32)]
+    rows_of = dict(tuple(pdf.groupby("tid", sort=False)))
+    uses = Counter(t for _q, w, _m in specs for t in w if t in rows_of)
+    full: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
-        def decode_contrib(rows: pd.DataFrame, idf: float):
-            ids, tfn = _decode_tfn(rows, k1, b, avgdl, deletes)
-            return ids, idf * tfn
+    def contrib(t: int, keep=None) -> tuple[np.ndarray, np.ndarray]:
+        """(ids, tf-norm) of term ``t`` here: the full shared decode of
+        a term several specs use, else the ``keep`` blocks (all if None)."""
+        if uses[t] > 1:
+            got = full.get(t)
+            if got is None:
+                got = full[t] = _decode_tfn(rows_of[t], k1, b, avgdl, deletes)
+            return got
+        rows = rows_of[t] if keep is None else rows_of[t][keep]
+        return _decode_tfn(rows, k1, b, avgdl, deletes)
 
-        if len(order) == 1:
-            t = order[0]
+    for qid, weights, min_match in specs:
+        m = max(min_match, 1)
+        terms = [t for t in weights if t in rows_of]
+        if len(terms) < m:
+            continue
+        if len(terms) == 1 and uses[terms[0]] == 1:
             ids, f32 = _single_term_topk(
-                pdf[terms == t], idfs[t], k, k1, b, avgdl, deletes
+                rows_of[terms[0]], weights[terms[0]], k, k1, b, avgdl, deletes
             )
-            return pd.DataFrame({"doc_id": ids, "score": f32})
-
-        for ti, t in enumerate(order):
-            rows = pdf[terms == t]
-            idf = idfs[t]
-            new_docs_can_enter = tail_ub[ti] + ub[ti] >= theta or len(
-                cand_ids
-            ) < k
-            if new_docs_can_enter:
-                ids, contrib = decode_contrib(rows, idf)
-                # merge into candidate accumulator (sorted by doc_id)
-                all_ids = np.concatenate([cand_ids, ids])
-                all_sc = np.concatenate([cand_scores, contrib])
-                cand_ids, inv = np.unique(all_ids, return_inverse=True)
-                merged = np.zeros(len(cand_ids), dtype=np.float64)
-                np.add.at(merged, inv, all_sc)
-                cand_scores = merged
-            else:
-                # non-essential term: only existing candidates can still win.
-                # Block-level skip: decode only blocks whose doc_id range
-                # intersects a candidate (per-block max-score metadata plus
-                # range check) — the hot-term fast path.
-                lo = np.searchsorted(cand_ids, rows["min_doc_id"].to_numpy())
-                hi = np.searchsorted(
-                    cand_ids, rows["max_doc_id"].to_numpy(), side="right"
-                )
-                keep = hi > lo
-                if not keep.any():
-                    continue
-                ids, contrib = decode_contrib(rows[keep], idf)
-                pos = np.searchsorted(cand_ids, ids)
-                pos_ok = (pos < len(cand_ids)) & (
-                    cand_ids[np.minimum(pos, len(cand_ids) - 1)] == ids
-                )
-                np.add.at(cand_scores, pos[pos_ok], contrib[pos_ok])
-            if len(cand_ids) >= k:
-                theta = float(
-                    np.partition(cand_scores, len(cand_scores) - k)[
-                        len(cand_scores) - k
-                    ]
-                )
-
-        if len(cand_ids) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": np.int64, "score": np.float32}
-            )
-        # per-shard top-k (min-heap equivalent, vectorized): score desc,
-        # doc_id asc — computed on the float32 cast so ties match the oracle
-        final32 = cand_scores.astype(np.float32)
-        sel = np.lexsort((cand_ids, -final32.astype(np.float64)))[:k]
-        return pd.DataFrame({"doc_id": cand_ids[sel], "score": final32[sel]})
-
-    return score_shard
+        else:
+            ub_of = {
+                t: weights[t] * float(rows_of[t]["max_tfnorm"].max())
+                for t in terms
+            }
+            order = sorted(terms, key=lambda t: (-ub_of[t], t))
+            ub = np.array([ub_of[t] for t in order])
+            # ub[ti] + tail_ub[ti] bounds a doc first seen at term ti
+            tail_ub = np.concatenate([np.cumsum(ub[::-1])[::-1][1:], [0.0]])
+            ids = np.empty(0, dtype=np.int64)
+            sc = np.empty(0, dtype=np.float64)
+            n_hit = np.empty(0, dtype=np.float64)
+            theta = -np.inf
+            for ti, t in enumerate(order):
+                w = weights[t]
+                thr = float(np.nextafter(np.float32(theta), np.float32(-np.inf)))
+                if ti <= len(order) - m and ub[ti] + tail_ub[ti] >= thr:
+                    t_ids, tfn = contrib(t)
+                    ids, inv = np.unique(
+                        np.concatenate([ids, t_ids]), return_inverse=True
+                    )
+                    sc = np.bincount(
+                        inv, weights=np.concatenate([sc, w * tfn]),
+                        minlength=len(ids),
+                    )
+                    n_hit = np.bincount(
+                        inv, weights=np.concatenate([n_hit, np.ones(len(t_ids))]),
+                        minlength=len(ids),
+                    )
+                elif not len(ids):
+                    break  # nothing admitted, and no later term admits
+                else:
+                    rows = rows_of[t]
+                    lo = np.searchsorted(ids, rows["min_doc_id"].to_numpy())
+                    hi = np.searchsorted(
+                        ids, rows["max_doc_id"].to_numpy(), side="right"
+                    )
+                    keep = hi > lo
+                    if not keep.any():
+                        continue
+                    t_ids, tfn = contrib(t, keep)
+                    pos = np.searchsorted(ids, t_ids)
+                    ok = (pos < len(ids)) & (
+                        ids[np.minimum(pos, len(ids) - 1)] == t_ids
+                    )
+                    np.add.at(sc, pos[ok], w * tfn[ok])
+                    np.add.at(n_hit, pos[ok], 1.0)
+                qual = sc if m == 1 else sc[n_hit >= m]
+                if len(qual) >= k:
+                    theta = float(
+                        np.partition(qual, len(qual) - k)[len(qual) - k]
+                    )
+            ok = n_hit >= m
+            ids, f32 = ids[ok], sc[ok].astype(np.float32)
+            sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
+            ids, f32 = ids[sel], f32[sel]
+        out_q.extend([qid] * len(ids))
+        out_ids.append(ids)
+        out_sc.append(f32)
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series(out_q, dtype=object),
+            "doc_id": np.concatenate(out_ids),
+            "score": np.concatenate(out_sc),
+        }
+    )
 
 
 DRIVER_MAX_POSTINGS = 2_000_000  # auto mode: Σdf up to this → driver path
@@ -566,8 +603,9 @@ def parse_min_match(
     string (percentage of clause count, truncated toward zero like Java's
     int cast). The result is floored at 1 but NOT capped at n_clauses:
     Lucene/OpenSearch treat msm > optional-clause count as unmatchable,
-    and every caller realizes that by returning empty (`bm25_topk`'s
-    `min_match > len(terms)` check; `bm25_scored`'s coverage HAVING)."""
+    and every caller realizes that by returning empty (the
+    `min_match > len(terms)` checks of `bm25_topk` and `bm25_topk_batch`;
+    `gate.bm25_scored`'s coverage HAVING)."""
     if operator not in ("or", "and"):
         raise ValueError(f"operator must be 'or' or 'and', got {operator!r}")
     if operator == "and":
@@ -592,82 +630,40 @@ def parse_min_match(
     return max(1, got) if n_clauses else 0
 
 
-def _msm_shard_scorer(
-    idfs: dict[int, float],
-    k: int,
-    min_match: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    deletes: np.ndarray | None = None,
-):
-    """Per-shard scorer for coverage-gated queries (operator=and /
-    minimum_should_match > 1): decode every query term's postings, merge
-    per-doc score AND distinct-term count, keep docs with count ≥
-    min_match, then shard top-k. MaxScore pruning is unsound here — theta
-    raised by a doc that later fails the coverage gate could evict a true
-    result — so this kernel trades the skip for exactness; the work is
-    still bounded by the same Σdf the disjunctive scorer decodes in its
-    worst case. Scores stay the full sum over matched terms (Lucene
-    BooleanQuery: msm changes WHICH docs match, never how they score)."""
+def _read_postings(index: BM25Index, tids, columns: list[str]):
+    """The driver's postings read: ``columns`` of the posting blocks of
+    ``tids`` as one pyarrow table, from ONE read of ONLY their bucket
+    partitions (hive pruning) with a tid row-group filter — zero Spark
+    jobs, so latency is filesystem latency, not task scheduling."""
+    import pyarrow.dataset as ds
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": np.int64, "score": np.float32}
+    tids = sorted(tids)
+    if index._postings_ds is None:
+        index._postings_ds = ds.dataset(
+            index._postings_path, format="parquet", partitioning="hive"
         )
-        if pdf.empty:
-            return empty
-        ids_parts, sc_parts = [], []
-        for t, g in pdf.groupby("tid", sort=False):
-            ids, tfn = _decode_tfn(g, k1, b, avgdl, deletes)
-            ids_parts.append(ids)
-            sc_parts.append(idfs[t] * tfn)
-        if not ids_parts:
-            return empty
-        all_ids = np.concatenate(ids_parts)
-        acc_ids, inv = np.unique(all_ids, return_inverse=True)
-        acc_sc = np.bincount(
-            inv, weights=np.concatenate(sc_parts), minlength=len(acc_ids)
+    return index._postings_ds.to_table(
+        columns=columns,
+        filter=ds.field("term_bucket").isin(
+            sorted({t % N_TERM_BUCKETS for t in tids})
         )
-        # one posting row per (term, doc) ⇒ bincount(inv) = matched terms
-        n_matched = np.bincount(inv, minlength=len(acc_ids))
-        ok = n_matched >= min_match
-        if not ok.any():
-            return empty
-        acc_ids, acc_sc = acc_ids[ok], acc_sc[ok]
-        f32 = acc_sc.astype(np.float32)
-        sel = np.lexsort((acc_ids, -f32.astype(np.float64)))[:k]
-        return pd.DataFrame({"doc_id": acc_ids[sel], "score": f32[sel]})
-
-    return score_shard
+        & ds.field("tid").isin(tids),
+    )
 
 
 def _fill_driver_cache(index: BM25Index, tids) -> None:
-    """Decode every tid of ``tids`` the handle's driver cache lacks,
-    from ONE pyarrow read of ONLY their bucket partitions (hive pruning)
-    with a tid row-group filter — zero Spark jobs, so latency is
-    filesystem latency, not task scheduling. An absent tid caches None.
+    """Decode every tid of ``tids`` the handle's driver cache lacks, from
+    one ``_read_postings`` read. An absent tid caches None.
 
     Never evicts: a caller scoring from the cache evicts once, after its
     last use of it, so no entry it filled (or found) can be dropped
     before it is read — repeated queries over a zipfian vocabulary
     re-read only cold terms."""
-    import pyarrow.dataset as ds
-
     cache = index._driver_cache
     missing = sorted({t for t in tids if t not in cache})
     if not missing:
         return
-    buckets = sorted({t % N_TERM_BUCKETS for t in missing})
-    if index._postings_ds is None:
-        index._postings_ds = ds.dataset(
-            index._postings_path, format="parquet", partitioning="hive"
-        )
-    tbl = index._postings_ds.to_table(
-        columns=["tid", "docs", "tfs", "dls"],
-        filter=ds.field("term_bucket").isin(buckets)
-        & ds.field("tid").isin(missing),
-    )
+    tbl = _read_postings(index, missing, ["tid", "docs", "tfs", "dls"])
     tid_arr = tbl["tid"].to_numpy()
     docs_col = tbl["docs"].to_pylist()
     tfs_col = tbl["tfs"].to_pylist()
@@ -820,33 +816,17 @@ def _term_topk(
 ) -> DataFrame:
     """The body of bm25_topk and weighted_term_topk: top-k of
     Σ_t weights[tid] · tfnorm_t over docs matching ≥ min_match of the
-    (in-vocabulary) ``terms``, driver-side or as distributed MaxScore
-    shards, merged by TakeOrderedAndProject or a treeAggregate heap."""
+    (in-vocabulary) ``terms``: the driver function, or the shard function
+    with this one spec merged by TakeOrderedAndProject or a treeAggregate
+    heap."""
     spark = index.spark
     if merge == "treeAggregate" and mode == "auto":
         mode = "distributed"  # the caller asked for the cluster merge path
+    spec = ("", {t: weights[t] for t in sorted(weights)}, min_match)
     if driver_route(mode, sum_df):
-        spec = ("", {t: weights[t] for t in sorted(weights)}, min_match)
         _qids, ids, scores = _driver_topk(index, [spec], k)
         return local_page(spark, ids, scores)
-    # column-prune before the shuffle: the scorer needs 8 of the 12 block
-    # columns (block_seq/n_docs/sum_tf/term_bucket never leave the scan),
-    # and every one of them is fixed-width → zero-copy Arrow→numpy
-    blocks = index.postings_for(terms).select(
-        "shard_id", "tid", "min_doc_id", "max_doc_id",
-        "docs", "tfs", "dls", "max_tfnorm",
-    )
-    if min_match > 1:
-        scorer = _msm_shard_scorer(
-            weights, k, min_match, index.k1, index.b, index.avgdl,
-            deletes=index.deletes,
-        )
-    else:
-        scorer = _maxscore_shard_scorer(
-            weights, k, index.k1, index.b, index.avgdl,
-            deletes=index.deletes,
-        )
-    shard_topk = blocks.groupBy("shard_id").applyInPandas(scorer, TOPK_SCHEMA)
+    shard_topk = _shard_scored(index, terms, [spec], k).drop("query_id")
 
     if merge == "treeAggregate":
         # north-rule form: per-partition k-heaps merged via treeAggregate
@@ -903,13 +883,30 @@ def weighted_term_topk(
     )
 
 
-BATCH_TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.FloatType()),
-    ]
-)
+def _shard_scored(
+    index: BM25Index,
+    terms: list[str],
+    specs: list[tuple[str, dict[int, float], int]],
+    k: int,
+) -> DataFrame:
+    """``_bm25_shard`` over the pruned postings scan of ``terms``: one
+    ``applyInPandas`` task per shard scores every spec → (query_id,
+    doc_id, score), at most k rows per spec and shard."""
+    k1, b, avgdl, deletes = index.k1, index.b, index.avgdl, index.deletes
+
+    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _bm25_shard(pdf, specs, k, k1, b, avgdl, deletes)
+
+    # column-prune before the shuffle: the scorer needs 8 of the 12 block
+    # columns (block_seq/n_docs/sum_tf/term_bucket never leave the scan),
+    # and every one of them is fixed-width → zero-copy Arrow→numpy
+    blocks = index.postings_for(terms).select(
+        "shard_id", "tid", "min_doc_id", "max_doc_id",
+        "docs", "tfs", "dls", "max_tfnorm",
+    )
+    return blocks.groupBy("shard_id").applyInPandas(
+        score_shard, BATCH_TOPK_SCHEMA
+    )
 
 
 def bm25_topk_batch(
@@ -917,134 +914,46 @@ def bm25_topk_batch(
     queries: list[tuple[str, str]],
     k: int = 10,
     mode: str = "auto",
+    operator: str = "or",
+    minimum_should_match=None,
 ) -> DataFrame:
     """Top-k BM25 for a BATCH of queries: on the driver below the gate,
     else in one Spark job.
 
     queries: [(query_id, query_text)]. Returns (query_id, doc_id, score,
-    rank).
+    rank), each query's rows equal to its own ``bm25_topk`` page.
+    ``operator``/``minimum_should_match`` apply to every query of the
+    batch, as in ``bm25_topk``.
 
     mode: 'auto' (the driver route when the Σdf of the union of the
     batch's in-vocabulary terms is at most DRIVER_MAX_POSTINGS),
     'driver' or 'distributed' — the same contract as ``bm25_topk``. The
-    driver route is ``bm25_topk``'s driver function with every query's
-    spec: one cache fill for the union's uncached terms, one accumulate
-    per query and one local page — no Spark job.
-
-    The distributed route's per-shard task runs the MaxScore kernel once
-    per query over the shard's posting blocks, with decoded term
-    contributions CACHED across queries (hot terms decode once per
-    shard, not once per query). This is the throughput shape for a real
-    cluster: one scan of the union-of-terms' posting partitions
-    amortizes scheduling, scan and Python-worker startup over the whole
-    query set; the final merge is a tiny per-query window top-k."""
+    driver route is the driver function with every query's spec: one
+    cache fill for the union's uncached terms, one accumulate per query
+    and one local page — no Spark job. The distributed route is the
+    shard function with every query's spec: one scan of the union's
+    posting partitions amortizes scheduling, scan and Python-worker
+    startup over the whole batch, a term two queries share decodes once
+    per shard, and the final merge is a per-query window top-k."""
     spark = index.spark
-    q_terms: dict[str, list[str]] = {
-        qid: sorted(set(tokenize_py(text))) for qid, text in queries
-    }
-    all_terms = sorted({t for ts in q_terms.values() for t in ts})
+    clauses = {qid: sorted(set(tokenize_py(text))) for qid, text in queries}
+    all_terms = sorted({t for ts in clauses.values() for t in ts})
     stats = index.term_stats(all_terms)
-    idfs = {tid_py(t): lucene_idf(index.n_docs, stats[t]) for t in stats}
-    q_tids = {
-        qid: [tid_py(t) for t in ts if t in stats]
-        for qid, ts in q_terms.items()
-    }
-    live = {qid: ts for qid, ts in q_tids.items() if ts}
-    if not live:
+    specs = []
+    for qid, ts in clauses.items():
+        min_match = parse_min_match(operator, minimum_should_match, len(ts))
+        weights = {
+            tid_py(t): lucene_idf(index.n_docs, stats[t])
+            for t in ts if t in stats
+        }
+        # see bm25_topk: OOV clauses count toward the coverage bar
+        if weights and min_match <= len(weights):
+            specs.append((qid, dict(sorted(weights.items())), min_match))
+    if not specs:
         return empty_batch_page(spark)
     if driver_route(mode, sum(stats.values())):
-        specs = [
-            (qid, {t: idfs[t] for t in ts}, 1) for qid, ts in live.items()
-        ]
         return local_batch_page(spark, *_driver_topk(index, specs, k))
-    k1, b, avgdl = index.k1, index.b, index.avgdl
-    deletes = index.deletes
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_qid: list[str] = []
-        out_ids: list[np.ndarray] = []
-        out_sc: list[np.ndarray] = []
-        if pdf.empty:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": str, "doc_id": np.int64, "score": np.float32}
-            )
-        terms_arr = pdf["tid"].to_numpy(dtype=np.int64)
-        cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-        def single_term_topk(tid: int):
-            """A one-term query: block-max pruned (skips the bulk of a hot
-            term's blocks without decoding them) unless another query of
-            the batch already decoded the term."""
-            if tid in cache:
-                ids, tfn = cache[tid]
-                f32 = (idfs[tid] * tfn).astype(np.float32)
-                sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
-                return ids[sel], f32[sel]
-            return _single_term_topk(
-                pdf[terms_arr == tid], idfs[tid], k, k1, b, avgdl, deletes
-            )
-
-        def contrib(term: int) -> tuple[np.ndarray, np.ndarray]:
-            got = cache.get(term)
-            if got is None:
-                got = _decode_tfn(
-                    pdf[terms_arr == term], k1, b, avgdl, deletes
-                )
-                cache[term] = got
-            return got
-
-        present = set(np.unique(terms_arr))
-        for qid, terms in live.items():
-            terms = [t for t in terms if t in present]
-            if not terms:
-                continue
-            if len(terms) == 1:
-                ids1, sc1 = single_term_topk(terms[0])
-                out_qid.extend([qid] * len(ids1))
-                out_ids.append(ids1)
-                out_sc.append(sc1)
-                continue
-            # one combine pass: gather every term's (ids, contribs), then a
-            # single sort-unique + bincount-sum — T× less memory traffic
-            # than a per-term incremental merge (float64 accumulation, f32
-            # cast at emit, so summation-order drift stays sub-ulp)
-            ids_parts = []
-            sc_parts = []
-            for t in terms:
-                ids, tfn = contrib(t)
-                ids_parts.append(ids)
-                sc_parts.append(idfs[t] * tfn)
-            all_ids = np.concatenate(ids_parts)
-            all_sc = np.concatenate(sc_parts)
-            acc_ids, inv = np.unique(all_ids, return_inverse=True)
-            acc_sc = np.bincount(inv, weights=all_sc, minlength=len(acc_ids))
-            f32 = acc_sc.astype(np.float32)
-            if len(f32) > k:
-                sel = np.lexsort((acc_ids, -f32.astype(np.float64)))[:k]
-            else:
-                sel = np.lexsort((acc_ids, -f32.astype(np.float64)))
-            out_qid.extend([qid] * len(sel))
-            out_ids.append(acc_ids[sel])
-            out_sc.append(f32[sel])
-        if not out_qid:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": str, "doc_id": np.int64, "score": np.float32}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": out_qid,
-                "doc_id": np.concatenate(out_ids),
-                "score": np.concatenate(out_sc),
-            }
-        )
-
-    blocks = index.postings_for(all_terms).select(
-        "shard_id", "tid", "docs", "tfs", "dls", "max_tfnorm"
-    )
-    shard_topk = blocks.groupBy("shard_id").applyInPandas(
-        score_shard, BATCH_TOPK_SCHEMA
-    )
-    return batch_page(shard_topk, k)
+    return batch_page(_shard_scored(index, all_terms, specs, k), k)
 
 
 def bm25_score_all_join(

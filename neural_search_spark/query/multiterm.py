@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
+from ..index.codec import decode_doc_ids
 from ..ranking import (
     batch_page,
     empty_batch_page,
@@ -39,8 +40,18 @@ from ..ranking import (
     local_page,
     topk_page,
 )
-from ..tokenizer import tokenize_expr
-from .bm25 import BM25Index, _live_mask, driver_route
+from ..tokenizer import tokenize_expr, tokenize_py
+from .bm25 import (
+    BATCH_TOPK_SCHEMA,
+    BM25Index,
+    _decode_tfn,
+    _driver_accumulate,
+    _fill_driver_cache,
+    _live_mask,
+    _read_postings,
+    driver_route,
+    lucene_idf,
+)
 
 
 def wildcard_regex(pattern: str) -> str:
@@ -148,8 +159,13 @@ def multiterm_topk(
     terms = [t for t, _ in exps]
     sum_df = sum(df for _, df in exps)
     if driver_route(mode, sum_df):
-        ids = _doc_ids_driver(index, terms)
-        ids = np.unique(ids)
+        tbl = _read_postings(index, {tid_py(t) for t in terms}, ["docs"])
+        ids = np.unique(
+            np.concatenate(
+                [np.empty(0, dtype=np.int64)]
+                + [decode_doc_ids(x) for x in tbl["docs"].to_pylist()]
+            )
+        )
         live = _live_mask(ids, index.deletes)
         if live is not None:
             ids = ids[live]
@@ -158,8 +174,6 @@ def multiterm_topk(
     deletes = index.deletes
 
     def decode_docs(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..index.codec import decode_doc_ids
-
         if pdf.empty:
             return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
         ids = np.unique(
@@ -189,30 +203,6 @@ def multiterm_topk(
     )
 
 
-def _doc_ids_driver(index: BM25Index, terms: list[str]) -> np.ndarray:
-    """Driver pyarrow read of just the docs column for the given terms."""
-    import pyarrow.dataset as ds
-
-    from ..index.build import N_TERM_BUCKETS
-    from ..index.codec import decode_doc_ids
-
-    tids = sorted({tid_py(t) for t in terms})
-    buckets = sorted({t % N_TERM_BUCKETS for t in tids})
-    if index._postings_ds is None:
-        index._postings_ds = ds.dataset(
-            index._postings_path, format="parquet", partitioning="hive"
-        )
-    tbl = index._postings_ds.to_table(
-        columns=["docs"],
-        filter=ds.field("term_bucket").isin(buckets)
-        & ds.field("tid").isin(tids),
-    )
-    parts = [decode_doc_ids(x) for x in tbl["docs"].to_pylist()]
-    if not parts:
-        return np.empty(0, dtype=np.int64)
-    return np.concatenate(parts)
-
-
 def match_bool_prefix_topk(
     index: BM25Index,
     query_text: str,
@@ -226,140 +216,98 @@ def match_bool_prefix_topk(
     as a constant-score prefix. Score per doc = Σ idf·tfnorm over matched
     term clauses (duplicate tokens are duplicate clauses and sum) +
     boost·[any dictionary term with the prefix occurs] — identical values
-    to the corpus sqs fold over ``tok1 … last*``, served from the index:
-    one dictionary range read for the expansion and ONE pass over the
-    clauses' postings (doc-sharded, so per-doc accumulation is local; no
-    MaxScore skip — the constant-score clause makes bounds useless, and
-    the work is the same Σdf a coverage-gated query decodes). Returns
-    (doc_id, score, rank)."""
-    from ..index.codec import decode_doc_ids, decode_varint
-    from ..tokenizer import tokenize_py
-    from .bm25 import lucene_idf
-
-    spark = index.spark
-    if tokens is None:
-        # default analysis; `tokens` overrides for pre-analyzed fields
-        # whose terms the frozen tokenizer must not re-split (e.g. the
-        # search_as_you_type shingle subfields)
-        tokens = tokenize_py(query_text)
-    if not tokens:
-        return local_page(spark, [], [])
-    terms, last = tokens[:-1], tokens[-1]
-    stats = index.term_stats(sorted(set(terms)))
-    w_by_tid: dict[int, float] = {}
-    sum_df = 0
-    for t in terms:
-        if t in stats:
-            tid = tid_py(t)
-            if tid not in w_by_tid:
-                sum_df += stats[t]
-            w_by_tid[tid] = w_by_tid.get(tid, 0.0) + lucene_idf(
-                index.n_docs, stats[t]
-            )
-    exps = index.dictionary(prefix=last)
-    prefix_tids = {tid_py(t) for t, _ in exps}
-    sum_df += sum(df for _, df in exps)
-    if not w_by_tid and not prefix_tids:
-        return local_page(spark, [], [])
-    k1, b, avgdl = index.k1, index.b, index.avgdl
-    deletes = index.deletes
-    fboost = float(boost)
-
-    def accumulate(
-        tid_a, docs_col, tfs_col, dls_col, top: int
-    ) -> pd.DataFrame:
-        ids_parts: list[np.ndarray] = []
-        sc_parts: list[np.ndarray] = []
-        hit_parts: list[np.ndarray] = []
-        for i in range(len(tid_a)):
-            t = int(tid_a[i])
-            ids = decode_doc_ids(docs_col[i])
-            live = _live_mask(ids, deletes)
-            w = w_by_tid.get(t)
-            if w is not None:
-                tfs = decode_varint(tfs_col[i]).astype(np.float64)
-                dls = decode_varint(dls_col[i]).astype(np.float64)
-                if live is not None:
-                    idw, tfs, dls = ids[live], tfs[live], dls[live]
-                else:
-                    idw = ids
-                ids_parts.append(idw)
-                sc_parts.append(
-                    w * tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                )
-            if t in prefix_tids:
-                hit_parts.append(ids[live] if live is not None else ids)
-        base = (
-            np.concatenate(ids_parts)
-            if ids_parts
-            else np.empty(0, dtype=np.int64)
-        )
-        hits = (
-            np.unique(np.concatenate(hit_parts))
-            if hit_parts
-            else np.empty(0, dtype=np.int64)
-        )
-        all_ids = np.unique(np.concatenate([base, hits]))
-        if all_ids.size == 0:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": np.int64, "score": np.float32}
-            )
-        sc = np.zeros(all_ids.size, dtype=np.float64)
-        if base.size:
-            sc += np.bincount(
-                np.searchsorted(all_ids, base),
-                weights=np.concatenate(sc_parts),
-                minlength=all_ids.size,
-            )
-        if hits.size:
-            sc[np.searchsorted(all_ids, hits)] += fboost
-        f32 = sc.astype(np.float32)
-        sel = np.lexsort((all_ids, -f32.astype(np.float64)))[:top]
-        return pd.DataFrame({"doc_id": all_ids[sel], "score": f32[sel]})
-
-    all_terms = sorted(set(terms) & set(stats)) + [t for t, _ in exps]
-    if driver_route(mode, sum_df):
-        import pyarrow.dataset as ds
-
-        from ..index.build import N_TERM_BUCKETS
-
-        tids = sorted({tid_py(t) for t in all_terms})
-        buckets = sorted({t % N_TERM_BUCKETS for t in tids})
-        if index._postings_ds is None:
-            index._postings_ds = ds.dataset(
-                index._postings_path, format="parquet", partitioning="hive"
-            )
-        tbl = index._postings_ds.to_table(
-            columns=["tid", "docs", "tfs", "dls"],
-            filter=ds.field("term_bucket").isin(buckets)
-            & ds.field("tid").isin(tids),
-        )
-        pdf = accumulate(
-            tbl["tid"].to_numpy(),
-            tbl["docs"].to_pylist(),
-            tbl["tfs"].to_pylist(),
-            tbl["dls"].to_pylist(),
-            k,
-        )
-        return local_page(spark, pdf["doc_id"], pdf["score"])
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": np.int64, "score": np.float32}
-            )
-        return accumulate(
-            pdf["tid"].to_numpy(), pdf["docs"].to_numpy(),
-            pdf["tfs"].to_numpy(), pdf["dls"].to_numpy(), k,
-        )
-
-    blocks = index.postings_for(all_terms).select(
-        "shard_id", "tid", "docs", "tfs", "dls"
+    to the corpus sqs fold over ``tok1 … last*``. This is the batch
+    kernel with this one query (``_bool_prefix_scored``) and a global
+    top-k; ``tokens`` overrides the default analysis for pre-analyzed
+    fields whose terms the frozen tokenizer must not re-split (e.g. the
+    search_as_you_type shingle subfields). Returns (doc_id, score, rank)."""
+    got = _bool_prefix_scored(
+        index, [("", query_text)], k, boost, mode,
+        None if tokens is None else {"": tokens},
     )
-    shard_topk = blocks.groupBy("shard_id").applyInPandas(
-        score_shard, "doc_id long, score float"
+    if got is None:
+        return local_page(index.spark, [], [])
+    if isinstance(got, DataFrame):
+        return topk_page(got.drop("query_id"), k)
+    return local_page(index.spark, got[1], got[2])
+
+
+def _bool_prefix_rows(
+    specs: list[tuple[str, dict[int, float], frozenset[int]]],
+    accumulate,
+    prefix_hits,
+    boost: float,
+    k: int,
+) -> tuple[list[str], np.ndarray, np.ndarray]:
+    """Every bool_prefix spec ``(query_id, {tid: weight}, prefix tids)``
+    → its top-k rows as per-row (query_ids, doc_ids, float32 scores),
+    score desc / doc_id asc. ``accumulate(weights)`` gives the term
+    clauses' (sorted doc ids, float64 Σ weight·tfnorm) and
+    ``prefix_hits(tids)`` the prefix clause's sorted unique live doc ids,
+    each of which scores ``boost``."""
+    out_q: list[str] = []
+    out_ids: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+    out_sc: list[np.ndarray] = [np.empty(0, dtype=np.float32)]
+    for qid, weights, pfx in specs:
+        ids, sc = accumulate(weights)
+        hits = prefix_hits(pfx)
+        all_ids = np.union1d(ids, hits)
+        total = np.zeros(all_ids.size, dtype=np.float64)
+        total[np.searchsorted(all_ids, ids)] = sc
+        total[np.searchsorted(all_ids, hits)] += boost
+        f32 = total.astype(np.float32)
+        sel = np.lexsort((all_ids, -f32.astype(np.float64)))[:k]
+        out_q.extend([qid] * len(sel))
+        out_ids.append(all_ids[sel])
+        out_sc.append(f32[sel])
+    return out_q, np.concatenate(out_ids), np.concatenate(out_sc)
+
+
+def _unique_ids(parts: list[np.ndarray]) -> np.ndarray:
+    return np.unique(np.concatenate([np.empty(0, dtype=np.int64), *parts]))
+
+
+def _live_ids(docs, deletes: np.ndarray | None) -> np.ndarray:
+    """The live doc ids of one term's encoded ``docs`` blocks."""
+    ids = np.concatenate(
+        [np.empty(0, dtype=np.int64)] + [decode_doc_ids(x) for x in docs]
     )
-    return topk_page(shard_topk, k)
+    live = _live_mask(ids, deletes)
+    return ids if live is None else ids[live]
+
+
+def _bool_prefix_driver(
+    index: BM25Index, specs: list[tuple], k: int, boost: float
+) -> tuple[list[str], np.ndarray, np.ndarray]:
+    """The driver route of a bool_prefix batch. Term clauses score from
+    the handle's decoded-postings cache (``_fill_driver_cache`` +
+    ``_driver_accumulate``), so a clause any earlier call decoded is not
+    read again. Prefix expansions need doc ids only: one docs-only
+    ``_read_postings`` read, kept out of the cache, because a short
+    prefix can expand to thousands of terms and would flush the clause
+    terms out of the bounded cache."""
+    from ..index.cache import evict_fifo
+
+    _fill_driver_cache(index, {t for _q, w, _p in specs for t in w})
+    docs_of: dict[int, list[bytes]] = {}
+    prefix_tids = {t for _q, _w, p in specs for t in p}
+    if prefix_tids:
+        tbl = _read_postings(index, prefix_tids, ["tid", "docs"])
+        for tid, docs in zip(tbl["tid"].to_pylist(), tbl["docs"].to_pylist()):
+            docs_of.setdefault(tid, []).append(docs)
+    hits_of = {t: _live_ids(d, index.deletes) for t, d in docs_of.items()}
+
+    def prefix_hits(pfx: frozenset[int]) -> np.ndarray:
+        return _unique_ids([hits_of[t] for t in pfx if t in hits_of])
+
+    rows = _bool_prefix_rows(
+        specs, lambda w: _driver_accumulate(index, w)[:2], prefix_hits,
+        boost, k,
+    )
+    evict_fifo(
+        index._driver_cache, index.driver_cache_terms, index.driver_cache_bytes
+    )
+    return rows
 
 
 def match_bool_prefix_topk_batch(
@@ -374,29 +322,43 @@ def match_bool_prefix_topk_batch(
     gate, else in ONE Spark job — the msearch / autocomplete-cluster
     shape, the bool_prefix sibling of ``bm25.bm25_topk_batch``.
 
-    queries: [(query_id, query_text)] → (query_id, doc_id, score, rank),
-    score-identical per query to ``match_bool_prefix_topk``.
+    queries: [(query_id, query_text)] → (query_id, doc_id, score, rank).
     `tokens_by_qid` overrides analysis per query (pre-analyzed token
     streams, e.g. search_as_you_type shingle subfields).
 
-    One pass over the union of every query's clauses' postings; per
-    shard, decoded (ids, tfnorm) contributions are CACHED by tid across
-    the batch's queries (tfnorm is query-independent), so hot terms —
-    and the prefix expansions autocomplete queries share — decode once
-    per shard, not once per query. Per-doc accumulation is local to the
-    shard (doc-sharded postings), so the global merge is a tiny
-    per-query window top-k.
+    The distributed route is one pass over the union of every query's
+    clauses' postings; per shard, decoded (ids, tfnorm) contributions
+    (``_decode_tfn``) are CACHED by tid across the batch's queries
+    (tfnorm is query-independent), so hot terms — and the prefix
+    expansions autocomplete queries share — decode once per shard, not
+    once per query. Per-doc accumulation is local to the shard
+    (doc-sharded postings), so the global merge is a tiny per-query
+    window top-k. There is no MaxScore skip: the constant-score prefix
+    clause has no useful per-block bound.
 
-    `mode`: 'auto' (default) serves the whole batch driver-side via one
-    pyarrow point read when the union's Σdf fits DRIVER_MAX_POSTINGS
-    (the coordinator-cheap-query pattern, zero Spark jobs); 'driver' /
-    'distributed' force the route."""
-    from ..index.codec import decode_doc_ids, decode_varint
-    from ..tokenizer import tokenize_py
-    from .bm25 import BATCH_TOPK_SCHEMA, lucene_idf
+    `mode`: 'auto' (default) serves the whole batch on the driver
+    (``_bool_prefix_driver``, zero Spark jobs) when the union's Σdf fits
+    DRIVER_MAX_POSTINGS; 'driver' / 'distributed' force the route."""
+    got = _bool_prefix_scored(index, queries, k, boost, mode, tokens_by_qid)
+    if got is None:
+        return empty_batch_page(index.spark)
+    if isinstance(got, DataFrame):
+        return batch_page(got, k)
+    return local_batch_page(index.spark, *got)
 
-    spark = index.spark
-    # --- per-query plan: term-clause weights + prefix expansion tids ---
+
+def _bool_prefix_scored(
+    index: BM25Index,
+    queries: list[tuple[str, str]],
+    k: int,
+    boost: float,
+    mode: str,
+    tokens_by_qid: dict[str, list[str]] | None,
+):
+    """Plan every query's spec, then score them all on the route the
+    union's Σdf picks: the driver's per-row (query_ids, doc_ids,
+    scores), or the shard function's (query_id, doc_id, score) frame of
+    per-shard top-k's; None when no query can match."""
     toks_by_qid: dict[str, list[str]] = {}
     for qid, text in queries:
         toks = (
@@ -406,192 +368,90 @@ def match_bool_prefix_topk_batch(
         )
         if toks:
             toks_by_qid[qid] = list(toks)
-    if not toks_by_qid:
-        return empty_batch_page(spark)
-    all_clause_terms = sorted(
-        {t for toks in toks_by_qid.values() for t in toks[:-1]}
+    stats = index.term_stats(
+        sorted({t for toks in toks_by_qid.values() for t in toks[:-1]})
     )
-    stats = index.term_stats(all_clause_terms)
-    n_docs = index.n_docs
-    w_by_qid: dict[str, dict[int, float]] = {}
-    pfx_by_qid: dict[str, frozenset[int]] = {}
-    exp_terms: set[str] = set()
-    exp_cache: dict[str, frozenset[int]] = {}
     df_by_tid: dict[int, int] = {tid_py(t): d for t, d in stats.items()}
+    exp_cache: dict[str, frozenset[int]] = {}
+    exp_terms: set[str] = set()
+    specs: list[tuple[str, dict[int, float], frozenset[int]]] = []
     for qid, toks in toks_by_qid.items():
-        terms, last = toks[:-1], toks[-1]
-        w: dict[int, float] = {}
-        for t in terms:
+        weights: dict[int, float] = {}
+        for t in toks[:-1]:
             if t in stats:
                 tid = tid_py(t)
-                w[tid] = w.get(tid, 0.0) + lucene_idf(n_docs, stats[t])
-        got = exp_cache.get(last)
-        if got is None:
+                weights[tid] = weights.get(tid, 0.0) + lucene_idf(
+                    index.n_docs, stats[t]
+                )
+        last = toks[-1]
+        if last not in exp_cache:
             exps = index.dictionary(prefix=last)
             exp_terms.update(t for t, _ in exps)
             for t, d in exps:
                 df_by_tid.setdefault(tid_py(t), d)
-            got = frozenset(tid_py(t) for t, _ in exps)
-            exp_cache[last] = got
-        if w or got:
-            w_by_qid[qid] = w
-            pfx_by_qid[qid] = got
-    if not w_by_qid:
-        return empty_batch_page(spark)
-    all_terms = sorted(set(stats) | exp_terms)
-    k1, b, avgdl = index.k1, index.b, index.avgdl
-    deletes = index.deletes
+            exp_cache[last] = frozenset(tid_py(t) for t, _ in exps)
+        if weights or exp_cache[last]:
+            specs.append((qid, weights, exp_cache[last]))
+    if not specs:
+        return None
     fboost = float(boost)
-
-    def accumulate_queries(
-        contrib, present
-    ) -> tuple[list[str], np.ndarray, np.ndarray]:
-        """Per-query Σ w·tfnorm + boost·[prefix hit] from a shared
-        tid → (ids, tfnorm) source; emits ≤k ordered rows per query as
-        per-row (query_ids, doc_ids, float32 scores) — exact at the shard
-        level because a doc's postings are shard-local, and exact
-        driver-side because the read covers every shard."""
-        out_qid: list[str] = []
-        out_ids: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
-        out_sc: list[np.ndarray] = [np.empty(0, dtype=np.float32)]
-        for qid, w_by_tid in w_by_qid.items():
-            ids_parts: list[np.ndarray] = []
-            sc_parts: list[np.ndarray] = []
-            hit_parts: list[np.ndarray] = []
-            for tid, wv in w_by_tid.items():
-                if tid not in present:
-                    continue
-                ids, tfn = contrib(tid)
-                ids_parts.append(ids)
-                sc_parts.append(wv * tfn)
-            for tid in pfx_by_qid[qid]:
-                if tid in present:
-                    hit_parts.append(contrib(tid)[0])
-            base = (
-                np.concatenate(ids_parts)
-                if ids_parts
-                else np.empty(0, dtype=np.int64)
-            )
-            hits = (
-                np.unique(np.concatenate(hit_parts))
-                if hit_parts
-                else np.empty(0, dtype=np.int64)
-            )
-            all_ids = np.unique(np.concatenate([base, hits]))
-            if all_ids.size == 0:
-                continue
-            sc = np.zeros(all_ids.size, dtype=np.float64)
-            if base.size:
-                sc += np.bincount(
-                    np.searchsorted(all_ids, base),
-                    weights=np.concatenate(sc_parts),
-                    minlength=all_ids.size,
-                )
-            if hits.size:
-                sc[np.searchsorted(all_ids, hits)] += fboost
-            f32 = sc.astype(np.float32)
-            sel = np.lexsort((all_ids, -f32.astype(np.float64)))[:k]
-            out_qid.extend([qid] * len(sel))
-            out_ids.append(all_ids[sel])
-            out_sc.append(f32[sel])
-        return out_qid, np.concatenate(out_ids), np.concatenate(out_sc)
-
-    need_tids = set()
-    for qid in w_by_qid:
-        need_tids.update(w_by_qid[qid])
-        need_tids.update(pfx_by_qid[qid])
-    sum_df = sum(df_by_tid.get(t, 0) for t in need_tids)
-    if driver_route(mode, sum_df):
-        # whole batch from one pyarrow point read — zero Spark jobs; the
-        # decode cache is shared across queries the same way
-        import pyarrow.dataset as ds
-
-        from ..index.build import N_TERM_BUCKETS
-
-        tids = sorted(need_tids)
-        buckets = sorted({t % N_TERM_BUCKETS for t in tids})
-        if index._postings_ds is None:
-            index._postings_ds = ds.dataset(
-                index._postings_path, format="parquet", partitioning="hive"
-            )
-        tbl = index._postings_ds.to_table(
-            columns=["tid", "docs", "tfs", "dls"],
-            filter=ds.field("term_bucket").isin(buckets)
-            & ds.field("tid").isin(tids),
-        )
-        tid_a = tbl["tid"].to_numpy()
-        docs_col = tbl["docs"].to_pylist()
-        tfs_col = tbl["tfs"].to_pylist()
-        dls_col = tbl["dls"].to_pylist()
-        order = np.argsort(tid_a, kind="stable")
-        sorted_tids = tid_a[order]  # hoisted: one O(rows) copy, not 2/miss
-        cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-        def contrib_driver(tid: int) -> tuple[np.ndarray, np.ndarray]:
-            got = cache.get(tid)
-            if got is None:
-                lo = np.searchsorted(sorted_tids, tid, side="left")
-                hi = np.searchsorted(sorted_tids, tid, side="right")
-                rows = order[lo:hi]
-                ids = np.concatenate(
-                    [decode_doc_ids(docs_col[i]) for i in rows]
-                )
-                tfs = np.concatenate(
-                    [decode_varint(tfs_col[i]) for i in rows]
-                ).astype(np.float64)
-                dls = np.concatenate(
-                    [decode_varint(dls_col[i]) for i in rows]
-                ).astype(np.float64)
-                live = _live_mask(ids, deletes)
-                if live is not None:
-                    ids, tfs, dls = ids[live], tfs[live], dls[live]
-                tfn = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                got = (ids, tfn)
-                cache[tid] = got
-            return got
-
-        return local_batch_page(
-            spark, *accumulate_queries(contrib_driver, set(np.unique(tid_a)))
-        )
+    need = {t for _q, w, p in specs for t in (*w, *p)}
+    if driver_route(mode, sum(df_by_tid[t] for t in need)):
+        return _bool_prefix_driver(index, specs, k, fboost)
+    k1, b, avgdl, deletes = index.k1, index.b, index.avgdl, index.deletes
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        tid_arr = pdf["tid"].to_numpy(dtype=np.int64)
-        present = set(np.unique(tid_arr))
-        cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        rows_of = dict(tuple(pdf.groupby("tid", sort=False)))
+        decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
-        def contrib(tid: int) -> tuple[np.ndarray, np.ndarray]:
-            got = cache.get(tid)
+        def contrib(t: int) -> tuple[np.ndarray, np.ndarray]:
+            got = decoded.get(t)
             if got is None:
-                rows = pdf[tid_arr == tid]
-                ids = np.concatenate(
-                    [decode_doc_ids(x) for x in rows["docs"]]
+                got = decoded[t] = _decode_tfn(
+                    rows_of[t], k1, b, avgdl, deletes
                 )
-                tfs = np.concatenate(
-                    [decode_varint(x) for x in rows["tfs"]]
-                ).astype(np.float64)
-                dls = np.concatenate(
-                    [decode_varint(x) for x in rows["dls"]]
-                ).astype(np.float64)
-                live = _live_mask(ids, deletes)
-                if live is not None:
-                    ids, tfs, dls = ids[live], tfs[live], dls[live]
-                tfn = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-                got = (ids, tfn)
-                cache[tid] = got
             return got
 
-        qids, ids, scores = accumulate_queries(contrib, present)
+        def accumulate(weights):
+            parts = [(contrib(t), w) for t, w in weights.items() if t in rows_of]
+            ids, inv = np.unique(
+                np.concatenate(
+                    [np.empty(0, dtype=np.int64)] + [i for (i, _), _ in parts]
+                ),
+                return_inverse=True,
+            )
+            sc = np.bincount(
+                inv,
+                weights=np.concatenate(
+                    [np.empty(0)] + [w * tfn for (_, tfn), w in parts]
+                ),
+                minlength=len(ids),
+            )
+            return ids, sc
+
+        hits_of: dict[int, np.ndarray] = {}
+
+        def prefix_hits(pfx):
+            # expansions need doc ids only: no tf/dl decode
+            for t in pfx:
+                if t in rows_of and t not in hits_of:
+                    hits_of[t] = _live_ids(rows_of[t]["docs"], deletes)
+            return _unique_ids([hits_of[t] for t in pfx if t in hits_of])
+
+        qids, ids, scores = _bool_prefix_rows(
+            specs, accumulate, prefix_hits, fboost, k
+        )
         return pd.DataFrame(
-            {"query_id": qids, "doc_id": ids, "score": scores}
+            {"query_id": pd.Series(qids, dtype=object), "doc_id": ids,
+             "score": scores}
         )
 
-    blocks = index.postings_for(all_terms).select(
+    blocks = index.postings_for(sorted(set(stats) | exp_terms)).select(
         "shard_id", "tid", "docs", "tfs", "dls"
     )
-    shard_topk = blocks.groupBy("shard_id").applyInPandas(
+    return blocks.groupBy("shard_id").applyInPandas(
         score_shard, BATCH_TOPK_SCHEMA
     )
-    return batch_page(shard_topk, k)
 
 
 def term_topk(
@@ -602,7 +462,7 @@ def term_topk(
     lowercasing, so a value the analyzer would have rewritten simply
     misses, exactly like a raw TermQuery against an analyzed field.
     Returns (doc_id, score, rank) via the standard BM25 kernels."""
-    from .bm25 import lucene_idf, weighted_term_topk
+    from .bm25 import weighted_term_topk
 
     stats = index.term_stats([value]) if value else {}
     if value not in stats:
@@ -642,8 +502,6 @@ def term_scored_scan(
     df = int(dfrow["df"])
     if df == 0:
         return empty
-    from .bm25 import lucene_idf
-
     idf = lucene_idf(n_docs, df)
     return tf.select(
         "doc_id",
@@ -678,8 +536,6 @@ def terms_set_scored_scan(
     via one small agg over the matched subset, one final projection. The
     per-doc msm column rides the same scan; no join, no extra shuffle."""
     from .. import BM25_B, BM25_K1
-    from .bm25 import lucene_idf
-
     spark = docs.sparkSession
     empty_scan = local_page(spark, [], []).drop("rank")
     vals = sorted({str(v) for v in (values or [])})

@@ -422,6 +422,35 @@ def main():
     )
     print("serving cache: no exchange between cache and kernel — ok")
 
+    # a distributed single query is the batch shard function with one
+    # spec: each operator's plan holds exactly one Arrow kernel over a
+    # partition-pruned postings scan, the batch plan's shape
+    from neural_search_spark.query.bm25 import bm25_topk
+
+    shapes = {
+        "batch": bm25_topk_batch(
+            idx, [("q0", "spark join")], k=5, mode="distributed"
+        ),
+        **{
+            op: bm25_topk(
+                idx, "spark join", k=5, mode="distributed", operator=op
+            )
+            for op in ("or", "and")
+        },
+    }
+    for name, plan in shapes.items():
+        if name != "batch":
+            plans[
+                f"bm25_topk distributed, operator={name} (the batch shard "
+                "function with one spec)"
+            ] = plan
+        text = cap(plan)
+        assert text.split("\n\n")[0].count("FlatMapGroupsInPandas") == 1, (
+            f"bm25 {name}: expected exactly one shard kernel"
+        )
+        assert "PartitionFilters" in text, f"bm25 {name}: scan not pruned"
+    print("bm25_topk or/and: one shard kernel over a pruned scan — ok")
+
     # _termvectors frame: the doc fetch is a BROADCAST semi-join point
     # read and the corpus df pass joins exploded terms against the
     # BROADCAST doc vocabulary — the shuffle carries matching terms only,

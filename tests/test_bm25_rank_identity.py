@@ -237,6 +237,61 @@ def test_min_match_rank_identity(spark, index, oracle, mode):
     assert got_and["doc_id"].tolist() == exp_and["doc_id"].tolist()
 
 
+@pytest.fixture(scope="module")
+def coverage_corpus(spark, tmp_path_factory):
+    """A one-shard index where a rare term's high partial scores fail
+    coverage. Ten docs hold only 'alpha' (tf 6): each outscores any doc
+    of the common terms bravo/charlie/delta, so a MaxScore theta taken
+    over candidates that may still fail coverage would shut out the
+    bravo/charlie/delta docs that do rank under msm 2 or 3."""
+    rng = np.random.default_rng(11)
+    texts = ["alpha " * 6] * 10 + ["alpha bravo charlie delta"] * 2
+    for i in range(388):
+        common = [t for t in ("bravo", "charlie", "delta") if rng.random() < 0.5]
+        texts.append(" ".join(common + [f"w{i % 37}"] * int(rng.integers(1, 4))))
+    df = spark.createDataFrame(
+        [(f"c{i}", 0, "user", t.strip(), "", None) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    out = str(tmp_path_factory.mktemp("coverage") / "idx")
+    IndexBuilder(spark, out, n_shards=1, block_size=16).build(df)
+    docs = df.select(doc_id_col().alias("doc_id"), "text").toPandas()
+    return BM25Index(spark, out), BM25Oracle(docs)
+
+
+@pytest.mark.parametrize("tombstones", [False, True])
+def test_distributed_coverage_matches_oracle(coverage_corpus, tombstones):
+    """Forced-distributed and / msm 2 / msm '-25%' equal the oracle's
+    min_match top-k, with and without tombstones (deleted docs vanish,
+    live scores are unchanged)."""
+    idx, orc = coverage_corpus
+    qt, k = "alpha bravo charlie delta", 5
+    dels = []
+    if tombstones:
+        full = orc.topk(qt, k=40, min_match=2)
+        dels = full.doc_id.tolist()[:3:2]
+    idx.with_deletes(dels or None)
+    try:
+        for kw, m in (
+            ({"operator": "and"}, 4),
+            ({"minimum_should_match": 2}, 2),
+            ({"minimum_should_match": "-25%"}, 3),
+        ):
+            exp = orc.topk(qt, k=k + len(dels), min_match=m)
+            exp = exp[~exp.doc_id.isin(dels)].head(k)
+            for merge in ("takeOrdered", "treeAggregate"):
+                got = bm25_topk(
+                    idx, qt, k=k, mode="distributed", merge=merge, **kw
+                ).toPandas()
+                assert got.doc_id.tolist() == exp.doc_id.tolist(), (kw, merge)
+                np.testing.assert_allclose(
+                    got.score.to_numpy(), exp.score.to_numpy(), rtol=1e-6
+                )
+    finally:
+        idx.with_deletes(None)
+
+
 def test_min_match_subset_of_or(spark, index, oracle):
     """Every AND result is an OR result with identical score."""
     qt = "the tool call"
@@ -289,10 +344,10 @@ def test_min_match_engine_scan_matches_index(spark, index, transcripts_df, oracl
     np.testing.assert_allclose(sc_i, sc_s, rtol=1e-5)
 
 
-def test_msearch_does_not_batch_option_carrying_match(spark, index, oracle, transcripts_df):
-    """msearch must route match specs carrying operator/msm/fuzziness
-    through search() (the batch kernel is a plain disjunction): an AND
-    spec in a batch returns the AND results, not the OR results."""
+def test_msearch_batches_option_carrying_match(spark, index, oracle, transcripts_df):
+    """msearch batches match specs per (operator, minimum_should_match):
+    an AND spec beside a plain one returns the AND results, not the OR
+    results."""
     from neural_search_spark.engine import Engine
 
     docs = transcripts_df.withColumn("doc_id", doc_id_col())

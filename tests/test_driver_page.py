@@ -191,6 +191,40 @@ def test_driver_msearch_of_match_specs_runs_no_spark_job(spark, page_eng):
     assert not [r for r in rows if r["query_id"] == "c"]
 
 
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_msearch_of_mixed_match_specs_equals_search(
+    spark, page_eng, monkeypatch, route
+):
+    """or / and / msm / match_bool_prefix specs in one msearch each run
+    as a batch and equal their own search() page, on both routes; on the
+    driver route the whole msearch runs no Spark job."""
+    if route == "distributed":
+        monkeypatch.setattr(bm25_mod, "DRIVER_MAX_POSTINGS", -1)
+    specs = {
+        "or": {"match": {"query_text": "tool call w0005"}},
+        "or2": {"match": {"query_text": "the user"}},
+        "and": {"match": {"query_text": "tool call", "operator": "and"}},
+        "msm": {"match": {"query_text": "the tool call w0005",
+                          "minimum_should_match": 2}},
+        "bp": {"match_bool_prefix": {"query_text": "the tool ca"}},
+        "bp2": {"match_bool_prefix": {"query_text": "w00"}},
+    }
+    n, rows = _jobs(spark, lambda: page_eng.msearch(specs, k=K).collect())
+    if route == "driver":
+        assert n == 0
+    for qid, body in specs.items():
+        got = [
+            (r["doc_id"], r["score"], r["rank"])
+            for r in rows
+            if r["query_id"] == qid
+        ]
+        want = [
+            (r["doc_id"], r["score"], r["rank"])
+            for r in page_eng.search(body, k=K).collect()
+        ]
+        assert got and got == want, qid
+
+
 @pytest.mark.parametrize("family", ["multi_match_phrase", "multi_match_bool_prefix"])
 def test_driver_multi_match_union_runs_no_spark_job(spark, page_eng, family):
     """The field-centric multi_match types combine their per-field driver
