@@ -45,10 +45,11 @@ import json
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ranking import local_batch_page, topk_rank_window
+from .ranking import LocalPage, topk_rank_window
 
 from .query.function_score import FunctionScoreSpec
 from .query.neural import QuerySpec, execute, rewrite
@@ -647,10 +648,11 @@ class _Plan:
     A ``ranked`` plan's ``run`` returns the final (doc_id, score, rank)
     page instead — ≤ k rows, score descending, doc_id ascending, rank
     1..n — which search returns as is: index-route kernels build it (on
-    the driver route as a local relation, so serving it runs no Spark
-    job) and hybrid ranks its combined result. Wrapping consumers read
-    its doc_id and score columns by name. ``batch`` is (group key, item)
-    for a spec msearch can score in one job shared with its group."""
+    the driver route as a ``ranking.LocalPage``, whose rows are read in
+    Python with no JVM call) and hybrid ranks its combined result.
+    Wrapping consumers read its doc_id and score columns by name.
+    ``batch`` is (group key, item) for a spec msearch can score in one
+    job shared with its group."""
 
     route: str
     reason: str
@@ -2561,13 +2563,16 @@ class Engine:
         per-field indexes' n_shards. The BM25, bool_prefix, phrase and
         span batch kernels take the same Σdf gate a single query does,
         over the union of the batch's terms: below it the whole batch is
-        scored on the driver into one local page (no Spark job — a batch
-        of match and match_bool_prefix specs runs none at all), above it
-        in one shared job (shared pruned scan + per-shard decode cache,
+        scored on the driver into one ``LocalPage`` (no Spark job), above
+        it in one shared job (shared pruned scan + per-shard decode cache,
         the cluster-throughput shape). The BM25, phrase, span and
         multi_match distributed kernels are the shard function a single
         distributed query runs, with every spec at once. Other specs run
-        their own plans, unioned in."""
+        their own plans. Every driver page (batch or single) is joined
+        into one ``LocalPage`` in Arrow, scores widened to double; when
+        every part is such a page that is the result — an msearch of
+        match and match_bool_prefix specs below the gate never calls the
+        JVM — else it is unioned with the distributed parts."""
         if not specs:
             raise ValueError("msearch needs at least one spec")
         plans = {
@@ -2588,33 +2593,51 @@ class Engine:
             if p.batch is not None:
                 key, item = p.batch
                 groups.setdefault(key, {})[qid] = item
-        cols = (
-            "query_id", "doc_id",
-            F.col("score").cast("double").alias("score"), "rank",
-        )
-        pages: list[DataFrame] = []
+        pages: list[tuple[DataFrame, str | None]] = []
         batched: set[str] = set()
         for key, group in groups.items():
             if len(group) < _BATCH_MIN.get(key[0], 1):
                 continue
-            pages.append(self._batch_topk(key, list(group.items()), k))
+            pages.append((self._batch_topk(key, list(group.items()), k), None))
             batched |= set(group)
-        local = [p for p in pages if p.isLocal()]
-        if len(local) > 1:
-            # a Spark union of driver-route pages (local relations) runs
-            # a job, so their rows are joined into one page on the driver
-            rows = [r for p in local for r in p.collect()]
-            qids, ids, scores = ([r[i] for r in rows] for i in range(3))
-            pages = [p for p in pages if not p.isLocal()]
-            pages.append(local_batch_page(self.spark, qids, ids, scores))
-        parts = [p.select(*cols) for p in pages]
-        for qid, p in plans.items():
-            if qid not in batched:
-                parts.append(
-                    self._hits(p, k)
-                    .withColumn("query_id", F.lit(qid))
-                    .select(*cols)
+        pages += [
+            (self._hits(p, k), qid)
+            for qid, p in plans.items()
+            if qid not in batched
+        ]
+        # driver pages are joined in Arrow into one LocalPage: a Spark
+        # union of local relations would run a job, and an all-driver
+        # msearch then never touches the JVM
+        local: list[pa.Table] = []
+        parts: list[DataFrame] = []
+        for page, qid in pages:
+            if isinstance(page, LocalPage):
+                t = page.toArrow()
+                q = (
+                    t["query_id"] if qid is None
+                    else pa.array([qid] * t.num_rows, pa.string())
                 )
+                local.append(
+                    pa.table(
+                        {
+                            "query_id": q,
+                            "doc_id": t["doc_id"],
+                            "score": t["score"].cast(pa.float64()),
+                            "rank": t["rank"],
+                        }
+                    )
+                )
+                continue
+            if qid is not None:
+                page = page.withColumn("query_id", F.lit(qid))
+            parts.append(
+                page.select(
+                    "query_id", "doc_id",
+                    F.col("score").cast("double").alias("score"), "rank",
+                )
+            )
+        if local:
+            parts.insert(0, LocalPage(self.spark, pa.concat_tables(local)))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionAll(p)

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..query.bm25 import driver_route
-from ..ranking import local_page, topk_page
+from ..ranking import local_page, sorted_union, topk_page
 
 from .. import BLOCK_SIZE
 from .build import (
@@ -381,7 +381,7 @@ def _accumulate(tbl_tids, docs_col, weights_col, q_weights: dict[int, float]):
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     all_ids = np.concatenate(ids_parts)
     all_sc = np.concatenate(sc_parts)
-    acc_ids, inv = np.unique(all_ids, return_inverse=True)
+    acc_ids, inv = sorted_union(all_ids)
     acc_sc = np.bincount(inv, weights=all_sc, minlength=len(acc_ids))
     return acc_ids, acc_sc
 
@@ -471,7 +471,7 @@ def _driver_scores(
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     all_ids = np.concatenate(ids_parts)
     all_sc = np.concatenate(sc_parts)
-    ids, inv = np.unique(all_ids, return_inverse=True)
+    ids, inv = sorted_union(all_ids)
     sc = np.bincount(inv, weights=all_sc, minlength=len(ids))
     return ids, sc
 

@@ -50,6 +50,7 @@ from ..ranking import (
     empty_batch_page,
     local_batch_page,
     local_page,
+    sorted_union,
     topk_page,
 )
 
@@ -526,9 +527,7 @@ def _bm25_shard(
                 thr = float(np.nextafter(np.float32(theta), np.float32(-np.inf)))
                 if ti <= len(order) - m and ub[ti] + tail_ub[ti] >= thr:
                     t_ids, tfn = contrib(t)
-                    ids, inv = np.unique(
-                        np.concatenate([ids, t_ids]), return_inverse=True
-                    )
+                    ids, inv = sorted_union(np.concatenate([ids, t_ids]))
                     sc = np.bincount(
                         inv, weights=np.concatenate([sc, w * tfn]),
                         minlength=len(ids),
@@ -721,7 +720,7 @@ def _driver_accumulate(
             np.empty(0, dtype=np.float64),
             np.empty(0, dtype=np.int64),
         )
-    acc_ids, inv = np.unique(np.concatenate(ids_parts), return_inverse=True)
+    acc_ids, inv = sorted_union(np.concatenate(ids_parts))
     acc_sc = np.bincount(
         inv, weights=np.concatenate(sc_parts), minlength=len(acc_ids)
     )

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 
 from ..index.build import tid_py
 from ..index.cache import evict_fifo
-from ..ranking import batch_page, empty_batch_page, local_page
+from ..ranking import batch_page, empty_batch_page, local_page, sorted_union
 from ..tokenizer import tokenize_py
 from .bm25 import (
     BATCH_TOPK_SCHEMA,
@@ -168,7 +168,7 @@ def _fold(
         return parts[0] if parts else _NONE
     all_ids = np.concatenate([p[0] for p in parts])
     all_sc = np.concatenate([p[1] for p in parts])
-    uniq, inv = np.unique(all_ids, return_inverse=True)
+    uniq, inv = sorted_union(all_ids)
     sm = np.bincount(inv, weights=all_sc, minlength=len(uniq))
     if tie_breaker is None:
         return uniq, sm

@@ -38,6 +38,7 @@ from ..ranking import (
     empty_batch_page,
     local_batch_page,
     local_page,
+    sorted_union,
     topk_page,
 )
 from ..tokenizer import tokenize_expr, tokenize_py
@@ -414,11 +415,10 @@ def _bool_prefix_scored(
 
         def accumulate(weights):
             parts = [(contrib(t), w) for t, w in weights.items() if t in rows_of]
-            ids, inv = np.unique(
+            ids, inv = sorted_union(
                 np.concatenate(
                     [np.empty(0, dtype=np.int64)] + [i for (i, _), _ in parts]
-                ),
-                return_inverse=True,
+                )
             )
             sc = np.bincount(
                 inv,

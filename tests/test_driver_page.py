@@ -1,22 +1,35 @@
 """The index kernel's page is the search result: Engine.search returns an
 index-route kernel's (doc_id, score, rank) page as is, with no re-sort.
 
-Two guards follow from that. Interactive match queries on the driver
+Three guards follow from that. Interactive match queries on the driver
 route run no Spark job at all (nor do the per-field page unions of
-multi_match phrase / bool_prefix and search_as_you_type), and every
-index-route family must hand
-back a page that is already final: score descending, doc_id ascending
-on ties, rank 1..n, n ≤ k — on the driver route and on the distributed
-one."""
+multi_match phrase / bool_prefix and search_as_you_type); a driver page
+is a ``LocalPage`` that is read without a single py4j round trip and
+behaves as the eager local relation of its Arrow table would; and every
+index-route family must hand back a page that is already final: score
+descending, doc_id ascending on ties, rank 1..n, n ≤ k — on the driver
+route and on the distributed one."""
 
+import gc
+import threading
 import uuid
 
+import numpy as np
+import pandas.testing as pdt
 import pytest
+from py4j.java_gateway import GatewayClient
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 import neural_search_spark.query.bm25 as bm25_mod
 from neural_search_spark.engine import Engine
 from neural_search_spark.index.build import IndexBuilder, doc_id_col
+from neural_search_spark.ranking import (
+    LocalPage,
+    empty_batch_page,
+    local_batch_page,
+    local_page,
+)
 
 K = 7
 
@@ -74,9 +87,130 @@ def _jobs(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(tag)), out
 
 
+def _trips(fn):
+    """(py4j round trips fn made, fn's result). Only the calling thread's
+    commands count, and cyclic GC is held off in the window: releases of
+    earlier Java objects, which py4j's finalizer thread sends, are not
+    fn's round trips."""
+    sent = []
+    send = GatewayClient.send_command
+    caller = threading.get_ident()
+
+    def counted(self, command, *args, **kwargs):
+        if threading.get_ident() == caller:
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    GatewayClient.send_command = counted
+    try:
+        out = fn()
+    finally:
+        GatewayClient.send_command = send
+        gc.enable()
+    return len(sent), out
+
+
 def test_job_counter_sees_jobs(spark):
     n, _ = _jobs(spark, lambda: spark.range(10).filter("id > 3").collect())
     assert n >= 1
+
+
+def test_trip_counter_sees_trips(spark):
+    n, _ = _trips(lambda: spark.range(3).count())
+    assert n >= 1
+
+
+def test_driver_match_page_makes_no_py4j_round_trip(page_eng):
+    """A driver-route match and every read of its page stay in Python:
+    the page is a LocalPage, and collect/toPandas/count never cross
+    into the JVM."""
+    body = {"match": {"query_text": "tool call w0005"}}
+    page_eng.search(body, k=K).collect()  # warm the driver cache
+
+    def serve():
+        page = page_eng.search(body, k=K)
+        return page, page.collect(), page.toPandas(), page.count()
+
+    n, (page, rows, pdf, count) = _trips(serve)
+    assert n == 0
+    assert isinstance(page, LocalPage)
+    assert rows and count == len(rows) == len(pdf)
+    assert list(pdf["doc_id"]) == [r["doc_id"] for r in rows]
+
+
+def test_driver_msearch_page_makes_no_py4j_round_trip(page_eng):
+    """An msearch of match and match_bool_prefix specs below the driver
+    gate is one LocalPage — its batch pages joined in Arrow — and never
+    crosses into the JVM."""
+    specs = {
+        "or": {"match": {"query_text": "tool call w0005"}},
+        "and": {"match": {"query_text": "tool call", "operator": "and"}},
+        "bp": {"match_bool_prefix": {"query_text": "the tool ca"}},
+    }
+    page_eng.msearch(specs, k=K).collect()
+
+    def serve():
+        page = page_eng.msearch(specs, k=K)
+        return page, page.collect()
+
+    n, (page, rows) = _trips(serve)
+    assert n == 0
+    assert isinstance(page, LocalPage)
+    assert {r["query_id"] for r in rows} == set(specs)
+    assert all(isinstance(r["score"], float) for r in rows)
+    assert page.schema["score"].dataType.simpleString() == "double"
+
+
+PAGES = {
+    "empty_float": lambda s: local_page(s, [], np.float32([])),
+    "double": lambda s: local_page(s, [5, 3, 9], [2.5, 1.25, 1.25]),
+    "batch": lambda s: local_batch_page(
+        s, ["a", "a", "b"], [4, 2, 4], np.float32([3.5, 2.0, 1.5])
+    ),
+    "empty_batch": empty_batch_page,
+}
+
+
+@pytest.mark.parametrize("case", sorted(PAGES))
+def test_local_page_matches_eager_relation(spark, monkeypatch, case):
+    """A LocalPage answers every read as the eager relation of its table
+    does, Spark operators applied to it see that same relation, and the
+    relation is built once per page."""
+    page = PAGES[case](spark)
+    eager = spark.createDataFrame(page.toArrow())
+    other = spark.createDataFrame([(4, "x"), (5, "y")], ["doc_id", "tag"])
+    built = []
+    create = SparkSession.createDataFrame
+
+    def counted(self, data, *args, **kwargs):
+        built.append(data)
+        return create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", counted)
+    rows = page.collect()
+    assert rows == eager.collect()
+    assert [r.asDict() for r in rows] == [r.asDict() for r in eager.collect()]
+    pdt.assert_frame_equal(page.toPandas(), eager.toPandas())
+    assert page.toArrow().equals(eager.toArrow())
+    assert page.schema == eager.schema
+    assert page.columns == eager.columns and page.dtypes == eager.dtypes
+    assert page.count() == eager.count()
+    assert page.isEmpty() == eager.isEmpty()
+    assert page.isLocal() and eager.isLocal()
+    assert page.take(2) == eager.take(2)
+    assert page.first() == eager.first()
+    assert page.head(5) == eager.head(5)
+    assert built == []  # reads alone build no relation
+
+    for op in (
+        lambda df: df.join(other, "doc_id"),
+        lambda df: df.unionAll(df),
+        lambda df: df.filter(F.col("score") > 1.3),
+    ):
+        assert sorted(op(page).collect()) == sorted(op(eager).collect())
+    assert len(built) == 1 and built[0] is page.toArrow()
 
 
 @pytest.mark.parametrize(
