@@ -1474,7 +1474,7 @@ class Engine:
 
     def _mlt_index_topk(self, spec, k: int) -> DataFrame:
         """more_like_this served from the block index: term selection
-        via a pyarrow point read of the terms dictionary (index.term_stats
+        via a lookup in the resident term dictionary (index.term_stats
         — candidate-bounded, no Spark job), then the formed ≤25-term
         match through the ordinary block-max kernels. like_ids resolve
         against the corpus when one is attached; excluded likes are
@@ -2377,7 +2377,7 @@ class Engine:
         vectors via on-the-fly re-analysis of the fetched rows (the
         host's behavior for fields without stored term vectors), with
         df/ttf and field statistics read from the attached bm25_index's
-        terms table as driver-side pyarrow point reads — the _mget
+        resident term dictionary on the driver — the _mget
         broadcast semi-join is the only Spark job. Requires the index
         when term_statistics/field_statistics are requested."""
         from .query.termvectors import termvectors_response
@@ -2403,7 +2403,8 @@ class Engine:
         Derived from the same plan search() runs (``_plan``), so it
         cannot drift from execution — the Lucene Weight.explain/scorer
         pairing. A surprising corpus fallback is diagnosable before
-        paying for it; only terms lookups are resolved (one point read)."""
+        paying for it; only terms lookups are resolved (dictionary
+        lookups)."""
         if isinstance(spec, (dict, str)):
             spec = spec_from_json(spec)
         return self._plan(spec, _TOPK).explain()

@@ -4,7 +4,10 @@ Posting blocks store sorted doc_ids as zigzag-free unsigned deltas (doc_ids
 are mapped int64 → uint64 order-preservingly by adding 2^63, so deltas of the
 sorted sequence are non-negative) and term frequencies as plain varints.
 Encode/decode are fully vectorized — no per-value Python loops, only a loop
-over the ≤10 varint byte positions.
+over the ≤10 varint byte positions. The ``*_batch`` forms code many blocks
+in one pass: the encoders return one bytes object per row, the decoders
+read an Arrow binary column's offsets and data buffers directly and
+return the row-concatenated values with per-row counts.
 
 This plays the role Lucene's block postings format plays for the reference
 (consumed there via org.apache.lucene Scorer iterators, e.g. reference
@@ -14,6 +17,7 @@ query/HybridQueryScorer.java:33-89); built here from scratch for Spark.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _SIGN_FLIP = np.uint64(1) << np.uint64(63)
 
@@ -41,27 +45,85 @@ def encode_varint(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
+def _decode_varint_bytes(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128 uint8 array → (uint64 values, their start byte offsets).
+    Each byte's 7-bit group is shifted by 7 × its position in its value,
+    then one ``bitwise_or.reduceat`` over the value starts assembles the
+    values: every byte belongs to exactly one value, so OR equals sum.
+    Positions and shifts use narrow dtypes to keep the per-byte passes
+    cache-sized."""
+    ends = (b & 0x80) == 0
+    starts = np.flatnonzero(np.concatenate(([True], ends[:-1])))
+    idx = np.int32 if b.size < 2**31 else np.int64
+    pos = np.arange(b.size, dtype=idx) - np.repeat(
+        starts.astype(idx), np.diff(np.append(starts, b.size))
+    )
+    groups = (b & np.uint8(0x7F)).astype(np.uint64)
+    np.left_shift(
+        groups, pos.astype(np.uint8) * np.uint8(7), out=groups,
+        casting="unsafe",
+    )
+    return np.bitwise_or.reduceat(groups, starts), starts
+
+
 def decode_varint(buf: bytes) -> np.ndarray:
     """Decode LEB128 bytes → uint64 array, vectorized."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
-    ends = (b & 0x80) == 0
-    n_vals = int(ends.sum())
-    # index of the value each byte belongs to
-    val_id = np.zeros(b.size, dtype=np.int64)
-    val_id[1:] = np.cumsum(ends)[:-1]
-    # position of each byte within its value
-    starts = np.flatnonzero(np.concatenate(([True], ends[:-1])))
-    counts = np.diff(np.concatenate((starts, [b.size])))
-    byte_pos = np.arange(b.size, dtype=np.int64) - np.repeat(starts, counts)
-    vals = np.zeros(n_vals, dtype=np.uint64)
-    np.add.at(
-        vals,
-        val_id,
-        (b & np.uint8(0x7F)).astype(np.uint64) << (7 * byte_pos).astype(np.uint64),
-    )
-    return vals
+    return _decode_varint_bytes(b)[0]
+
+
+def _binary_rows(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 row byte offsets, 0-based and n_rows + 1 long; uint8 data)
+    of a non-null Arrow binary array or chunked array, read straight off
+    its offsets and data buffers: no per-row Python objects. A slice's
+    nonzero ``offset`` is honoured; chunks are combined first."""
+    if hasattr(arr, "combine_chunks"):
+        arr = arr.combine_chunks()
+    _validity, offs_buf, data_buf = arr.buffers()[:3]
+    wide = pa.types.is_large_binary(arr.type)
+    offs = np.frombuffer(offs_buf, dtype=np.int64 if wide else np.int32)
+    offs = offs[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+    if len(arr) == 0 or offs[-1] == offs[0]:
+        return np.zeros(len(arr) + 1, dtype=np.int64), np.empty(0, np.uint8)
+    data = np.frombuffer(data_buf, dtype=np.uint8)[offs[0] : offs[-1]]
+    return offs - offs[0], data
+
+
+def decode_varint_batch(arr) -> tuple[np.ndarray, np.ndarray]:
+    """The decoding counterpart of ``encode_varint_batch``: every row of
+    an Arrow binary column of LEB128 rows in ONE vectorized pass →
+    (row-concatenated uint64 values, int64 per-row value counts), equal
+    to concatenating ``decode_varint`` per row."""
+    offs, data = _binary_rows(arr)
+    if data.size == 0:
+        return np.empty(0, dtype=np.uint64), np.zeros(len(offs) - 1, np.int64)
+    vals, starts = _decode_varint_bytes(data)
+    # a row's bytes hold whole values: count the value starts in each
+    return vals, np.diff(np.searchsorted(starts, offs))
+
+
+def decode_doc_ids_batch(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Batched ``decode_doc_ids`` over an Arrow binary column →
+    (row-concatenated int64 doc ids, per-row counts). One uint64 cumsum
+    over every delta, minus the running sum before each row's first
+    value: each row restarts from its absolute first value (uint64
+    arithmetic wraps, so the difference is exact)."""
+    deltas, counts = decode_varint_batch(arr)
+    u = np.cumsum(deltas, dtype=np.uint64)
+    if u.size:
+        first = np.cumsum(counts) - counts
+        before = np.where(first > 0, u[np.maximum(first - 1, 0)], np.uint64(0))
+        u -= np.repeat(before, counts)
+    return (u - _SIGN_FLIP).astype(np.int64), counts
+
+
+def decode_f32_batch(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Batched ``decode_f32``: (row-concatenated float32 values, per-row
+    counts) of an Arrow binary column of raw float32 rows."""
+    offs, data = _binary_rows(arr)
+    return data.view("<f4"), np.diff(offs) // 4
 
 
 def encode_varint_batch(

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..query.bm25 import driver_route
+from ..query.bm25 import _decode_by_tid, _read_postings, driver_route
 from ..ranking import local_page, sorted_union, topk_page
 
 from .. import BLOCK_SIZE
@@ -45,7 +45,19 @@ from .build import (
     tid_expr,
     tid_py,
 )
-from .codec import decode_doc_ids, decode_f32
+from .cache import (
+    DEFAULT_MAX_BYTES,
+    DEFAULT_MAX_TERMS,
+    DriverCache,
+    ResidentDictionary,
+    evict_fifo,
+)
+from .codec import (
+    decode_doc_ids,
+    decode_doc_ids_batch,
+    decode_f32,
+    decode_f32_batch,
+)
 
 SPARSE_FORMAT_VERSION = 1
 
@@ -308,30 +320,24 @@ class SparseIndex:
         self._terms_path = os.path.join(path, "terms")
         self._postings_path = os.path.join(path, "postings")
         self._postings_df: DataFrame | None = None
-        self._terms_ds = None
+        self._dictionary: ResidentDictionary | None = None
         self._postings_ds = None
         # driver-path hot-token cache: tid → (ids, weights f32) decoded
         # arrays (bounded FIFO by count AND bytes — see index/cache.py)
-        from .cache import DEFAULT_MAX_BYTES, DEFAULT_MAX_TERMS, DriverCache
-
         self._driver_cache = DriverCache()
         self.driver_cache_terms = DEFAULT_MAX_TERMS
         self.driver_cache_bytes = DEFAULT_MAX_BYTES
 
     def token_stats(self, tokens: list[str]) -> dict[str, int]:
-        """{token: df} via pyarrow predicate-pushdown point read."""
-        if not tokens:
-            return {}
-        import pyarrow.dataset as ds
-
-        if self._terms_ds is None:
-            self._terms_ds = ds.dataset(self._terms_path, format="parquet")
-        tbl = self._terms_ds.to_table(
-            columns=["token", "df"], filter=ds.field("token").isin(tokens)
-        )
-        return dict(
-            zip(tbl["token"].to_pylist(), (int(x) for x in tbl["df"].to_pylist()))
-        )
+        """{token: df} by binary search of the resident token dictionary
+        (``index.cache.ResidentDictionary``), read on the handle's first
+        lookup and kept as long as the handle."""
+        if self._dictionary is None:
+            self._dictionary = ResidentDictionary(
+                self._terms_path, "token", ("df",)
+            )
+        found, rows = self._dictionary.find(tokens)
+        return dict(zip(found, self._dictionary.stats["df"][rows].tolist()))
 
     def cache(self) -> "SparseIndex":
         """Serving mode: pinned + pre-partitioned by shard_id so per-query
@@ -403,49 +409,35 @@ def _driver_scores(
     decode once across queries); restricted decodes read cold tokens with
     the block skip but are NOT cached (they're partial)."""
     import pyarrow as pa
-    import pyarrow.dataset as ds
 
     cache = index._driver_cache
     tids = sorted(q_weights)
     cold = [t for t in tids if t not in cache]
     arrs: dict[int, tuple] = {}
     if cold:
-        buckets = sorted({t % N_TERM_BUCKETS for t in cold})
-        if index._postings_ds is None:
-            index._postings_ds = ds.dataset(
-                index._postings_path, format="parquet", partitioning="hive"
-            )
         cols = ["tid", "docs", "weights"]
         if restrict is not None:
             cols += ["min_doc_id", "max_doc_id"]
-        tbl = index._postings_ds.to_table(
-            columns=cols,
-            filter=ds.field("term_bucket").isin(buckets)
-            & ds.field("tid").isin(cold),
-        )
+        tbl = _read_postings(index, cold, cols)
         if restrict is not None and len(tbl) > 0:
             lo = np.searchsorted(restrict, tbl["min_doc_id"].to_numpy())
             hi = np.searchsorted(
                 restrict, tbl["max_doc_id"].to_numpy(), side="right"
             )
             tbl = tbl.filter(pa.array(hi > lo))
-        tid_arr = tbl["tid"].to_numpy()
-        docs_col = tbl["docs"].to_pylist()
-        w_col = tbl["weights"].to_pylist()
+        slices, flat = _decode_by_tid(
+            tbl, {"docs": decode_doc_ids_batch, "weights": decode_f32_batch}
+        )
         for tid in cold:
-            rows = np.flatnonzero(tid_arr == tid)
-            if len(rows) == 0:
-                got = None
-            else:
-                # weights stay float32 in memory (exact — they're f32 on
-                # disk); upcast to f64 only at use, halving cache bytes
-                got = (
-                    np.concatenate([decode_doc_ids(docs_col[i]) for i in rows]),
-                    np.concatenate([decode_f32(w_col[i]) for i in rows]),
-                )
-            arrs[tid] = got
+            sl = slices.get(tid)
+            # owned copies (see bm25._fill_driver_cache); weights stay
+            # float32 in memory (exact — they're f32 on disk) and upcast to
+            # f64 only at use, halving cache bytes
+            arrs[tid] = None if sl is None else (
+                flat["docs"][sl].copy(), flat["weights"][sl].copy()
+            )
             if restrict is None:
-                cache[tid] = got
+                cache[tid] = arrs[tid]
     ids_parts: list[np.ndarray] = []
     sc_parts: list[np.ndarray] = []
     for tid in tids:
@@ -464,8 +456,6 @@ def _driver_scores(
             ids, ws = ids[ok], ws[ok]
         ids_parts.append(ids)
         sc_parts.append(q_weights[tid] * ws.astype(np.float64))
-    from .cache import evict_fifo
-
     evict_fifo(cache, index.driver_cache_terms, index.driver_cache_bytes)
     if not ids_parts:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)

@@ -56,7 +56,19 @@ from ..ranking import (
 
 from .. import BM25_B, BM25_K1
 from ..index.build import N_TERM_BUCKETS, doc_id_col, tid_py, tokenize_corpus
-from ..index.codec import decode_doc_ids, decode_varint
+from ..index.cache import (
+    DEFAULT_MAX_BYTES,
+    DEFAULT_MAX_TERMS,
+    DriverCache,
+    ResidentDictionary,
+    evict_fifo,
+)
+from ..index.codec import (
+    decode_doc_ids,
+    decode_doc_ids_batch,
+    decode_varint,
+    decode_varint_batch,
+)
 from ..tokenizer import tokenize_py
 
 BATCH_TOPK_SCHEMA = T.StructType(
@@ -113,23 +125,14 @@ class BM25Index:
         self._postings_path = os.path.join(path, "postings")
         self._postings_df: DataFrame | None = None
         self._positions_cache: DataFrame | None = None
-        self._terms_ds = None  # cached pyarrow datasets (file listings)
-        self._postings_ds = None
+        self._postings_ds = None  # cached pyarrow dataset (file listing)
         # driver-path hot-term cache: tid → decoded (ids, tfs f32, dls f32)
         # arrays (tf/dl are small ints — exact in float32; upcast at use).
         # Bounded FIFO by count AND bytes — the coordinator analog of
         # Lucene's hot posting pages living in the OS page cache.
-        from ..index.cache import (
-            DEFAULT_MAX_BYTES,
-            DEFAULT_MAX_TERMS,
-            DriverCache,
-        )
-
         self._driver_cache = DriverCache()
-        # driver-resident dictionary cache (term, df) — filled on the
-        # first full dictionary() read; prefix reads bisect into it
-        self._dictionary: list[tuple[str, int]] | None = None
-        self._dict_terms: list[str] | None = None
+        # the resident term dictionary, read on first use (see _terms)
+        self._dictionary: ResidentDictionary | None = None
         self.driver_cache_terms = DEFAULT_MAX_TERMS
         self.driver_cache_bytes = DEFAULT_MAX_BYTES
         # sorted int64 tombstones, or None — see with_deletes
@@ -161,149 +164,80 @@ class BM25Index:
         self.deletes = arr if len(arr) else None
         return self
 
-    def term_stats(self, terms: list[str]) -> dict[str, int]:
-        """Driver-side term-dictionary lookup: a pyarrow predicate-pushdown
-        read of the (small) terms table — no Spark job per query. At
-        10^12-turn scale the terms table is still ~vocabulary-sized
-        (≪ corpus) and parquet row-group stats keep this a point read.
-        Returns {term: df} for terms present in the index."""
-        if not terms:
-            return {}
-        import pyarrow.dataset as ds
+    def _terms(self) -> ResidentDictionary:
+        """The handle's resident term dictionary (term, df, cf), read on
+        first use. It lives as long as the handle and its driver cache: a
+        rebuilt or merged index is read through a new handle."""
+        if self._dictionary is None:
+            self._dictionary = ResidentDictionary(
+                self._terms_path, "term", ("df", "cf")
+            )
+        return self._dictionary
 
-        if self._terms_ds is None:
-            self._terms_ds = ds.dataset(self._terms_path, format="parquet")
-        dataset = self._terms_ds
-        tbl = dataset.to_table(
-            columns=["term", "df"], filter=ds.field("term").isin(terms)
-        )
-        return dict(
-            zip(tbl["term"].to_pylist(), (int(x) for x in tbl["df"].to_pylist()))
-        )
+    def term_stats(self, terms: list[str]) -> dict[str, int]:
+        """Driver-side term-dictionary lookup: {term: df} for the terms
+        present in the index, by binary search of the resident dictionary
+        — no Spark job and, after the handle's first lookup, no read."""
+        d = self._terms()
+        found, rows = d.find(terms)
+        return dict(zip(found, d.stats["df"][rows].tolist()))
 
     def term_stats_full(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """{term: (df, cf)} — the ``term_stats`` point read widened to the
-        collection frequency column (the host's ``ttf``), for the
-        _termvectors API. Same pyarrow predicate-pushdown shape."""
-        if not terms:
-            return {}
-        import pyarrow.dataset as ds
-
-        if self._terms_ds is None:
-            self._terms_ds = ds.dataset(self._terms_path, format="parquet")
-        tbl = self._terms_ds.to_table(
-            columns=["term", "df", "cf"], filter=ds.field("term").isin(terms)
-        )
-        return {
-            t: (int(d), int(c))
-            for t, d, c in zip(
-                tbl["term"].to_pylist(),
-                tbl["df"].to_pylist(),
-                tbl["cf"].to_pylist(),
+        """{term: (df, cf)} — ``term_stats`` widened to the collection
+        frequency (the host's ``ttf``), for the _termvectors API."""
+        d = self._terms()
+        found, rows = d.find(terms)
+        return dict(
+            zip(
+                found,
+                zip(d.stats["df"][rows].tolist(), d.stats["cf"][rows].tolist()),
             )
-        }
+        )
 
     def field_stats(self) -> dict:
         """Field-level statistics for the _termvectors API:
         ``sum_doc_freq`` (Σ df), ``doc_count`` (N) and ``sum_ttf`` (Σ cf)
-        — ONE pyarrow aggregate over the vocabulary-sized terms table,
-        cached on the handle. NOTE the stats contract matches the rest of
-        the index: deleted docs still count until a merge expunges them
-        (Lucene liveDocs semantics)."""
-        if getattr(self, "_field_stats", None) is None:
-            import pyarrow.dataset as ds
-
-            if self._terms_ds is None:
-                self._terms_ds = ds.dataset(
-                    self._terms_path, format="parquet"
-                )
-            tbl = self._terms_ds.to_table(columns=["df", "cf"])
-            import pyarrow.compute as pc
-
-            self._field_stats = {
-                "sum_doc_freq": int(pc.sum(tbl["df"]).as_py() or 0),
-                "doc_count": int(self.n_docs),
-                "sum_ttf": int(pc.sum(tbl["cf"]).as_py() or 0),
-            }
-        return dict(self._field_stats)
+        over the resident dictionary. NOTE the stats contract matches the
+        rest of the index: deleted docs still count until a merge expunges
+        them (Lucene liveDocs semantics)."""
+        d = self._terms()
+        return {
+            "sum_doc_freq": int(d.stats["df"].sum()),
+            "doc_count": int(self.n_docs),
+            "sum_ttf": int(d.stats["cf"].sum()),
+        }
 
     def prefix_stats(self, prefix: str, limit: int = 50) -> list[tuple[str, int]]:
         """Dictionary prefix expansion: the first ``limit`` index terms with
-        the given prefix IN LEXICOGRAPHIC (binary/ASCII) ORDER, with their
+        the given prefix IN LEXICOGRAPHIC (code point) ORDER, with their
         df — Lucene's ``MultiPhrasePrefixQuery.getPrefixTerms`` contract
         (terms enumerated from the dictionary in term order, capped at
         ``max_expansions``), except the expansion is over the GLOBAL
-        dictionary rather than per-segment. Driver-side pyarrow range read
-        ([prefix, prefix+1) pushed into parquet row-group stats); the terms
-        table is vocabulary-sized, and the term_bucket layout cannot prune
-        a prefix scan (tid is a hash) — acceptable for the same reason
-        ``term_stats`` is: vocabulary ≪ corpus at any scale."""
+        dictionary rather than per-segment. A binary-searched row range of
+        the resident dictionary (the term_bucket layout could not prune a
+        prefix scan: tid is a hash)."""
         if not prefix:
             return []
-        import pyarrow.dataset as ds
-
-        if self._terms_ds is None:
-            self._terms_ds = ds.dataset(self._terms_path, format="parquet")
-        # tokenizer terms are [a-z0-9]+; bumping the last code point gives a
-        # tight exclusive upper bound ('z'+1='{', '9'+1=':' — both sort
-        # above every token character)
-        hi = prefix[:-1] + chr(ord(prefix[-1]) + 1)
-        tbl = self._terms_ds.to_table(
-            columns=["term", "df"],
-            filter=(ds.field("term") >= prefix) & (ds.field("term") < hi),
+        d = self._terms()
+        rows = d.prefix_rows(prefix)
+        return d.pairs(
+            slice(rows.start, min(rows.stop, rows.start + max(int(limit), 0)))
         )
-        pairs = sorted(
-            zip(tbl["term"].to_pylist(), (int(x) for x in tbl["df"].to_pylist()))
-        )
-        return pairs[: max(int(limit), 0)]
 
     def dictionary(self, prefix: str | None = None) -> list[tuple[str, int]]:
-        """Full (term, df) dictionary read — the multi-term-query expansion
-        surface (fuzzy/wildcard enumerate the dictionary the way Lucene's
-        FuzzyTermsEnum walks the terms index). Optional prefix range
-        pushdown ([prefix, prefix+1) on parquet row-group stats).
-        Vocabulary-sized (≪ corpus at any scale), driver-side pyarrow.
-        The full read is cached on the handle (Lucene keeps the terms
-        index resident the same way); prefix reads serve from the cache
-        via bisect when it's warm."""
-        if self._dictionary is not None:
-            if not prefix:
-                return self._dictionary
-            import bisect
-
-            terms = self._dict_terms
-            lo = bisect.bisect_left(terms, prefix)
-            hi_key = prefix[:-1] + chr(ord(prefix[-1]) + 1)
-            hi = bisect.bisect_left(terms, hi_key)
-            return self._dictionary[lo:hi]
-        import pyarrow.dataset as ds
-
-        if self._terms_ds is None:
-            self._terms_ds = ds.dataset(self._terms_path, format="parquet")
-        flt = None
-        if prefix:
-            hi = prefix[:-1] + chr(ord(prefix[-1]) + 1)
-            flt = (ds.field("term") >= prefix) & (ds.field("term") < hi)
-        tbl = self._terms_ds.to_table(columns=["term", "df"], filter=flt)
-        out = sorted(
-            zip(tbl["term"].to_pylist(), (int(x) for x in tbl["df"].to_pylist()))
-        )
-        if not prefix:
-            self._dictionary = out
-            self._dict_terms = [t for t, _ in out]
-        return out
+        """(term, df) pairs of the whole dictionary, or of the terms with
+        ``prefix``, in term order — the multi-term-query expansion surface
+        (fuzzy/wildcard enumerate the dictionary the way Lucene's
+        FuzzyTermsEnum walks the terms index), served from the resident
+        dictionary."""
+        d = self._terms()
+        return d.pairs(d.prefix_rows(prefix) if prefix else slice(None))
 
     def n_terms(self) -> int:
-        """Vocabulary size from parquet metadata only (no column reads) —
-        the cheap pre-flight the fuzzy/suggest unpruned-dictionary guard
-        uses before committing to a full dictionary walk."""
-        if self._dictionary is not None:
-            return len(self._dictionary)
-        import pyarrow.dataset as ds
-
-        if self._terms_ds is None:
-            self._terms_ds = ds.dataset(self._terms_path, format="parquet")
-        return int(self._terms_ds.count_rows())
+        """Vocabulary size — the pre-flight the fuzzy/suggest
+        unpruned-dictionary guard uses before committing to a full
+        dictionary walk."""
+        return len(self._terms().terms)
 
     def cache(self) -> "BM25Index":
         """Serving mode: pin the posting blocks in executor memory
@@ -629,8 +563,9 @@ def parse_min_match(
     return max(1, got) if n_clauses else 0
 
 
-def _read_postings(index: BM25Index, tids, columns: list[str]):
-    """The driver's postings read: ``columns`` of the posting blocks of
+def _read_postings(index, tids, columns: list[str]):
+    """The driver's postings read of a ``BM25Index`` or an
+    ``index.sparse.SparseIndex``: ``columns`` of the posting blocks of
     ``tids`` as one pyarrow table, from ONE read of ONLY their bucket
     partitions (hive pruning) with a tid row-group filter — zero Spark
     jobs, so latency is filesystem latency, not task scheduling."""
@@ -650,9 +585,32 @@ def _read_postings(index: BM25Index, tids, columns: list[str]):
     )
 
 
+def _decode_by_tid(tbl, decoders: dict) -> tuple[dict[int, slice], dict]:
+    """Decode a driver postings read in ONE batched pass per column:
+    ``decoders`` maps a column of ``tbl`` (which also holds ``tid``) to
+    its ``codec`` batch decoder → ({tid: slice of its values}, {column:
+    row-concatenated values}). Rows are grouped by tid with a stable
+    sort, so a term's blocks keep their read order; an absent tid has no
+    slice. Slices are views: a caller that keeps one copies it."""
+    tid_arr = tbl["tid"].to_numpy()
+    order = np.argsort(tid_arr, kind="stable")
+    tbl = tbl.take(order)
+    flat = {}
+    for col, decode in decoders.items():
+        flat[col], counts = decode(tbl[col])
+    bounds = np.concatenate(([0], np.cumsum(counts))).tolist()
+    tids, first = np.unique(tid_arr[order], return_index=True)
+    last = np.append(first[1:], len(order)).tolist()
+    return {
+        t: slice(bounds[f], bounds[e])
+        for t, f, e in zip(tids.tolist(), first.tolist(), last)
+    }, flat
+
+
 def _fill_driver_cache(index: BM25Index, tids) -> None:
     """Decode every tid of ``tids`` the handle's driver cache lacks, from
-    one ``_read_postings`` read. An absent tid caches None.
+    one ``_read_postings`` read decoded in one pass. An absent tid caches
+    None.
 
     Never evicts: a caller scoring from the cache evicts once, after its
     last use of it, so no entry it filled (or found) can be dropped
@@ -662,29 +620,24 @@ def _fill_driver_cache(index: BM25Index, tids) -> None:
     missing = sorted({t for t in tids if t not in cache})
     if not missing:
         return
-    tbl = _read_postings(index, missing, ["tid", "docs", "tfs", "dls"])
-    tid_arr = tbl["tid"].to_numpy()
-    docs_col = tbl["docs"].to_pylist()
-    tfs_col = tbl["tfs"].to_pylist()
-    dls_col = tbl["dls"].to_pylist()
-    order = np.argsort(tid_arr, kind="stable")
-    sorted_tids = tid_arr[order]
+    slices, flat = _decode_by_tid(
+        _read_postings(index, missing, ["tid", "docs", "tfs", "dls"]),
+        {
+            "docs": decode_doc_ids_batch,
+            "tfs": decode_varint_batch,
+            "dls": decode_varint_batch,
+        },
+    )
     for tid in missing:
-        lo, hi = np.searchsorted(sorted_tids, [tid, tid + 1])
-        rows = order[lo:hi]
-        if len(rows) == 0:
-            cache[tid] = None
-            continue
-        # tf/dl values are small ints (≤ turn length) — float32 holds
-        # them exactly, halving cache bytes; upcast to f64 at use
-        cache[tid] = (
-            np.concatenate([decode_doc_ids(docs_col[i]) for i in rows]),
-            np.concatenate(
-                [decode_varint(tfs_col[i]) for i in rows]
-            ).astype(np.float32),
-            np.concatenate(
-                [decode_varint(dls_col[i]) for i in rows]
-            ).astype(np.float32),
+        sl = slices.get(tid)
+        # entries own their memory (copy / astype), so no view pins the
+        # whole read while DriverCache.nbytes counts only the slice; tf/dl
+        # are small ints (≤ turn length) — exact in float32, which halves
+        # cache bytes; upcast to f64 at use
+        cache[tid] = None if sl is None else (
+            flat["docs"][sl].copy(),
+            flat["tfs"][sl].astype(np.float32),
+            flat["dls"][sl].astype(np.float32),
         )
 
 
@@ -739,8 +692,6 @@ def _driver_topk(
     kernels (same float32 cast, same doc_id tiebreak). One cache fill
     over the union of the specs' tids, one accumulate per spec, and one
     eviction after the last spec."""
-    from ..index.cache import evict_fifo
-
     _fill_driver_cache(index, {t for _q, w, _m in specs for t in w})
     qids: list[str] = []
     ids_parts: list[np.ndarray] = [np.empty(0, dtype=np.int64)]

@@ -26,7 +26,8 @@ transposing), matching Lucene's LevenshteinAutomata(transpositions);
 Spark-first shape: expansion is a DRIVER-side walk of the vocabulary-
 sized dictionary (the coordinator-cheap pattern — Lucene's FuzzyTermsEnum
 walks the terms index the same way; vocabulary ≪ corpus at any scale,
-and prefix_length > 0 prunes the read to a parquet row-group range).
+and prefix_length > 0 prunes the walk to a binary-searched range of the
+resident dictionary).
 Web-scale caveat, enforced by default: a 100 TB text corpus's raw
 vocabulary (typos included) can reach 10^8+ terms, where an unpruned
 per-query DP walk stops being coordinator-cheap — prefix_length=0 over a
@@ -74,7 +75,7 @@ def _guard_unpruned_walk(
             f"{what} with prefix_length=0 would walk the full "
             f"{nt}-term dictionary (> UNPRUNED_DICT_LIMIT="
             f"{UNPRUNED_DICT_LIMIT}) per query — set prefix_length >= 1 "
-            "(prunes the walk to a parquet row-group range) or pass "
+            "(prunes the walk to a dictionary prefix range) or pass "
             "allow_unpruned_dictionary=True to override"
         )
 

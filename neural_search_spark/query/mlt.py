@@ -19,7 +19,7 @@ Two phases, mirroring Lucene's MLT:
    ``include=false`` (host default) excludes the like docs themselves.
 
 Scale notes: selection's df lookups are candidate-term-bounded — a
-pyarrow point read of the terms dictionary when an index is attached,
+lookup in the index's resident term dictionary when one is attached,
 one filtered tall aggregation over the corpus otherwise (candidates ≤
 distinct terms of the like docs, so the collect is like-doc-sized, not
 corpus-sized). The served query is then an ordinary ≤25-term match —

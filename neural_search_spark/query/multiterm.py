@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
-from ..index.codec import decode_doc_ids
+from ..index.codec import decode_doc_ids, decode_doc_ids_batch
 from ..ranking import (
     batch_page,
     empty_batch_page,
@@ -45,6 +45,7 @@ from ..tokenizer import tokenize_expr, tokenize_py
 from .bm25 import (
     BATCH_TOPK_SCHEMA,
     BM25Index,
+    _decode_by_tid,
     _decode_tfn,
     _driver_accumulate,
     _fill_driver_cache,
@@ -161,12 +162,7 @@ def multiterm_topk(
     sum_df = sum(df for _, df in exps)
     if driver_route(mode, sum_df):
         tbl = _read_postings(index, {tid_py(t) for t in terms}, ["docs"])
-        ids = np.unique(
-            np.concatenate(
-                [np.empty(0, dtype=np.int64)]
-                + [decode_doc_ids(x) for x in tbl["docs"].to_pylist()]
-            )
-        )
+        ids = np.unique(decode_doc_ids_batch(tbl["docs"])[0])
         live = _live_mask(ids, index.deletes)
         if live is not None:
             ids = ids[live]
@@ -290,13 +286,17 @@ def _bool_prefix_driver(
     from ..index.cache import evict_fifo
 
     _fill_driver_cache(index, {t for _q, w, _p in specs for t in w})
-    docs_of: dict[int, list[bytes]] = {}
+    hits_of: dict[int, np.ndarray] = {}
     prefix_tids = {t for _q, _w, p in specs for t in p}
     if prefix_tids:
-        tbl = _read_postings(index, prefix_tids, ["tid", "docs"])
-        for tid, docs in zip(tbl["tid"].to_pylist(), tbl["docs"].to_pylist()):
-            docs_of.setdefault(tid, []).append(docs)
-    hits_of = {t: _live_ids(d, index.deletes) for t, d in docs_of.items()}
+        slices, flat = _decode_by_tid(
+            _read_postings(index, prefix_tids, ["tid", "docs"]),
+            {"docs": decode_doc_ids_batch},
+        )
+        for t, sl in slices.items():
+            ids = flat["docs"][sl]
+            live = _live_mask(ids, index.deletes)
+            hits_of[t] = ids if live is None else ids[live]
 
     def prefix_hits(pfx: frozenset[int]) -> np.ndarray:
         return _unique_ids([hits_of[t] for t in pfx if t in hits_of])

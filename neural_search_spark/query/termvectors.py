@@ -20,11 +20,10 @@ scan the corpus proportionally to its size:
 * re-analysis runs driver-side on the ≤len(ids) fetched rows only
   (the host's on-the-fly analyze does exactly this on the shard that
   holds the doc);
-* term statistics are driver-side pyarrow predicate-pushdown point
-  reads of the index's vocabulary-sized terms table
+* term statistics are binary searches of the index handle's resident
+  term dictionary, the vocabulary-sized terms table read once
   (``BM25Index.term_stats`` / ``term_stats_full``) — no Spark job;
-* field statistics are ONE pyarrow aggregate over the terms table,
-  cached on the index handle.
+* field statistics are sums over the same resident dictionary.
 
 ``termvectors_frame`` is the distributed twin for the index-free case
 (and the oracle-checkable gate shape): tf from the fetched rows, df via

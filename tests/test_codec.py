@@ -93,3 +93,106 @@ def test_batch_encode_parity_doc_ids():
     got = encode_doc_ids_batch(flat, lens)
     exp = [encode_doc_ids(r) if r.size else b"" for r in rows]
     assert got == exp
+
+
+# ---- batched decoders: one pass over an Arrow binary column ----------
+
+
+def _rows_strategy(lo, hi):
+    """Rows of 0, 1 or many values, sometimes touching both bounds."""
+    edge = st.sampled_from([lo, hi])
+    value = st.one_of(edge, st.integers(min_value=lo, max_value=hi))
+    return st.lists(
+        st.one_of(
+            st.just([]),
+            st.lists(value, min_size=1, max_size=1),
+            st.lists(value, min_size=2, max_size=40),
+        ),
+        max_size=12,
+    )
+
+
+def _arrow_forms(blobs, cut):
+    """The column as one array, as a slice with a nonzero offset of a
+    wider array, and as a multi-chunk ChunkedArray."""
+    import pyarrow as pa
+
+    whole = pa.array(blobs, type=pa.binary())
+    padded = pa.array([b"\x05\x01"] + blobs + [b"\x7f"], type=pa.binary())
+    cut = min(cut, len(blobs))
+    chunked = pa.chunked_array(
+        [pa.array(blobs[:cut], pa.binary()), pa.array(blobs[cut:], pa.binary())]
+    )
+    return {
+        "array": whole,
+        "offset_slice": padded.slice(1, len(blobs)),
+        "chunked": chunked,
+    }
+
+
+@settings(max_examples=150, deadline=None)
+@given(_rows_strategy(0, 2**64 - 1), st.integers(min_value=0, max_value=12))
+def test_decode_varint_batch_matches_per_row(rows, cut):
+    """Values ≥ 2^63 take the 10-byte varint form."""
+    from neural_search_spark.index.codec import decode_varint_batch
+
+    blobs = [encode_varint(np.array(r, dtype=np.uint64)) for r in rows]
+    want = np.concatenate(
+        [np.empty(0, np.uint64)] + [decode_varint(b) for b in blobs]
+    )
+    for form, arr in _arrow_forms(blobs, cut).items():
+        vals, counts = decode_varint_batch(arr)
+        assert vals.dtype == np.uint64, form
+        assert np.array_equal(vals, want), form
+        assert counts.tolist() == [len(r) for r in rows], form
+
+
+@settings(max_examples=150, deadline=None)
+@given(_rows_strategy(-(2**63), 2**63 - 1), st.integers(min_value=0, max_value=12))
+def test_decode_doc_ids_batch_matches_per_row(rows, cut):
+    """Each row's delta chain restarts at its own first id, across the
+    whole int64 range."""
+    from neural_search_spark.index.codec import decode_doc_ids_batch
+
+    sorted_rows = [np.unique(np.array(r, dtype=np.int64)) for r in rows]
+    blobs = [encode_doc_ids(r) if r.size else b"" for r in sorted_rows]
+    want = np.concatenate(
+        [np.empty(0, np.int64)] + [decode_doc_ids(b) for b in blobs]
+    )
+    for form, arr in _arrow_forms(blobs, cut).items():
+        ids, counts = decode_doc_ids_batch(arr)
+        assert ids.dtype == np.int64, form
+        assert np.array_equal(ids, want), form
+        assert counts.tolist() == [r.size for r in sorted_rows], form
+
+
+def test_decode_f32_batch_matches_per_row():
+    from neural_search_spark.index.codec import (
+        decode_f32,
+        decode_f32_batch,
+        encode_f32,
+    )
+
+    rows = [np.float32([]), np.float32([1.5]), np.float32([0.25, -3.0, 7.0])]
+    blobs = [encode_f32(r) for r in rows]
+    want = np.concatenate([decode_f32(b) for b in blobs])
+    for form, arr in _arrow_forms(blobs, 2).items():
+        vals, counts = decode_f32_batch(arr)
+        assert np.array_equal(vals, want), form
+        assert counts.tolist() == [0, 1, 3], form
+
+
+def test_decode_batch_of_empty_rows():
+    import pyarrow as pa
+
+    from neural_search_spark.index.codec import (
+        decode_doc_ids_batch,
+        decode_varint_batch,
+    )
+
+    for arr in (pa.array([], pa.binary()), pa.array([b"", b""], pa.binary())):
+        for decode in (decode_varint_batch, decode_doc_ids_batch):
+            vals, counts = decode(arr)
+            assert vals.size == 0
+            assert counts.tolist() == [0] * len(arr)
+    assert decode_varint(b"").dtype == np.uint64
