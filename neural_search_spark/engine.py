@@ -447,17 +447,13 @@ def spec_from_json(obj: str | dict) -> QuerySpec | HybridSpec | BoolSpec:
         subs = [spec_from_json(s) for s in body.get("queries", [])]
         if any(isinstance(s, HybridSpec) for s in subs):
             raise ValueError("hybrid queries cannot nest")
-        return HybridSpec(
-            sub_queries=subs,
-            normalization=body.get("normalization", "min_max"),
-            combination=body.get("combination", "arithmetic_mean"),
-            weights=body.get("weights"),
-            rank_constant=body.get("rank_constant", 60),
-            pagination_depth=body.get("pagination_depth"),
-            post_filter=body.get("post_filter"),
-            collapse_field=body.get("collapse_field"),
-            rerank_by_field=body.get("rerank_by_field"),
-        )
+        opts = {k: v for k, v in body.items() if k != "queries"}
+        try:
+            return HybridSpec(sub_queries=subs, **opts)
+        except TypeError as ex:
+            # an unknown key (e.g. lower_bounds, which HybridSpec does not
+            # carry) must not be dropped silently
+            raise ValueError(f"invalid hybrid query body: {ex}") from None
     if qtype in (
         "span_term",
         "span_or",

@@ -13,14 +13,21 @@ BM25 block index gives match queries:
     ──► hot-token salting by df (same range-salt plan as the BM25 build)
     ──► JVM block build: sort_array(collect_list) → slice → per-block
         doc_id varint-delta + raw-f32 weight payloads + max_weight
-        (the block-max bound used for skipping)
+        (the block bound MaxScore prunes with); a negative or
+        non-finite weight fails the build, because pruning needs
+        weights ≥ 0
     ──► parquet partitioned by term_bucket (query prunes to its tokens'
         buckets) + terms / stats / lineage tables.
 
-Query side mirrors query/bm25.py: auto driver-side execution for
-sub-threshold queries (pyarrow pruned read, numpy accumulate), distributed
-per-shard applyInPandas kernels above, two-phase candidate/rescore built on
-top (processor/NeuralSparseTwoPhaseProcessor.java:37-252 semantics).
+Query side: ``SparseIndex`` is a ``query.bm25.PostingsIndex`` whose
+posting contribution is its stored weight, so a sparse query is the BM25
+kernels with one spec ``("", {tid: q_w}, 1)`` — the driver route (one
+pyarrow read into the decoded-postings cache, a numpy accumulate, a local
+page) up to ``DRIVER_MAX_POSTINGS``, else the MaxScore shard function
+skipping blocks by their ``max_weight``. Two-phase
+(processor/NeuralSparseTwoPhaseProcessor.java:37-252 semantics) takes its
+candidate window from that kernel over the high-weight tokens and
+rescores the candidates with ``bm25._candidate_scores``.
 """
 
 from __future__ import annotations
@@ -34,8 +41,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..query.bm25 import _decode_by_tid, _read_postings, driver_route
-from ..ranking import local_page, sorted_union, topk_page
+from ..query.bm25 import (
+    PostingsIndex,
+    _candidate_scores,
+    _driver_topk,
+    _shard_scored,
+    driver_route,
+)
+from ..ranking import local_page
 
 from .. import BLOCK_SIZE
 from .build import (
@@ -45,28 +58,10 @@ from .build import (
     tid_expr,
     tid_py,
 )
-from .cache import (
-    DEFAULT_MAX_BYTES,
-    DEFAULT_MAX_TERMS,
-    DriverCache,
-    ResidentDictionary,
-    evict_fifo,
-)
-from .codec import (
-    decode_doc_ids,
-    decode_doc_ids_batch,
-    decode_f32,
-    decode_f32_batch,
-)
+from .codec import decode_doc_ids, decode_f32, decode_f32_batch
 
 SPARSE_FORMAT_VERSION = 1
-
-SPARSE_TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.FloatType()),
-    ]
-)
+BAD_WEIGHT = "sparse document weights must be finite and >= 0"
 
 
 def _encode_udfs():
@@ -261,7 +256,16 @@ class SparseIndexBuilder:
             F.element_at(doc_ids, -1).alias("max_doc_id"),
             enc_docs(doc_ids).alias("docs"),
             enc_w(ws).alias("weights"),
-            F.array_max(ws).cast("float").alias("max_weight"),
+            # the kernels' MaxScore pruning needs weights ≥ 0; checked in
+            # this select, so it costs no Spark job of its own
+            F.when(
+                (F.array_min(ws) >= 0)
+                & (F.array_max(ws) < F.lit(float("inf"))),
+                F.array_max(ws),
+            )
+            .otherwise(F.raise_error(F.lit(BAD_WEIGHT)))
+            .cast("float")
+            .alias("max_weight"),
         ).withColumn("term_bucket", F.pmod("tid", F.lit(N_TERM_BUCKETS)))
         (
             # 64 hash partitions keyed by term_bucket: hash collisions
@@ -302,13 +306,16 @@ class SparseIndexBuilder:
         return {"out": self.out}
 
 
+class SparseIndex(PostingsIndex):
+    """Handle on an on-disk sparse index directory. A posting's
+    contribution is its stored float32 weight, bounded per block by
+    ``max_weight``."""
 
-class SparseIndex:
-    """Handle on an on-disk sparse index directory."""
+    payload = {"weights": decode_f32_batch}
+    bound_col = "max_weight"
+    _dict_spec = ("token", ("df",))
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
         srow = spark.read.parquet(os.path.join(path, "stats")).collect()[0]
         ver = int(srow["format_version"])
         if ver != SPARSE_FORMAT_VERSION:
@@ -316,191 +323,55 @@ class SparseIndex:
                 f"sparse index at {path} has format v{ver}; this engine "
                 f"reads v{SPARSE_FORMAT_VERSION} — rebuild"
             )
-        self.n_shards = int(srow["n_shards"])
-        self._terms_path = os.path.join(path, "terms")
-        self._postings_path = os.path.join(path, "postings")
-        self._postings_df: DataFrame | None = None
-        self._dictionary: ResidentDictionary | None = None
-        self._postings_ds = None
-        # driver-path hot-token cache: tid → (ids, weights f32) decoded
-        # arrays (bounded FIFO by count AND bytes — see index/cache.py)
-        self._driver_cache = DriverCache()
-        self.driver_cache_terms = DEFAULT_MAX_TERMS
-        self.driver_cache_bytes = DEFAULT_MAX_BYTES
+        super().__init__(spark, path, int(srow["n_shards"]))
 
-    def token_stats(self, tokens: list[str]) -> dict[str, int]:
-        """{token: df} by binary search of the resident token dictionary
-        (``index.cache.ResidentDictionary``), read on the handle's first
-        lookup and kept as long as the handle."""
-        if self._dictionary is None:
-            self._dictionary = ResidentDictionary(
-                self._terms_path, "token", ("df",)
-            )
-        found, rows = self._dictionary.find(tokens)
-        return dict(zip(found, self._dictionary.stats["df"][rows].tolist()))
+    # {token: df} by binary search of the resident token dictionary
+    token_stats = PostingsIndex.term_stats
 
-    def cache(self) -> "SparseIndex":
-        """Serving mode: pinned + pre-partitioned by shard_id so per-query
-        groupBy(shard_id) plans elide their Exchange (see BM25Index.cache)."""
-        from pyspark import StorageLevel
+    def contribution(self, weights: np.ndarray) -> np.ndarray:
+        return weights
 
-        if self._postings_df is None:
-            self._postings_df = self.spark.read.parquet(self._postings_path)
-        self._postings_df = self._postings_df.repartition(
-            self.n_shards, "shard_id"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # EAGER warm-up: until the cached plan materializes, AQE reports
-        # its output partitioning as undecided and every consumer plans a
-        # defensive re-shuffle; after materialization (isFinalPlan) the
-        # per-query Exchange is elided — so pay the warm-up here, not on
-        # the first serving query
-        self._postings_df.count()
-        return self
-
-    def postings_for(self, tokens: list[str]) -> DataFrame:
-        tids = sorted({tid_py(t) for t in tokens})
-        buckets = sorted({t % N_TERM_BUCKETS for t in tids})
-        if self._postings_df is None:
-            self._postings_df = self.spark.read.parquet(self._postings_path)
-        return self._postings_df.filter(
-            F.col("term_bucket").isin(buckets) & F.col("tid").isin(tids)
-        )
+    def block_decoder(self):
+        return _decode_weights
 
 
-def _accumulate(tbl_tids, docs_col, weights_col, q_weights: dict[int, float]):
-    """numpy accumulate: Σ q_w · d_w per doc over the given decoded blocks.
-    One gather pass then a single sort-unique + bincount-sum (float64;
-    deterministic: tokens gathered in ascending tid)."""
-    ids_parts: list[np.ndarray] = []
-    sc_parts: list[np.ndarray] = []
-    for tid in sorted(q_weights):
-        rows = np.flatnonzero(tbl_tids == tid)
-        if len(rows) == 0:
-            continue
-        ids = np.concatenate([decode_doc_ids(docs_col[i]) for i in rows])
-        ws = np.concatenate(
-            [decode_f32(weights_col[i]) for i in rows]
-        ).astype(np.float64)
-        ids_parts.append(ids)
-        sc_parts.append(q_weights[tid] * ws)
-    if not ids_parts:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    all_ids = np.concatenate(ids_parts)
-    all_sc = np.concatenate(sc_parts)
-    acc_ids, inv = sorted_union(all_ids)
-    acc_sc = np.bincount(inv, weights=all_sc, minlength=len(acc_ids))
-    return acc_ids, acc_sc
-
-
-def _driver_scores(
-    index: SparseIndex,
-    q_weights: dict[int, float],
-    restrict: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Coordinator-side pruned read + accumulate — zero Spark jobs.
-
-    restrict: sorted doc_id array — only these docs accumulate (the
-    two-phase rescore contract). Blocks whose [min_doc_id, max_doc_id]
-    range misses every candidate are skipped before decoding, and decoded
-    postings are masked, so a hot token's corpus-wide postings are never
-    accumulated just to be discarded.
-
-    Unrestricted decodes populate a bounded per-index FIFO (hot tokens
-    decode once across queries); restricted decodes read cold tokens with
-    the block skip but are NOT cached (they're partial)."""
-    import pyarrow as pa
-
-    cache = index._driver_cache
-    tids = sorted(q_weights)
-    cold = [t for t in tids if t not in cache]
-    arrs: dict[int, tuple] = {}
-    if cold:
-        cols = ["tid", "docs", "weights"]
-        if restrict is not None:
-            cols += ["min_doc_id", "max_doc_id"]
-        tbl = _read_postings(index, cold, cols)
-        if restrict is not None and len(tbl) > 0:
-            lo = np.searchsorted(restrict, tbl["min_doc_id"].to_numpy())
-            hi = np.searchsorted(
-                restrict, tbl["max_doc_id"].to_numpy(), side="right"
-            )
-            tbl = tbl.filter(pa.array(hi > lo))
-        slices, flat = _decode_by_tid(
-            tbl, {"docs": decode_doc_ids_batch, "weights": decode_f32_batch}
-        )
-        for tid in cold:
-            sl = slices.get(tid)
-            # owned copies (see bm25._fill_driver_cache); weights stay
-            # float32 in memory (exact — they're f32 on disk) and upcast to
-            # f64 only at use, halving cache bytes
-            arrs[tid] = None if sl is None else (
-                flat["docs"][sl].copy(), flat["weights"][sl].copy()
-            )
-            if restrict is None:
-                cache[tid] = arrs[tid]
-    ids_parts: list[np.ndarray] = []
-    sc_parts: list[np.ndarray] = []
-    for tid in tids:
-        got = arrs[tid] if tid in arrs else cache.get(tid)
-        if got is None:
-            continue
-        ids, ws = got
-        if restrict is not None and len(ids):
-            # mask per token BEFORE accumulation so a cached hot token's
-            # corpus-wide postings are never carried into the combine —
-            # the contract the block skip implements for cold reads
-            pos = np.searchsorted(restrict, ids)
-            ok = (pos < len(restrict)) & (
-                restrict[np.minimum(pos, len(restrict) - 1)] == ids
-            )
-            ids, ws = ids[ok], ws[ok]
-        ids_parts.append(ids)
-        sc_parts.append(q_weights[tid] * ws.astype(np.float64))
-    evict_fifo(cache, index.driver_cache_terms, index.driver_cache_bytes)
-    if not ids_parts:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    all_ids = np.concatenate(ids_parts)
-    all_sc = np.concatenate(sc_parts)
-    ids, inv = sorted_union(all_ids)
-    sc = np.bincount(inv, weights=all_sc, minlength=len(ids))
-    return ids, sc
-
-
-def _topk_pdf(ids: np.ndarray, sc: np.ndarray, k: int) -> pd.DataFrame:
-    f32 = sc.astype(np.float32)
-    sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
-    return pd.DataFrame(
-        {"doc_id": ids[sel], "score": f32[sel].astype(np.float64)}
+def _decode_weights(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Decode sparse posting-block rows → (doc ids, float32 weights)."""
+    return (
+        np.concatenate([decode_doc_ids(x) for x in rows["docs"]]),
+        np.concatenate([decode_f32(x) for x in rows["weights"]]),
     )
 
 
-def _distributed_scores(
-    index: SparseIndex, q_weights: dict[int, float], tokens: list[str], k: int
-) -> DataFrame:
-    """Per-shard applyInPandas accumulate + per-shard top-k; merged by
-    TakeOrderedAndProject. One pruned scan of the tokens' buckets."""
-    blocks = index.postings_for(tokens).select(
-        "shard_id", "tid", "docs", "weights"
-    )
+def _spec(index: SparseIndex, tokens: dict[str, float]):
+    """The one-spec batch of a sparse query: (spec ``("", {tid: q_w},
+    1)`` in tid order, Σdf) over the ``tokens`` present in the index, or
+    None when none is."""
+    stats = index.token_stats(sorted(tokens))
+    if not stats:
+        return None
+    weights = dict(sorted((tid_py(t), float(tokens[t])) for t in stats))
+    return ("", weights, 1), sum(stats.values())
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": np.int64, "score": np.float32}
-            )
-        ids, sc = _accumulate(
-            pdf["tid"].to_numpy(dtype=np.int64),
-            pdf["docs"].tolist(),
-            pdf["weights"].tolist(),
-            q_weights,
-        )
-        f32 = sc.astype(np.float32)
-        sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
-        return pd.DataFrame({"doc_id": ids[sel], "score": f32[sel]})
 
-    return blocks.groupBy("shard_id").applyInPandas(
-        score_shard, SPARSE_TOPK_SCHEMA
+def _topk(index: SparseIndex, tokens: dict[str, float], k: int, mode: str):
+    """(doc ids, float32 scores) of the top-k Σ q_w·d_w over ``tokens``,
+    score desc / doc_id asc: the BM25 kernels with one spec, on the
+    route ``mode`` picks (see ``bm25.driver_route``)."""
+    got = _spec(index, tokens)
+    if got is None:
+        return np.empty(0, np.int64), np.empty(0, np.float32)
+    spec, sum_df = got
+    if driver_route(mode, sum_df):
+        _q, ids, scores = _driver_topk(index, [spec], k)
+        return ids, scores
+    top = (
+        _shard_scored(index, sorted(tokens), [spec], k)
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+        .toPandas()
     )
+    return top["doc_id"].to_numpy(np.int64), top["score"].to_numpy(np.float32)
 
 
 def sparse_index_topk(
@@ -511,21 +382,11 @@ def sparse_index_topk(
 ) -> DataFrame:
     """Top-k Σ q_w·d_w over the sparse index. Returns (doc_id, score,
     rank) with score float32-cast then double (same dtype contract as the
-    join-path ``sparse_topk``, so results are value-identical)."""
-    spark = index.spark
-    stats = index.token_stats(sorted(query_tokens))
-    live = {t: w for t, w in query_tokens.items() if t in stats}
-    if not live:
-        return local_page(spark, [], [])
-    q_weights = {tid_py(t): float(w) for t, w in live.items()}
-    if driver_route(mode, sum(stats.values())):
-        ids, sc = _driver_scores(index, q_weights)
-        pdf = _topk_pdf(ids, sc, k)
-        return local_page(spark, pdf["doc_id"], pdf["score"])
-    shard_topk = _distributed_scores(index, q_weights, sorted(live), k)
-    return topk_page(
-        shard_topk.withColumn("score", F.col("score").cast("double")), k
-    )
+    join-path ``sparse_topk``, so results are value-identical). Query
+    weights must be finite and ≥ 0, as the neural_sparse rewrite checks:
+    the shard function prunes on it."""
+    ids, scores = _topk(index, query_tokens, k, mode)
+    return local_page(index.spark, ids, scores.astype(np.float64))
 
 
 def sparse_index_topk_two_phase(
@@ -538,14 +399,13 @@ def sparse_index_topk_two_phase(
     mode: str = "auto",
 ) -> DataFrame:
     """Two-phase over the index (NeuralSparseTwoPhaseProcessor semantics):
-    phase 1 scores ONLY the high-weight tokens (a pruned scan of their
-    buckets — typically the rare tokens) and takes a global candidate
-    window of k·expansion_rate; phase 2 scans the low-weight (hot) tokens'
-    postings restricted to the candidate set and re-ranks. The hot tokens'
+    phase 1 scores ONLY the high-weight tokens (typically the rare ones)
+    and takes a global candidate window of k·expansion_rate; phase 2 adds
+    the low-weight (hot) tokens' contributions for the candidates only,
+    reading just the blocks that hold one, and re-ranks. The hot tokens'
     postings are never accumulated corpus-wide."""
     from ..query.sparse import split_tokens_max_ratio
 
-    spark = index.spark
     high, low = split_tokens_max_ratio(query_tokens, prune_ratio)
     window = int(k * expansion_rate)
     if window > max_window_size:
@@ -556,99 +416,20 @@ def sparse_index_topk_two_phase(
             f"two-phase window k*expansion_rate = {window} exceeds "
             f"max_window_size = {max_window_size}"
         )
-    stats = index.token_stats(sorted(query_tokens))
-    high = {t: w for t, w in high.items() if t in stats}
-    low = {t: w for t, w in low.items() if t in stats}
-    if not high:
-        return local_page(spark, [], [])
-    hi_w = {tid_py(t): float(w) for t, w in high.items()}
-    hi_df = sum(stats[t] for t in high)
     # ---- phase 1: candidate window on high tokens only
-    if driver_route(mode, hi_df):
-        ids, sc = _driver_scores(index, hi_w)
-        cand = _topk_pdf(ids, sc, window)
-    else:
-        shard = _distributed_scores(index, hi_w, sorted(high), window)
-        cand = (
-            shard.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(window)
-            .toPandas()
-        )
-        cand["score"] = cand["score"].astype(np.float32).astype(np.float64)
-    if not low or cand.empty:
-        out = cand.copy()
-        out["score"] = out["score"].astype(np.float32).astype(np.float64)
-        out = out.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        ).head(k)
-        return local_page(spark, out["doc_id"], out["score"])
+    ids, scores = _topk(index, high, window, mode)
+    total = scores.astype(np.float64)
     # ---- phase 2: low-token contributions for candidates only
-    lo_w = {tid_py(t): float(w) for t, w in low.items()}
-    cand_ids = np.sort(cand["doc_id"].to_numpy(dtype=np.int64))
-    lo_df = sum(stats[t] for t in low)
-    if driver_route(mode, lo_df):
-        ids2, sc2 = _driver_scores(index, lo_w, restrict=cand_ids)
-        add = dict(zip(ids2.tolist(), sc2.tolist()))
-    else:
-        blocks = index.postings_for(sorted(low)).select(
-            "shard_id", "tid", "min_doc_id", "max_doc_id", "docs", "weights"
+    got = _spec(index, low) if len(ids) else None
+    if got is not None:
+        (_q, lo_w, _m), lo_df = got
+        order = np.argsort(ids)
+        ids, total = ids[order], total[order]
+        add_ids, add = _candidate_scores(
+            index, sorted(low), lo_w, ids, driver_route(mode, lo_df)
         )
-        cid = cand_ids
-        # additions stay float64 end-to-end (the single-pass contract only
-        # f32-casts the FINAL sum, so rounding the addend would drift)
-        add_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("add", T.DoubleType()),
-            ]
-        )
-
-        def add_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"doc_id": [], "add": []}).astype(
-                {"doc_id": np.int64, "add": np.float64}
-            )
-            if pdf.empty:
-                return empty
-            # block-range skip: only decode blocks overlapping a candidate
-            lo_i = np.searchsorted(cid, pdf["min_doc_id"].to_numpy())
-            hi_i = np.searchsorted(
-                cid, pdf["max_doc_id"].to_numpy(), side="right"
-            )
-            keep = hi_i > lo_i
-            if not keep.any():
-                return empty
-            sub = pdf[keep]
-            ids, sc = _accumulate(
-                sub["tid"].to_numpy(dtype=np.int64),
-                sub["docs"].tolist(),
-                sub["weights"].tolist(),
-                lo_w,
-            )
-            pos = np.searchsorted(cid, ids)
-            ok = (pos < len(cid)) & (
-                cid[np.minimum(pos, len(cid) - 1)] == ids
-            )
-            return pd.DataFrame({"doc_id": ids[ok], "add": sc[ok]})
-
-        # each doc lives in exactly one shard → no cross-shard combine needed
-        addl = (
-            blocks.groupBy("shard_id")
-            .applyInPandas(add_shard, add_schema)
-            .toPandas()
-        )
-        add = dict(zip(addl["doc_id"].tolist(), addl["add"].tolist()))
-    out = cand.copy()
-    out["score"] = (
-        (
-            out["score"].to_numpy(dtype=np.float64)
-            + np.array(
-                [add.get(int(d), 0.0) for d in out["doc_id"]], dtype=np.float64
-            )
-        )
-        .astype(np.float32)
-        .astype(np.float64)
-    )
-    out = out.sort_values(
-        ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-    ).head(k)
-    return local_page(spark, out["doc_id"], out["score"])
+        # phase-2 sums stay float64: only the final sum is f32-cast
+        total[np.searchsorted(ids, add_ids)] += add
+    f32 = total.astype(np.float32)
+    sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
+    return local_page(index.spark, ids[sel], f32[sel].astype(np.float64))

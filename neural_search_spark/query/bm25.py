@@ -1,15 +1,23 @@
-"""BM25 top-k query engine over the block index.
+"""BM25 top-k query engine over the block index — and the weighted-postings
+kernels every block index shares.
 
-Two scorers, both rank-identical to the numpy oracle:
+A handle (``PostingsIndex``: ``BM25Index`` here, ``index.sparse.
+SparseIndex``) decodes a posting into ``(doc_id, contribution)`` — the
+BM25 tf-norm ``tf / (tf + k1·(1 − b + b·dl/avgdl))`` or the stored sparse
+weight — and names the column bounding a block's contributions
+(``max_tfnorm`` / ``max_weight``). A query is a spec ``(query_id,
+{tid: weight}, min_match)`` scored Σ weight · contribution; a single
+query is a batch of one spec. Two scorers, both rank-identical to the
+numpy oracle:
 
-1. ``bm25_topk`` / ``bm25_topk_batch`` — the index kernels. Each BM25
-   query is a spec ``(query_id, {tid: weight}, min_match)``, and a single
-   query is a batch of one spec. Two routes serve a batch:
+1. The index kernels (``bm25_topk`` / ``bm25_topk_batch``,
+   ``weighted_term_topk``, ``index.sparse.sparse_index_topk``). Two
+   routes serve a batch:
 
    * the driver route, when the Σdf of the batch's terms is at most
-     ``DRIVER_MAX_POSTINGS`` (``_driver_topk``: one pyarrow read into a
-     decoded-postings cache, a numpy accumulate per spec, a local page —
-     no Spark job);
+     ``DRIVER_MAX_POSTINGS`` (``_driver_topk``: one pyarrow read decoded
+     into the handle's (doc ids, contributions) cache, a numpy
+     accumulate per spec, a local page — no Spark job);
    * the distributed route: one ``applyInPandas`` task per shard runs the
      shard function ``_bm25_shard`` over that shard's posting blocks of
      the batch's terms. Per spec it runs MaxScore with the coverage gate
@@ -25,16 +33,21 @@ Two scorers, both rank-identical to the numpy oracle:
      an RDD ``treeAggregate`` heap merge (north-rule form); a batch's by a
      per-query window.
 
+   ``_candidate_scores`` sums a spec over a fixed candidate set only (a
+   two-phase rescore), on either route.
+
 2. ``bm25_score_all_join`` — pure-Catalyst scorer straight off the corpus
    (tokenize → explode → broadcast-join query terms → groupBy(doc).sum).
    Used for oracle parity and as the no-index fallback.
 
-Scoring is float32 (Lucene-style) in both paths so ranks match the oracle.
-Tie-break: score desc, doc_id asc (reference ScoreCombiner.java:43-56).
+Sums are float64 and the final score float32 (Lucene-style) in both
+paths, so ranks match the oracle. Tie-break: score desc, doc_id asc
+(reference ScoreCombiner.java:43-56).
 """
 
 from __future__ import annotations
 
+import functools
 import heapq
 import os
 from collections import Counter
@@ -84,25 +97,172 @@ def lucene_idf(N: int, df: int) -> float:
     return float(np.log(1.0 + (N - df + 0.5) / (df + 0.5)))
 
 
+def _isin_sorted(ids: np.ndarray, arr: np.ndarray) -> np.ndarray:
+    """Boolean mask of the ``ids`` present in the non-empty SORTED
+    ``arr``, by binary search."""
+    pos = np.searchsorted(arr, ids)
+    return arr[np.minimum(pos, len(arr) - 1)] == ids
+
+
 def _live_mask(ids: np.ndarray, deletes: np.ndarray | None) -> np.ndarray | None:
     """Boolean keep-mask for decoded doc ids against a SORTED tombstone
     array, or None when nothing is deleted (zero-cost fast path). The
     liveDocs analog: O(n log d) binary search, no decode-path branching."""
     if deletes is None or len(deletes) == 0 or len(ids) == 0:
         return None
-    pos = np.searchsorted(deletes, ids)
-    hit = (pos < len(deletes)) & (
-        deletes[np.minimum(pos, len(deletes) - 1)] == ids
-    )
+    hit = _isin_sorted(ids, deletes)
     return ~hit if hit.any() else None
 
 
-class BM25Index:
-    """Handle on an on-disk index directory produced by IndexBuilder."""
+def _blocks_holding(
+    ids: np.ndarray, min_doc_id: np.ndarray, max_doc_id: np.ndarray
+) -> np.ndarray:
+    """Which posting blocks' [min_doc_id, max_doc_id] range holds one of
+    the SORTED ``ids`` — the blocks a candidate-restricted read decodes."""
+    return np.searchsorted(ids, max_doc_id, side="right") > np.searchsorted(
+        ids, min_doc_id
+    )
 
-    def __init__(self, spark: SparkSession, path: str):
+
+class PostingsIndex:
+    """What every block-postings handle shares: the Spark scan of its
+    posting blocks (``postings_for``, ``cache``), the resident term
+    dictionary, the driver's pyarrow dataset and bounded decoded-postings
+    cache, and the tombstones the kernels mask.
+
+    A posting decodes to ``(doc_id, contribution)``; the kernels
+    (``_fill_driver_cache``, ``_driver_accumulate``, ``_driver_topk``,
+    ``_shard_scored``, ``_candidate_scores``) score Σ weight ·
+    contribution and read only this interface, so they serve every
+    subclass alike. A subclass names its payload columns with their batch
+    decoders (``payload``), the column bounding a block's contributions
+    (``bound_col``), and implements ``contribution`` (decoded payload →
+    contributions, on the driver) and ``block_decoder`` (the picklable
+    per-block decode the shard functions run). Contributions must be
+    finite and ≥ 0: MaxScore prunes on them."""
+
+    payload: dict  # payload column → its codec batch decoder
+    bound_col: str
+    _dict_spec: tuple[str, tuple[str, ...]]  # (key column, stat columns)
+
+    def __init__(self, spark: SparkSession, path: str, n_shards: int):
         self.spark = spark
         self.path = path
+        self.n_shards = n_shards
+        self._terms_path = os.path.join(path, "terms")
+        self._postings_path = os.path.join(path, "postings")
+        self._postings_df: DataFrame | None = None
+        self._postings_ds = None  # cached pyarrow dataset (file listing)
+        # driver-path hot-term cache: tid → (doc ids, contributions), a
+        # bounded FIFO by count AND bytes — the coordinator analog of
+        # Lucene's hot posting pages living in the OS page cache
+        self._driver_cache = DriverCache()
+        self.driver_cache_terms = DEFAULT_MAX_TERMS
+        self.driver_cache_bytes = DEFAULT_MAX_BYTES
+        # the resident term dictionary, read on first use (see _terms)
+        self._dictionary: ResidentDictionary | None = None
+        # sorted int64 tombstones, or None
+        self.deletes: np.ndarray | None = None
+
+    def contribution(self, *payload: np.ndarray) -> np.ndarray:
+        """The contributions of decoded ``payload`` columns, in order."""
+        raise NotImplementedError
+
+    def block_decoder(self):
+        """A picklable ``rows → (live doc ids, contributions)`` over a
+        pandas frame of posting-block rows, for the shard functions."""
+        raise NotImplementedError
+
+    def decode_postings(self, tids, within: np.ndarray | None = None):
+        """One ``_read_postings`` read of ``tids``' blocks decoded in one
+        pass → ({tid: slice}, doc ids, contributions); an absent tid has
+        no slice, and slices are views. With ``within`` (sorted doc ids)
+        only the blocks whose doc-id range holds one are decoded."""
+        cols = ["tid", "docs", *self.payload]
+        if within is not None:
+            cols += ["min_doc_id", "max_doc_id"]
+        tbl = _read_postings(self, tids, cols)
+        if within is not None and len(tbl):
+            import pyarrow as pa
+
+            tbl = tbl.filter(pa.array(_blocks_holding(
+                within, tbl["min_doc_id"].to_numpy(),
+                tbl["max_doc_id"].to_numpy(),
+            )))
+        slices, flat = _decode_by_tid(
+            tbl, {"docs": decode_doc_ids_batch, **self.payload}
+        )
+        return slices, flat["docs"], self.contribution(
+            *(flat[c] for c in self.payload)
+        )
+
+    def _terms(self) -> ResidentDictionary:
+        """The handle's resident term dictionary, read on first use. It
+        lives as long as the handle and its driver cache: a rebuilt or
+        merged index is read through a new handle."""
+        if self._dictionary is None:
+            self._dictionary = ResidentDictionary(
+                self._terms_path, *self._dict_spec
+            )
+        return self._dictionary
+
+    def term_stats(self, terms: list[str]) -> dict[str, int]:
+        """Driver-side term-dictionary lookup: {term: df} for the terms
+        present in the index, by binary search of the resident dictionary
+        — no Spark job and, after the handle's first lookup, no read."""
+        d = self._terms()
+        found, rows = d.find(terms)
+        return dict(zip(found, d.stats["df"][rows].tolist()))
+
+    def cache(self):
+        """Serving mode: pin the posting blocks in executor memory
+        (MEMORY_AND_DISK), PRE-PARTITIONED by shard_id. The one-time
+        repartition shuffle at warm-up means every subsequent query's
+        ``groupBy(shard_id).applyInPandas`` finds its required clustering
+        already satisfied — Catalyst elides the per-query Exchange, so the
+        serving loop is scan-free AND shuffle-free (verified in the plan:
+        FlatMapGroupsInPandas ← Sort ← Filter ← InMemoryTableScan)."""
+        from pyspark import StorageLevel
+
+        if self._postings_df is None:
+            self._postings_df = self.spark.read.parquet(self._postings_path)
+        # one cached partition per shard: every serving task is exactly one
+        # shard's kernel (best balance; measured ~12% over coarse groups)
+        self._postings_df = self._postings_df.repartition(
+            self.n_shards, "shard_id"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # EAGER warm-up: until the cached plan materializes, AQE reports
+        # its output partitioning as undecided and every consumer plans a
+        # defensive re-shuffle; after materialization (isFinalPlan) the
+        # per-query Exchange is elided — so pay the warm-up here, not on
+        # the first serving query
+        self._postings_df.count()
+        return self
+
+    def postings_for(self, terms: list[str]) -> DataFrame:
+        """Scan only the term_buckets of the query terms (partition pruning,
+        tids/buckets computed driver-side in Python — same h60 hash as the
+        writer) + a tid IN (...) predicate pushed into parquet row groups."""
+        tids = sorted({tid_py(t) for t in terms})
+        buckets = sorted({t % N_TERM_BUCKETS for t in tids})
+        if self._postings_df is None:
+            self._postings_df = self.spark.read.parquet(self._postings_path)
+        return self._postings_df.filter(
+            F.col("term_bucket").isin(buckets) & F.col("tid").isin(tids)
+        )
+
+
+class BM25Index(PostingsIndex):
+    """Handle on an on-disk index directory produced by IndexBuilder. A
+    posting's contribution is its BM25 tf-norm
+    ``tf / (tf + k1·(1 − b + b·dl/avgdl))``, bounded per block by
+    ``max_tfnorm``."""
+
+    payload = {"tfs": decode_varint_batch, "dls": decode_varint_batch}
+    bound_col = "max_tfnorm"
+    _dict_spec = ("term", ("df", "cf"))
+
+    def __init__(self, spark: SparkSession, path: str):
         srow = spark.read.parquet(os.path.join(path, "stats")).collect()[0]
         from ..index.build import INDEX_FORMAT_VERSION
 
@@ -116,27 +276,21 @@ class BM25Index:
                 f"index at {path} has format v{ver}; this engine reads "
                 f"v{INDEX_FORMAT_VERSION} — rebuild with IndexBuilder"
             )
+        super().__init__(spark, path, int(srow["n_shards"]))
         self.n_docs = int(srow["n_docs"])
         self.avgdl = float(srow["avgdl"])
         self.k1 = float(srow["k1"])
         self.b = float(srow["b"])
-        self.n_shards = int(srow["n_shards"])
-        self._terms_path = os.path.join(path, "terms")
-        self._postings_path = os.path.join(path, "postings")
-        self._postings_df: DataFrame | None = None
         self._positions_cache: DataFrame | None = None
-        self._postings_ds = None  # cached pyarrow dataset (file listing)
-        # driver-path hot-term cache: tid → decoded (ids, tfs f32, dls f32)
-        # arrays (tf/dl are small ints — exact in float32; upcast at use).
-        # Bounded FIFO by count AND bytes — the coordinator analog of
-        # Lucene's hot posting pages living in the OS page cache.
-        self._driver_cache = DriverCache()
-        # the resident term dictionary, read on first use (see _terms)
-        self._dictionary: ResidentDictionary | None = None
-        self.driver_cache_terms = DEFAULT_MAX_TERMS
-        self.driver_cache_bytes = DEFAULT_MAX_BYTES
-        # sorted int64 tombstones, or None — see with_deletes
-        self.deletes: np.ndarray | None = None
+
+    def contribution(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
+        return _tfnorm(tfs, dls, self.k1, self.b, self.avgdl)
+
+    def block_decoder(self):
+        return functools.partial(
+            _decode_tfn, k1=self.k1, b=self.b, avgdl=self.avgdl,
+            deletes=self.deletes,
+        )
 
     def with_deletes(self, deletes) -> "BM25Index":
         """Attach a tombstone set: subsequent queries exclude these doc ids
@@ -163,24 +317,6 @@ class BM25Index:
         arr = np.unique(arr.astype(np.int64))
         self.deletes = arr if len(arr) else None
         return self
-
-    def _terms(self) -> ResidentDictionary:
-        """The handle's resident term dictionary (term, df, cf), read on
-        first use. It lives as long as the handle and its driver cache: a
-        rebuilt or merged index is read through a new handle."""
-        if self._dictionary is None:
-            self._dictionary = ResidentDictionary(
-                self._terms_path, "term", ("df", "cf")
-            )
-        return self._dictionary
-
-    def term_stats(self, terms: list[str]) -> dict[str, int]:
-        """Driver-side term-dictionary lookup: {term: df} for the terms
-        present in the index, by binary search of the resident dictionary
-        — no Spark job and, after the handle's first lookup, no read."""
-        d = self._terms()
-        found, rows = d.find(terms)
-        return dict(zip(found, d.stats["df"][rows].tolist()))
 
     def term_stats_full(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """{term: (df, cf)} — ``term_stats`` widened to the collection
@@ -239,31 +375,6 @@ class BM25Index:
         dictionary walk."""
         return len(self._terms().terms)
 
-    def cache(self) -> "BM25Index":
-        """Serving mode: pin the posting blocks in executor memory
-        (MEMORY_AND_DISK), PRE-PARTITIONED by shard_id. The one-time
-        repartition shuffle at warm-up means every subsequent query's
-        ``groupBy(shard_id).applyInPandas`` finds its required clustering
-        already satisfied — Catalyst elides the per-query Exchange, so the
-        serving loop is scan-free AND shuffle-free (verified in the plan:
-        FlatMapGroupsInPandas ← Sort ← Filter ← InMemoryTableScan)."""
-        from pyspark import StorageLevel
-
-        if self._postings_df is None:
-            self._postings_df = self.spark.read.parquet(self._postings_path)
-        # one cached partition per shard: every serving task is exactly one
-        # shard's kernel (best balance; measured ~12% over coarse groups)
-        self._postings_df = self._postings_df.repartition(
-            self.n_shards, "shard_id"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # EAGER warm-up: until the cached plan materializes, AQE reports
-        # its output partitioning as undecided and every consumer plans a
-        # defensive re-shuffle; after materialization (isFinalPlan) the
-        # per-query Exchange is elided — so pay the warm-up here, not on
-        # the first serving query
-        self._postings_df.count()
-        return self
-
     def cache_positions(self) -> "BM25Index":
         """Positional-serving mode: pin the positions sidecar in executor
         memory PRE-PARTITIONED by doc_shard — the positional shard
@@ -300,17 +411,13 @@ class BM25Index:
             self._positions_cache.count()  # eager: see cache()
         return self
 
-    def postings_for(self, terms: list[str]) -> DataFrame:
-        """Scan only the term_buckets of the query terms (partition pruning,
-        tids/buckets computed driver-side in Python — same h60 hash as the
-        writer) + a tid IN (...) predicate pushed into parquet row groups."""
-        tids = sorted({tid_py(t) for t in terms})
-        buckets = sorted({t % N_TERM_BUCKETS for t in tids})
-        if self._postings_df is None:
-            self._postings_df = self.spark.read.parquet(self._postings_path)
-        return self._postings_df.filter(
-            F.col("term_bucket").isin(buckets) & F.col("tid").isin(tids)
-        )
+
+def _tfnorm(tfs, dls, k1: float, b: float, avgdl: float) -> np.ndarray:
+    """float64 BM25 tf-norm ``tf / (tf + k1·(1 − b + b·dl/avgdl))`` of
+    decoded tf and dl arrays — a BM25 posting's contribution."""
+    tfs = tfs.astype(np.float64)
+    dls = dls.astype(np.float64)
+    return tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
 
 
 def _decode_tfn(
@@ -324,26 +431,16 @@ def _decode_tfn(
     Tombstones are masked here, at decode time — before any doc can
     enter a candidate set or raise a threshold."""
     ids = np.concatenate([decode_doc_ids(x) for x in rows["docs"]])
-    tfs = np.concatenate([decode_varint(x) for x in rows["tfs"]]).astype(
-        np.float64
-    )
-    dls = np.concatenate([decode_varint(x) for x in rows["dls"]]).astype(
-        np.float64
-    )
+    tfs = np.concatenate([decode_varint(x) for x in rows["tfs"]])
+    dls = np.concatenate([decode_varint(x) for x in rows["dls"]])
     live = _live_mask(ids, deletes)
     if live is not None:
         ids, tfs, dls = ids[live], tfs[live], dls[live]
-    return ids, tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+    return ids, _tfnorm(tfs, dls, k1, b, avgdl)
 
 
 def _single_term_topk(
-    rows: pd.DataFrame,
-    idf: float,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    deletes: np.ndarray | None,
+    rows: pd.DataFrame, w: float, k: int, decode, bound_col: str
 ) -> tuple[np.ndarray, np.ndarray]:
     """Block-max pruned top-k of a one-term query over its block rows →
     (doc ids, float32 scores), score desc / doc_id asc. Per-doc scores
@@ -353,8 +450,8 @@ def _single_term_topk(
     HybridScoreBlockBoundaryPropagator.java:53-98): process blocks by
     descending bound and, once k candidates exist, skip every block whose
     bound can't beat (or f32-tie) the running k-th score."""
-    rows = rows.sort_values("max_tfnorm", ascending=False, kind="mergesort")
-    bounds_ = idf * rows["max_tfnorm"].to_numpy()
+    rows = rows.sort_values(bound_col, ascending=False, kind="mergesort")
+    bounds_ = w * rows[bound_col].to_numpy()
     ids_parts, sc_parts, n_seen = [], [], 0
     theta = -np.inf
     for bi in range(len(rows)):
@@ -364,11 +461,9 @@ def _single_term_topk(
             thr = float(np.nextafter(np.float32(theta), np.float32(-np.inf)))
             if bounds_[bi] < thr:
                 break
-        ids_b, tfn_b = _decode_tfn(
-            rows.iloc[bi : bi + 1], k1, b, avgdl, deletes
-        )
+        ids_b, c_b = decode(rows.iloc[bi : bi + 1])
         ids_parts.append(ids_b)
-        sc_parts.append(idf * tfn_b)
+        sc_parts.append(np.multiply(w, c_b, dtype=np.float64))
         n_seen += len(ids_b)
         if n_seen >= k:
             all_sc = np.concatenate(sc_parts)
@@ -387,29 +482,31 @@ def _bm25_shard(
     pdf: pd.DataFrame,
     specs: list[tuple[str, dict[int, float], int]],
     k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    deletes: np.ndarray | None,
+    decode,
+    bound_col: str,
 ) -> pd.DataFrame:
-    """The BM25 shard function: every spec ``(query_id, {tid: weight},
-    min_match)`` over one shard's posting blocks → (query_id, doc_id,
-    score) rows, each spec's shard top-k in score desc / doc_id asc order.
-    A doc's postings all live in its shard, so every shard top-k is exact.
+    """The shard function of every weighted-postings top-k: every spec
+    ``(query_id, {tid: weight}, min_match)`` over one shard's posting
+    blocks → (query_id, doc_id, score) rows, each spec's shard top-k of
+    Σ weight · contribution in score desc / doc_id asc order. ``decode``
+    is the handle's ``block_decoder()`` and ``bound_col`` its block-bound
+    column. A doc's postings all live in its shard, so every shard top-k
+    is exact.
 
     Per spec it runs MaxScore with the coverage gate folded in. Terms go
     in descending upper bound (weight × the shard's largest block
-    tf-norm). A term is essential, and admits new candidates, while a doc
+    bound). A term is essential, and admits new candidates, while a doc
     first seen at it could still reach theta (its bound plus every later
     term's, with one float32 ulp of slack) and could still match
     ``min_match`` terms, which a doc first seen past position
     n − min_match cannot. A non-essential term adds to existing
     candidates only, decoding just the blocks whose doc_id range holds
     one. theta is the k-th score among candidates that already match
-    ``min_match`` terms: scores and counts only grow, so it bounds the
-    final k-th from below, and a doc that may still fail coverage never
-    raises it. Matched-term counts ride beside the scores and gate at
-    emit. A one-term spec takes ``_single_term_topk``'s block-max skip.
+    ``min_match`` terms: scores and counts only grow (contributions are
+    ≥ 0), so it bounds the final k-th from below, and a doc that may
+    still fail coverage never raises it. Matched-term counts ride beside
+    the scores and gate at emit. A one-term spec takes
+    ``_single_term_topk``'s block-max skip.
 
     A term that two or more specs use is decoded in full once and
     shared; a term one spec uses keeps the pruned decode. Scores sum in
@@ -424,15 +521,15 @@ def _bm25_shard(
     full: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
     def contrib(t: int, keep=None) -> tuple[np.ndarray, np.ndarray]:
-        """(ids, tf-norm) of term ``t`` here: the full shared decode of
-        a term several specs use, else the ``keep`` blocks (all if None)."""
+        """(ids, contributions) of term ``t`` here: the full shared decode
+        of a term several specs use, else the ``keep`` blocks (all if
+        None)."""
         if uses[t] > 1:
             got = full.get(t)
             if got is None:
-                got = full[t] = _decode_tfn(rows_of[t], k1, b, avgdl, deletes)
+                got = full[t] = decode(rows_of[t])
             return got
-        rows = rows_of[t] if keep is None else rows_of[t][keep]
-        return _decode_tfn(rows, k1, b, avgdl, deletes)
+        return decode(rows_of[t] if keep is None else rows_of[t][keep])
 
     for qid, weights, min_match in specs:
         m = max(min_match, 1)
@@ -441,11 +538,11 @@ def _bm25_shard(
             continue
         if len(terms) == 1 and uses[terms[0]] == 1:
             ids, f32 = _single_term_topk(
-                rows_of[terms[0]], weights[terms[0]], k, k1, b, avgdl, deletes
+                rows_of[terms[0]], weights[terms[0]], k, decode, bound_col
             )
         else:
             ub_of = {
-                t: weights[t] * float(rows_of[t]["max_tfnorm"].max())
+                t: weights[t] * float(rows_of[t][bound_col].max())
                 for t in terms
             }
             order = sorted(terms, key=lambda t: (-ub_of[t], t))
@@ -460,10 +557,13 @@ def _bm25_shard(
                 w = weights[t]
                 thr = float(np.nextafter(np.float32(theta), np.float32(-np.inf)))
                 if ti <= len(order) - m and ub[ti] + tail_ub[ti] >= thr:
-                    t_ids, tfn = contrib(t)
+                    t_ids, c = contrib(t)
                     ids, inv = sorted_union(np.concatenate([ids, t_ids]))
                     sc = np.bincount(
-                        inv, weights=np.concatenate([sc, w * tfn]),
+                        inv,
+                        weights=np.concatenate(
+                            [sc, np.multiply(w, c, dtype=np.float64)]
+                        ),
                         minlength=len(ids),
                     )
                     n_hit = np.bincount(
@@ -474,19 +574,18 @@ def _bm25_shard(
                     break  # nothing admitted, and no later term admits
                 else:
                     rows = rows_of[t]
-                    lo = np.searchsorted(ids, rows["min_doc_id"].to_numpy())
-                    hi = np.searchsorted(
-                        ids, rows["max_doc_id"].to_numpy(), side="right"
+                    keep = _blocks_holding(
+                        ids, rows["min_doc_id"].to_numpy(),
+                        rows["max_doc_id"].to_numpy(),
                     )
-                    keep = hi > lo
                     if not keep.any():
                         continue
-                    t_ids, tfn = contrib(t, keep)
+                    t_ids, c = contrib(t, keep)
                     pos = np.searchsorted(ids, t_ids)
-                    ok = (pos < len(ids)) & (
-                        ids[np.minimum(pos, len(ids) - 1)] == t_ids
+                    ok = ids[np.minimum(pos, len(ids) - 1)] == t_ids
+                    np.add.at(
+                        sc, pos[ok], np.multiply(w, c[ok], dtype=np.float64)
                     )
-                    np.add.at(sc, pos[ok], w * tfn[ok])
                     np.add.at(n_hit, pos[ok], 1.0)
                 qual = sc if m == 1 else sc[n_hit >= m]
                 if len(qual) >= k:
@@ -564,11 +663,11 @@ def parse_min_match(
 
 
 def _read_postings(index, tids, columns: list[str]):
-    """The driver's postings read of a ``BM25Index`` or an
-    ``index.sparse.SparseIndex``: ``columns`` of the posting blocks of
-    ``tids`` as one pyarrow table, from ONE read of ONLY their bucket
-    partitions (hive pruning) with a tid row-group filter — zero Spark
-    jobs, so latency is filesystem latency, not task scheduling."""
+    """The driver's postings read of a ``PostingsIndex``: ``columns`` of
+    the posting blocks of ``tids`` as one pyarrow table, from ONE read of
+    ONLY their bucket partitions (hive pruning) with a tid row-group
+    filter — zero Spark jobs, so latency is filesystem latency, not task
+    scheduling."""
     import pyarrow.dataset as ds
 
     tids = sorted(tids)
@@ -607,10 +706,10 @@ def _decode_by_tid(tbl, decoders: dict) -> tuple[dict[int, slice], dict]:
     }, flat
 
 
-def _fill_driver_cache(index: BM25Index, tids) -> None:
+def _fill_driver_cache(index: PostingsIndex, tids) -> None:
     """Decode every tid of ``tids`` the handle's driver cache lacks, from
-    one ``_read_postings`` read decoded in one pass. An absent tid caches
-    None.
+    one read decoded in one pass (``decode_postings``), into a
+    (doc ids, contributions) entry. An absent tid caches None.
 
     Never evicts: a caller scoring from the cache evicts once, after its
     last use of it, so no entry it filled (or found) can be dropped
@@ -620,53 +719,43 @@ def _fill_driver_cache(index: BM25Index, tids) -> None:
     missing = sorted({t for t in tids if t not in cache})
     if not missing:
         return
-    slices, flat = _decode_by_tid(
-        _read_postings(index, missing, ["tid", "docs", "tfs", "dls"]),
-        {
-            "docs": decode_doc_ids_batch,
-            "tfs": decode_varint_batch,
-            "dls": decode_varint_batch,
-        },
-    )
+    slices, ids, contrib = index.decode_postings(missing)
     for tid in missing:
         sl = slices.get(tid)
-        # entries own their memory (copy / astype), so no view pins the
-        # whole read while DriverCache.nbytes counts only the slice; tf/dl
-        # are small ints (≤ turn length) — exact in float32, which halves
-        # cache bytes; upcast to f64 at use
+        # entries own their memory, so no view pins the whole read while
+        # DriverCache.nbytes counts only the slice
         cache[tid] = None if sl is None else (
-            flat["docs"][sl].copy(),
-            flat["tfs"][sl].astype(np.float32),
-            flat["dls"][sl].astype(np.float32),
+            ids[sl].copy(), contrib[sl].copy()
         )
 
 
 def _driver_accumulate(
-    index: BM25Index, weights: dict[int, float]
+    index: PostingsIndex, weights: dict[int, float], entries=None
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(doc_ids, float64 Σ weights[tid]·tfnorm, per-doc matched-term
-    counts) over EVERY doc matching a tid of ``weights``, summed in the
-    dict's order from the driver cache — which ``_fill_driver_cache``
-    must already cover. Callers apply their own coverage gate and
-    truncation (``_driver_topk`` top-k, multi_match field combine)."""
-    cache = index._driver_cache
-    k1, b, avgdl = index.k1, index.b, index.avgdl
+    """(doc_ids, float64 Σ weights[tid]·contribution, per-doc
+    matched-term counts) over EVERY doc matching a tid of ``weights``,
+    summed in the dict's order from ``entries`` ({tid: (doc ids,
+    contributions) or None} for every tid), by default the handle's
+    driver cache — which ``_fill_driver_cache`` must then already cover.
+    Callers apply their own coverage gate and truncation (``_driver_topk``
+    top-k, multi_match field combine)."""
+    entries = index._driver_cache if entries is None else entries
     ids_parts: list[np.ndarray] = []
     sc_parts: list[np.ndarray] = []
     for tid, w in weights.items():
-        got = cache[tid]
+        got = entries[tid]
         if got is None:
             continue
-        ids, tfs32, dls32 = got
+        ids, contrib = got
         # cache entries stay delete-agnostic; tombstones mask at use so a
         # later with_deletes() change needs no cache invalidation
         live = _live_mask(ids, index.deletes)
         if live is not None:
-            ids, tfs32, dls32 = ids[live], tfs32[live], dls32[live]
-        tfs = tfs32.astype(np.float64)
-        dls = dls32.astype(np.float64)
+            ids, contrib = ids[live], contrib[live]
         ids_parts.append(ids)
-        sc_parts.append(w * tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl)))
+        # float64 whatever the stored dtype: a Python float times a
+        # float32 array would stay float32
+        sc_parts.append(np.multiply(w, contrib, dtype=np.float64))
     if not ids_parts:
         return (
             np.empty(0, dtype=np.int64),
@@ -682,10 +771,85 @@ def _driver_accumulate(
     return acc_ids, acc_sc, np.bincount(inv, minlength=len(acc_ids))
 
 
+def _candidate_scores(
+    index: PostingsIndex,
+    terms: list[str],
+    weights: dict[int, float],
+    cand: np.ndarray,
+    driver: bool,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(doc ids, float64 Σ weights[tid]·contribution) over only the docs
+    of the sorted, non-empty ``cand``, ``weights`` keyed by the tids of
+    ``terms`` — the rescore phase of a two-phase query, on the driver or
+    in one Spark job. Reads decode only the blocks whose doc-id range
+    holds a candidate; what they decode is partial, so it is never
+    cached, but on the driver a term the cache already holds is taken
+    from it. Every term's postings are masked to the candidates before
+    ``_driver_accumulate`` sums them, so a hot term's corpus-wide
+    postings never enter the sum."""
+
+    def within(ids, contrib):
+        ok = _isin_sorted(ids, cand)
+        return ids[ok], contrib[ok]
+
+    entries: dict = dict.fromkeys(weights)
+    if driver:
+        cache = index._driver_cache
+        cold = [t for t in weights if t not in cache]
+        if cold:
+            slices, ids, contrib = index.decode_postings(cold, within=cand)
+            for t, sl in slices.items():
+                entries[t] = within(ids[sl], contrib[sl])
+        for t in weights:
+            got = cache.get(t)
+            if got is not None:
+                entries[t] = within(*got)
+    else:
+        decode = index.block_decoder()
+
+        def shard(pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf = pdf[_blocks_holding(
+                cand, pdf["min_doc_id"].to_numpy(),
+                pdf["max_doc_id"].to_numpy(),
+            )]
+            tids, ids, contrib = [np.empty(0, np.int64)], [], []
+            for t, rows in pdf.groupby("tid", sort=False):
+                t_ids, c = within(*decode(rows))
+                tids.append(np.full(len(t_ids), t, dtype=np.int64))
+                ids.append(t_ids)
+                contrib.append(c)
+            return pd.DataFrame({
+                "tid": np.concatenate(tids),
+                "doc_id": np.concatenate([np.empty(0, np.int64), *ids]),
+                "contribution": np.concatenate([np.empty(0), *contrib]),
+            })
+
+        # a doc lives in one shard, so each (tid, doc) row is unique
+        rows = (
+            index.postings_for(terms)
+            .select(
+                "shard_id", "tid", "min_doc_id", "max_doc_id", "docs",
+                *index.payload,
+            )
+            .groupBy("shard_id")
+            .applyInPandas(
+                shard, "tid long, doc_id long, contribution double"
+            )
+            .toPandas()
+        )
+        for t, g in rows.groupby("tid", sort=False):
+            entries[t] = (
+                g["doc_id"].to_numpy(), g["contribution"].to_numpy()
+            )
+    ids, sc, _n = _driver_accumulate(index, weights, entries)
+    return ids, sc
+
+
 def _driver_topk(
-    index: BM25Index, specs: list[tuple[str, dict[int, float], int]], k: int
+    index: PostingsIndex, specs: list[tuple[str, dict[int, float], int]], k: int
 ) -> tuple[list[str], np.ndarray, np.ndarray]:
-    """The driver route of every BM25 top-k, single query or batch:
+    """The driver route of every weighted-postings top-k, single query or
+    batch:
     ``specs`` = [(query_id, {tid: weight}, min_match)] → per-row
     (query_ids, doc_ids, float32 scores), each query's rows contiguous
     in score desc / doc_id asc order — rank-identical to the distributed
@@ -834,7 +998,7 @@ def weighted_term_topk(
 
 
 def _shard_scored(
-    index: BM25Index,
+    index: PostingsIndex,
     terms: list[str],
     specs: list[tuple[str, dict[int, float], int]],
     k: int,
@@ -842,17 +1006,17 @@ def _shard_scored(
     """``_bm25_shard`` over the pruned postings scan of ``terms``: one
     ``applyInPandas`` task per shard scores every spec → (query_id,
     doc_id, score), at most k rows per spec and shard."""
-    k1, b, avgdl, deletes = index.k1, index.b, index.avgdl, index.deletes
+    decode, bound_col = index.block_decoder(), index.bound_col
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _bm25_shard(pdf, specs, k, k1, b, avgdl, deletes)
+        return _bm25_shard(pdf, specs, k, decode, bound_col)
 
-    # column-prune before the shuffle: the scorer needs 8 of the 12 block
-    # columns (block_seq/n_docs/sum_tf/term_bucket never leave the scan),
-    # and every one of them is fixed-width → zero-copy Arrow→numpy
+    # column-prune before the shuffle: the scorer needs the ids, doc-id
+    # range, payload and bound of each block, all but the payload
+    # fixed-width → zero-copy Arrow→numpy
     blocks = index.postings_for(terms).select(
-        "shard_id", "tid", "min_doc_id", "max_doc_id",
-        "docs", "tfs", "dls", "max_tfnorm",
+        "shard_id", "tid", "min_doc_id", "max_doc_id", "docs",
+        *index.payload, bound_col,
     )
     return blocks.groupBy("shard_id").applyInPandas(
         score_shard, BATCH_TOPK_SCHEMA

@@ -194,7 +194,8 @@ def rewrite(
     neural_sparse tokenization precedence mirrors
     NeuralSparseQueryBuilder.doRewrite/shouldUseAnalyzer
     (query/NeuralSparseQueryBuilder.java:360-415): explicit query_tokens
-    end the rewrite untouched; setting BOTH model_id and analyzer raises;
+    end the rewrite untouched, and a negative or non-finite weight among
+    them raises ValueError; setting BOTH model_id and analyzer raises;
     an analyzer name resolves against ``analyzers`` (a registry of
     analysis.WordPieceAnalyzer-shaped objects) and analyzes the query
     text; otherwise the stub model infers. (The reference additionally
@@ -207,6 +208,7 @@ def rewrite(
     a stale cached vector/token map."""
     import dataclasses
     import hashlib
+    import math
 
     from ..extras.hashing import H60_MAX
     from ..processors import EMBED_DIM
@@ -222,6 +224,18 @@ def rewrite(
             - 1.0
             for j in range(EMBED_DIM)
         ]
+    if spec.query_type == "neural_sparse" and spec.query_tokens is not None:
+        # index and corpus routes alike: the index kernels prune on
+        # contributions ≥ 0 (the reference's scores ≥ 0)
+        bad = {
+            t: w for t, w in spec.query_tokens.items()
+            if not (math.isfinite(w) and w >= 0)
+        }
+        if bad:
+            raise ValueError(
+                f"neural_sparse query_tokens weights must be finite and "
+                f">= 0, got {bad}"
+            )
     if spec.query_type == "neural_sparse" and spec.query_tokens is None:
         if spec.model_id is not None and spec.analyzer is not None:
             raise ValueError(

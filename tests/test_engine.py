@@ -107,6 +107,35 @@ def test_bad_specs():
         )
 
 
+def test_hybrid_body_rejects_unknown_keys():
+    """Hybrid body options are never dropped silently: HybridSpec has no
+    lower_bounds, and a misspelt key is as unknown."""
+    m = {"match": {"query_text": "a"}}
+    for key in ("lower_bounds", "normalisation"):
+        with pytest.raises(
+            ValueError, match=f"invalid hybrid query body: .*{key}"
+        ):
+            spec_from_json({"hybrid": {"queries": [m], key: []}})
+    spec = spec_from_json(
+        {"hybrid": {"queries": [m], "combination": "rrf", "rank_constant": 5}}
+    )
+    assert (spec.combination, spec.rank_constant) == ("rrf", 5)
+
+
+@pytest.mark.parametrize("bad", [-1.0, float("inf"), float("nan")])
+def test_neural_sparse_rejects_bad_query_weights(eng, bad):
+    """A raw query_tokens weight that is negative or non-finite raises
+    ValueError on the index route and the corpus route alike."""
+    q = {"the": 1.0, "tool": bad}
+    for route, extra in (("index", {}), ("corpus", {"filter": "role = 'user'"})):
+        ok = {"neural_sparse": {"query_tokens": {"the": 1.0}, **extra}}
+        assert eng.explain_route(ok)["route"] == route
+        with pytest.raises(ValueError, match="query_tokens weights"):
+            eng.search(
+                {"neural_sparse": {"query_tokens": q, **extra}}, k=5
+            ).collect()
+
+
 def test_corpus_required_error(spark):
     eng2 = Engine(spark)
     with pytest.raises(ValueError, match="needs a corpus"):

@@ -20,8 +20,11 @@ from pyspark.sql import functions as F
 from neural_search_spark.engine import Engine
 from neural_search_spark.index.build import IndexBuilder, doc_id_col, tid_py
 from neural_search_spark.index.cache import entry_nbytes
-from neural_search_spark.index.codec import decode_doc_ids, decode_varint
-from neural_search_spark.query.bm25 import BM25Index, _fill_driver_cache
+from neural_search_spark.query.bm25 import (
+    BM25Index,
+    _decode_tfn,
+    _fill_driver_cache,
+)
 
 
 @pytest.fixture(scope="module")
@@ -168,34 +171,29 @@ def test_warm_driver_match_scans_no_terms_table(
 
 
 def test_driver_cache_fill_owns_its_arrays(spark, dict_index, direct):
-    """A multi-term fill decodes one read in one pass: every entry equals
-    the per-block decode of its blocks in read order, owns its memory
-    (no view pinning the read's buffers), and ``cache.nbytes`` is the sum
-    of the entries' bytes."""
+    """A multi-term fill decodes one read in one pass: every entry is
+    (doc ids, tf-norm contributions) equal bit for bit to
+    ``_decode_tfn`` of its blocks in read order, owns its memory (no view
+    pinning the read's buffers), and ``cache.nbytes`` is the sum of the
+    entries' bytes."""
     idx = BM25Index(spark, dict_index)
     terms = sorted(direct, key=lambda t: -direct[t][0])[:6] + ["not-a-term"]
     tids = [tid_py(t) for t in terms]
     _fill_driver_cache(idx, tids)
     cache = idx._driver_cache
     assert cache[tid_py("not-a-term")] is None
-    tbl = pads.dataset(
+    blocks = pads.dataset(
         os.path.join(dict_index, "postings"), format="parquet",
         partitioning="hive",
-    ).to_table(columns=["tid", "docs", "tfs", "dls"])
-    rows = tbl.to_pydict()
+    ).to_table(columns=["tid", "docs", "tfs", "dls"]).to_pandas()
     for tid in tids[:-1]:
-        mine = [i for i, t in enumerate(rows["tid"]) if t == tid]
+        mine = blocks[blocks["tid"] == tid]
         assert len(mine) > 1  # several blocks per term at block_size=16
-        ids, tfs, dls = cache[tid]
-        assert np.array_equal(
-            ids, np.concatenate([decode_doc_ids(rows["docs"][i]) for i in mine])
-        )
-        for got, col in ((tfs, "tfs"), (dls, "dls")):
-            assert got.dtype == np.float32
-            assert np.array_equal(
-                got, np.concatenate([decode_varint(rows[col][i]) for i in mine])
-            )
-        for a in (ids, tfs, dls):
+        ids, tfn = cache[tid]
+        want_ids, want_tfn = _decode_tfn(mine, idx.k1, idx.b, idx.avgdl, None)
+        assert np.array_equal(ids, want_ids)
+        assert tfn.dtype == np.float64
+        assert tfn.tobytes() == want_tfn.tobytes()
+        for a in (ids, tfn):
             assert a.base is None and a.flags.owndata
     assert cache.nbytes == sum(entry_nbytes(v) for v in cache.values())
-    assert cache.nbytes > 0

@@ -254,3 +254,106 @@ def test_two_phase_oversized_window_raises(spark, sparse_docs):
             sparse_docs, IDX_QUERY, k=100, expansion_rate=5.0,
             max_window_size=200,
         )
+
+
+# ---------------------------------------------------------------------------
+# the sparse index on the BM25 kernels: MaxScore pruning + rank identity
+# ---------------------------------------------------------------------------
+SKEW_QUERY = {"rare": 3.0, "hot": 0.2}
+
+
+@pytest.fixture(scope="module")
+def skew_docs(spark):
+    """400 docs: 'hot' in every doc at a low weight, 'rare' in six at a
+    high one — the shape MaxScore prunes."""
+    rng = np.random.default_rng(7)
+    rare = set(rng.choice(400, size=6, replace=False).tolist())
+    rows = []
+    for d in range(400):
+        feats = {"hot": float(np.round(rng.uniform(0.1, 1.0), 3))}
+        if d in rare:
+            feats["rare"] = float(np.round(rng.uniform(4.0, 6.0), 3))
+        rows.append((d, feats))
+    return spark.createDataFrame(rows, "doc_id long, features map<string,float>")
+
+
+@pytest.fixture(scope="module")
+def skew_index(spark, skew_docs, tmp_path_factory):
+    from pyspark.sql import functions as F
+
+    from neural_search_spark.index.sparse import SparseIndex, SparseIndexBuilder
+
+    tall = skew_docs.select(
+        "doc_id", F.explode("features").alias("token", "weight")
+    )
+    out = str(tmp_path_factory.mktemp("skew") / "sparse_index")
+    SparseIndexBuilder(spark, out, n_shards=2, block_size=8).build(tall)
+    return SparseIndex(spark, out)
+
+
+def test_sparse_distributed_skips_blocks(spark, skew_index, monkeypatch):
+    """At k=1 the rare token's score puts the hot token below theta, so
+    the distributed route decodes only the hot blocks holding a rare
+    doc: fewer blocks than the query's tokens have."""
+    import pyarrow.dataset as pads
+
+    from neural_search_spark.index.build import tid_py
+    from neural_search_spark.index.sparse import sparse_index_topk
+
+    decoded = spark.sparkContext.accumulator(0)
+    inner = skew_index.block_decoder()
+
+    def counted(rows):
+        decoded.add(len(rows))
+        return inner(rows)
+
+    monkeypatch.setattr(skew_index, "block_decoder", lambda: counted)
+    got = sparse_index_topk(
+        skew_index, SKEW_QUERY, k=1, mode="distributed"
+    ).collect()
+    assert len(got) == 1
+    tids = pads.dataset(
+        f"{skew_index.path}/postings", format="parquet", partitioning="hive"
+    ).to_table(columns=["tid"])["tid"].to_numpy()
+    n_blocks = int(np.isin(tids, [tid_py(t) for t in SKEW_QUERY]).sum())
+    assert n_blocks > 40  # 2 shards × ~25 hot blocks + the rare ones
+    assert 0 < decoded.value < n_blocks
+
+
+@pytest.mark.parametrize("mode", ["driver", "distributed"])
+@pytest.mark.parametrize("k", [1, 10])
+def test_sparse_index_skew_matches_join_path(
+    spark, skew_docs, skew_index, mode, k
+):
+    from neural_search_spark.index.sparse import (
+        sparse_index_topk,
+        sparse_index_topk_two_phase,
+    )
+
+    want = sparse_topk(skew_docs, SKEW_QUERY, k=k).toPandas()
+    got = sparse_index_topk(skew_index, SKEW_QUERY, k=k, mode=mode).toPandas()
+    assert len(want) == k
+    assert got.doc_id.tolist() == want.doc_id.tolist()
+    np.testing.assert_allclose(got.score, want.score, rtol=0, atol=0)
+    want2 = sparse_topk_two_phase(
+        skew_docs, SKEW_QUERY, k=k, expansion_rate=2.0
+    ).toPandas()
+    got2 = sparse_index_topk_two_phase(
+        skew_index, SKEW_QUERY, k=k, expansion_rate=2.0, mode=mode
+    ).toPandas()
+    assert got2.doc_id.tolist() == want2.doc_id.tolist()
+    np.testing.assert_allclose(got2.score, want2.score, rtol=0, atol=0)
+
+
+@pytest.mark.parametrize("bad", [-0.5, float("inf"), float("nan")])
+def test_sparse_build_rejects_bad_doc_weight(spark, tmp_path, bad):
+    from neural_search_spark.index.sparse import BAD_WEIGHT, SparseIndexBuilder
+
+    tall = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "a", bad), (2, "b", 0.5)],
+        "doc_id long, token string, weight float",
+    )
+    with pytest.raises(Exception, match=BAD_WEIGHT):
+        SparseIndexBuilder(spark, str(tmp_path / "bad"), n_shards=2).build(
+            tall
+        )
