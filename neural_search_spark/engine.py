@@ -209,6 +209,29 @@ class PinnedSpec:
     organic: object
 
 
+# the body keys each composite query reads: any other key raises, where
+# it would be dropped silently
+_COMPOSITE_KEYS = {
+    qtype: set(keys.split())
+    for qtype, keys in {
+        "bool": "must should must_not filter minimum_should_match",
+        "dis_max": "queries tie_breaker",
+        "boosting": "positive negative negative_boost",
+        "function_score": "query functions score_mode boost_mode max_boost "
+        "min_score boost",
+        "script_score": "query script boost min_score",
+        "constant_score": "filter boost",
+        "has_child": "type query score_mode min_children max_children "
+        "inner_hits",
+        "nested": "path query score_mode min_children max_children "
+        "inner_hits",
+        "has_parent": "parent_type filter parent_filter score_expr",
+        "parent_id": "type id",
+        "pinned": "ids organic",
+    }.items()
+}
+
+
 def spec_from_json(obj: str | dict) -> QuerySpec | HybridSpec | BoolSpec:
     """Parse the JSON query surface:
 
@@ -223,6 +246,15 @@ def spec_from_json(obj: str | dict) -> QuerySpec | HybridSpec | BoolSpec:
     if len(d) != 1:
         raise ValueError("query spec must have exactly one top-level key")
     (qtype, body), = d.items()
+    unknown = (
+        sorted(set(body) - _COMPOSITE_KEYS[qtype])
+        if qtype in _COMPOSITE_KEYS else None
+    )
+    if unknown:
+        raise ValueError(
+            f"invalid {qtype} query body: unknown key(s) {unknown}; "
+            f"valid: {sorted(_COMPOSITE_KEYS[qtype])}"
+        )
     if qtype == "bool":
         # bool clauses may be leaves or NESTED bool queries (Lucene
         # BooleanQuery nests arbitrarily); other composites (hybrid,
@@ -616,12 +648,6 @@ _ROUTED = frozenset({
     "simple_query_string", "match_bool_prefix", "multi_match",
     "neural_sparse", "neural", "neural_knn",
 })
-
-# msearch: the fewest specs a batch group needs to run as one batch (a
-# multi_match singleton keeps its own plan's driver fast path; the BM25,
-# bool_prefix, phrase and span batch kernels take the driver route
-# themselves below the Σdf gate, so a batch of one is its own query)
-_BATCH_MIN = {"multi_match": 2}
 
 # an update without a reindex would leave index routes answering from the
 # old postings — Engine.update_by_query and the CLI refuse it up front
@@ -1292,8 +1318,8 @@ class Engine:
                 f"flat term query ⇒ match({flat[1]})",
                 lambda k: bm25_topk(idx, flat[0], k=k, operator=flat[1]),
             )
-        # match_bool_prefix: terms → weighted postings pass, trailing
-        # prefix → dictionary range read; one doc-keyed combine
+        # match_bool_prefix: term leaves + the trailing prefix's
+        # dictionary expansion as one constant-score leaf, one sum
         from .query.multiterm import match_bool_prefix_topk
 
         return index(
@@ -1317,8 +1343,9 @@ class Engine:
             from .query.multimatch import multi_match_index_topk
 
             return index(
-                "per-field indexes attached: driver combine or the "
-                "shard-keyed multi_match kernel (any mix of n_shards)",
+                "per-field indexes attached: BM25's driver evaluator or "
+                "MaxScore shard function over the field indexes (any mix "
+                "of n_shards)",
                 lambda k: multi_match_index_topk(
                     fi, text, flds,
                     match_type=spec.match_type,
@@ -2554,22 +2581,22 @@ class Engine:
         through bm25_topk_batch, match_bool_prefix specs through
         match_bool_prefix_topk_batch, match_phrase and
         match_phrase_prefix specs (any slop) through phrase_topk_batch,
-        span/intervals specs through span_topk_batch, and ≥2
+        span/intervals specs through span_topk_batch, and
         best/most/cross_fields multi_match specs per (fields, type,
         tie_breaker) through multi_match_topk_batch, whatever the
-        per-field indexes' n_shards. The BM25, bool_prefix, phrase and
-        span batch kernels take the same Σdf gate a single query does,
-        over the union of the batch's terms: below it the whole batch is
-        scored on the driver into one ``LocalPage`` (no Spark job), above
-        it in one shared job (shared pruned scan + per-shard decode cache,
-        the cluster-throughput shape). The BM25, phrase, span and
-        multi_match distributed kernels are the shard function a single
-        distributed query runs, with every spec at once. Other specs run
-        their own plans. Every driver page (batch or single) is joined
-        into one ``LocalPage`` in Arrow, scores widened to double; when
-        every part is such a page that is the result — an msearch of
-        match and match_bool_prefix specs below the gate never calls the
-        JVM — else it is unioned with the distributed parts."""
+        per-field indexes' n_shards. Every batch kernel takes the same
+        Σdf gate a single query does, over the union of the batch's
+        terms: below it the whole batch is scored on the driver into one
+        ``LocalPage`` (no Spark job), above it in one shared job (shared
+        pruned scan + per-shard decode cache, the cluster-throughput
+        shape) — the shard function a single distributed query runs,
+        with every spec at once. A group of one spec is its own query.
+        Other specs run their own plans. Every driver page (batch or
+        single) is joined into one ``LocalPage`` in Arrow, scores
+        widened to double; when every part is such a page that is the
+        result — an msearch of match, match_bool_prefix and multi_match
+        specs below the gate never calls the JVM — else it is unioned
+        with the distributed parts."""
         if not specs:
             raise ValueError("msearch needs at least one spec")
         plans = {
@@ -2590,17 +2617,14 @@ class Engine:
             if p.batch is not None:
                 key, item = p.batch
                 groups.setdefault(key, {})[qid] = item
-        pages: list[tuple[DataFrame, str | None]] = []
-        batched: set[str] = set()
-        for key, group in groups.items():
-            if len(group) < _BATCH_MIN.get(key[0], 1):
-                continue
-            pages.append((self._batch_topk(key, list(group.items()), k), None))
-            batched |= set(group)
+        pages: list[tuple[DataFrame, str | None]] = [
+            (self._batch_topk(key, list(group.items()), k), None)
+            for key, group in groups.items()
+        ]
         pages += [
             (self._hits(p, k), qid)
             for qid, p in plans.items()
-            if qid not in batched
+            if p.batch is None
         ]
         # driver pages are joined in Arrow into one LocalPage: a Spark
         # union of local relations would run a job, and an all-driver

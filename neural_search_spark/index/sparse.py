@@ -21,9 +21,9 @@ BM25 block index gives match queries:
 
 Query side: ``SparseIndex`` is a ``query.bm25.PostingsIndex`` whose
 posting contribution is its stored weight, so a sparse query is the BM25
-kernels with one spec ``("", {tid: q_w}, 1)`` — the driver route (one
-pyarrow read into the decoded-postings cache, a numpy accumulate, a local
-page) up to ``DRIVER_MAX_POSTINGS``, else the MaxScore shard function
+kernels with one spec ``("", terms_node({tid: q_w}))`` — the driver route
+(one pyarrow read into the decoded-postings cache, a numpy accumulate, a
+local page) up to ``DRIVER_MAX_POSTINGS``, else the MaxScore shard function
 skipping blocks by their ``max_weight``. Two-phase
 (processor/NeuralSparseTwoPhaseProcessor.java:37-252 semantics) takes its
 candidate window from that kernel over the high-weight tokens and
@@ -44,9 +44,9 @@ from pyspark.sql import types as T
 from ..query.bm25 import (
     PostingsIndex,
     _candidate_scores,
-    _driver_topk,
-    _shard_scored,
+    _tree_page,
     driver_route,
+    terms_node,
 )
 from ..ranking import local_page
 
@@ -343,35 +343,29 @@ def _decode_weights(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
-def _spec(index: SparseIndex, tokens: dict[str, float]):
-    """The one-spec batch of a sparse query: (spec ``("", {tid: q_w},
-    1)`` in tid order, Σdf) over the ``tokens`` present in the index, or
-    None when none is."""
+def _weights(index: SparseIndex, tokens: dict[str, float]):
+    """({tid: q_w} in tid order, Σdf) over the ``tokens`` present in the
+    index, or None when none is."""
     stats = index.token_stats(sorted(tokens))
     if not stats:
         return None
     weights = dict(sorted((tid_py(t), float(tokens[t])) for t in stats))
-    return ("", weights, 1), sum(stats.values())
+    return weights, sum(stats.values())
 
 
 def _topk(index: SparseIndex, tokens: dict[str, float], k: int, mode: str):
     """(doc ids, float32 scores) of the top-k Σ q_w·d_w over ``tokens``,
-    score desc / doc_id asc: the BM25 kernels with one spec, on the
-    route ``mode`` picks (see ``bm25.driver_route``)."""
-    got = _spec(index, tokens)
+    score desc / doc_id asc: the BM25 kernels with the one-spec batch
+    ``("", terms_node(weights))``, on the route ``mode`` picks (see
+    ``bm25.driver_route``)."""
+    got = _weights(index, tokens)
     if got is None:
         return np.empty(0, np.int64), np.empty(0, np.float32)
-    spec, sum_df = got
-    if driver_route(mode, sum_df):
-        _q, ids, scores = _driver_topk(index, [spec], k)
-        return ids, scores
-    top = (
-        _shard_scored(index, sorted(tokens), [spec], k)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .toPandas()
-    )
-    return top["doc_id"].to_numpy(np.int64), top["score"].to_numpy(np.float32)
+    weights, sum_df = got
+    page = _tree_page(
+        [index], [("", terms_node(weights))], k, driver_route(mode, sum_df)
+    ).toArrow()
+    return page["doc_id"].to_numpy(), page["score"].to_numpy()
 
 
 def sparse_index_topk(
@@ -420,9 +414,9 @@ def sparse_index_topk_two_phase(
     ids, scores = _topk(index, high, window, mode)
     total = scores.astype(np.float64)
     # ---- phase 2: low-token contributions for candidates only
-    got = _spec(index, low) if len(ids) else None
+    got = _weights(index, low) if len(ids) else None
     if got is not None:
-        (_q, lo_w, _m), lo_df = got
+        lo_w, lo_df = got
         order = np.argsort(ids)
         ids, total = ids[order], total[order]
         add_ids, add = _candidate_scores(

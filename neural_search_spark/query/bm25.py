@@ -6,31 +6,42 @@ SparseIndex``) decodes a posting into ``(doc_id, contribution)`` — the
 BM25 tf-norm ``tf / (tf + k1·(1 − b + b·dl/avgdl))`` or the stored sparse
 weight — and names the column bounding a block's contributions
 (``max_tfnorm`` / ``max_weight``). A query is a spec ``(query_id,
-{tid: weight}, min_match)`` scored Σ weight · contribution; a single
-query is a batch of one spec. Two scorers, both rank-identical to the
-numpy oracle:
+root)``, the root a small tree:
 
-1. The index kernels (``bm25_topk`` / ``bm25_topk_batch``,
-   ``weighted_term_topk``, ``index.sparse.sparse_index_topk``). Two
-   routes serve a batch:
+* leaves are contribution streams — ``Leaf(h, tid, weight)``, weight ×
+  the contributions of a term's postings in handle ``h``, and
+  ``AnyLeaf(h, tids, weight)``, a constant ``weight`` for every doc
+  holding any term of an expansion (doc ids only);
+* nodes are ``Sum(children, min_match, scale)`` and ``DisMax(children,
+  tie_breaker)``; upper bounds compose bottom-up from each handle's
+  block bounds.
+
+``match`` (``bm25_topk`` / ``bm25_topk_batch``), ``weighted_term_topk``
+and ``index.sparse.sparse_index_topk`` are one ``Sum`` of term leaves
+(``terms_node``); multi_match and match_bool_prefix build deeper trees.
+A single query is a batch of one spec. Two scorers, both rank-identical
+to the numpy oracle:
+
+1. The index kernels. Two routes serve a batch:
 
    * the driver route, when the Σdf of the batch's terms is at most
-     ``DRIVER_MAX_POSTINGS`` (``_driver_topk``: one pyarrow read decoded
-     into the handle's (doc ids, contributions) cache, a numpy
-     accumulate per spec, a local page — no Spark job);
+     ``DRIVER_MAX_POSTINGS`` (``_driver_topk``: one pyarrow read per
+     handle decoded into its (doc ids, contributions) cache, the tree
+     evaluated per spec by ``_node_scores`` — a ``sorted_union`` and
+     ``bincount`` per node — and a local page, no Spark job);
    * the distributed route: one ``applyInPandas`` task per shard runs the
      shard function ``_bm25_shard`` over that shard's posting blocks of
-     the batch's terms. Per spec it runs MaxScore with the coverage gate
-     of ``operator``/``minimum_should_match`` folded in, keeping a top-k
-     threshold and skipping blocks of low-impact (hot) terms that cannot
-     affect the top-k. This is the Spark analog of the reference's
-     block-max machinery (query/HybridScoreBlockBoundaryPropagator.java:53-98
-     advanceShallow + setMinCompetitiveScore,
-     search/collector/HybridTopScoreDocCollector.java:160-168 heap-eviction
-     threshold raising), except exact: MaxScore only prunes documents
-     provably below the final threshold. A single query's shard top-k's
-     are merged by Catalyst TakeOrderedAndProject (``orderBy.limit``) or by
-     an RDD ``treeAggregate`` heap merge (north-rule form); a batch's by a
+     the batch's leaves. Per spec it runs MaxScore over the tree, keeping
+     a top-k threshold and skipping blocks of low-impact (hot) leaves
+     that cannot affect the top-k, with every ``min_match`` gate folded
+     in. This is the Spark analog of the reference's block-max machinery
+     (query/HybridScoreBlockBoundaryPropagator.java:53-98 advanceShallow
+     + setMinCompetitiveScore, search/collector/HybridTopScoreDocCollector
+     .java:160-168 heap-eviction threshold raising), except exact:
+     MaxScore only prunes documents provably below the final threshold.
+     A single query's shard top-k's are merged by Catalyst
+     TakeOrderedAndProject (``orderBy.limit``) or by an RDD
+     ``treeAggregate`` heap merge (north-rule form); a batch's by a
      per-query window.
 
    ``_candidate_scores`` sums a spec over a fixed candidate set only (a
@@ -49,8 +60,10 @@ from __future__ import annotations
 
 import functools
 import heapq
+import math
 import os
 from collections import Counter
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -131,11 +144,11 @@ class PostingsIndex:
     cache, and the tombstones the kernels mask.
 
     A posting decodes to ``(doc_id, contribution)``; the kernels
-    (``_fill_driver_cache``, ``_driver_accumulate``, ``_driver_topk``,
-    ``_shard_scored``, ``_candidate_scores``) score Σ weight ·
-    contribution and read only this interface, so they serve every
-    subclass alike. A subclass names its payload columns with their batch
-    decoders (``payload``), the column bounding a block's contributions
+    (``_fill_driver_cache``, ``_driver_topk``, ``_shard_scored``,
+    ``_candidate_scores``) score trees of weight · contribution leaves
+    and read only this interface, so they serve every subclass alike. A
+    subclass names its payload columns with their batch decoders
+    (``payload``), the column bounding a block's contributions
     (``bound_col``), and implements ``contribution`` (decoded payload →
     contributions, on the driver) and ``block_decoder`` (the picklable
     per-block decode the shard functions run). Contributions must be
@@ -243,7 +256,11 @@ class PostingsIndex:
         """Scan only the term_buckets of the query terms (partition pruning,
         tids/buckets computed driver-side in Python — same h60 hash as the
         writer) + a tid IN (...) predicate pushed into parquet row groups."""
-        tids = sorted({tid_py(t) for t in terms})
+        return self.postings_of({tid_py(t) for t in terms})
+
+    def postings_of(self, tids) -> DataFrame:
+        """``postings_for`` by term ids."""
+        tids = sorted(tids)
         buckets = sorted({t % N_TERM_BUCKETS for t in tids})
         if self._postings_df is None:
             self._postings_df = self.spark.read.parquet(self._postings_path)
@@ -478,122 +495,244 @@ def _single_term_topk(
     return ids[sel], f32[sel]
 
 
+class Leaf(NamedTuple):
+    """A contribution stream: ``weight`` × the contribution of every
+    posting of term ``tid`` in handle ``h`` (a position in the
+    evaluator's handle list)."""
+
+    h: int
+    tid: int
+    weight: float
+
+
+class AnyLeaf(NamedTuple):
+    """A constant-score stream: ``weight`` for every doc holding any of
+    ``tids`` in handle ``h`` (a prefix expansion). Only doc ids are
+    decoded."""
+
+    h: int
+    tids: frozenset
+    weight: float
+
+
+class Sum(NamedTuple):
+    """Σ children over the docs at least ``min_match`` children match,
+    times ``scale``."""
+
+    children: tuple
+    min_match: int = 1
+    scale: float = 1.0
+
+
+class DisMax(NamedTuple):
+    """``max + tie_breaker · (Σ − max)`` over the children; the
+    tie_breaker is in [0, 1], so the node is monotone."""
+
+    children: tuple
+    tie_breaker: float = 0.0
+
+
+def terms_node(weights: dict[int, float], min_match: int = 1) -> Sum:
+    """The match family's tree: one sum node over the term leaves of
+    ``weights``, in its order, on handle 0."""
+    return Sum(tuple([Leaf(0, t, w) for t, w in weights.items()]), min_match)
+
+
+def _leaves(node, scale: float = 1.0, out: list | None = None) -> list:
+    """(leaf, product of the sum scales above it) of every leaf under
+    ``node``, depth first."""
+    out = [] if out is None else out
+    if isinstance(node, Sum):
+        scale *= node.scale
+    for c in node.children:
+        if isinstance(c, (Sum, DisMax)):
+            _leaves(c, scale, out)
+        else:
+            out.append((c, scale))
+    return out
+
+
+def _live_docs(docs, deletes: np.ndarray | None) -> np.ndarray:
+    """The sorted distinct live doc ids of encoded ``docs`` blocks."""
+    ids = np.unique(
+        np.concatenate(
+            [np.empty(0, dtype=np.int64)] + [decode_doc_ids(x) for x in docs]
+        )
+    )
+    live = _live_mask(ids, deletes)
+    return ids if live is None else ids[live]
+
+
+def _read_ordered(node, rank: dict):
+    """(``node`` with every node's children sorted by the first read
+    rank of a leaf under them, that rank) — ``rank`` maps a leaf to its
+    read position. The driver evaluator adds children in child order,
+    so over this tree it adds in read order, exactly as MaxScore reads
+    a flat sum's terms."""
+    if not isinstance(node, (Sum, DisMax)):
+        return node, rank.get(node, np.inf)
+    kids = sorted(
+        (_read_ordered(c, rank) for c in node.children), key=lambda p: p[1]
+    )
+    return node._replace(children=tuple(c for c, _r in kids)), kids[0][1]
+
+
 def _bm25_shard(
     pdf: pd.DataFrame,
-    specs: list[tuple[str, dict[int, float], int]],
+    specs: list[tuple[str, object]],
     k: int,
-    decode,
+    decoders: list,
+    deletes: list,
     bound_col: str,
 ) -> pd.DataFrame:
-    """The shard function of every weighted-postings top-k: every spec
-    ``(query_id, {tid: weight}, min_match)`` over one shard's posting
-    blocks → (query_id, doc_id, score) rows, each spec's shard top-k of
-    Σ weight · contribution in score desc / doc_id asc order. ``decode``
-    is the handle's ``block_decoder()`` and ``bound_col`` its block-bound
-    column. A doc's postings all live in its shard, so every shard top-k
-    is exact.
+    """The shard function of every tree: every spec ``(query_id, root)``
+    over one group of posting blocks → (query_id, doc_id, score) rows,
+    each spec's group top-k in score desc / doc_id asc order. Rows carry
+    an ``h`` column naming their handle when there are several;
+    ``decoders[h]`` is that handle's ``block_decoder()`` and
+    ``deletes[h]`` its tombstones. A doc's postings all live in one
+    group, so every group top-k is exact.
 
-    Per spec it runs MaxScore with the coverage gate folded in. Terms go
-    in descending upper bound (weight × the shard's largest block
-    bound). A term is essential, and admits new candidates, while a doc
-    first seen at it could still reach theta (its bound plus every later
-    term's, with one float32 ulp of slack) and could still match
-    ``min_match`` terms, which a doc first seen past position
-    n − min_match cannot. A non-essential term adds to existing
+    Per spec it runs MaxScore, scoring with the driver evaluator
+    (``_node_scores``) over the tree in read order. Leaves are read in
+    descending upper bound (the leaf weight × the group's largest block
+    bound, × the scales above it). Bound row i holds every leaf from
+    read position i on at its bound, so the tree evaluated over those
+    rows bounds a doc first seen at leaf i, and drops the rows where
+    such a doc could no longer pass a ``min_match`` gate. While its row
+    reaches theta (with one float32 ulp of slack), a leaf is essential
+    and admits new candidates; past that, a leaf adds to existing
     candidates only, decoding just the blocks whose doc_id range holds
-    one. theta is the k-th score among candidates that already match
-    ``min_match`` terms: scores and counts only grow (contributions are
-    ≥ 0), so it bounds the final k-th from below, and a doc that may
-    still fail coverage never raises it. Matched-term counts ride beside
-    the scores and gate at emit. A one-term spec takes
+    one. theta is the k-th score among the candidates that pass the
+    gates: the tree is monotone and contributions are ≥ 0, so it bounds
+    the final k-th from below. A flat sum with one term takes
     ``_single_term_topk``'s block-max skip.
 
-    A term that two or more specs use is decoded in full once and
-    shared; a term one spec uses keeps the pruned decode. Scores sum in
-    float64 and cast to float32 at emit (the oracle's dtype contract), and
-    tombstones are masked at decode, before any doc can become a
+    A stream two or more specs use is decoded in full once and shared;
+    one a single spec uses keeps the pruned decode. Scores sum in
+    float64 and cast to float32 at emit (the oracle's dtype contract),
+    and tombstones are masked at decode, before any doc can become a
     candidate or raise theta."""
+    if "h" in pdf:
+        rows_of = dict(tuple(pdf.groupby(["h", "tid"], sort=False)))
+    else:
+        rows_of = {(0, t): g for t, g in pdf.groupby("tid", sort=False)}
+    streams: dict = {}  # stream key → its rows here, or None
+
+    def rows(leaf):
+        key = leaf[:2]
+        if key not in streams:
+            if isinstance(leaf, AnyLeaf):
+                got = [
+                    rows_of[leaf.h, t]
+                    for t in leaf.tids if (leaf.h, t) in rows_of
+                ]
+                streams[key] = pd.concat(got) if got else None
+            else:
+                streams[key] = rows_of.get(key)
+        return streams[key]
+
+    uses = Counter(
+        leaf[:2]
+        for _q, root in specs
+        for leaf, _s in _leaves(root)
+        if rows(leaf) is not None
+    )
+    full: dict = {}
+
+    def decode(leaf, r):
+        if isinstance(leaf, AnyLeaf):
+            ids = _live_docs(r["docs"], deletes[leaf.h])
+            return ids, np.ones(len(ids))
+        return decoders[leaf.h](r)
+
+    def read(leaf, keep=None):
+        """(ids, float64 weight · contribution) of ``leaf`` here: the full
+        shared decode of a stream several specs use, else the ``keep``
+        blocks (all if None)."""
+        r = streams[leaf[:2]]
+        if uses[leaf[:2]] > 1:
+            got = full.get(leaf[:2])
+            if got is None:
+                got = full[leaf[:2]] = decode(leaf, r)
+        else:
+            got = decode(leaf, r if keep is None else r[keep])
+        return got[0], np.multiply(leaf.weight, got[1], dtype=np.float64)
+
     out_q: list[str] = []
     out_ids: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
     out_sc: list[np.ndarray] = [np.empty(0, dtype=np.float32)]
-    rows_of = dict(tuple(pdf.groupby("tid", sort=False)))
-    uses = Counter(t for _q, w, _m in specs for t in w if t in rows_of)
-    full: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-    def contrib(t: int, keep=None) -> tuple[np.ndarray, np.ndarray]:
-        """(ids, contributions) of term ``t`` here: the full shared decode
-        of a term several specs use, else the ``keep`` blocks (all if
-        None)."""
-        if uses[t] > 1:
-            got = full.get(t)
-            if got is None:
-                got = full[t] = decode(rows_of[t])
-            return got
-        return decode(rows_of[t] if keep is None else rows_of[t][keep])
-
-    for qid, weights, min_match in specs:
-        m = max(min_match, 1)
-        terms = [t for t in weights if t in rows_of]
-        if len(terms) < m:
+    for qid, root in specs:
+        scale_of = dict(_leaves(root))
+        ub = {
+            leaf: leaf.weight * (
+                1.0 if isinstance(leaf, AnyLeaf)
+                else float(rows(leaf)[bound_col].max())
+            )
+            for leaf in scale_of
+            if rows(leaf) is not None
+        }
+        # a stable sort: equal bounds keep depth-first order
+        order = sorted(ub, key=lambda leaf: -ub[leaf] * scale_of[leaf])
+        if not order:
             continue
-        if len(terms) == 1 and uses[terms[0]] == 1:
+        rank = {leaf: i for i, leaf in enumerate(order)}
+        tree = _read_ordered(root, rank)[0]
+        # bound row i: every leaf read at position i or later, at its
+        # bound; a row the gates drop cannot admit a qualifying doc
+        at, bound = _node_scores(
+            tree,
+            lambda leaf: (
+                np.arange(rank[leaf] + 1), np.full(rank[leaf] + 1, ub[leaf])
+            ) if leaf in rank else None,
+        )
+        tail = np.full(len(order), np.nan)
+        tail[at] = bound
+        if np.isnan(tail[0]):
+            continue
+        first = order[0]
+        if (
+            len(order) == 1
+            and isinstance(first, Leaf)
+            and uses[first[:2]] == 1
+            and isinstance(root, Sum)
+            and root.scale == 1.0
+            and first in root.children
+        ):
             ids, f32 = _single_term_topk(
-                rows_of[terms[0]], weights[terms[0]], k, decode, bound_col
+                rows(first), first.weight, k, decoders[first.h], bound_col
             )
         else:
-            ub_of = {
-                t: weights[t] * float(rows_of[t][bound_col].max())
-                for t in terms
-            }
-            order = sorted(terms, key=lambda t: (-ub_of[t], t))
-            ub = np.array([ub_of[t] for t in order])
-            # ub[ti] + tail_ub[ti] bounds a doc first seen at term ti
-            tail_ub = np.concatenate([np.cumsum(ub[::-1])[::-1][1:], [0.0]])
+            read_so_far: dict = {}
             ids = np.empty(0, dtype=np.int64)
-            sc = np.empty(0, dtype=np.float64)
-            n_hit = np.empty(0, dtype=np.float64)
+            scored = None
             theta = -np.inf
-            for ti, t in enumerate(order):
-                w = weights[t]
+            for i, leaf in enumerate(order):
                 thr = float(np.nextafter(np.float32(theta), np.float32(-np.inf)))
-                if ti <= len(order) - m and ub[ti] + tail_ub[ti] >= thr:
-                    t_ids, c = contrib(t)
-                    ids, inv = sorted_union(np.concatenate([ids, t_ids]))
-                    sc = np.bincount(
-                        inv,
-                        weights=np.concatenate(
-                            [sc, np.multiply(w, c, dtype=np.float64)]
-                        ),
-                        minlength=len(ids),
-                    )
-                    n_hit = np.bincount(
-                        inv, weights=np.concatenate([n_hit, np.ones(len(t_ids))]),
-                        minlength=len(ids),
-                    )
+                if tail[i] >= thr:  # False on a dropped (nan) row
+                    read_so_far[leaf] = read(leaf)
+                    ids = np.union1d(ids, read_so_far[leaf][0])
                 elif not len(ids):
-                    break  # nothing admitted, and no later term admits
+                    break  # nothing admitted, and no later leaf admits
                 else:
-                    rows = rows_of[t]
+                    r = rows(leaf)
                     keep = _blocks_holding(
-                        ids, rows["min_doc_id"].to_numpy(),
-                        rows["max_doc_id"].to_numpy(),
+                        ids, r["min_doc_id"].to_numpy(),
+                        r["max_doc_id"].to_numpy(),
                     )
                     if not keep.any():
                         continue
-                    t_ids, c = contrib(t, keep)
-                    pos = np.searchsorted(ids, t_ids)
-                    ok = ids[np.minimum(pos, len(ids) - 1)] == t_ids
-                    np.add.at(
-                        sc, pos[ok], np.multiply(w, c[ok], dtype=np.float64)
-                    )
-                    np.add.at(n_hit, pos[ok], 1.0)
-                qual = sc if m == 1 else sc[n_hit >= m]
-                if len(qual) >= k:
-                    theta = float(
-                        np.partition(qual, len(qual) - k)[len(qual) - k]
-                    )
-            ok = n_hit >= m
-            ids, f32 = ids[ok], sc[ok].astype(np.float32)
+                    t_ids, v = read(leaf, keep)
+                    ok = _isin_sorted(t_ids, ids)
+                    read_so_far[leaf] = (t_ids[ok], v[ok])
+                scored = _node_scores(tree, read_so_far.get)
+                if len(scored[1]) >= k:
+                    theta = float(np.partition(
+                        scored[1], len(scored[1]) - k
+                    )[len(scored[1]) - k])
+            if scored is None:
+                continue
+            ids, f32 = scored[0], scored[1].astype(np.float32)
             sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
             ids, f32 = ids[sel], f32[sel]
         out_q.extend([qid] * len(ids))
@@ -729,46 +868,83 @@ def _fill_driver_cache(index: PostingsIndex, tids) -> None:
         )
 
 
-def _driver_accumulate(
-    index: PostingsIndex, weights: dict[int, float], entries=None
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(doc_ids, float64 Σ weights[tid]·contribution, per-doc
-    matched-term counts) over EVERY doc matching a tid of ``weights``,
-    summed in the dict's order from ``entries`` ({tid: (doc ids,
-    contributions) or None} for every tid), by default the handle's
-    driver cache — which ``_fill_driver_cache`` must then already cover.
-    Callers apply their own coverage gate and truncation (``_driver_topk``
-    top-k, multi_match field combine)."""
-    entries = index._driver_cache if entries is None else entries
-    ids_parts: list[np.ndarray] = []
-    sc_parts: list[np.ndarray] = []
-    for tid, w in weights.items():
-        got = entries[tid]
-        if got is None:
-            continue
-        ids, contrib = got
-        # cache entries stay delete-agnostic; tombstones mask at use so a
-        # later with_deletes() change needs no cache invalidation
-        live = _live_mask(ids, index.deletes)
-        if live is not None:
-            ids, contrib = ids[live], contrib[live]
-        ids_parts.append(ids)
-        # float64 whatever the stored dtype: a Python float times a
-        # float32 array would stay float32
-        sc_parts.append(np.multiply(w, contrib, dtype=np.float64))
-    if not ids_parts:
-        return (
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.float64),
-            np.empty(0, dtype=np.int64),
+def _weighted(index: PostingsIndex, got, w: float):
+    """A leaf's (live doc ids, float64 w · contribution) from a (doc ids,
+    contributions) entry, or None for an absent term."""
+    if got is None:
+        return None
+    ids, contrib = got
+    # cache entries stay delete-agnostic; tombstones mask at use so a
+    # later with_deletes() change needs no cache invalidation
+    live = _live_mask(ids, index.deletes)
+    if live is not None:
+        ids, contrib = ids[live], contrib[live]
+    # float64 whatever the stored dtype: a Python float times a float32
+    # array would stay float32
+    return ids, np.multiply(w, contrib, dtype=np.float64)
+
+
+_NO_DOCS = (np.empty(0, dtype=np.int64), np.empty(0))
+
+
+def _node_scores(node, value) -> tuple[np.ndarray, np.ndarray]:
+    """(doc ids, float64 scores) of every doc that the ``Sum`` or
+    ``DisMax`` ``node`` matches — the driver evaluator. ``value(leaf)``
+    gives a leaf's (doc ids, float64 values), or None. A node combines
+    its children's runs with one ``sorted_union`` and ``bincount``,
+    adding in child order; a lone child run is already its combine."""
+    parts = [
+        p for p in (
+            _node_scores(c, value) if isinstance(c, (Sum, DisMax))
+            else value(c) or _NO_DOCS
+            for c in node.children
         )
-    acc_ids, inv = sorted_union(np.concatenate(ids_parts))
-    acc_sc = np.bincount(
-        inv, weights=np.concatenate(sc_parts), minlength=len(acc_ids)
-    )
-    # each term appends one slice per doc it matches, so the plain
-    # bincount of inv IS the per-doc matched-term count
-    return acc_ids, acc_sc, np.bincount(inv, minlength=len(acc_ids))
+        if len(p[0])
+    ]
+    if not parts:
+        return _NO_DOCS
+    many = len(parts) > 1
+    if many:
+        ids, inv = sorted_union(np.concatenate([p[0] for p in parts]))
+        flat = np.concatenate([p[1] for p in parts])
+        sc = np.bincount(inv, weights=flat, minlength=len(ids))
+    else:
+        ids, sc = parts[0]
+    if isinstance(node, DisMax):
+        if not many:
+            return ids, sc
+        mx = np.full(len(ids), -np.inf)
+        np.maximum.at(mx, inv, flat)
+        return ids, mx + node.tie_breaker * (sc - mx)
+    if node.min_match > 1:
+        if not many:
+            return _NO_DOCS
+        # each child run lists a doc once, so the plain bincount of inv
+        # is the per-doc matched-children count
+        ok = np.bincount(inv, minlength=len(ids)) >= node.min_match
+        ids, sc = ids[ok], sc[ok]
+    if node.scale != 1.0:
+        sc = sc * node.scale
+    return ids, sc
+
+
+def _ranked(
+    specs: list[tuple[str, object]], k: int, value
+) -> tuple[list[str], np.ndarray, np.ndarray]:
+    """Each spec's top-k by the driver evaluator → per-row (query_ids,
+    doc_ids, float32 scores), each query's rows contiguous in score desc
+    / doc_id asc order."""
+    qids: list[str] = []
+    ids_parts: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+    sc_parts: list[np.ndarray] = [np.empty(0, dtype=np.float32)]
+    for qid, root in specs:
+        ids, sc = _node_scores(root, value)
+        f32 = sc.astype(np.float32)
+        sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
+        qids.extend([qid] * len(sel))
+        ids_parts.append(ids[sel])
+        sc_parts.append(f32[sel])
+    return qids, np.concatenate(ids_parts), np.concatenate(sc_parts)
 
 
 def _candidate_scores(
@@ -785,8 +961,8 @@ def _candidate_scores(
     holds a candidate; what they decode is partial, so it is never
     cached, but on the driver a term the cache already holds is taken
     from it. Every term's postings are masked to the candidates before
-    ``_driver_accumulate`` sums them, so a hot term's corpus-wide
-    postings never enter the sum."""
+    the driver evaluator sums them, so a hot term's corpus-wide postings
+    never enter the sum."""
 
     def within(ids, contrib):
         ok = _isin_sorted(ids, cand)
@@ -841,39 +1017,59 @@ def _candidate_scores(
             entries[t] = (
                 g["doc_id"].to_numpy(), g["contribution"].to_numpy()
             )
-    ids, sc, _n = _driver_accumulate(index, weights, entries)
-    return ids, sc
+    return _node_scores(
+        terms_node(weights),
+        lambda leaf: _weighted(index, entries[leaf.tid], leaf.weight),
+    )
 
 
 def _driver_topk(
-    index: PostingsIndex, specs: list[tuple[str, dict[int, float], int]], k: int
+    handles: list[PostingsIndex], specs: list[tuple[str, object]], k: int
 ) -> tuple[list[str], np.ndarray, np.ndarray]:
-    """The driver route of every weighted-postings top-k, single query or
-    batch:
-    ``specs`` = [(query_id, {tid: weight}, min_match)] → per-row
-    (query_ids, doc_ids, float32 scores), each query's rows contiguous
-    in score desc / doc_id asc order — rank-identical to the distributed
-    kernels (same float32 cast, same doc_id tiebreak). One cache fill
-    over the union of the specs' tids, one accumulate per spec, and one
-    eviction after the last spec."""
-    _fill_driver_cache(index, {t for _q, w, _m in specs for t in w})
-    qids: list[str] = []
-    ids_parts: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
-    sc_parts: list[np.ndarray] = [np.empty(0, dtype=np.float32)]
-    for qid, weights, min_match in specs:
-        acc_ids, acc_sc, n_matched = _driver_accumulate(index, weights)
-        if min_match > 1:
-            ok = n_matched >= min_match
-            acc_ids, acc_sc = acc_ids[ok], acc_sc[ok]
-        f32 = acc_sc.astype(np.float32)
-        sel = np.lexsort((acc_ids, -f32.astype(np.float64)))[:k]
-        qids.extend([qid] * len(sel))
-        ids_parts.append(acc_ids[sel])
-        sc_parts.append(f32[sel])
-    evict_fifo(
-        index._driver_cache, index.driver_cache_terms, index.driver_cache_bytes
-    )
-    return qids, np.concatenate(ids_parts), np.concatenate(sc_parts)
+    """The driver route of every tree, single query or batch: ``specs``
+    = [(query_id, root)] over ``handles`` → ``_ranked``'s rows. One
+    cache fill per handle over its term leaves, one docs-only read per
+    handle for its constant-score leaves — kept out of the cache, where
+    a short prefix's thousands of expansions would flush the scored
+    terms — and one eviction after the last spec."""
+    term_tids: dict[int, set] = {}
+    any_tids: dict[int, set] = {}
+    for _q, root in specs:
+        for leaf, _s in _leaves(root):
+            if isinstance(leaf, AnyLeaf):
+                any_tids.setdefault(leaf.h, set()).update(leaf.tids)
+            else:
+                term_tids.setdefault(leaf.h, set()).add(leaf.tid)
+    for h, tids in term_tids.items():
+        _fill_driver_cache(handles[h], tids)
+    docs: dict[tuple[int, int], np.ndarray] = {}
+    for h, tids in any_tids.items():
+        slices, flat = _decode_by_tid(
+            _read_postings(handles[h], tids, ["tid", "docs"]),
+            {"docs": decode_doc_ids_batch},
+        )
+        for t, sl in slices.items():
+            ids = flat["docs"][sl]
+            live = _live_mask(ids, handles[h].deletes)
+            docs[h, t] = ids if live is None else ids[live]
+
+    def value(leaf):
+        if isinstance(leaf, AnyLeaf):
+            ids = np.unique(np.concatenate([
+                np.empty(0, dtype=np.int64),
+                *(docs[leaf.h, t] for t in leaf.tids if (leaf.h, t) in docs),
+            ]))
+            return ids, np.full(len(ids), leaf.weight)
+        index = handles[leaf.h]
+        return _weighted(index, index._driver_cache[leaf.tid], leaf.weight)
+
+    out = _ranked(specs, k, value)
+    for index in handles:
+        evict_fifo(
+            index._driver_cache, index.driver_cache_terms,
+            index.driver_cache_bytes,
+        )
+    return out
 
 
 def bm25_topk(
@@ -913,14 +1109,13 @@ def bm25_topk(
         return local_page(index.spark, [], np.float32([]))
     idfs = {tid_py(t): lucene_idf(index.n_docs, stats[t]) for t in terms}
     return _term_topk(
-        index, terms, idfs, sum(stats[t] for t in terms), k,
+        index, idfs, sum(stats[t] for t in terms), k,
         min_match=min_match, merge=merge, mode=mode,
     )
 
 
 def _term_topk(
     index: BM25Index,
-    terms: list[str],
     weights: dict[int, float],
     sum_df: int,
     k: int,
@@ -930,47 +1125,43 @@ def _term_topk(
 ) -> DataFrame:
     """The body of bm25_topk and weighted_term_topk: top-k of
     Σ_t weights[tid] · tfnorm_t over docs matching ≥ min_match of the
-    (in-vocabulary) ``terms``: the driver function, or the shard function
-    with this one spec merged by TakeOrderedAndProject or a treeAggregate
-    heap."""
+    (in-vocabulary) terms: ``_tree_page`` with this one spec, or the
+    shard function's top-k's merged by a treeAggregate heap."""
     spark = index.spark
     if merge == "treeAggregate" and mode == "auto":
         mode = "distributed"  # the caller asked for the cluster merge path
-    spec = ("", {t: weights[t] for t in sorted(weights)}, min_match)
-    if driver_route(mode, sum_df):
-        _qids, ids, scores = _driver_topk(index, [spec], k)
-        return local_page(spark, ids, scores)
-    shard_topk = _shard_scored(index, terms, [spec], k).drop("query_id")
+    specs = [
+        ("", terms_node({t: weights[t] for t in sorted(weights)}, min_match))
+    ]
+    driver = driver_route(mode, sum_df)
+    if driver or merge != "treeAggregate":
+        return _tree_page([index], specs, k, driver)
+    shard_topk = _shard_scored([index], specs, k).drop("query_id")
 
-    if merge == "treeAggregate":
-        # north-rule form: per-partition k-heaps merged via treeAggregate
-        def seq(heap, row):
-            item = (float(row["score"]), -int(row["doc_id"]))
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-            return heap
+    # north-rule form: per-partition k-heaps merged via treeAggregate
+    def seq(heap, row):
+        item = (float(row["score"]), -int(row["doc_id"]))
+        if len(heap) < k:
+            heapq.heappush(heap, item)
+        elif item > heap[0]:
+            heapq.heapreplace(heap, item)
+        return heap
 
-        def comb(h1, h2):
-            for item in h2:
-                if len(h1) < k:
-                    heapq.heappush(h1, item)
-                elif item > h1[0]:
-                    heapq.heapreplace(h1, item)
-            return h1
+    def comb(h1, h2):
+        for item in h2:
+            if len(h1) < k:
+                heapq.heappush(h1, item)
+            elif item > h1[0]:
+                heapq.heapreplace(h1, item)
+        return h1
 
-        heap = shard_topk.rdd.treeAggregate([], seq, comb, depth=2)
-        rows = sorted(heap, key=lambda x: (-x[0], -x[1]))
-        return local_page(
-            spark,
-            [-d for _, d in rows],
-            np.array([s for s, _ in rows], dtype=np.float32),
-        )
-
-    # TakeOrderedAndProject: per-partition top-k then a single merge on the
-    # driver — the Catalyst-native equivalent of the treeAggregate heap merge
-    return topk_page(shard_topk, k)
+    heap = shard_topk.rdd.treeAggregate([], seq, comb, depth=2)
+    rows = sorted(heap, key=lambda x: (-x[0], -x[1]))
+    return local_page(
+        spark,
+        [-d for _, d in rows],
+        np.array([s for s, _ in rows], dtype=np.float32),
+    )
 
 
 def weighted_term_topk(
@@ -993,34 +1184,89 @@ def weighted_term_topk(
         return local_page(index.spark, [], np.float32([]))
     weights = {tid_py(t): float(term_weights[t]) for t in terms}
     return _term_topk(
-        index, terms, weights, sum(stats[t] for t in terms), k, mode=mode
+        index, weights, sum(stats[t] for t in terms), k, mode=mode
     )
 
 
 def _shard_scored(
-    index: PostingsIndex,
-    terms: list[str],
-    specs: list[tuple[str, dict[int, float], int]],
-    k: int,
+    handles: list[PostingsIndex], specs: list[tuple[str, object]], k: int
 ) -> DataFrame:
-    """``_bm25_shard`` over the pruned postings scan of ``terms``: one
-    ``applyInPandas`` task per shard scores every spec → (query_id,
-    doc_id, score), at most k rows per spec and shard."""
-    decode, bound_col = index.block_decoder(), index.bound_col
+    """``_bm25_shard`` over the union of the handles' pruned postings
+    scans of their leaves' tids: one ``applyInPandas`` task per group
+    scores every spec → (query_id, doc_id, score), at most k rows per
+    spec and group. The handles share one payload layout.
+
+    Groups are ``pmod(shard_id, g)``, ``g`` the gcd of the handles'
+    n_shards. ``shard_id`` is ``pmod(xxhash64(doc_id, 7), n)``, a
+    function of the doc id alone, and ``g`` divides every ``n``, so
+    ``pmod(pmod(h, n), g) == pmod(h, g)``: every handle's postings of a
+    doc land in one group whatever mix of layouts the handles use. When
+    the layouts match the group key is ``shard_id`` itself, and one
+    handle's scan is exactly its ``shard_id`` plan."""
+    decoders = [ix.block_decoder() for ix in handles]
+    deletes = [ix.deletes for ix in handles]
+    bound_col = handles[0].bound_col
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _bm25_shard(pdf, specs, k, decode, bound_col)
+        return _bm25_shard(pdf, specs, k, decoders, deletes, bound_col)
 
-    # column-prune before the shuffle: the scorer needs the ids, doc-id
-    # range, payload and bound of each block, all but the payload
-    # fixed-width → zero-copy Arrow→numpy
-    blocks = index.postings_for(terms).select(
-        "shard_id", "tid", "min_doc_id", "max_doc_id", "docs",
-        *index.payload, bound_col,
-    )
+    tids: list[set] = [set() for _ in handles]
+    for _q, root in specs:
+        for leaf, _s in _leaves(root):
+            tids[leaf.h].update(
+                leaf.tids if isinstance(leaf, AnyLeaf) else (leaf.tid,)
+            )
+    g = math.gcd(*(ix.n_shards for ix in handles))
+    blocks = None
+    for h, index in enumerate(handles):
+        if not tids[h]:
+            continue
+        shard = F.col("shard_id")
+        if index.n_shards != g:
+            shard = F.pmod(shard, F.lit(g)).alias("shard_id")
+        # column-prune before the shuffle: the scorer needs the ids,
+        # doc-id range, payload and bound of each block, all but the
+        # payload fixed-width → zero-copy Arrow→numpy
+        cols = [
+            shard, "tid", "min_doc_id", "max_doc_id", "docs",
+            *index.payload, bound_col,
+        ]
+        if len(handles) > 1:
+            cols.append(F.lit(h).cast("long").alias("h"))
+        part = index.postings_of(tids[h]).select(*cols)
+        blocks = part if blocks is None else blocks.unionAll(part)
     return blocks.groupBy("shard_id").applyInPandas(
         score_shard, BATCH_TOPK_SCHEMA
     )
+
+
+def _tree_page(
+    handles: list[PostingsIndex],
+    specs: list[tuple[str, object]],
+    k: int,
+    driver: bool,
+) -> DataFrame:
+    """One spec's (doc_id, score, rank) page: a local page on the
+    driver, else the shard top-k's merged by TakeOrderedAndProject."""
+    if driver:
+        _q, ids, scores = _driver_topk(handles, specs, k)
+        return local_page(handles[0].spark, ids, scores)
+    return topk_page(_shard_scored(handles, specs, k).drop("query_id"), k)
+
+
+def _tree_batch_page(
+    handles: list[PostingsIndex],
+    specs: list[tuple[str, object]],
+    k: int,
+    driver: bool,
+) -> DataFrame:
+    """A batch's (query_id, doc_id, score, rank) page: a local page on
+    the driver, else the shard top-k's merged by a per-query window."""
+    if driver:
+        return local_batch_page(
+            handles[0].spark, *_driver_topk(handles, specs, k)
+        )
+    return batch_page(_shard_scored(handles, specs, k), k)
 
 
 def bm25_topk_batch(
@@ -1062,12 +1308,14 @@ def bm25_topk_batch(
         }
         # see bm25_topk: OOV clauses count toward the coverage bar
         if weights and min_match <= len(weights):
-            specs.append((qid, dict(sorted(weights.items())), min_match))
+            specs.append(
+                (qid, terms_node(dict(sorted(weights.items())), min_match))
+            )
     if not specs:
         return empty_batch_page(spark)
-    if driver_route(mode, sum(stats.values())):
-        return local_batch_page(spark, *_driver_topk(index, specs, k))
-    return batch_page(_shard_scored(index, all_terms, specs, k), k)
+    return _tree_batch_page(
+        [index], specs, k, driver_route(mode, sum(stats.values()))
+    )
 
 
 def bm25_score_all_join(

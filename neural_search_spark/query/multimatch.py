@@ -14,32 +14,22 @@ field's score, and the per-doc combine is
   contributions under ONE blended idf (max df and max n_docs across the
   fields), then a sum over terms.
 
-One kernel serves all three. A spec is ``(query_id, per-field tids,
-idfs, boosts)``, planned once by ``_plan`` for both entries, and
-``_combine`` turns a spec plus a ``contrib(fid, tid) → (ids, tf-norm)``
-source into ``(ids, combined)``. The two routes differ only in the
-source:
-
-* **driver** (auto when the query's total Σdf across fields is under
-  ``DRIVER_MAX_POSTINGS``): each field's driver cache is filled by one
-  pyarrow read, then serves every term's tf-norms — zero Spark jobs.
-* **distributed**: the shard function of ``multi_match_topk_batch`` with
-  one spec. The per-field postings union is grouped by shard and each
-  task decodes its rows once per (field, term) and combines every spec
-  locally; the per-query window takes the global top-k.
-
-Why a doc's combine is complete inside one group: ``shard_id`` is
-``pmod(xxhash64(doc_id, 7), n)``, a function of the doc id alone. The
-kernel groups by ``pmod(shard_id, g)`` with ``g`` the gcd of the
-fields' ``n_shards``; since ``g`` divides every ``n``,
-``pmod(pmod(h, n), g) == pmod(h, g)``, so every field's postings for a
-doc land in the same group whatever mix of layouts the fields use. When
-the layouts match, ``g == n_shards`` and the group key is ``shard_id``
-itself.
+A query is a tree of the BM25 kernels (``query/bm25.py``) over the field
+indexes, one handle per field, planned by ``_plan``: a leaf per (field,
+term) weighted by the term's idf, a ``Sum`` per field scaled by its
+boost, and then a ``DisMax`` of the field sums (best_fields), a ``Sum``
+of them (most_fields), or a ``Sum`` of per-term ``DisMax`` nodes over
+one-leaf field sums (cross_fields). Every product is idf · tf-norm, then
+× boost. A single query is its batch with one spec, and both run BM25's
+two routes: the driver evaluator when the Σdf over every field is at
+most ``DRIVER_MAX_POSTINGS`` (zero Spark jobs), else the MaxScore shard
+function over the union of the fields' postings, grouped by a key that
+keeps each doc's postings of every field together whatever mix of
+n_shards the fields use (``bm25._shard_scored``).
 
 ``multi_match_field_topk`` (types phrase and bool_prefix) and SAYT
 combine per-field top-k pages instead of postings: ``_dismax_union_topk``
-collects the ≤k-row pages and runs the same combine on the driver.
+runs the driver evaluator over the pages' entries, each page a leaf.
 
 Deletes: each field index's tombstone set masks during decode (Lucene
 liveDocs), same contract as ``bm25_topk``.
@@ -48,7 +38,6 @@ liveDocs), same contract as ``bm25_topk``.
 from __future__ import annotations
 
 import math
-from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -56,20 +45,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
-from ..index.cache import evict_fifo
-from ..ranking import batch_page, empty_batch_page, local_page, sorted_union
+from ..ranking import empty_batch_page, local_page
 from ..tokenizer import tokenize_py
 from .bm25 import (
-    BATCH_TOPK_SCHEMA,
     BM25Index,
-    _decode_tfn,
-    _driver_accumulate,
-    _fill_driver_cache,
+    DisMax,
+    Leaf,
+    Sum,
+    _ranked,
+    _tree_batch_page,
+    _tree_page,
     driver_route,
     lucene_idf,
 )
-
-_NONE = (np.empty(0, np.int64), np.empty(0))
 
 
 def parse_field_boosts(fields: list[str]) -> list[tuple[str, float]]:
@@ -105,33 +93,31 @@ def _field_index_list(
     return [field_indexes[n] for n, _ in fb], [b for _, b in fb]
 
 
-class MatchSpec(NamedTuple):
-    """One query of the kernel: per field (in field order) its in-vocabulary
-    tids and their idfs, and the field's boost."""
-
-    query_id: str
-    tids: list[list[int]]
-    idfs: list[dict[int, float]]
-    boosts: list[float]
-
-
 def _plan(
     field_indexes: dict[str, BM25Index],
     queries: list[tuple[str, str]],
     fields: list[str],
     match_type: str,
-) -> tuple[list[BM25Index], list[dict[str, int]], list[MatchSpec]]:
+    tie_breaker: float,
+) -> tuple[list[BM25Index], int, list[tuple[str, object]]]:
     """Resolve a batch of (query_id, text) pairs against the per-field
-    dictionaries → (indexes, per-field {term: df} over the batch
-    vocabulary, specs of the queries with at least one in-vocabulary
-    term). Each field's idfs come from its own statistics; cross_fields
-    blends them instead — max df and max n_docs across the fields — so a
-    term carries ONE idf everywhere (the corpus twin's single-n_docs
-    semantics; per-field indexes over one corpus have equal n_docs)."""
+    dictionaries → (indexes, Σdf of the batch vocabulary over every
+    field, a (query_id, tree) spec per query with at least one
+    in-vocabulary term). Each field's idfs come from its own
+    statistics; cross_fields blends them instead — max df and max
+    n_docs across the fields — so a term carries ONE idf everywhere (the
+    corpus twin's single-n_docs semantics; per-field indexes over one
+    corpus have equal n_docs)."""
     if match_type not in ("best_fields", "most_fields", "cross_fields"):
         raise ValueError(
             f"multi_match type must be best_fields|most_fields|"
             f"cross_fields, got {match_type!r}"
+        )
+    if not 0.0 <= tie_breaker <= 1.0:
+        # Lucene's DisjunctionMaxQuery rejects it too; the kernels prune
+        # on the dis-max being monotone
+        raise ValueError(
+            f"multi_match tie_breaker must be in [0, 1], got {tie_breaker!r}"
         )
     indexes, boosts = _field_index_list(field_indexes, fields)
     q_terms = {qid: sorted(set(tokenize_py(text))) for qid, text in queries}
@@ -152,134 +138,30 @@ def _plan(
     specs = []
     for qid, ts in q_terms.items():
         idfs = [{tid_py(t): f[t] for t in ts if t in f} for f in idf_of]
-        if any(idfs):
-            specs.append(MatchSpec(qid, [list(d) for d in idfs], idfs, boosts))
-    return indexes, stats, specs
-
-
-def _fold(
-    parts: list[tuple[np.ndarray, np.ndarray]], tie_breaker: float | None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-doc combine of (ids, scores) parts → (ids, combined): the sum,
-    or with a tie_breaker the dis-max ``max + tie_breaker · (sum − max)``.
-    A part lists each doc once (a term's postings, a page), so a lone
-    part is already its own combine."""
-    if len(parts) < 2:
-        return parts[0] if parts else _NONE
-    all_ids = np.concatenate([p[0] for p in parts])
-    all_sc = np.concatenate([p[1] for p in parts])
-    uniq, inv = sorted_union(all_ids)
-    sm = np.bincount(inv, weights=all_sc, minlength=len(uniq))
-    if tie_breaker is None:
-        return uniq, sm
-    mx = np.full(len(uniq), -np.inf)
-    np.maximum.at(mx, inv, all_sc)
-    return uniq, mx + tie_breaker * (sm - mx)
-
-
-def _combine(
-    spec: MatchSpec, contrib, match_type: str, tie_breaker: float
-) -> tuple[np.ndarray, np.ndarray]:
-    """One spec's per-doc multi_match scores from a ``contrib(fid, tid)
-    → (ids, tf-norm)`` source → (ids, combined float64).
-
-    best_fields / most_fields: each field sums idf · tf-norm over its
-    terms and multiplies by its boost, then the fields dis-max (+
-    tie_breaker) or sum. cross_fields: each term dis-maxes the fields'
-    idf · tf-norm · boost (+ tie_breaker), then the terms sum."""
-    if match_type == "cross_fields":
-        per_term = []
-        for tid in dict.fromkeys(t for tids in spec.tids for t in tids):
-            parts = []
-            for fid, idfs in enumerate(spec.idfs):
-                if tid in idfs:
-                    ids, tfn = contrib(fid, tid)
-                    parts.append((ids, idfs[tid] * tfn * spec.boosts[fid]))
-            per_term.append(_fold(parts, tie_breaker))
-        return _fold(per_term, None)
-    per_field = []
-    for fid, tids in enumerate(spec.tids):
-        parts = []
-        for tid in tids:
-            ids, tfn = contrib(fid, tid)
-            parts.append((ids, spec.idfs[fid][tid] * tfn))
-        ids, sm = _fold(parts, None)
-        per_field.append((ids, sm * spec.boosts[fid]))
-    return _fold(
-        per_field, None if match_type == "most_fields" else tie_breaker
-    )
-
-
-def _top(
-    ids: np.ndarray, combined: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k of combined scores, float32 desc / doc_id asc."""
-    f32 = combined.astype(np.float32)
-    sel = np.lexsort((ids, -f32.astype(np.float64)))[:k]
-    return ids[sel], f32[sel]
-
-
-def _shard_topk(
-    indexes: list[BM25Index],
-    stats: list[dict[str, int]],
-    specs: list[MatchSpec],
-    match_type: str,
-    tie_breaker: float,
-    k: int,
-) -> DataFrame:
-    """The shard function: every spec from ONE grouped pass over the
-    union of the fields' postings → (query_id, doc_id, score) rows, a
-    local top-k per spec and group. Groups are ``pmod(shard_id, g)`` with
-    ``g`` the gcd of the fields' n_shards (why that is exact: the module
-    docstring). Decoded (field, term) tf-norms are shared by every spec
-    of the batch."""
-    params = [(ix.k1, ix.b, ix.avgdl, ix.deletes) for ix in indexes]
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        fid_arr = pdf["fid"].to_numpy(dtype=np.int64)
-        tid_arr = pdf["tid"].to_numpy(dtype=np.int64)
-        cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-
-        def contrib(fid, tid):
-            got = cache.get((fid, tid))
-            if got is None:
-                rows = pdf[(fid_arr == fid) & (tid_arr == tid)]
-                got = _decode_tfn(rows, *params[fid]) if len(rows) else _NONE
-                cache[(fid, tid)] = got
-            return got
-
-        qids, ids, scores = [], [], []
-        for spec in specs:
-            top_ids, top_sc = _top(
-                *_combine(spec, contrib, match_type, tie_breaker), k
-            )
-            qids += [spec.query_id] * len(top_ids)
-            ids.append(top_ids)
-            scores.append(top_sc)
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(qids, dtype=str),
-                "doc_id": np.concatenate(ids),
-                "score": np.concatenate(scores),
-            }
-        )
-
-    g = math.gcd(*(ix.n_shards for ix in indexes))
-    blocks = None
-    for fid, (index, st) in enumerate(zip(indexes, stats)):
-        if not st:
+        if not any(idfs):
             continue
-        shard = F.col("shard_id")
-        if index.n_shards != g:
-            shard = F.pmod(shard, F.lit(g)).alias("shard_id")
-        part = index.postings_for(sorted(st)).select(
-            shard, "tid", "docs", "tfs", "dls",
-            F.lit(fid).cast("long").alias("fid"),
-        )
-        blocks = part if blocks is None else blocks.unionAll(part)
-    return blocks.groupBy("shard_id").applyInPandas(
-        score_shard, BATCH_TOPK_SCHEMA
-    )
+        if match_type == "cross_fields":
+            root = Sum(tuple(
+                DisMax(
+                    tuple(
+                        Sum((Leaf(h, tid, d[tid]),), 1, boosts[h])
+                        for h, d in enumerate(idfs) if tid in d
+                    ),
+                    tie_breaker,
+                )
+                for tid in dict.fromkeys(t for d in idfs for t in d)
+            ))
+        else:
+            per_field = tuple(
+                Sum(tuple(Leaf(h, t, w) for t, w in d.items()), 1, boosts[h])
+                for h, d in enumerate(idfs) if d
+            )
+            root = (
+                Sum(per_field) if match_type == "most_fields"
+                else DisMax(per_field, tie_breaker)
+            )
+        specs.append((qid, root))
+    return indexes, sum(sum(st.values()) for st in stats), specs
 
 
 def multi_match_index_topk(
@@ -299,37 +181,19 @@ def multi_match_index_topk(
     blended-df combine, see ``cross_fields_scored``). The fields' indexes
     may use any mix of n_shards.
 
-    mode: 'auto' (driver combine when the total Σdf across all fields is
-    at most DRIVER_MAX_POSTINGS), 'driver', or 'distributed' (the batch
-    kernel with this one spec)."""
-    indexes, stats, specs = _plan(
-        field_indexes, [("", query_text)], fields, match_type
+    mode: 'auto' (the driver evaluator when the total Σdf across all
+    fields is at most DRIVER_MAX_POSTINGS), 'driver', or 'distributed'
+    — the batch kernels with this one spec."""
+    indexes, sum_df, specs = _plan(
+        field_indexes, [("", query_text)], fields, match_type, tie_breaker
     )
-    spark = indexes[0].spark
     if not specs:
-        return local_page(spark, [], np.float32([]))
-    if not driver_route(mode, sum(sum(st.values()) for st in stats)):
-        return batch_page(
-            _shard_topk(indexes, stats, specs, match_type, tie_breaker, k), k
-        ).select("doc_id", "score", "rank")
-    spec = specs[0]
-    # ONE batched pyarrow read fills each field's driver cache for every
-    # query term; the per-term accumulates below read the cache
-    for index, tids in zip(indexes, spec.tids):
-        _fill_driver_cache(index, tids)
-
-    def contrib(fid, tid):
-        ids, tfn, _n = _driver_accumulate(indexes[fid], {tid: 1.0})
-        return ids, tfn
-
-    ids, scores = _top(*_combine(spec, contrib, match_type, tie_breaker), k)
-    for index in indexes:
-        evict_fifo(
-            index._driver_cache,
-            index.driver_cache_terms,
-            index.driver_cache_bytes,
-        )
-    return local_page(spark, ids, scores)
+        return local_page(indexes[0].spark, [], np.float32([]))
+    if driver_route(mode, sum_df):
+        return _tree_page(indexes, specs, k, True)
+    return _tree_batch_page(indexes, specs, k, False).select(
+        "doc_id", "score", "rank"
+    )
 
 
 def multi_match_topk_batch(
@@ -340,21 +204,21 @@ def multi_match_topk_batch(
     tie_breaker: float = 0.0,
     k: int = 10,
 ) -> DataFrame:
-    """multi_match for a BATCH of queries in ONE Spark job — the msearch /
+    """multi_match for a BATCH of queries — the msearch /
     cluster-throughput shape, the multi-field sibling of
-    ``bm25.bm25_topk_batch``.
+    ``bm25.bm25_topk_batch``, on the same two routes: below the Σdf gate
+    the driver evaluator scores every spec into one local page (no Spark
+    job), above it the shard function scores them all in one job and a
+    per-query window takes the global top-k.
 
     queries: [(query_id, query_text)] → (query_id, doc_id, score, rank).
-    The shard function (``_shard_topk``) finishes each doc's cross-field
-    combine inside its group, so the global merge is the same small
-    per-query window the single-field batch uses. Queries with no
-    in-vocabulary term in any field have no rows."""
-    indexes, stats, specs = _plan(field_indexes, queries, fields, match_type)
+    Queries with no in-vocabulary term in any field have no rows."""
+    indexes, sum_df, specs = _plan(
+        field_indexes, queries, fields, match_type, tie_breaker
+    )
     if not specs:
         return empty_batch_page(indexes[0].spark)
-    return batch_page(
-        _shard_topk(indexes, stats, specs, match_type, tie_breaker, k), k
-    )
+    return _tree_batch_page(indexes, specs, k, driver_route("auto", sum_df))
 
 
 def _dismax_union_topk(
@@ -364,23 +228,21 @@ def _dismax_union_topk(
     page. Each page is that field's own top-k, so the result is exact by
     containment: a doc in the global top-k is inside the top-k of the
     field achieving its max, and a non-negative boost keeps each field's
-    order. The ≤k-row pages are collected (no Spark job when they are
-    driver pages) and combined on the driver by ``_combine``, each page
-    acting as one term of its field."""
-    rows = [page.select("doc_id", "score").collect() for page, _ in pages]
-    spec = MatchSpec(
-        "", [[0]] * len(pages), [{0: 1.0}] * len(pages), [b for _, b in pages]
-    )
+    order. The driver evaluator combines the ≤k-row pages' Arrow entries
+    (no JVM call when they are driver pages), each page one leaf of its
+    field's sum."""
+    entries = [page.toArrow() for page, _b in pages]
+    root = DisMax(tuple(
+        Sum((Leaf(h, 0, 1.0),), 1, boost)
+        for h, (_p, boost) in enumerate(pages)
+    ))
 
-    def contrib(fid, _tid):
-        return (
-            np.array([r[0] for r in rows[fid]], dtype=np.int64),
-            np.array([r[1] for r in rows[fid]], dtype=np.float64),
-        )
+    def value(leaf):
+        t = entries[leaf.h]
+        return t["doc_id"].to_numpy(), t["score"].to_numpy().astype(np.float64)
 
-    return local_page(
-        spark, *_top(*_combine(spec, contrib, "best_fields", 0.0), k)
-    )
+    _q, ids, scores = _ranked([("", root)], k, value)
+    return local_page(spark, ids, scores)
 
 
 def multi_match_field_topk(

@@ -32,25 +32,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.build import tid_py
-from ..index.codec import decode_doc_ids, decode_doc_ids_batch
-from ..ranking import (
-    batch_page,
-    empty_batch_page,
-    local_batch_page,
-    local_page,
-    sorted_union,
-    topk_page,
-)
+from ..index.codec import decode_doc_ids_batch
+from ..ranking import empty_batch_page, local_page
 from ..tokenizer import tokenize_expr, tokenize_py
 from .bm25 import (
-    BATCH_TOPK_SCHEMA,
+    AnyLeaf,
     BM25Index,
-    _decode_by_tid,
-    _decode_tfn,
-    _driver_accumulate,
-    _fill_driver_cache,
+    Leaf,
+    Sum,
+    _live_docs,
     _live_mask,
     _read_postings,
+    _tree_batch_page,
+    _tree_page,
     driver_route,
     lucene_idf,
 )
@@ -171,15 +165,7 @@ def multiterm_topk(
     deletes = index.deletes
 
     def decode_docs(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-        ids = np.unique(
-            np.concatenate([decode_doc_ids(x) for x in pdf["docs"]])
-        )
-        live = _live_mask(ids, deletes)
-        if live is not None:
-            ids = ids[live]
-        return pd.DataFrame({"doc_id": ids})
+        return pd.DataFrame({"doc_id": _live_docs(pdf["docs"], deletes)})
 
     blocks = index.postings_for(terms).select("shard_id", "docs")
     matched = blocks.groupBy("shard_id").applyInPandas(
@@ -214,101 +200,17 @@ def match_bool_prefix_topk(
     term clauses (duplicate tokens are duplicate clauses and sum) +
     boost·[any dictionary term with the prefix occurs] — identical values
     to the corpus sqs fold over ``tok1 … last*``. This is the batch
-    kernel with this one query (``_bool_prefix_scored``) and a global
-    top-k; ``tokens`` overrides the default analysis for pre-analyzed
-    fields whose terms the frozen tokenizer must not re-split (e.g. the
-    search_as_you_type shingle subfields). Returns (doc_id, score, rank)."""
-    got = _bool_prefix_scored(
-        index, [("", query_text)], k, boost, mode,
+    kernel with this one query and a global top-k; ``tokens`` overrides
+    the default analysis for pre-analyzed fields whose terms the frozen
+    tokenizer must not re-split (e.g. the search_as_you_type shingle
+    subfields). Returns (doc_id, score, rank)."""
+    specs, sum_df = _bool_prefix_specs(
+        index, [("", query_text)], boost,
         None if tokens is None else {"": tokens},
     )
-    if got is None:
+    if not specs:
         return local_page(index.spark, [], [])
-    if isinstance(got, DataFrame):
-        return topk_page(got.drop("query_id"), k)
-    return local_page(index.spark, got[1], got[2])
-
-
-def _bool_prefix_rows(
-    specs: list[tuple[str, dict[int, float], frozenset[int]]],
-    accumulate,
-    prefix_hits,
-    boost: float,
-    k: int,
-) -> tuple[list[str], np.ndarray, np.ndarray]:
-    """Every bool_prefix spec ``(query_id, {tid: weight}, prefix tids)``
-    → its top-k rows as per-row (query_ids, doc_ids, float32 scores),
-    score desc / doc_id asc. ``accumulate(weights)`` gives the term
-    clauses' (sorted doc ids, float64 Σ weight·tfnorm) and
-    ``prefix_hits(tids)`` the prefix clause's sorted unique live doc ids,
-    each of which scores ``boost``."""
-    out_q: list[str] = []
-    out_ids: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
-    out_sc: list[np.ndarray] = [np.empty(0, dtype=np.float32)]
-    for qid, weights, pfx in specs:
-        ids, sc = accumulate(weights)
-        hits = prefix_hits(pfx)
-        all_ids = np.union1d(ids, hits)
-        total = np.zeros(all_ids.size, dtype=np.float64)
-        total[np.searchsorted(all_ids, ids)] = sc
-        total[np.searchsorted(all_ids, hits)] += boost
-        f32 = total.astype(np.float32)
-        sel = np.lexsort((all_ids, -f32.astype(np.float64)))[:k]
-        out_q.extend([qid] * len(sel))
-        out_ids.append(all_ids[sel])
-        out_sc.append(f32[sel])
-    return out_q, np.concatenate(out_ids), np.concatenate(out_sc)
-
-
-def _unique_ids(parts: list[np.ndarray]) -> np.ndarray:
-    return np.unique(np.concatenate([np.empty(0, dtype=np.int64), *parts]))
-
-
-def _live_ids(docs, deletes: np.ndarray | None) -> np.ndarray:
-    """The live doc ids of one term's encoded ``docs`` blocks."""
-    ids = np.concatenate(
-        [np.empty(0, dtype=np.int64)] + [decode_doc_ids(x) for x in docs]
-    )
-    live = _live_mask(ids, deletes)
-    return ids if live is None else ids[live]
-
-
-def _bool_prefix_driver(
-    index: BM25Index, specs: list[tuple], k: int, boost: float
-) -> tuple[list[str], np.ndarray, np.ndarray]:
-    """The driver route of a bool_prefix batch. Term clauses score from
-    the handle's decoded-postings cache (``_fill_driver_cache`` +
-    ``_driver_accumulate``), so a clause any earlier call decoded is not
-    read again. Prefix expansions need doc ids only: one docs-only
-    ``_read_postings`` read, kept out of the cache, because a short
-    prefix can expand to thousands of terms and would flush the clause
-    terms out of the bounded cache."""
-    from ..index.cache import evict_fifo
-
-    _fill_driver_cache(index, {t for _q, w, _p in specs for t in w})
-    hits_of: dict[int, np.ndarray] = {}
-    prefix_tids = {t for _q, _w, p in specs for t in p}
-    if prefix_tids:
-        slices, flat = _decode_by_tid(
-            _read_postings(index, prefix_tids, ["tid", "docs"]),
-            {"docs": decode_doc_ids_batch},
-        )
-        for t, sl in slices.items():
-            ids = flat["docs"][sl]
-            live = _live_mask(ids, index.deletes)
-            hits_of[t] = ids if live is None else ids[live]
-
-    def prefix_hits(pfx: frozenset[int]) -> np.ndarray:
-        return _unique_ids([hits_of[t] for t in pfx if t in hits_of])
-
-    rows = _bool_prefix_rows(
-        specs, lambda w: _driver_accumulate(index, w)[:2], prefix_hits,
-        boost, k,
-    )
-    evict_fifo(
-        index._driver_cache, index.driver_cache_terms, index.driver_cache_bytes
-    )
-    return rows
+    return _tree_page([index], specs, k, driver_route(mode, sum_df))
 
 
 def match_bool_prefix_topk_batch(
@@ -327,39 +229,32 @@ def match_bool_prefix_topk_batch(
     `tokens_by_qid` overrides analysis per query (pre-analyzed token
     streams, e.g. search_as_you_type shingle subfields).
 
-    The distributed route is one pass over the union of every query's
-    clauses' postings; per shard, decoded (ids, tfnorm) contributions
-    (``_decode_tfn``) are CACHED by tid across the batch's queries
-    (tfnorm is query-independent), so hot terms — and the prefix
-    expansions autocomplete queries share — decode once per shard, not
-    once per query. Per-doc accumulation is local to the shard
-    (doc-sharded postings), so the global merge is a tiny per-query
-    window top-k. There is no MaxScore skip: the constant-score prefix
-    clause has no useful per-block bound.
+    Each query is a tree of the BM25 kernels: one ``Sum`` of its term
+    leaves followed by an ``AnyLeaf`` of its prefix expansion, scoring
+    ``boost`` and decoding doc ids only. The distributed route is the
+    MaxScore shard function over the union of every query's postings: a
+    term or an expansion two queries share (autocomplete queries share
+    prefixes) decodes once per shard, the expansion is one more leaf
+    bounded by ``boost``, and the global merge is a per-query window
+    top-k.
 
-    `mode`: 'auto' (default) serves the whole batch on the driver
-    (``_bool_prefix_driver``, zero Spark jobs) when the union's Σdf fits
+    `mode`: 'auto' (default) serves the whole batch on the driver (the
+    driver evaluator, zero Spark jobs) when the union's Σdf fits
     DRIVER_MAX_POSTINGS; 'driver' / 'distributed' force the route."""
-    got = _bool_prefix_scored(index, queries, k, boost, mode, tokens_by_qid)
-    if got is None:
+    specs, sum_df = _bool_prefix_specs(index, queries, boost, tokens_by_qid)
+    if not specs:
         return empty_batch_page(index.spark)
-    if isinstance(got, DataFrame):
-        return batch_page(got, k)
-    return local_batch_page(index.spark, *got)
+    return _tree_batch_page([index], specs, k, driver_route(mode, sum_df))
 
 
-def _bool_prefix_scored(
+def _bool_prefix_specs(
     index: BM25Index,
     queries: list[tuple[str, str]],
-    k: int,
     boost: float,
-    mode: str,
     tokens_by_qid: dict[str, list[str]] | None,
-):
-    """Plan every query's spec, then score them all on the route the
-    union's Σdf picks: the driver's per-row (query_ids, doc_ids,
-    scores), or the shard function's (query_id, doc_id, score) frame of
-    per-shard top-k's; None when no query can match."""
+) -> tuple[list[tuple[str, Sum]], int]:
+    """Every query's (query_id, tree) spec — none when it cannot match —
+    and the Σdf of the union of their terms and expansions."""
     toks_by_qid: dict[str, list[str]] = {}
     for qid, text in queries:
         toks = (
@@ -374,8 +269,7 @@ def _bool_prefix_scored(
     )
     df_by_tid: dict[int, int] = {tid_py(t): d for t, d in stats.items()}
     exp_cache: dict[str, frozenset[int]] = {}
-    exp_terms: set[str] = set()
-    specs: list[tuple[str, dict[int, float], frozenset[int]]] = []
+    specs: list[tuple[str, Sum]] = []
     for qid, toks in toks_by_qid.items():
         weights: dict[int, float] = {}
         for t in toks[:-1]:
@@ -387,71 +281,18 @@ def _bool_prefix_scored(
         last = toks[-1]
         if last not in exp_cache:
             exps = index.dictionary(prefix=last)
-            exp_terms.update(t for t, _ in exps)
             for t, d in exps:
                 df_by_tid.setdefault(tid_py(t), d)
             exp_cache[last] = frozenset(tid_py(t) for t, _ in exps)
-        if weights or exp_cache[last]:
-            specs.append((qid, weights, exp_cache[last]))
-    if not specs:
-        return None
-    fboost = float(boost)
-    need = {t for _q, w, p in specs for t in (*w, *p)}
-    if driver_route(mode, sum(df_by_tid[t] for t in need)):
-        return _bool_prefix_driver(index, specs, k, fboost)
-    k1, b, avgdl, deletes = index.k1, index.b, index.avgdl, index.deletes
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows_of = dict(tuple(pdf.groupby("tid", sort=False)))
-        decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-        def contrib(t: int) -> tuple[np.ndarray, np.ndarray]:
-            got = decoded.get(t)
-            if got is None:
-                got = decoded[t] = _decode_tfn(
-                    rows_of[t], k1, b, avgdl, deletes
-                )
-            return got
-
-        def accumulate(weights):
-            parts = [(contrib(t), w) for t, w in weights.items() if t in rows_of]
-            ids, inv = sorted_union(
-                np.concatenate(
-                    [np.empty(0, dtype=np.int64)] + [i for (i, _), _ in parts]
-                )
-            )
-            sc = np.bincount(
-                inv,
-                weights=np.concatenate(
-                    [np.empty(0)] + [w * tfn for (_, tfn), w in parts]
-                ),
-                minlength=len(ids),
-            )
-            return ids, sc
-
-        hits_of: dict[int, np.ndarray] = {}
-
-        def prefix_hits(pfx):
-            # expansions need doc ids only: no tf/dl decode
-            for t in pfx:
-                if t in rows_of and t not in hits_of:
-                    hits_of[t] = _live_ids(rows_of[t]["docs"], deletes)
-            return _unique_ids([hits_of[t] for t in pfx if t in hits_of])
-
-        qids, ids, scores = _bool_prefix_rows(
-            specs, accumulate, prefix_hits, fboost, k
-        )
-        return pd.DataFrame(
-            {"query_id": pd.Series(qids, dtype=object), "doc_id": ids,
-             "score": scores}
-        )
-
-    blocks = index.postings_for(sorted(set(stats) | exp_terms)).select(
-        "shard_id", "tid", "docs", "tfs", "dls"
-    )
-    return blocks.groupBy("shard_id").applyInPandas(
-        score_shard, BATCH_TOPK_SCHEMA
-    )
+        leaves = tuple(Leaf(0, t, w) for t, w in weights.items())
+        if exp_cache[last]:
+            leaves += (AnyLeaf(0, exp_cache[last], float(boost)),)
+        if leaves:
+            specs.append((qid, Sum(leaves)))
+    need = {t for _q, w in specs for leaf in w.children for t in (
+        leaf.tids if isinstance(leaf, AnyLeaf) else (leaf.tid,)
+    )}
+    return specs, sum(df_by_tid[t] for t in need)
 
 
 def term_topk(

@@ -26,6 +26,14 @@ from pyspark.sql import functions as F
 from ..ranking import topk_rank_window
 
 
+# the query kinds that read QuerySpec.boost: the constant-score kinds
+# score it, rank_feature and distance_feature multiply by it
+BOOSTED_KINDS = frozenset(
+    "prefix wildcard regexp terms match_all ids range exists rank_feature "
+    "distance_feature".split()
+)
+
+
 @dataclass
 class QuerySpec:
     """Parsed neural/neural_sparse/hybrid sub-query, pre-rewrite."""
@@ -172,6 +180,20 @@ class QuerySpec:
     # enter the top-k. A Column predicate or SQL expression over corpus
     # columns. Distinct from ``filter``, which is pushed BEFORE scoring.
     post_filter: Column | str | None = None
+
+    def __post_init__(self):
+        # every other kind would accept a boost and silently ignore it
+        if self.boost != 1.0 and self.query_type not in BOOSTED_KINDS:
+            raise ValueError(
+                f"boost is not supported on {self.query_type} queries "
+                f"(only {', '.join(sorted(BOOSTED_KINDS))} read it)"
+            )
+        # as Lucene's DisjunctionMaxQuery: the index route prunes on the
+        # dis-max being monotone, and the corpus route must agree
+        if not 0.0 <= self.tie_breaker <= 1.0:
+            raise ValueError(
+                f"tie_breaker must be in [0, 1], got {self.tie_breaker!r}"
+            )
 
 
 def enrich(specs: list[QuerySpec], default_model_id: str | None = None,

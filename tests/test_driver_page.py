@@ -369,6 +369,50 @@ def test_driver_multi_match_union_runs_no_spark_job(spark, page_eng, family):
     assert rows
 
 
+@pytest.mark.parametrize(
+    "family", ["multi_match_phrase", "multi_match_bool_prefix"]
+)
+def test_driver_multi_match_union_makes_no_py4j_round_trip(page_eng, family):
+    """The dis-max union reads its per-field driver pages' Arrow tables:
+    no page builds its JVM relation."""
+    body = FAMILIES[family]
+    page_eng.search(body, k=K).collect()  # warm the driver caches
+    n, rows = _trips(lambda: page_eng.search(body, k=K).collect())
+    assert n == 0
+    assert rows
+
+
+def test_driver_msearch_of_multi_match_specs_runs_no_spark_job(
+    spark, page_eng
+):
+    """Below the Σdf gate a multi_match batch is scored on the driver
+    like a match batch: the msearch is one LocalPage and no Spark job,
+    each query's rows equal to its own search."""
+    specs = {
+        f"{qid}_{i}": {"multi_match": {**FAMILIES[qid]["multi_match"]}}
+        for i, qid in enumerate(
+            ["multi_match_best", "multi_match_most", "multi_match_best"]
+        )
+    }
+    specs["multi_match_best_2"]["multi_match"]["query_text"] = "call w0005"
+    page_eng.msearch(specs, k=K).collect()
+    n, page = _jobs(spark, lambda: page_eng.msearch(specs, k=K))
+    assert n == 0
+    assert isinstance(page, LocalPage)
+    rows = page.collect()
+    assert {r["query_id"] for r in rows} == set(specs)
+    for qid, body in specs.items():
+        got = [
+            (r["doc_id"], r["score"], r["rank"])
+            for r in rows if r["query_id"] == qid
+        ]
+        want = [
+            (r["doc_id"], r["score"], r["rank"])
+            for r in page_eng.search(body, k=K).collect()
+        ]
+        assert got == want, qid
+
+
 def test_driver_search_as_you_type_runs_no_spark_job(
     spark, page_eng, transcripts_df, tmp_path_factory
 ):
@@ -389,3 +433,9 @@ def test_driver_search_as_you_type_runs_no_spark_job(
     assert n == 0
     assert rows
     assert rows == sorted(rows, key=lambda r: (-r["score"], r["doc_id"]))
+    # and, warm, not one py4j round trip
+    n, again = _trips(
+        lambda: search_as_you_type_topk(sayt, "tool ca", k=K).collect()
+    )
+    assert n == 0
+    assert again == rows

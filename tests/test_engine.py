@@ -122,6 +122,61 @@ def test_hybrid_body_rejects_unknown_keys():
     assert (spec.combination, spec.rank_constant) == ("rrf", 5)
 
 
+_M = {"match": {"query_text": "a"}}
+
+
+@pytest.mark.parametrize(
+    "qtype,body,key",
+    [
+        ("bool", {"should": [_M], "boost": 2.0}, "boost"),
+        ("bool", {"should": [_M], "minimum_should_matc": 1},
+         "minimum_should_matc"),
+        ("dis_max", {"queries": [_M], "boost": 3}, "boost"),
+        ("boosting", {"positive": _M, "negative": _M, "negative_bost": 0.2},
+         "negative_bost"),
+        ("constant_score", {"filter": _M, "bost": 2.0}, "bost"),
+        ("function_score", {"query": _M, "function": []}, "function"),
+        ("script_score", {"query": _M, "script": "_score", "min_scor": 1},
+         "min_scor"),
+        ("pinned", {"ids": [1], "organic": _M, "docs": [2]}, "docs"),
+        ("has_child", {"query": _M, "score": "max"}, "score"),
+        ("nested", {"path": "turns", "query": _M, "mode": "avg"}, "mode"),
+        ("has_parent", {"filter": "n_turns > 3", "score": True}, "score"),
+        ("parent_id", {"id": "c1", "routing": "x"}, "routing"),
+    ],
+)
+def test_composite_body_rejects_unknown_keys(qtype, body, key):
+    """A composite body's unknown key raises ValueError naming it, where
+    it was dropped silently; the same body without it parses."""
+    with pytest.raises(
+        ValueError, match=f"invalid {qtype} query body: .*{key}"
+    ):
+        spec_from_json({qtype: body})
+    spec_from_json({qtype: {k: v for k, v in body.items() if k != key}})
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        {"match": {"query_text": "x", "boost": 2}},
+        {"multi_match": {"query_text": "x", "fields": ["text"], "boost": 2}},
+        {"match_phrase": {"query_text": "x y", "boost": 0.5}},
+    ],
+)
+def test_boost_rejected_where_nothing_reads_it(body):
+    with pytest.raises(ValueError, match="boost is not supported"):
+        spec_from_json(body)
+    (qtype, inner), = body.items()
+    spec_from_json({qtype: {k: v for k, v in inner.items() if k != "boost"}})
+
+
+def test_prefix_boost_still_scores(eng):
+    rows = eng.search(
+        {"prefix": {"value": "too", "boost": 2.5}}, k=3
+    ).collect()
+    assert rows and {r["score"] for r in rows} == {2.5}
+
+
 @pytest.mark.parametrize("bad", [-1.0, float("inf"), float("nan")])
 def test_neural_sparse_rejects_bad_query_weights(eng, bad):
     """A raw query_tokens weight that is negative or non-finite raises
