@@ -503,7 +503,7 @@ def run_workload(cpus: int, mode: str = "full") -> dict:
         # comparable, like the sparse-index lines.
 
         # hybrid over the SERVING block index — the flagship plan (depth-
-        # bounded bm25_topk branches → broadcast-stats normalize → combine)
+        # bounded bm25_topk branches → numpy normalize → combine)
         from neural_search_spark.query.hybrid import hybrid_topk
 
         qa, qb = queries[0]["query_text"], queries[1]["query_text"]

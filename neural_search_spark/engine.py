@@ -49,7 +49,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ranking import LocalPage, topk_rank_window
+from .ranking import LocalPage, local_page, topk_rank_window
 
 from .query.function_score import FunctionScoreSpec
 from .query.neural import QuerySpec, execute, rewrite
@@ -74,6 +74,14 @@ class HybridSpec:
     # search-pipeline post-steps (need a corpus bound to the Engine)
     collapse_field: str | None = None
     rerank_by_field: str | None = None
+
+    def __post_init__(self):
+        from .query.hybrid import _check
+
+        _check(
+            len(self.sub_queries), self.normalization, self.combination,
+            self.weights, self.rank_constant, self.pagination_depth,
+        )
 
 
 @dataclass
@@ -476,9 +484,11 @@ def spec_from_json(obj: str | dict) -> QuerySpec | HybridSpec | BoolSpec:
                 raise ValueError("range bounds must be an object")
             body = {"field": fname, **bounds}
     if qtype == "hybrid":
-        subs = [spec_from_json(s) for s in body.get("queries", [])]
-        if any(isinstance(s, HybridSpec) for s in subs):
+        raw = [json.loads(s) if isinstance(s, str) else s
+               for s in body.get("queries", [])]
+        if any("hybrid" in s for s in raw):
             raise ValueError("hybrid queries cannot nest")
+        subs = [spec_from_json(s) for s in raw]
         opts = {k: v for k, v in body.items() if k != "queries"}
         try:
             return HybridSpec(sub_queries=subs, **opts)
@@ -914,8 +924,6 @@ class Engine:
                     "a hybrid query has no single full matched set; use "
                     "its sub-queries"
                 )
-            if not 1 <= len(spec.sub_queries) <= 5:
-                raise ValueError("hybrid query accepts 1..5 sub-queries")
             if any(
                 getattr(s, "post_filter", None) is not None
                 for s in spec.sub_queries
@@ -1806,19 +1814,14 @@ class Engine:
     ) -> DataFrame:
         """Hybrid top-k from the branch plans: each branch bounded by
         pagination_depth under the hybrid's post_filter → (per-branch
-        rescore) → normalize → combine → (collapse) → (rerank)."""
-        from .query.hybrid import (
-            _tall_union,
-            collapse_top1,
-            combine_scores,
-            hybrid_topk,
-            normalize_scores,
-            rerank_by_field,
-        )
+        rescore) → normalize → combine → (collapse) → (rerank). The
+        branch pages are read with toArrow(), so a hybrid of driver
+        pages runs no Spark job."""
+        from .query.hybrid import collapse_top1, fuse, rerank_by_field
 
         depth = spec.pagination_depth or k
         allowed = self._allowed(spec.post_filter)
-        tops = [b.run(depth, allowed).drop("rank") for b in branches]
+        tops = [b.run(depth, allowed) for b in branches]
         if rescore is not None:
             # reference placement: rescore EACH branch's top-W before
             # normalization (HybridCollectorManager.java:241-268)
@@ -1826,24 +1829,21 @@ class Engine:
 
             secondary, opts = rescore
             tops = [
-                rescore_window(b, secondary, **opts).drop("rank")
+                rescore_window(b.drop("rank"), secondary, **opts)
                 for b in tops
             ]
+        _, combined = fuse(
+            tops, spec.normalization, spec.combination, spec.weights,
+            rank_constant=spec.rank_constant,
+            pagination_depth=spec.pagination_depth,
+        )
         if spec.collapse_field is not None:
             # collapse applies to the full combined set (best doc per
             # group, then top-k) — before any k-truncation
             corpus = self._need_corpus("collapse")
-            tall = _tall_union(tops, spec.pagination_depth)
-            combined = combine_scores(
-                normalize_scores(
-                    tall, spec.normalization,
-                    rank_constant=spec.rank_constant,
-                ),
-                len(tops),
-                spec.combination,
-                weights=spec.weights,
-            )
-            scored = combined.join(
+            scored = self.spark.createDataFrame(
+                pa.Table.from_pandas(combined, preserve_index=False)
+            ).join(
                 corpus.select(self.id_col, spec.collapse_field).withColumnRenamed(
                     self.id_col, "doc_id"
                 ),
@@ -1851,16 +1851,8 @@ class Engine:
             )
             out = collapse_top1(scored, spec.collapse_field, k=k)
         else:
-            out = hybrid_topk(
-                tops,
-                k=k,
-                normalization=spec.normalization,
-                combination=spec.combination,
-                weights=spec.weights,
-                rank_constant=spec.rank_constant,
-                # branches are already depth-bounded; re-bounding is a no-op
-                pagination_depth=spec.pagination_depth,
-            )
+            top = combined.head(k)
+            out = local_page(self.spark, top["doc_id"], top["score"])
         if spec.rerank_by_field is not None:
             out = rerank_by_field(
                 out,

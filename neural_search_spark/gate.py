@@ -3236,12 +3236,35 @@ def _bounded_tall_for(
     return tall
 
 
-def _hybrid(spark, sf, normalization, combination, **kw) -> DataFrame:
-    from .query.hybrid import combine_scores, normalize_scores
+def _fuse_tall(
+    tall: DataFrame,
+    n_subqueries: int,
+    normalization: str = "min_max",
+    combination: str = "arithmetic_mean",
+    group_cols: tuple[str, ...] = (),
+    weights: list[float] | None = None,
+    **kw,
+) -> DataFrame:
+    """The hybrid fusion (query/hybrid.normalize → combine) of a tall
+    (subq, doc_id, score) DataFrame through applyInPandas, one call per
+    ``group_cols`` group → (*group_cols, doc_id, score). With no
+    group_cols the whole tall (≤ n·depth rows) is one group."""
+    from .query.hybrid import combine, normalize
 
+    def fuse(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = combine(normalize(pdf, normalization, **kw), n_subqueries,
+                      combination, weights=weights)
+        return out.assign(**{c: pdf[c].iloc[0] for c in group_cols})
+
+    keys = [f"{c} {tall.schema[c].dataType.simpleString()}" for c in group_cols]
+    return tall.groupBy(*group_cols).applyInPandas(
+        fuse, ", ".join([*keys, "doc_id long", "score double"])
+    )
+
+
+def _hybrid(spark, sf, normalization, combination, **kw) -> DataFrame:
     tall = _bounded_tall(spark, sf)
-    normed = normalize_scores(tall, normalization, **kw)
-    combined = combine_scores(normed, 2, combination)
+    combined = _fuse_tall(tall, 2, normalization, combination, **kw)
     rounded = combined.withColumn("score", F.round("score", 4))
     return _ranked(rounded, ["doc_id"], 10)
 
@@ -3328,9 +3351,7 @@ FROM c"""
 def q_hybrid_batch(spark: SparkSession, sf: str) -> DataFrame:
     """BATCHED hybrid search: two hybrid queries normalized + combined in
     ONE plan via group_cols=("query_id",) — the cluster-throughput shape
-    (per-(query, subq) stats stay a tiny broadcast join). Top-5 per query."""
-    from .query.hybrid import combine_scores, normalize_scores
-
+    (the fusion runs once per query_id group). Top-5 per query."""
     d = _docs(spark, sf)
     # each DISTINCT query text is scored ONCE; a broadcast crossJoin with
     # its (query_id, subq) tag rows fans the single scored subtree out to
@@ -3356,10 +3377,9 @@ def q_hybrid_batch(spark: SparkSession, sf: str) -> DataFrame:
             F.col("score").cast("double"),
         )
         tall = t if tall is None else tall.unionAll(t)
-    normed = normalize_scores(tall, "min_max", group_cols=("query_id",))
-    combined = combine_scores(
-        normed, 2, "arithmetic_mean", group_cols=("query_id",)
-    ).withColumn("score", F.round("score", 4))
+    combined = _fuse_tall(tall, 2, group_cols=("query_id",)).withColumn(
+        "score", F.round("score", 4)
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     batch = (
         combined.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -4662,13 +4682,11 @@ FROM (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 40)""")
 def q_hybrid_filtered(spark: SparkSession, sf: str) -> DataFrame:
     """Hybrid with a shared filter pushed into EVERY sub-query before
     scoring (reference query/HybridQueryBuilder.java:111-122)."""
-    from .query.hybrid import combine_scores, normalize_scores
-
     d = _docs(spark, sf).filter(F.col("source").isin("src1", "src2", "src3"))
     tall = _bounded_tall_for(
         spark, d, [QUERY_A, QUERY_B], cache_tag=("AB-filtered", _sf_key(sf))
     )
-    combined = combine_scores(normalize_scores(tall, "min_max"), 2, "arithmetic_mean")
+    combined = _fuse_tall(tall, 2)
     return _ranked(combined.withColumn("score", F.round("score", 4)), ["doc_id"], 10)
 
 
@@ -5187,11 +5205,10 @@ def q_hybrid_index_minmax(spark: SparkSession, sf: str) -> DataFrame:
     two bm25_topk branches from the on-disk index, each bounded to a
     pagination_depth of 50 (over-fetch on the engine's float32 ordering,
     re-ranked on the rounded score so the oracle's double ordering selects
-    identical branch membership), min_max normalize (groupBy+broadcast
-    stats), arithmetic-mean combine, top-10."""
+    identical branch membership), min_max normalize, arithmetic-mean
+    combine (the hybrid fusion over the ≤ 100-row tall), top-10."""
     from .index.build import doc_id_col
     from .query.bm25 import BM25Index, bm25_topk
-    from .query.hybrid import normalize_scores
 
     idx = BM25Index(spark, _gate_index(spark, sf))
     tr = derived_transcripts(spark, sf).withColumn("doc_id", doc_id_col())
@@ -5211,14 +5228,11 @@ def q_hybrid_index_minmax(spark: SparkSession, sf: str) -> DataFrame:
             )
             .orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
             .limit(50)
-            .select(F.lit(j).alias("subq"), "doc_id", "conv_id", "turn_idx", "score")
+            .select(F.lit(j).alias("subq"), "doc_id", "score")
         )
         tall = b if tall is None else tall.unionAll(b)
-    normed = normalize_scores(tall, "min_max")
-    combined = normed.groupBy("conv_id", "turn_idx").agg(
-        F.round(
-            (F.sum("norm_score") / F.lit(2.0)).cast("float").cast("double"), 4
-        ).alias("score")
+    combined = _fuse_tall(tall, 2).join(keys, "doc_id").select(
+        "conv_id", "turn_idx", F.round("score", 4).alias("score")
     )
     return _ranked(combined, ["conv_id", "turn_idx"], 10)
 
@@ -5359,18 +5373,16 @@ def q_minmax_lower_bounds(spark: SparkSession, sf: str) -> DataFrame:
     """min_max with per-sub-query lower_bounds (reference Mode enum,
     MinMaxScoreNormalizationTechnique.java:344-413): subq 0 'apply',
     subq 1 'clip'."""
-    from .query.hybrid import LowerBound, combine_scores, normalize_scores
+    from .query.hybrid import LowerBound
 
-    tall = _bounded_tall(spark, sf)
-    normed = normalize_scores(
-        tall,
-        "min_max",
+    combined = _fuse_tall(
+        _bounded_tall(spark, sf),
+        2,
         lower_bounds=[
             LowerBound("apply", _LB0),
             LowerBound("clip", _LB1),
         ],
     )
-    combined = combine_scores(normed, 2, "arithmetic_mean")
     return _ranked(
         combined.withColumn("score", F.round("score", 4)), ["doc_id"], 10
     )
@@ -5460,15 +5472,11 @@ _W3 = [0.5, 0.3, 0.2]
 def q_hybrid_weighted(spark: SparkSession, sf: str) -> DataFrame:
     """3-sub-query hybrid with non-uniform weights
     (ScoreCombinationUtil.java:142 weighted arithmetic mean)."""
-    from .query.hybrid import combine_scores, normalize_scores
-
     tall = _bounded_tall_for(
         spark, _docs(spark, sf), [QUERY_A, QUERY_B, QUERY_C],
         stats_key=(_sf_key(sf), "docs"), cache_tag=("ABC", _sf_key(sf)),
     )
-    combined = combine_scores(
-        normalize_scores(tall, "min_max"), 3, "arithmetic_mean", weights=_W3
-    )
+    combined = _fuse_tall(tall, 3, weights=_W3)
     return _ranked(
         combined.withColumn("score", F.round("score", 4)), ["doc_id"], 10
     )
@@ -5546,8 +5554,6 @@ def q_hybrid_post_filter(spark: SparkSession, sf: str) -> DataFrame:
     Same numeric pipeline as Engine.search(HybridSpec(post_filter=...))
     (engine.py _branch_topk allowed semi-join), with 6dp-rounded branch
     scores so the oracle's double ordering picks identical rows."""
-    from .query.hybrid import combine_scores, normalize_scores
-
     d = _docs(spark, sf)
     allowed = d.filter(F.col("source").isin(*_PF_SOURCES)).select("doc_id")
     tall = _bounded_tall_for(
@@ -5555,9 +5561,7 @@ def q_hybrid_post_filter(spark: SparkSession, sf: str) -> DataFrame:
         stats_key=(_sf_key(sf), "docs"), allowed=allowed,
         cache_tag=("AB-pf", _sf_key(sf)),
     )
-    combined = combine_scores(
-        normalize_scores(tall, "min_max"), 2, "arithmetic_mean"
-    )
+    combined = _fuse_tall(tall, 2)
     return _ranked(
         combined.withColumn("score", F.round("score", 4)), ["doc_id"], 10
     )

@@ -1,16 +1,18 @@
-"""Hybrid-search layer: score normalization + combination + top-k merge.
+"""Hybrid-search layer: score normalization, combination and the top-k
+merge of the reference's coordinator step
+(processor/NormalizationProcessorWorkflow.java:64-107).
 
-Replicates the reference's coordinator-side normalization workflow
-(processor/NormalizationProcessorWorkflow.java:64-107) as one DataFrame
-pipeline over a tall score table:
-
-    (subq int, doc_id long, score double)   [+ optional query_id column]
-
-→ window-normalize per sub-query (globally across shards, as the reference
-  computes min/max/mean/std over all shards' results)
-→ groupBy(doc_id) combine with the reference's exact edge-case semantics
-→ orderBy(score desc, doc_id asc).limit(k)    [SORTING_TIE_BREAKER,
-  reference processor/combination/ScoreCombiner.java:43-56]
+Each sub-query's hits are bounded to ``pagination_depth`` before
+normalization (HybridCollectorManager.java:595-610), so the step fuses at
+most 5 × depth rows: two numpy functions over a tall pandas frame.
+``normalize`` adds ``norm_score`` to (subq, doc_id, score), each sub-query
+over its own rows; ``combine`` returns (doc_id, score) by score desc,
+doc_id asc (SORTING_TIE_BREAKER, processor/combination/ScoreCombiner.java
+:43-56). ``hybrid_topk``, ``hybrid_explain`` and the engine call them on
+branch pages read with ``toArrow()`` (a driver page costs no Spark job);
+a tall DataFrame reaches them through ``groupBy(...).applyInPandas``.
+Sub-query sums run in row order, each doc's combined sums in sub-query
+order, and every normalized and combined score is rounded to float32.
 
 Technique semantics verified line-by-line against the reference:
 
@@ -47,12 +49,17 @@ Max 5 sub-queries (query/HybridQueryBuilder.java:67).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import math
+from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ranking import topk_rank_window
+from ..ranking import LocalPage, local_page, topk_rank_window
 
 MAX_NUMBER_OF_SUB_QUERIES = 5  # reference query/HybridQueryBuilder.java:67
 MIN_SCORE = 0.001
@@ -76,188 +83,197 @@ class LowerBound:
     min_score: float = 0.0
 
 
-def _minmax_expr(s, mn, mx, lb: LowerBound | None):
-    plain = (s - mn) / (mx - mn)
+def _check(n_subqueries, normalization, combination, weights, rank_constant,
+           pagination_depth) -> None:
+    """Raise ValueError on any hybrid option the reference rejects."""
+    if not 1 <= n_subqueries <= MAX_NUMBER_OF_SUB_QUERIES:
+        raise ValueError(
+            f"hybrid query accepts 1..{MAX_NUMBER_OF_SUB_QUERIES} sub-queries"
+        )
+    if normalization not in NORMALIZATION_TECHNIQUES:
+        raise ValueError(f"unknown normalization technique: {normalization!r}")
+    if combination not in COMBINATION_TECHNIQUES:
+        raise ValueError(f"unknown combination technique: {combination!r}")
+    if weights is not None:
+        if len(weights) != n_subqueries:
+            raise ValueError("number of weights must match number of sub-queries")
+        if not all(math.isfinite(w) for w in weights):
+            raise ValueError(f"hybrid weights must be finite, got {list(weights)}")
+    if not 1 <= rank_constant <= 10000:
+        raise ValueError("rank_constant must be in [1, 10000]")
+    # reference: depth must be >0 (HybridQuery.java:70-73) and under the
+    # max result window (HybridQueryBuilder.validatePaginationDepth)
+    if pagination_depth is not None and not 1 <= pagination_depth <= 10000:
+        raise ValueError("pagination_depth must be in [1, 10000]")
+
+
+def _half_up(x: float) -> float:
+    """``x`` rounded to 10 decimals HALF_UP from its shortest decimal form —
+    the reference's BigDecimal rounding (and Spark's ``round``); numpy's
+    ``round`` is half-to-even and differs at exact ties such as 1/2048."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-10"), ROUND_HALF_UP))
+
+
+def _minmax(s, mn, mx, plain, lb: LowerBound | None) -> np.ndarray:
     if lb is None or lb.mode == "ignore":
-        n = plain
-        n = F.when(n == 0.0, F.lit(MIN_SCORE)).otherwise(n)
-    elif lb.mode == "apply":
-        bounded = (s - F.lit(lb.min_score)) / (mx - F.lit(lb.min_score))
-        n = F.when((mx < lb.min_score) | (s < lb.min_score), plain).otherwise(
-            bounded
-        )
-    elif lb.mode == "clip":
-        bounded = (s - F.lit(lb.min_score)) / (mx - F.lit(lb.min_score))
-        n = F.when(s < mn, F.lit(0.0)).otherwise(
-            F.when(mx < lb.min_score, plain).otherwise(bounded)
-        )
-    else:
-        raise ValueError(f"invalid lower_bounds mode: {lb.mode}")
-    # single-result edge case first: max==min==s → 1.0
-    return F.when((mx == mn) & (mx == s), F.lit(SINGLE_RESULT_SCORE)).otherwise(n)
+        return np.where(plain == 0.0, MIN_SCORE, plain)
+    bounded = (s - lb.min_score) / (mx - lb.min_score)
+    if lb.mode == "apply":
+        return np.where((mx < lb.min_score) | (s < lb.min_score), plain, bounded)
+    if lb.mode == "clip":
+        return np.where(s < mn, 0.0, np.where(mx < lb.min_score, plain, bounded))
+    raise ValueError(f"invalid lower_bounds mode: {lb.mode}")
 
 
-def normalize_scores(
-    df: DataFrame,
+def _sample_std(x: list[float]) -> float:
+    """Sample std by the streaming update Spark's ``stddev_samp`` runs
+    (n-1, as commons-math's DescriptiveStatistics); NaN for one value."""
+    n = mean = m2 = 0.0
+    for v in x:
+        n += 1.0
+        delta = v - mean
+        delta_n = delta / n
+        mean += delta_n
+        m2 += delta * (delta - delta_n)
+    return math.sqrt(m2 / (n - 1.0)) if n > 1.0 else math.nan
+
+
+def normalize(
+    tall: pd.DataFrame,
     technique: str = "min_max",
     lower_bounds: list[LowerBound | None] | None = None,
     rank_constant: int = DEFAULT_RANK_CONSTANT,
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Add ``norm_score`` to a tall (subq, doc_id, score) DataFrame.
-
-    group_cols: extra partition columns (e.g. query_id for batched search).
-
-    Scale shape: per-sub-query statistics (min/max/Σs²/mean/std) are a
-    ≤5·n_queries-row ``groupBy(subq).agg`` broadcast-joined back onto the
-    tall table — NOT a ``Window.partitionBy(subq)``, which would move every
-    sub-query's entire matched set through one reducer. rrf is the one
-    technique that needs a true per-sub-query rank; its input contract is
-    the reference's: callers bound each sub-query to ``pagination_depth``
-    docs first (HybridCollectorManager.java:595-610), so the rank window
-    runs over ≤ depth rows per sub-query.
-    """
-    if not 1 <= rank_constant <= 10000:
-        raise ValueError("rank_constant must be in [1, 10000]")
-    keys = [*group_cols, "subq"]
-    s = F.col("score")
-
-    def _join_stats(*aggs) -> DataFrame:
-        stats = df.groupBy(*keys).agg(*aggs)
-        return df.join(F.broadcast(stats), keys)
-
-    if technique == "min_max":
-        j = _join_stats(F.min(s).alias("_mn"), F.max(s).alias("_mx"))
-        mn, mx = F.col("_mn"), F.col("_mx")
-        if lower_bounds is None:
-            out = _minmax_expr(s, mn, mx, None)
+) -> pd.DataFrame:
+    """``tall``'s (subq, doc_id, score) rows with ``norm_score`` added,
+    each sub-query normalized over its own rows. An undefined score (a
+    bound equal to the max) is NaN and counts as a missing slot."""
+    subq = tall["subq"].to_numpy(np.int64)
+    s = tall["score"].to_numpy(np.float64)
+    n = int(subq.max()) + 1 if subq.size else 0
+    count = np.bincount(subq, minlength=n)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        if technique in ("min_max", "z_score"):
+            g = pd.Series(s).groupby(subq)
+            mn = g.transform("min").to_numpy()
+            mx = g.transform("max").to_numpy()
+        if technique == "min_max":
+            plain = (s - mn) / (mx - mn)
+            if lower_bounds is None:
+                out = _minmax(s, mn, mx, plain, None)
+            else:
+                if len(lower_bounds) > MAX_NUMBER_OF_SUB_QUERIES:
+                    raise ValueError("lower bounds exceed the sub-query maximum")
+                out = np.full(s.size, np.nan)
+                for j, lb in enumerate(lower_bounds):
+                    rows = subq == j
+                    out[rows] = _minmax(s, mn, mx, plain, lb)[rows]
+            # single-result edge case first: max==min==s → 1.0
+            out = np.where((mx == mn) & (mx == s), SINGLE_RESULT_SCORE, out)
+        elif technique == "l2":
+            norm = np.sqrt(np.bincount(subq, weights=s * s, minlength=n))[subq]
+            out = np.where(norm == 0.0, MIN_SCORE, s / norm)
+        elif technique == "z_score":
+            mean = (np.bincount(subq, weights=s, minlength=n) / count)[subq]
+            std = np.array(
+                [_sample_std(s[subq == j].tolist()) for j in range(n)]
+            )[subq]
+            z = (s - mean) / std
+            z = np.where(z <= 0.0, MIN_SCORE, z)
+            out = np.where(s == mean, mx, np.where(np.isnan(std) | (std == 0.0), mn, z))
+        elif technique == "rrf":
+            # 1-based rank per sub-query over score desc, doc_id asc
+            order = np.lexsort((tall["doc_id"].to_numpy(), -s, subq))
+            first = np.concatenate(([0], np.cumsum(count)[:-1]))
+            rank = np.empty(s.size, dtype=np.int64)
+            rank[order] = np.arange(s.size) - first[subq[order]] + 1
+            table = [_half_up(1.0 / (rank_constant + r))
+                     for r in range(1, int(count.max(initial=0)) + 1)]
+            out = np.asarray(table, dtype=np.float64)[rank - 1]
         else:
-            if len(lower_bounds) > MAX_NUMBER_OF_SUB_QUERIES:
-                raise ValueError(
-                    "lower bounds array exceeds max number of sub-queries"
-                )
-            cases = None
-            for jx, lb in enumerate(lower_bounds):
-                e = _minmax_expr(s, mn, mx, lb)
-                cases = (
-                    F.when(F.col("subq") == jx, e)
-                    if cases is None
-                    else cases.when(F.col("subq") == jx, e)
-                )
-            out = cases
-        drop = ["_mn", "_mx"]
-    elif technique == "l2":
-        j = _join_stats(F.sum(s * s).alias("_ss"))
-        norm = F.sqrt(F.col("_ss"))
-        out = F.when(norm == 0.0, F.lit(MIN_SCORE)).otherwise(s / norm)
-        drop = ["_ss"]
-    elif technique == "z_score":
-        j = _join_stats(
-            F.avg(s).alias("_mu"),
-            F.stddev_samp(s).alias("_sd"),  # commons-math sample std (n-1)
-            F.max(s).alias("_mx"),
-            F.min(s).alias("_mn"),
-        )
-        mean, std = F.col("_mu"), F.col("_sd")
-        mx, mn = F.col("_mx"), F.col("_mn")
-        z = (s - mean) / std
-        out = (
-            F.when(s == mean, mx)
-            .when(std.isNull() | (std == 0.0), mn)
-            .otherwise(F.when(z <= 0.0, F.lit(MIN_SCORE)).otherwise(z))
-        )
-        drop = ["_mu", "_sd", "_mx", "_mn"]
-    elif technique == "rrf":
-        w = Window.partitionBy(*keys)
-        rank = F.row_number().over(
-            w.orderBy(F.desc("score"), F.asc("doc_id"))
-        )
-        # BigDecimal(1/(rc+rank), 10 dp, HALF_UP) → float: Spark round() is
-        # HALF_UP for positive values, matching the reference bit pattern
-        out = F.round(F.lit(1.0) / (F.lit(rank_constant) + rank), 10)
-        return df.withColumn("norm_score", out.cast("float").cast("double"))
-    else:
-        raise ValueError(f"unknown normalization technique: {technique}")
-    return j.withColumn("norm_score", out.cast("float").cast("double")).drop(
-        *drop
-    )
+            raise ValueError(f"unknown normalization technique: {technique}")
+    return tall.assign(norm_score=np.asarray(out, np.float32).astype(np.float64))
 
 
-def combine_scores(
-    df: DataFrame,
+def combine(
+    normed: pd.DataFrame,
     n_subqueries: int,
     technique: str = "arithmetic_mean",
     weights: list[float] | None = None,
-    score_col: str = "norm_score",
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Combine per-sub-query normalized scores into one score per doc."""
-    if n_subqueries > MAX_NUMBER_OF_SUB_QUERIES:
-        raise ValueError(
-            f"the number of sub-queries exceeds max allowed {MAX_NUMBER_OF_SUB_QUERIES}"
-        )
-    if weights is not None and len(weights) != n_subqueries:
-        raise ValueError("number of weights must match number of sub-queries")
-    wts = [
-        (weights[j] if weights is not None and j < len(weights) else 1.0)
-        for j in range(n_subqueries)
-    ]
+) -> pd.DataFrame:
+    """One combined score per doc of ``normed`` (subq, doc_id,
+    norm_score) → (doc_id, score), score desc, doc_id asc."""
+    wts = list(weights) if weights is not None else [1.0] * n_subqueries
     total_w = float(sum(wts))
-    s = F.col(score_col)
-    w_expr = F.element_at(
-        F.array(*[F.lit(float(x)) for x in wts]), F.col("subq") + 1
-    )
-    g = df.groupBy(*group_cols, "doc_id")
-    if technique in ("arithmetic_mean", "rrf"):
-        # missing slots are 0.0: they contribute 0 to the numerator but their
-        # weight counts (s=0.0 passes the s>=0 gate)
-        num = F.sum(F.when(s >= 0.0, w_expr * s).otherwise(F.lit(0.0)))
-        neg_w = F.sum(F.when(s < 0.0, w_expr).otherwise(F.lit(0.0)))
-        den = F.lit(total_w) - neg_w
-        if technique == "arithmetic_mean":
-            out = F.when(den == 0.0, F.lit(0.0)).otherwise(num / den)
-        else:  # rrf: weighted sum, no division (RRFScoreCombinationTechnique)
-            out = F.when(den == 0.0, F.lit(0.0)).otherwise(num)
-    elif technique == "geometric_mean":
-        pos_w = F.sum(F.when(s > 0.0, w_expr).otherwise(F.lit(0.0)))
-        ln_sum = F.sum(F.when(s > 0.0, w_expr * F.log(s)).otherwise(F.lit(0.0)))
-        out = F.when(pos_w == 0.0, F.lit(0.0)).otherwise(F.exp(ln_sum / pos_w))
-    elif technique == "harmonic_mean":
-        pos_w = F.sum(F.when(s > 0.0, w_expr).otherwise(F.lit(0.0)))
-        harm = F.sum(F.when(s > 0.0, w_expr / s).otherwise(F.lit(0.0)))
-        out = F.when(harm > 0.0, pos_w / harm).otherwise(F.lit(0.0))
-    else:
-        raise ValueError(f"unknown combination technique: {technique}")
-    return g.agg(out.cast("float").cast("double").alias("score"))
+    subq = normed["subq"].to_numpy(np.int64)
+    s = normed["norm_score"].to_numpy(np.float64)
+    ids, slot = np.unique(normed["doc_id"].to_numpy(np.int64), return_inverse=True)
+    w = np.asarray(wts, dtype=np.float64)[subq]
+
+    def total(v: np.ndarray) -> np.ndarray:
+        # per doc, summed in sub-query order; a missing slot adds 0.0
+        acc = np.zeros(ids.size)
+        for j in range(n_subqueries):
+            rows = subq == j
+            acc = acc + np.bincount(slot[rows], weights=v[rows], minlength=ids.size)
+        return acc
+
+    pos = s > 0.0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        if technique in ("arithmetic_mean", "rrf"):
+            # missing slots count weight (a 0.0 score passes the s>=0 gate)
+            num = total(np.where(s >= 0.0, w * s, 0.0))
+            den = total_w - total(np.where(s < 0.0, w, 0.0))
+            val = num / den if technique == "arithmetic_mean" else num
+            out = np.where(den == 0.0, 0.0, val)
+        elif technique == "geometric_mean":
+            pos_w = total(np.where(pos, w, 0.0))
+            ln_sum = total(np.where(pos, w * np.log(np.where(pos, s, 1.0)), 0.0))
+            out = np.where(pos_w == 0.0, 0.0, np.exp(ln_sum / pos_w))
+        elif technique == "harmonic_mean":
+            pos_w = total(np.where(pos, w, 0.0))
+            harm = total(np.where(pos, w / s, 0.0))
+            out = np.where(harm > 0.0, pos_w / harm, 0.0)
+        else:
+            raise ValueError(f"unknown combination technique: {technique}")
+    score = out.astype(np.float32).astype(np.float64)
+    order = np.lexsort((ids, -score))
+    return pd.DataFrame({"doc_id": ids[order], "score": score[order]})
 
 
-def _tall_union(
-    branches: list[DataFrame], pagination_depth: int | None
-) -> DataFrame:
-    """Union branch results into the tall (subq, doc_id, score) form.
-
-    pagination_depth bounds EACH sub-query's retrieved set before
-    normalization (reference HybridCollectorManager.java:595-610: per-shard
-    per-sub-query retrieval size = pagination_depth when provided). The
-    bound is a TakeOrderedAndProject (per-partition top-depth + driver
-    merge) — no full sort, no single-partition shuffle."""
-    if pagination_depth is not None and not 1 <= pagination_depth <= 10000:
-        # reference: depth must be >0 (HybridQuery.java:70-73) and under the
-        # max result window (HybridQueryBuilder.validatePaginationDepth)
-        raise ValueError("pagination_depth must be in [1, 10000]")
-    tall = None
+def _branch_tall(branches: list[DataFrame], depth: int | None) -> pd.DataFrame:
+    """The branches' rows as one tall (subq, doc_id, score) frame, each
+    branch ordered by score desc, doc_id asc and bounded to ``depth``.
+    A driver page is read from its Arrow table; any other branch is
+    bounded in Spark first (a TakeOrderedAndProject), then read."""
+    parts = []
     for j, b in enumerate(branches):
-        t = b.select(
-            F.lit(j).alias("subq"),
-            F.col("doc_id").cast("long"),
-            F.col("score").cast("double"),
-        )
-        if pagination_depth is not None:
-            t = t.orderBy(F.desc("score"), F.asc("doc_id")).limit(
-                pagination_depth
-            )
-        tall = t if tall is None else tall.unionAll(t)
-    return tall
+        if depth is not None and not isinstance(b, LocalPage):
+            b = b.orderBy(F.desc("score"), F.asc("doc_id")).limit(depth)
+        t = b.toArrow()
+        ids = t.column("doc_id").to_numpy().astype(np.int64)
+        s = t.column("score").to_numpy().astype(np.float64)
+        top = np.lexsort((ids, -s))[:depth]
+        parts.append(pd.DataFrame({"subq": j, "doc_id": ids[top], "score": s[top]}))
+    return pd.concat(parts, ignore_index=True)
+
+
+def fuse(
+    branches: list[DataFrame],
+    normalization: str = "min_max",
+    combination: str = "arithmetic_mean",
+    weights: list[float] | None = None,
+    lower_bounds: list[LowerBound | None] | None = None,
+    rank_constant: int = DEFAULT_RANK_CONSTANT,
+    pagination_depth: int | None = None,
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """(normalized tall, combined ranking) of the branch DataFrames."""
+    _check(len(branches), normalization, combination, weights,
+           rank_constant, pagination_depth)
+    normed = normalize(
+        _branch_tall(branches, pagination_depth), normalization,
+        lower_bounds=lower_bounds, rank_constant=rank_constant,
+    )
+    return normed, combine(normed, len(branches), combination, weights)
 
 
 def hybrid_topk(
@@ -269,29 +285,14 @@ def hybrid_topk(
     lower_bounds: list[LowerBound | None] | None = None,
     rank_constant: int = DEFAULT_RANK_CONSTANT,
     pagination_depth: int | None = None,
-) -> DataFrame:
+) -> LocalPage:
     """Full hybrid pipeline over per-sub-query scored DataFrames, each with
-    columns (doc_id, score). Returns (doc_id, score, rank).
-
-    The branch DataFrames are unioned with a subq tag — the Spark analog of
-    the reference's per-sub-query TopDocs lists (CompoundTopDocs)."""
-    if not 1 <= len(branches) <= MAX_NUMBER_OF_SUB_QUERIES:
-        raise ValueError(
-            f"hybrid query accepts 1..{MAX_NUMBER_OF_SUB_QUERIES} sub-queries"
-        )
-    tall = _tall_union(branches, pagination_depth)
-    normed = normalize_scores(
-        tall, normalization, lower_bounds=lower_bounds, rank_constant=rank_constant
-    )
-    combined = combine_scores(
-        normed, len(branches), combination, weights=weights
-    )
-    w = topk_rank_window(F.desc("score"), F.asc("doc_id"))
-    return (
-        combined.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-    )
+    columns (doc_id, score) — the reference's per-sub-query TopDocs lists
+    (CompoundTopDocs). Returns the (doc_id, score, rank) page."""
+    _, combined = fuse(branches, normalization, combination, weights,
+                       lower_bounds, rank_constant, pagination_depth)
+    top = combined.head(k)
+    return local_page(branches[0].sparkSession, top["doc_id"], top["score"])
 
 
 def hybrid_explain(
@@ -303,39 +304,27 @@ def hybrid_explain(
     lower_bounds: list[LowerBound | None] | None = None,
     rank_constant: int = DEFAULT_RANK_CONSTANT,
     pagination_depth: int | None = None,
-) -> DataFrame:
+) -> LocalPage:
     """Explain mode (reference hybrid_score_explanation response processor,
     processor/ExplanationResponseProcessor.java): for the final top-k docs,
-    return one row per (doc, sub-query) with the raw score, normalized
-    score, weight, technique names and the combined score — the
-    intermediate columns the normal pipeline folds away."""
-    wts = [
-        (weights[j] if weights is not None and j < len(weights) else 1.0)
-        for j in range(len(branches))
-    ]
-    tall = _tall_union(branches, pagination_depth)
-    normed = normalize_scores(
-        tall, normalization, lower_bounds=lower_bounds, rank_constant=rank_constant
-    )
-    combined = combine_scores(normed, len(branches), combination, weights=weights)
-    top = combined.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        normed.join(
-            top.withColumnRenamed("score", "combined_score"), "doc_id", "inner"
-        )
-        .withColumn(
-            "weight",
-            F.element_at(
-                F.array(*[F.lit(float(x)) for x in wts]), F.col("subq") + 1
-            ),
-        )
-        .withColumn("normalization_technique", F.lit(normalization))
-        .withColumn("combination_technique", F.lit(combination))
-        .select(
-            "doc_id", "subq", F.col("score").alias("raw_score"),
-            "norm_score", "weight", "combined_score",
-            "normalization_technique", "combination_technique",
-        )
+    one row per (doc, sub-query) with the raw score, normalized score,
+    weight, technique names and the combined score — the intermediate
+    columns the normal pipeline folds away."""
+    normed, combined = fuse(branches, normalization, combination, weights,
+                            lower_bounds, rank_constant, pagination_depth)
+    wts = np.asarray(weights if weights is not None else [1.0] * len(branches))
+    top = combined.head(k).rename(columns={"score": "combined_score"})
+    rows = top.merge(normed, on="doc_id")
+    rows = rows.assign(
+        subq=rows["subq"].astype(np.int32),
+        raw_score=rows["score"],
+        weight=wts[rows["subq"].to_numpy()].astype(np.float64),
+        normalization_technique=normalization,
+        combination_technique=combination,
+    )[["doc_id", "subq", "raw_score", "norm_score", "weight", "combined_score",
+       "normalization_technique", "combination_technique"]]
+    return LocalPage(
+        branches[0].sparkSession, pa.Table.from_pandas(rows, preserve_index=False)
     )
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -56,7 +57,7 @@ def main():
             sp_idx.postings_for(["spark", "join"]),
         "BM25 join scorer (broadcast query terms + dfreq)":
             gate.bm25_scored(gate._docs(spark, sf), ["doc_id"], gate.QUERY_A),
-        "hybrid min_max + arithmetic (broadcast-stats normalize + combine)":
+        "hybrid min_max + arithmetic (one fusion call over the persisted tall)":
             gate.q_hybrid_minmax_arith(spark, sf),
         "hybrid over the block index (bounded branches)":
             gate.q_hybrid_index_minmax(spark, sf),
@@ -66,7 +67,7 @@ def main():
             gate.q_embedding_near_dups(spark, sf),
         "cosine top-k (TakeOrderedAndProject)":
             gate.q_cosine_topk(spark, sf),
-        "hybrid rrf (depth-bounded rank windows)":
+        "hybrid rrf (one fusion call over the persisted tall)":
             gate.q_hybrid_rrf(spark, sf),
         "hybrid post_filter (semi-join between scoring and depth bound)":
             gate.q_hybrid_post_filter(spark, sf),
@@ -349,33 +350,30 @@ def main():
         )
     print("dedup plans: no cartesian/nested-loop joins — ok")
 
-    # hard assert: hybrid normalization (min_max/l2/z_score) must compute
-    # per-sub-query stats via groupBy+broadcast join — a Window.partitionBy
-    # (subq) would funnel each sub-query's matched set into one reducer
+    # hard assert: the hybrid fusion (query/hybrid.normalize → combine,
+    # numpy on the driver or one applyInPandas call) only ever sees
+    # depth-bounded input. (a) Every engine branch page is a driver
+    # LocalPage or a TakeOrderedAndProject, on both routes:
     from pyspark.sql import functions as F
 
-    from neural_search_spark.query.hybrid import combine_scores, normalize_scores
+    import neural_search_spark.query.bm25 as bm25_mod
+    from neural_search_spark.engine import _TOPK, Engine, spec_from_json
+    from neural_search_spark.ranking import LocalPage
 
-    branches = gate._branches(spark, sf)
-    tall = None
-    for j, b in enumerate(branches):
-        t = b.select(F.lit(j).alias("subq"), F.col("doc_id").cast("long"),
-                     F.col("score").cast("double"))
-        tall = t if tall is None else tall.unionAll(t)
-    for tech in ("min_max", "l2", "z_score"):
-        combined = combine_scores(normalize_scores(tall, tech), 2)
-        text = cap(combined)
-        assert "Window" not in text, (
-            f"hybrid {tech} normalization plans a WindowExec (single-"
-            f"partition-per-subq scale hazard)"
-        )
-        assert "BroadcastHashJoin" in text, f"{tech}: stats join not broadcast"
-    print("hybrid normalization: no WindowExec, stats broadcast — ok")
-
-    # hard assert: every hybrid gate entry bounds EACH branch to
-    # pagination_depth BEFORE normalization — the rrf rank window (the one
-    # legitimate per-subq Window) must never see a full matched set.
-    # (a) the bound CONSTRUCTION (single-scan tall scoring → per-subq
+    eng = Engine(spark, bm25_index=idx)
+    hybrid = spec_from_json({"hybrid": {"queries": [
+        {"match": {"query_text": q}} for q in (gate.QUERY_A, gate.QUERY_B)
+    ]}})
+    driver_limit = bm25_mod.DRIVER_MAX_POSTINGS
+    for limit in (driver_limit, -1):
+        bm25_mod.DRIVER_MAX_POSTINGS = limit
+        for b in eng._plan(hybrid, _TOPK).children["branches"]:
+            page = b.run(gate._HYBRID_DEPTH, None)
+            assert isinstance(page, LocalPage) or (
+                "TakeOrderedAndProject" in cap(page)
+            ), f"hybrid branch {b.reason!r} is not depth-bounded"
+    bm25_mod.DRIVER_MAX_POSTINGS = driver_limit
+    # the gates' bound CONSTRUCTION (single-scan tall scoring → per-subq
     # TakeOrderedAndProject) shows one TakeOrdered per branch:
     tall_plan = cap(
         gate.bm25_scored_tall(
@@ -388,14 +386,27 @@ def main():
     assert "TakeOrderedAndProject" in tall_plan, (
         "per-subq depth bound does not plan as TakeOrderedAndProject"
     )
-    # (b) every matrix entry consumes the PERSISTED ≤2·depth-row tall
-    # (InMemoryTableScan) — bounded by construction, scans paid once:
+    # and every matrix entry fuses the PERSISTED ≤2·depth-row tall
+    # (InMemoryTableScan under the FlatMapGroupsInPandas fusion call):
     for name, fn, _sql in gate._NORM_MATRIX:
         text = cap(fn(spark, sf))
-        assert "InMemoryTableScan" in text, (
-            f"hybrid {name}: not consuming the shared bounded tall cache"
+        assert "FlatMapGroupsInPandas" in text, f"hybrid {name}: no fusion call"
+        assert "InMemoryTableScan" in text.split("FlatMapGroupsInPandas", 1)[1], (
+            f"hybrid {name}: not fusing the shared bounded tall cache"
         )
-    print("hybrid gate entries: all branches depth-bounded — ok")
+    # (b) the batched hybrid fuses one group per query_id — no other key
+    # (its weighted rider is one whole-tall group):
+    batch = cap(gate.q_hybrid_batch(spark, sf))
+    keys = [
+        re.findall(r"(\w+)#\d+", args.split("fuse(")[0])
+        for args in re.findall(
+            r"FlatMapGroupsInPandas\nInput[^\n]*\nArguments: ([^\n]*)", batch
+        )
+    ]
+    assert ["query_id"] in keys and all(
+        k in ([], ["query_id"]) for k in keys
+    ), f"hybrid_batch fusion groups by {keys}"
+    print("hybrid fusion: depth-bounded input, batch grouped by query_id — ok")
 
     # serving-cache contract: with cache() (pre-partitioned by shard_id),
     # the per-query batch plan must not add an Exchange ABOVE the cached

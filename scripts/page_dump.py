@@ -7,7 +7,9 @@ sparse index of term-frequency weights and a 2-gram search_as_you_type
 index, each with 4 shards and block 64 — then runs every index-route
 family on the driver route and on the forced-distributed route
 (``bm25.DRIVER_MAX_POSTINGS = -1``), as single searches and as msearch
-batches, each case cold (empty driver caches) and then warm. It writes
+batches, each case cold (empty driver caches) and then warm. Hybrid
+requests over those branches (every fusion, weights, depth, post_filter,
+collapse, rerank and per-branch rescore) run as single searches. It writes
 one tab-separated row per hit: ``case, route, rank, doc_id,
 score.hex()``.
 
@@ -89,6 +91,44 @@ MULTI = {
     },
 }
 BODIES.update({n: {"multi_match": b} for n, b in MULTI.items()})
+# hybrid requests (search only), over two or three index-route branches
+_HQ = [
+    {"match": {"query_text": MATCH}},
+    {"match": {"query_text": HOT}},
+    {"match_bool_prefix": {"query_text": "the tool ca"}},
+]
+_FUSIONS = [
+    ("min_max", "arithmetic_mean"), ("l2", "harmonic_mean"),
+    ("z_score", "geometric_mean"), ("rrf", "rrf"),
+    ("min_max", "geometric_mean"),
+]
+HYBRID = {
+    f"{norm}+{comb}": {
+        "queries": _HQ[:2], "normalization": norm, "combination": comb,
+        "pagination_depth": 30,
+    }
+    for norm, comb in _FUSIONS
+}
+HYBRID.update({
+    "weights": {"queries": _HQ, "weights": [0.5, 0.3, 0.2]},
+    "depth_5": {"queries": _HQ[:2], "pagination_depth": 5},
+    "post_filter": {
+        "queries": _HQ[:2], "pagination_depth": 30,
+        "post_filter": "turn_idx % 2 = 0",
+    },
+    "collapse": {
+        "queries": _HQ[:2], "pagination_depth": 30,
+        "collapse_field": "conv_id",
+    },
+    "rerank": {
+        "queries": _HQ[:2], "pagination_depth": 30,
+        "rerank_by_field": "turn_idx",
+    },
+})
+RESCORE = {
+    "window_size": 8, "query": {"match": {"query_text": "w0005"}},
+    "rescore_query_weight": 2.0, "placement": "per_branch",
+}
 MSEARCH = {
     "all": sorted(BODIES),
     "match": [n for n in BODIES if n.startswith("match_")],
@@ -167,6 +207,14 @@ def cases(eng, sayt):
     out = {}
     for name, body in BODIES.items():
         out[f"search:{name}"] = lambda mode, b=body: rows(eng.search(b, k=K))
+    for name, body in HYBRID.items():
+        out[f"hybrid:{name}"] = lambda mode, b=body: rows(
+            eng.search({"hybrid": b}, k=K)
+        )
+    out["hybrid:per_branch_rescore"] = lambda mode: rows(
+        eng.search({"hybrid": HYBRID["min_max+arithmetic_mean"]}, k=K,
+                   rescore=RESCORE)
+    )
     for mix, names in MSEARCH.items():
         out[f"msearch:{mix}"] = lambda mode, ns=names: rows(
             eng.msearch({n: BODIES[n] for n in ns}, k=K)

@@ -359,6 +359,37 @@ def test_msearch_of_mixed_match_specs_equals_search(
         assert got and got == want, qid
 
 
+HYBRID = {
+    "hybrid": {
+        "queries": [
+            {"match": {"query_text": "tool call w0005"}},
+            {"match": {"query_text": "tool"}},
+        ],
+        "pagination_depth": 20,
+    }
+}
+
+
+def test_driver_hybrid_runs_no_spark_job(spark, page_eng):
+    """A hybrid of driver-route branches fuses their pages on the driver:
+    the result is a LocalPage and no Spark job runs."""
+    n, page = _jobs(spark, lambda: page_eng.search(HYBRID, k=K))
+    assert n == 0
+    assert isinstance(page, LocalPage)
+    rows = page.collect()
+    assert rows and [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+    assert rows == sorted(rows, key=lambda r: (-r["score"], r["doc_id"]))
+
+
+def test_driver_hybrid_makes_no_py4j_round_trip(page_eng):
+    """Warm, the hybrid reads its branch pages' Arrow tables: no page
+    builds its JVM relation."""
+    page_eng.search(HYBRID, k=K).collect()
+    n, rows = _trips(lambda: page_eng.search(HYBRID, k=K).collect())
+    assert n == 0
+    assert rows
+
+
 @pytest.mark.parametrize("family", ["multi_match_phrase", "multi_match_bool_prefix"])
 def test_driver_multi_match_union_runs_no_spark_job(spark, page_eng, family):
     """The field-centric multi_match types combine their per-field driver
